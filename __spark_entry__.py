@@ -63,6 +63,7 @@ from graphrag_kb_server_spark.operators.similarity import brute_force_topk_batch
 from graphrag_kb_server_spark.operators.truncation import cumulative_prefix_by_budget
 from graphrag_kb_server_spark.operators.vector_topk import cosine_topk
 from graphrag_kb_server_spark.operators.walks import random_walk_with_restart
+from graphrag_kb_server_spark.plans.index_pipeline import ensure_parallelism
 from graphrag_kb_server_spark.plans.query_pipeline import (
     GraphTables,
     QueryParams,
@@ -109,23 +110,12 @@ _TP_KEY = {
 
 def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parallelized table read. The sf dirs ship each table as ONE
-    parquet file with ONE row group, so a plain scan — and the partial
-    aggregation / Python stage Catalyst fuses into it — runs as a
-    single task on one core. For compute-heavy consumers a hash
-    repartition on a stable key right after the read restores
-    parallelism (guide §2.5: input skew → repartition immediately
-    after the read); hash instead of round-robin avoids the
-    sort-before-repartition pass and is deterministic under task
-    retry. No-op when the scan already has enough partitions (real
-    multi-file tables at scale), so the exchange only exists where the
-    one-file layout created the bottleneck. Opt-in per call site:
-    for sub-second aggregation-only entries the extra exchange costs
-    more than the parallelism buys (measured, OPTIMIZATION_r06.md)."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target, F.col(_TP_KEY[name]))
-    return df
+    parquet file with ONE row group, so a plain scan runs as a single
+    task on one core; ``ensure_parallelism`` hash-repartitions it on
+    the table's ``_TP_KEY``. Opt-in per call site: for sub-second
+    aggregation-only entries the extra exchange costs more than the
+    parallelism buys (measured, OPTIMIZATION_r06.md)."""
+    return ensure_parallelism(_t(spark, sf_dir, name), key=_TP_KEY[name])
 
 
 # ──────────────────────────────────────────────────────────────────────
@@ -1097,7 +1087,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def g3_components_minlabel(spark, sf):
         # the DISTRIBUTED min-label + pointer-jump loop, force-exercised
-        # below the size-adaptive threshold (same oracle as the driver
+        # below the driver cap (same oracle as the driver
         # union-find path — the guard must be pure execution strategy)
         li = _t(spark, sf, "lineitem")
         edges = li.where("l_orderkey % 97 = 0").select(
@@ -1105,7 +1095,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("tgt"),
         ).distinct()
         return component_sizes(
-            connected_components(edges, small_graph_threshold=0)
+            connected_components(edges, driver_cap=0)
         )
     q["g3_components_minlabel"] = g3_components_minlabel
 
@@ -1127,7 +1117,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("chunk_id").substr(-1, 1).isin("0", "5")
         )
         edges = build_edges(m)
-        labels = label_propagation(edges, small_graph_threshold=0)
+        labels = label_propagation(edges, driver_cap=0)
         return labels.groupBy("label").agg(F.count(F.lit(1)).alias("size"))
     q["g2_lpa_distributed"] = g2_lpa_distributed
 
@@ -2310,7 +2300,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["g1_pagerank"] = g1_pagerank
 
     def g1_pagerank_distributed(spark, sf):
-        # threshold 0 forces the distributed strided rounds — keeps
+        # driver_cap=0 forces the distributed strided rounds — keeps
         # them continuously oracled while the size-adaptive guard
         # routes small graphs driver-side (same twin, same VALUES)
         from graphrag_kb_server_spark.operators.centrality import pagerank
@@ -2332,7 +2322,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .distinct()
         )
         nodes = spark.range(n).select(F.col("id").cast("int").alias("name"))
-        pr = pagerank(edges, nodes=nodes, driver_edge_threshold=0)
+        pr = pagerank(edges, nodes=nodes, driver_cap=0)
         return pr.select(
             F.col("name").alias("node"), F.round("rank", 6).alias("pr")
         )
@@ -2462,7 +2452,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["web_host_hits"] = web_host_hits
 
     def web_host_hits_distributed(spark, sf):
-        """Forced-distributed twin of web_host_hits (threshold 0):
+        """Forced-distributed twin of web_host_hits (driver_cap=0):
         keeps the per-round join/agg/normalize shuffles continuously
         oracled against the same sequential twin."""
         from graphrag_kb_server_spark.operators.hits import hits
@@ -2471,7 +2461,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = hits(
             host_graph(_synth_web_pages(spark)),
             src="src_host", dst="dst_host", weight="weight",
-            driver_edge_threshold=0,
+            driver_cap=0,
         )
         return out.select(F.col("name").alias("host"), "hub", "authority")
     q["web_host_hits_distributed"] = web_host_hits_distributed
@@ -2539,7 +2529,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return modularity_refine(
             edges, lab,
             outer_rounds=1, max_merge_passes=3, local_rounds=3,
-            small_graph_threshold=0,
+            driver_cap=0,
         )
     q["g2_refine_distributed"] = g2_refine_distributed
 

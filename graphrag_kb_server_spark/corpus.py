@@ -159,13 +159,3 @@ def generate(spark: SparkSession, n_rows: int, seed: int = 42,
             yield pd.DataFrame([row(seed, int(i), sent_range) for i in pdf["id"]])
 
     return base.mapInPandas(gen, schema=WEB_PAGES_SCHEMA)
-
-
-SCALES = {"tiny": 200, "small": 5000, "bench": 50000}
-
-
-def write_corpus(spark: SparkSession, out_dir: str, scale: str = "tiny",
-                 seed: int = 42) -> str:
-    path = f"{out_dir}/web_pages_{scale}"
-    generate(spark, SCALES[scale], seed).write.mode("overwrite").parquet(path)
-    return path

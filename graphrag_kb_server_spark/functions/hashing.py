@@ -128,16 +128,6 @@ def minhash_from_hexes(hexes: Column, num_hashes: int = 8) -> Column:
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
-    """Convenience composition of shingle_hexes + minhash_from_hexes.
-
-    Prefer staging the two behind a projection boundary at call sites
-    (see shingle_hexes docstring); this single-expression form relies on
-    Catalyst subexpression elimination to avoid re-hashing per slice.
-    """
-    return minhash_from_hexes(shingle_hexes(shingles, num_hashes), num_hashes)
-
-
 def lsh_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
     """Band keys for LSH bucketing: ARRAY<STRING>, one key per band,
     key = band index + concatenated minhashes of that band. Two sets

@@ -68,13 +68,3 @@ def cosine_with_query(a: Column, query_vec) -> Column:
         F.array(norm(a) * F.lit(qn)),
         lambda d: F.when(d == 0.0, F.lit(0.0)).otherwise(dot(a, q) / d),
     )[0]
-
-
-def l2_normalize(a: Column) -> Column:
-    # the norm is bound ONCE as a lambda variable: referenced directly
-    # inside the transform it would be re-aggregated per element
-    # (interpreted HOFs get no subexpression elimination → O(d²)/row)
-    return F.transform(
-        F.array(norm(a)),
-        lambda n: F.when(n == 0.0, a).otherwise(F.transform(a, lambda x: x / n)),
-    )[0]

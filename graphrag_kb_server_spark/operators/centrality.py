@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .graph_support import collect_if_small
+
 
 def degree_centrality(
     edges: DataFrame, nodes: DataFrame | None = None, node_col: str = "name"
@@ -179,7 +181,7 @@ def approx_betweenness(
     num_sources: int | None = 16,
     seed: int = 42,
     max_depth: int = 12,
-    small_graph_threshold: int = 200_000,
+    driver_cap: int = 200_000,
 ) -> DataFrame:
     """Sampled-source betweenness over the undirected graph.
 
@@ -199,25 +201,19 @@ def approx_betweenness(
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     sym = sym.localCheckpoint(eager=False)
 
-    # Size-adaptive execution (the LPA/components/pagerank pattern):
-    # each distributed BFS level is 2 joins + an aggregation and the
-    # backward pass 3 joins per level — ~40 shuffle stages of
-    # scheduling for a graph whose Brandes rounds take milliseconds
-    # in-process. At or below the threshold the identical batched-BFS
-    # rules run driver-side over one Arrow collect (string ids only —
-    # the md5 source draw must hash the same bytes);
-    # tests/test_r06_driver_parity.py pins driver == distributed.
-    # 0 forces the distributed rounds.
-    if (
-        small_graph_threshold > 0
-        and sym.schema["a"].dataType.simpleString() == "string"
-    ):
-        pdf = sym.limit(small_graph_threshold + 1).toPandas()
-        if len(pdf) <= small_graph_threshold:
-            return _betweenness_driver(
-                edges.sparkSession, pdf, num_sources, seed, max_depth,
-                sym.schema["a"].dataType,
-            )
+    # Driver twin (see graph_support.collect_if_small): each
+    # distributed BFS level is 2 joins + an aggregation and the backward
+    # pass 3 joins per level — ~40 shuffle stages of scheduling for a
+    # graph whose Brandes rounds take milliseconds in-process. The cap
+    # counts symmetrized edge rows; string ids only (the md5 source draw
+    # must hash the same bytes on both paths).
+    is_str = sym.schema["a"].dataType.simpleString() == "string"
+    pdf = collect_if_small(sym, driver_cap if is_str else 0, "approx_betweenness")
+    if pdf is not None:
+        return _betweenness_driver(
+            edges.sparkSession, pdf, num_sources, seed, max_depth,
+            sym.schema["a"].dataType,
+        )
 
     nodes = sym.select(F.col("a").alias("name")).distinct()
 
@@ -355,7 +351,7 @@ def pagerank(
     damping: float = 0.85,
     iterations: int = 20,
     weight: str | None = None,
-    driver_edge_threshold: int = 200_000,
+    driver_cap: int = 200_000,
 ) -> DataFrame:
     """Directed PageRank (Page et al. 1999) with uniform teleport and
     dangling-mass redistribution — the web-graph companion to the
@@ -380,13 +376,12 @@ def pagerank(
     the logical plan linear with one driver action per
     ``_PR_STRIDE`` rounds — the betweenness/LPA schedule.
 
-    Size-adaptive (the LPA/components guard): at or below
-    ``driver_edge_threshold`` normalized edges the graph is per-round-
-    scheduling-bound, so the iteration runs driver-side over one Arrow
-    collect — the SAME update rule on float64, summation order differs
-    by at most the usual 1e-15 float reassociation (callers round
-    ranks for comparison anyway). Set the threshold to 0 to force the
-    distributed rounds (kept continuously oracled by
+    Up to ``driver_cap`` normalized edges (``frac`` rows) the rounds
+    are scheduling-bound and run driver-side (see
+    ``graph_support.collect_if_small``): the SAME update rule on
+    float64; summation order differs by at most the usual 1e-15 float
+    reassociation (callers round ranks for comparison anyway). 0 forces
+    the distributed rounds (kept continuously oracled by
     ``g1_pagerank_distributed``).
     """
     w = (
@@ -421,25 +416,19 @@ def pagerank(
         .localCheckpoint(eager=False)
     )
     all_nodes = all_nodes.localCheckpoint(eager=False)
-    # single limit-probe collect decides the execution path: a
-    # complete bounded collect of frac IS the driver path's edge
-    # input, so the previous separate frac.count() job disappears;
-    # the driver path derives its own dangling mask from it (has_out),
-    # so the dangling frame below is only built for the distributed
-    # rounds
-    if driver_edge_threshold > 0:
-        frac_pd = frac.limit(driver_edge_threshold + 1).toPandas()
-        if len(frac_pd) <= driver_edge_threshold:
-            nodes_pd = all_nodes.toPandas()
-            n = len(nodes_pd)
-            if n == 0:
-                return all_nodes.select(
-                    F.col("name"), F.lit(0.0).alias("rank")
-                )
-            return _pagerank_driver(
-                edges.sparkSession, all_nodes, nodes_pd, frac_pd,
-                damping, iterations, n,
-            )
+    # the driver path derives its own dangling mask from the collected
+    # frac (has_out), so the dangling frame below is only built for the
+    # distributed rounds
+    frac_pd = collect_if_small(frac, driver_cap, "pagerank")
+    if frac_pd is not None:
+        nodes_pd = all_nodes.toPandas()
+        n = len(nodes_pd)
+        if n == 0:
+            return all_nodes.select(F.col("name"), F.lit(0.0).alias("rank"))
+        return _pagerank_driver(
+            edges.sparkSession, all_nodes, nodes_pd, frac_pd,
+            damping, iterations, n,
+        )
     n = all_nodes.count()
     if n == 0:
         return all_nodes.select(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .components import connected_components
+from .graph_support import collect_if_small
 
 
 #: semi-synchronous update stride: round r updates only nodes whose
@@ -215,7 +216,7 @@ def label_propagation(
     dst: str = "tgt",
     weight: str | None = "weight",
     max_iterations: int = 12,
-    small_graph_threshold: int = 600_000,
+    driver_cap: int = 300_000,
 ) -> DataFrame:
     """edges → (node, label): SEMI-synchronous weighted LPA,
     deterministic.
@@ -246,35 +247,26 @@ def label_propagation(
     # this materialization.
     e, sym = _edge_frames(edges, src, dst, weight)
 
-    # Size-adaptive execution (same rationale as connected_components):
-    # a distributed iterative loop over a bounded graph pays seconds of
-    # per-round scheduling for microseconds of work. Below the
-    # threshold the EXACT same semi-synchronous rounds run as a driver
-    # loop over the collected edges — identical deterministic output,
-    # one collect instead of 3*k rounds of shuffles. String ids only
-    # (the md5 parity must hash the same bytes both paths); larger or
-    # non-string graphs stay distributed.
+    # Driver twin (see graph_support.collect_if_small): the EXACT same
+    # semi-synchronous rounds as a driver loop, string ids only (the md5
+    # parity must hash the same bytes on both paths).
     #
-    # Threshold sizing: 600k sym rows = 300k undirected edges ≈ 30 MB
+    # Cap sizing: ``driver_cap`` counts rows of the half-size e frame
+    # (sym has exactly 2x its rows, and its union+parity pass never
+    # materializes on the driver branch): 300k undirected edges ≈ 30 MB
     # collected — trivially driver-safe. Clustering runs over the KG
     # *entity* graph (the LCC, post entity-merge), which is orders of
     # magnitude smaller than the corpus: 100 TB of pages distills to
     # ~1e7-1e8 entities, so the distributed path still carries real
     # workloads while everything dominated by per-round scheduling
     # overhead (the whole sub-cluster recursion included) stays local.
-    # g2_lpa_distributed forces small_graph_threshold=0 and is
-    # hash-oracled equal — both paths stay continuously witnessed.
-    # gate on the HALF-size e frame (sym has exactly 2x its rows) via a
-    # single limit-probe collect: if the bounded collect comes back
-    # complete it IS the driver path's input — no separate count() job,
-    # and sym's union+parity pass never materializes on this branch
-    if sym.schema["a"].dataType.simpleString() == "string":
-        half_cap = small_graph_threshold // 2
-        probe = e.limit(half_cap + 1).toPandas()
-        if len(probe) <= half_cap:
-            return _label_propagation_driver(
-                e.sparkSession, probe, sym.schema, max_iterations
-            )
+    # g2_lpa_distributed forces driver_cap=0 and is hash-oracled equal.
+    is_str = sym.schema["a"].dataType.simpleString() == "string"
+    probe = collect_if_small(e, driver_cap if is_str else 0, "label_propagation")
+    if probe is not None:
+        return _label_propagation_driver(
+            e.sparkSession, probe, sym.schema, max_iterations
+        )
 
     labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
         "label", F.col("node")
@@ -828,7 +820,7 @@ def modularity_refine(
     outer_rounds: int = 2,
     max_merge_passes: int = 8,
     local_rounds: int = 6,
-    small_graph_threshold: int = 600_000,
+    driver_cap: int = 300_000,
 ) -> DataFrame:
     """Louvain-style refinement of an LPA partition → (node, label).
 
@@ -857,10 +849,10 @@ def modularity_refine(
     Scale: both moves run on aggregates of the COARSE graph (tot per
     community, wc per node×neighbor-community) — partial-aggregated
     shuffles keyed by community/node, never all-pairs. Merges touch
-    only communities that share an edge. Same size-adaptive execution
-    as LPA: below ``small_graph_threshold`` sym rows the identical
-    rules run as a driver loop (string ids only — parity hashes the
-    same bytes); above, everything stays distributed. With
+    only communities that share an edge. Same driver twin and cap as
+    LPA: up to ``driver_cap`` undirected edges the identical rules run
+    as a driver loop (string ids only — parity hashes the same bytes);
+    above, or at 0, everything stays distributed. With
     integer-valued weights both paths are bit-identical (all sums are
     exact in doubles); fractional weights may flip exact-ΔQ ties
     between paths — both results remain valid local optima.
@@ -872,18 +864,13 @@ def modularity_refine(
     # memo, an LPA→refine composition over the same edges frame shares
     # ONE materialization of that upstream plan.
     e, sym = _edge_frames(edges, src, dst, weight)
-    # The gate is a single limit-probe collect of the HALF-size e
-    # frame (sym has exactly 2x its rows): a complete bounded collect
-    # IS the driver path's input, and m derives from it in-process
-    # (exact for the integer-valued weights the bit-parity contract
-    # covers — summation order is free for exact doubles). sym and
-    # the stats aggregation only exist for the distributed rounds.
-    half = None
-    if sym.schema["a"].dataType.simpleString() == "string":
-        half_cap = small_graph_threshold // 2
-        half = e.limit(half_cap + 1).toPandas()
-        if len(half) > half_cap:
-            half = None
+    # The driver twin probes the half-size e frame, as LPA does; m
+    # derives from the probe rows in-process (exact for the
+    # integer-valued weights the bit-parity contract covers — summation
+    # order is free for exact doubles). sym and the stats aggregation
+    # only exist for the distributed rounds.
+    is_str = sym.schema["a"].dataType.simpleString() == "string"
+    half = collect_if_small(e, driver_cap if is_str else 0, "modularity_refine")
     if half is not None:
         m = float(half["w"].to_numpy(dtype="float64").sum())
         if m <= 0:
@@ -903,8 +890,6 @@ def modularity_refine(
         out = _refine_driver(
             spdf, lpdf, m, outer_rounds, max_merge_passes, local_rounds,
         )
-        import pandas as pd
-
         dt = labels.schema["node"].dataType
         return labels.sparkSession.createDataFrame(
             pd.DataFrame(out, columns=["node", "label"]),

@@ -36,13 +36,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .graph_support import collect_if_small
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "tgt",
     max_iterations: int = 50,
-    small_graph_threshold: int = 100_000,
+    driver_cap: int = 100_000,
 ) -> DataFrame:
     """edges(src, tgt) → (node STRING, component STRING).
 
@@ -50,18 +52,14 @@ def connected_components(
     nodes only appear if present as self-edges or in the node set of
     ``edges``; callers union in singletons if needed.
 
-    Size-adaptive execution: a distributed iterative join over a graph
-    of a few thousand edges pays seconds of per-round scheduling for
-    microseconds of work, so when the (deduped, symmetrized) edge set
-    is ≤ ``small_graph_threshold`` rows the exact same min-label
-    semantics run as driver-side union-find on the collected edges —
-    identical output, one collect instead of rounds of shuffles. The
-    threshold bounds the collect (100k string pairs ≈ a few MB); larger
-    graphs take the distributed min-label + pointer-jumping loop.
-    Entity-similarity graphs from linking are far below the threshold
-    even at web scale corpora (they grow with the VOCABULARY of
-    near-identical names, not the corpus) while true web-scale graphs
-    (g3 over billions of rows) stay distributed.
+    Up to ``driver_cap`` deduped, symmetrized edge rows the same
+    min-label semantics run as driver-side union-find (see
+    ``graph_support.collect_if_small``); 0 forces the distributed
+    rounds. The cap bounds the collect (100k string pairs ≈ a few MB).
+    Entity-similarity graphs from linking stay far below it even on
+    web-scale corpora (they grow with the VOCABULARY of near-identical
+    names, not the corpus), while web-scale graphs (g3 over billions
+    of rows) stay distributed.
     """
     # symmetrize once; dedup to keep the iteration input minimal
     e = (
@@ -71,7 +69,8 @@ def connected_components(
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     sym = sym.localCheckpoint(eager=True)
 
-    if sym.count() <= small_graph_threshold:
+    pdf = collect_if_small(sym, driver_cap, "connected_components")
+    if pdf is not None:
         parent: dict = {}
 
         def find(x):
@@ -80,10 +79,9 @@ def connected_components(
                 x = parent[x]
             return x
 
-        # Arrow collect + .tolist(): plain python str/int values, so
-        # min semantics and createDataFrame typing match the legacy
-        # Row path exactly (numpy scalars never reach the union-find)
-        pdf = sym.select("a", "b").toPandas()
+        # .tolist(): plain python str/int values, so min semantics and
+        # createDataFrame typing match the legacy Row path exactly
+        # (numpy scalars never reach the union-find)
         pairs = list(zip(pdf["a"].tolist(), pdf["b"].tolist()))
         for a, b in pairs:
             ra, rb = find(a), find(b)

@@ -583,8 +583,9 @@ def duplicate_spans(
 
     ``sample_mod`` must be a power of two ≤ 256: the selector uses the
     first 2 hex chars (8 bits) of the window md5, so a modulus that
-    does not divide 256 would over-select the low residues by up to
-    ~2% and skew the advertised 1/m rate (ADVICE r5).
+    does not divide 256 would over-select residue 0 by up to 2x the
+    advertised 1/m rate (m = 255 selects 2/256 ≈ 0.78% of windows, not
+    1/255 ≈ 0.39%).
 
     Output is AGGREGATION-shaped, never pairs: per duplicated span
     hash, (span_md5, n_docs, n_sites, first_site, last_site) with

@@ -18,16 +18,18 @@ Spark shape — each half-step is ONE key-partitioned aggregation:
   keep the logical plan linear, one driver action per stride (the
   pagerank/LPA schedule).
 
-Size-adaptive like pagerank: at or below ``driver_edge_threshold``
-normalized edges the rounds are scheduling-bound and run driver-side
-over one Arrow collect — same float64 update rule; callers compare on
-6-dp-rounded scores where summation-order ULPs vanish.
+Up to ``driver_cap`` edges the rounds are scheduling-bound and run
+driver-side (see ``graph_support.collect_if_small``) — same float64
+update rule; callers compare on 6-dp-rounded scores where
+summation-order ULPs vanish. 0 forces the distributed rounds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .graph_support import collect_if_small
 
 
 def hits(
@@ -36,7 +38,7 @@ def hits(
     dst: str = "tgt",
     weight: str | None = None,
     iterations: int = 20,
-    driver_edge_threshold: int = 200_000,
+    driver_cap: int = 200_000,
 ) -> DataFrame:
     """Returns ``(name, hub, authority)`` for every edge endpoint,
     L2-normalized per vector and rounded to 6 dp, sorted by authority
@@ -51,11 +53,12 @@ def hits(
         e.select(F.col("_s").alias("name"))
         .unionByName(e.select(F.col("_t").alias("name")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
-    if e.count() <= driver_edge_threshold:
-        return _hits_driver(edges.sparkSession, all_nodes, e, iterations)
+    epd = collect_if_small(e, driver_cap, "hits")
+    if epd is not None:
+        return _hits_driver(edges.sparkSession, all_nodes.schema, epd, iterations)
+    all_nodes = all_nodes.localCheckpoint(eager=True)
 
     scores = all_nodes.select(
         "name", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")
@@ -109,18 +112,17 @@ def hits(
     ).orderBy(F.desc("authority"), "name")
 
 
-def _hits_driver(
-    spark, all_nodes: DataFrame, e: DataFrame, iterations: int
-) -> DataFrame:
-    """Same update rule over one Arrow collect — scheduling-bound small
-    graphs (the pagerank/LPA guard). Preserves the caller's name dtype
-    via the nodes frame's own schema."""
+def _hits_driver(spark, nodes_schema, epd, iterations: int) -> DataFrame:
+    """Same update rule over the collected edges (_s, _t, _w); the node
+    set is their endpoints. Preserves the caller's name dtype via the
+    nodes frame's schema."""
     import numpy as np
+    import pandas as pd
     from pyspark.sql import types as T
 
-    nodes_pd = all_nodes.toPandas().sort_values("name").reset_index(drop=True)
+    ends = pd.concat([epd["_s"], epd["_t"]], ignore_index=True).drop_duplicates()
+    nodes_pd = ends.sort_values().reset_index(drop=True).to_frame("name")
     ix = {v: i for i, v in enumerate(nodes_pd["name"])}
-    epd = e.toPandas()
     s = np.fromiter((ix[v] for v in epd["_s"]), dtype=np.int64,
                     count=len(epd))
     t = np.fromiter((ix[v] for v in epd["_t"]), dtype=np.int64,
@@ -150,7 +152,7 @@ def _hits_driver(
     nodes_pd["hub"] = [_r6(v) for v in hub]
     nodes_pd["authority"] = [_r6(v) for v in auth]
     schema = T.StructType(
-        list(all_nodes.schema.fields)
+        list(nodes_schema.fields)
         + [
             T.StructField("hub", T.DoubleType(), False),
             T.StructField("authority", T.DoubleType(), False),

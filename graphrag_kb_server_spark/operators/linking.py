@@ -34,6 +34,8 @@ surface how many buckets were split via ``candidate_bucket_stats``
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,6 +46,9 @@ from ..functions import vectors as V
 from ..functions.embedding import embed_udf
 from .components import connected_components
 from .dedup import oversized_bucket_stats, split_oversized_buckets
+from .graph_support import collect_if_small
+
+log = logging.getLogger(__name__)
 
 DEFAULT_THRESHOLD = 0.80
 DEFAULT_NUM_HASHES = 8
@@ -303,45 +308,41 @@ def canonical_map(
     name_col: str = "name",
     threshold: float = DEFAULT_THRESHOLD,
     include_abbreviations: bool = True,
-    small_vocab_threshold: int = 100_000,
+    driver_cap: int = 100_000,
 ) -> DataFrame:
     """nodes → (name, canonical_name) for EVERY input name (identity
     rows included), via LSH → cosine → components.
 
-    Size-adaptive (the LPA/components/pagerank pattern): linking runs
-    over DISTINCT names — a vocabulary, orders of magnitude smaller
-    than the corpus — and the distributed composition pays ~10 stages
-    of scheduling for microseconds of work on small vocabularies. At
-    or below ``small_vocab_threshold`` distinct printable-ASCII names
-    the identical pipeline runs driver-side (_canonical_map_driver,
-    bit-identical by construction; tests pin driver == distributed).
-    Larger or non-ASCII vocabularies take the distributed operators;
-    0 forces distributed."""
+    Linking runs over DISTINCT names — a vocabulary, orders of
+    magnitude smaller than the corpus — so up to ``driver_cap``
+    distinct printable-ASCII names the identical pipeline runs
+    driver-side (_canonical_map_driver, bit-identical by construction);
+    see ``graph_support.collect_if_small``. Larger or non-ASCII
+    vocabularies take the distributed operators; 0 forces them."""
     names = nodes.select(F.col(name_col).alias("name")).distinct()
-    if small_vocab_threshold > 0:
-        probe = names.limit(small_vocab_threshold + 1).toPandas()
-        if len(probe) <= small_vocab_threshold:
-            names_list = probe["name"].tolist()
-            if all(
-                isinstance(nm, str)
-                and all(32 <= ord(c) < 127 for c in nm)
-                for nm in names_list
-            ):
-                from pyspark.sql import types as T
+    probe = collect_if_small(names, driver_cap, "canonical_map")
+    if probe is not None:
+        names_list = probe["name"].tolist()
+        if all(
+            isinstance(nm, str) and all(32 <= ord(c) < 127 for c in nm)
+            for nm in names_list
+        ):
+            from pyspark.sql import types as T
 
-                out = _canonical_map_driver(
-                    names_list, threshold, include_abbreviations
-                )
-                dt = names.schema["name"].dataType
-                return nodes.sparkSession.createDataFrame(
-                    out,
-                    T.StructType(
-                        [
-                            T.StructField("name", dt),
-                            T.StructField("canonical_name", dt),
-                        ]
-                    ),
-                )
+            out = _canonical_map_driver(
+                names_list, threshold, include_abbreviations
+            )
+            dt = names.schema["name"].dataType
+            return nodes.sparkSession.createDataFrame(
+                out,
+                T.StructType(
+                    [
+                        T.StructField("name", dt),
+                        T.StructField("canonical_name", dt),
+                    ]
+                ),
+            )
+        log.info("canonical_map: non-ASCII names -> distributed path")
     pairs = score_pairs(candidate_pairs(names), names, threshold=threshold).select(
         "name_a", "name_b"
     )

@@ -23,7 +23,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
-from ..functions.embedding import embed_text
 
 
 def cosine_topk(
@@ -51,12 +50,3 @@ def _tiebreak(table: DataFrame) -> list[Column]:
         if f.dataType.simpleString() in ("string", "bigint", "int"):
             return [F.col(f.name)]
     return []
-
-
-def cosine_topk_text(
-    table: DataFrame, query_text: str, k: int, **kw
-) -> DataFrame:
-    """Embed the query text with the deterministic embedding slot, then
-    cosine top-k (the engine-side twin of the reference's
-    embed-once-then-search)."""
-    return cosine_topk(table, embed_text(query_text), k, **kw)

@@ -103,28 +103,6 @@ def random_walk_with_restart(
     )
 
 
-def rerank_multi_run(
-    edges: DataFrame,
-    source: str,
-    runs: int = 10,
-    **walk_kwargs,
-) -> DataFrame:
-    """Multi-run rerank: sum scores over ``runs`` seeded runs
-    (similar_topics.py:187-204). Runs differ only by seed offset."""
-    out = None
-    base_seed = walk_kwargs.pop("seed", 42)  # caller seed composes, not collides
-    for r in range(runs):
-        s = random_walk_with_restart(edges, source, seed=base_seed + r, **walk_kwargs)
-        out = s if out is None else out.unionByName(s)
-    topk = walk_kwargs.get("topk", 10)
-    return (
-        out.groupBy("name")
-        .agg(F.sum("score").alias("score"))
-        .orderBy(F.desc("score"), "name")
-        .limit(topk)
-    )
-
-
 def panther_similarity(
     edges: DataFrame,
     source: str,

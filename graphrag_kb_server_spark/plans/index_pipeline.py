@@ -141,17 +141,23 @@ def _write_text(spark: SparkSession, path: str, text: str) -> None:
         out.close()
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     """Repartition iff the plan has fewer partitions than the session's
     shuffle parallelism. Parquet scans coalesce small files up to
     ``spark.sql.files.maxPartitionBytes`` — at sandbox scale a whole
-    corpus can land in <8 scan partitions, capping the Python-bound
-    stages (mapInPandas concurrency == input partitions). At real scale
-    the scan gives ample partitions and this is a no-op."""
-    spark = df.sparkSession
-    target = min_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    corpus can land in <8 scan partitions, and a one-row-group file in
+    one, capping the compute-heavy stages Catalyst fuses into the scan
+    (mapInPandas concurrency == input partitions). At real scale the
+    scan gives ample partitions and this is a no-op.
+
+    Round-robin by default; with ``key``, a hash repartition on that
+    column, which skips round-robin's sort-before-repartition pass and
+    is deterministic under task retry."""
+    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
+        if key is None:
+            return df.repartition(target)
+        return df.repartition(target, F.col(key))
     return df
 
 

@@ -14,6 +14,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """min(16g, half the host's MemTotal). Xms = Xmx (below) commits the
+    whole heap at JVM start, so a fixed 16g cannot launch on a host with
+    16 GiB of RAM or less; hosts without /proc/meminfo keep 16g."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    # kB → MiB, halved
+                    return f"{min(16 << 10, int(line.split()[1]) >> 11)}m"
+    except OSError:
+        pass
+    return "16g"
+
+
 def get_spark(
     app_name: str = "graphrag_kb_server_spark",
     cpus: int | None = None,
@@ -33,6 +48,7 @@ def get_spark(
         cpus = int(cpus_env) if cpus_env.isdigit() else 0
     master = f"local[{cpus}]" if cpus else "local[*]"
     n_shuffle = shuffle_partitions or (cpus if cpus else 32)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
 
     builder = (
         SparkSession.builder.master(master)
@@ -46,15 +62,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # keep Arrow batches big enough to amortize Python worker startup
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # Xms = Xmx: G1 commit/uncommit churn on a growing heap causes
         # madvise/TLB-shootdown storms (observed 89% system time with 32
         # runnable executor threads on this 32-vCPU VM) — a fixed-size
         # heap eliminates it
-        .config(
-            "spark.driver.defaultJavaOptions",
-            "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
+        .config("spark.driver.defaultJavaOptions", "-Xms" + driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -64,7 +64,7 @@ def test_connected_components_small_graph_path_agrees(spark):
     fast = {(r["node"], r["component"])
             for r in connected_components(e).collect()}
     dist = {(r["node"], r["component"])
-            for r in connected_components(e, small_graph_threshold=0).collect()}
+            for r in connected_components(e, driver_cap=0).collect()}
     assert fast == dist
 
 
@@ -254,7 +254,7 @@ def test_hits_ranking_and_paths_agree(spark):
         "src string, tgt string, w double",
     )
     drv = hits(edges, weight="w", iterations=5)
-    dist = hits(edges, weight="w", iterations=5, driver_edge_threshold=0)
+    dist = hits(edges, weight="w", iterations=5, driver_cap=0)
     d = {r.name: (r.hub, r.authority) for r in drv.collect()}
     x = {r.name: (r.hub, r.authority) for r in dist.collect()}
     assert d == x

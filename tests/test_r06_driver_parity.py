@@ -1,17 +1,22 @@
-"""Round-6 optimization parity pins: every size-adaptive driver path
-added/vectorized this round must be bit-identical to its distributed
-(or pre-existing) twin on graphs that exercise the tie-break rules.
+"""Driver-twin parity pins: every size-adaptive driver path must be
+bit-identical to its distributed twin on graphs that exercise the
+tie-break rules.
 
-- canonical_map: new driver path (LSH → cosine → components in-process)
-  vs the distributed operator composition (small_vocab_threshold=0).
+- canonical_map: driver path (LSH → cosine → components in-process)
+  vs the distributed operator composition (driver_cap=0).
 - label_propagation / modularity_refine: numpy-vectorized driver loops
-  vs the distributed rounds (small_graph_threshold=0) — integer weights
+  vs the distributed rounds (driver_cap=0) — integer weights
   (the documented bit-parity contract).
+- collect_if_small, the one gate all seven operators share: its
+  cap / cap + 1 / 0 boundary, and per operator a run at
+  driver_cap = probed rows (driver) vs probed rows − 1 (distributed).
 """
 
 from __future__ import annotations
 
+import logging
 import random
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -46,7 +51,7 @@ def test_canonical_map_driver_matches_distributed(spark):
     )
     dist = sorted(
         (r["name"], r["canonical_name"])
-        for r in canonical_map(nodes, small_vocab_threshold=0).collect()
+        for r in canonical_map(nodes, driver_cap=0).collect()
     )
     assert drv == dist
     # sanity: the abbreviation collapses onto the expansion
@@ -68,7 +73,7 @@ def test_canonical_map_driver_skips_non_ascii(spark):
     )
     dist = sorted(
         (r["name"], r["canonical_name"])
-        for r in canonical_map(nodes, small_vocab_threshold=0).collect()
+        for r in canonical_map(nodes, driver_cap=0).collect()
     )
     assert drv == dist
 
@@ -102,7 +107,7 @@ def test_lpa_vectorized_driver_matches_distributed(spark, seed):
     dist = sorted(
         (r["node"], r["label"])
         for r in label_propagation(
-            edf, max_iterations=6, small_graph_threshold=0
+            edf, max_iterations=6, driver_cap=0
         ).collect()
     )
     assert drv == dist
@@ -127,7 +132,7 @@ def test_refine_vectorized_driver_matches_distributed(spark, seed):
     dist = sorted(
         (r["node"], r["label"])
         for r in modularity_refine(
-            edf, lab, small_graph_threshold=0, **kw
+            edf, lab, driver_cap=0, **kw
         ).collect()
     )
     assert drv == dist
@@ -150,7 +155,7 @@ def test_betweenness_driver_matches_distributed(spark, num_sources):
     dist = {
         r["name"]: round(r["centrality"], 4)
         for r in approx_betweenness(
-            edf, num_sources=num_sources, small_graph_threshold=0
+            edf, num_sources=num_sources, driver_cap=0
         ).collect()
     }
     assert drv == dist
@@ -162,3 +167,167 @@ def test_kmeans_empty_input_raises(spark):
     empty = spark.createDataFrame([], "id string, v array<float>")
     with pytest.raises(ValueError, match="empty"):
         kmeans(empty, "id", "v", k=3, iters=1)
+
+
+GATE_LOG = "graphrag_kb_server_spark.operators.graph_support"
+
+
+def test_collect_if_small_boundary(spark, caplog):
+    from graphrag_kb_server_spark.operators.graph_support import (
+        collect_if_small,
+    )
+
+    caplog.set_level(logging.INFO, logger=GATE_LOG)
+    df = spark.range(5)
+    pdf = collect_if_small(df, 5, "boundary")
+    assert sorted(pdf["id"].tolist()) == [0, 1, 2, 3, 4]
+    assert collect_if_small(df, 4, "boundary") is None
+    assert [r.args for r in caplog.records if r.name == GATE_LOG] == [
+        {"op": "boundary", "probed_rows": 5, "cap": 5, "path": "driver"},
+        {"op": "boundary", "probed_rows": 5, "cap": 4, "path": "distributed"},
+    ]
+
+    # cap 0 starts no Spark job: run it inside a fresh job group, then
+    # one known single-job action in the same group; once the status
+    # store shows that job, every earlier job of the group would show
+    # too (listener events arrive in order)
+    sc = spark.sparkContext
+    sc.setJobGroup("collect_if_small_cap0", "cap 0 probe")
+    try:
+        assert collect_if_small(df, 0, "boundary") is None
+        sc.parallelize([1], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    jobs = tracker.getJobIdsForGroup("collect_if_small_cap0")
+    while not jobs and time.time() < deadline:
+        time.sleep(0.1)
+        jobs = tracker.getJobIdsForGroup("collect_if_small_cap0")
+    assert len(jobs) == 1
+    assert [r.args for r in caplog.records if r.name == GATE_LOG][-1] == {
+        "op": "boundary", "probed_rows": 0, "cap": 0, "path": "distributed",
+    }
+
+
+def _rank_map(df, col):
+    return {r["name"]: round(r[col], 9) for r in df.collect()}
+
+
+def _sorted_rows(df, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def gate_cases(spark):
+    """op → (probed rows, run(driver_cap) → comparable output). Integer
+    weights throughout: the LPA/refine bit-parity contract needs them,
+    and they keep the float paths' sums exact."""
+    from graphrag_kb_server_spark.operators.centrality import (
+        approx_betweenness,
+        pagerank,
+    )
+    from graphrag_kb_server_spark.operators.communities import (
+        label_propagation,
+        modularity_refine,
+    )
+    from graphrag_kb_server_spark.operators.components import (
+        connected_components,
+    )
+    from graphrag_kb_server_spark.operators.hits import hits
+    from graphrag_kb_server_spark.operators.linking import canonical_map
+
+    rows = _random_edges(11, n_nodes=24, n_edges=40)
+    edf = spark.createDataFrame(rows, "src string, tgt string, weight double")
+    sparse = _random_edges(12, n_nodes=40, n_edges=25)
+    sdf = spark.createDataFrame(sparse, "src string, tgt string, weight double")
+    names = ["AI", "Artificial Intelligence", "Data Mesh", "Data Meshes"] + [
+        f"Node {i} Alpha" for i in range(12)
+    ]
+    ndf = spark.createDataFrame([(n,) for n in names], "name string")
+    lab = label_propagation(edf, max_iterations=6)
+    refine_kw = dict(outer_rounds=1, max_merge_passes=4, local_rounds=3)
+    return {
+        # distinct names
+        "canonical_map": (
+            len(names),
+            lambda cap: _sorted_rows(
+                canonical_map(ndf, driver_cap=cap), "name", "canonical_name"
+            ),
+        ),
+        # symmetrized, deduped edge rows
+        "connected_components": (
+            2 * len(sparse),
+            lambda cap: _sorted_rows(
+                connected_components(sdf, driver_cap=cap), "node", "component"
+            ),
+        ),
+        "approx_betweenness": (
+            2 * len(rows),
+            lambda cap: {
+                r["name"]: round(r["centrality"], 4)
+                for r in approx_betweenness(
+                    edf, num_sources=6, driver_cap=cap
+                ).collect()
+            },
+        ),
+        # out-normalized edges (every source has positive weight)
+        "pagerank": (
+            len(rows),
+            lambda cap: _rank_map(
+                pagerank(edf, weight="weight", driver_cap=cap), "rank"
+            ),
+        ),
+        "hits": (
+            len(rows),
+            lambda cap: _sorted_rows(
+                hits(edf, weight="weight", iterations=5, driver_cap=cap),
+                "name", "hub", "authority",
+            ),
+        ),
+        # the half-size (undirected) edge frame
+        "label_propagation": (
+            len(rows),
+            lambda cap: _sorted_rows(
+                label_propagation(edf, max_iterations=6, driver_cap=cap),
+                "node", "label",
+            ),
+        ),
+        "modularity_refine": (
+            len(rows),
+            lambda cap: _sorted_rows(
+                modularity_refine(edf, lab, driver_cap=cap, **refine_kw),
+                "node", "label",
+            ),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "canonical_map", "connected_components", "approx_betweenness",
+        "pagerank", "hits", "label_propagation", "modularity_refine",
+    ],
+)
+def test_gate_boundary_per_operator(gate_cases, caplog, op):
+    n, run = gate_cases[op]
+    caplog.set_level(logging.INFO, logger=GATE_LOG)
+
+    def decision(cap):
+        caplog.clear()
+        out = run(cap)
+        recs = [
+            r.args for r in caplog.records
+            if r.name == GATE_LOG and r.args["op"] == op
+        ]
+        assert len(recs) == 1, recs
+        return out, recs[0]
+
+    drv, at_cap = decision(n)
+    dist, below = decision(n - 1)
+    assert at_cap == {"op": op, "probed_rows": n, "cap": n, "path": "driver"}
+    assert below == {
+        "op": op, "probed_rows": n, "cap": n - 1, "path": "distributed",
+    }
+    assert drv == dist

@@ -125,7 +125,7 @@ def test_distributed_rounds_match_driver_loop(spark):
     }
     dist = {
         (r["node"], r["label"])
-        for r in label_propagation(edf, small_graph_threshold=0).collect()
+        for r in label_propagation(edf, driver_cap=0).collect()
     }
     assert drv == dist
 
@@ -184,7 +184,7 @@ def test_refine_distributed_matches_driver_loop(spark):
     dist = {
         (r["node"], r["label"])
         for r in modularity_refine(
-            edf, lab, small_graph_threshold=0, **kw
+            edf, lab, driver_cap=0, **kw
         ).collect()
     }
     assert drv == dist
