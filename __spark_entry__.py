@@ -908,8 +908,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def kg_query_context_vecpick(spark, sf):
         """Hybrid composite with chunk_pick='vector' — exercises the
-        Q12 cosine chunk pick (vector_similarity_chunk_pick + join-back)
-        against the twin's chunk_pick='vector' path (reference
+        Q12 cosine chunk pick (context_ops.vector_pick_ids over
+        context_ops.query_scores) against the twin's chunk_pick='vector'
+        path (reference
         lightrag_search.py:1472-1510). related_chunk_number=1 keeps the
         cosine selection BITING (num = n_entities/2 candidates survive)
         so this entry genuinely differentiates from the polling path."""

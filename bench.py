@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -254,11 +255,14 @@ def _graph_tables(spark, out: str):
     )
 
 
-def bench_query_path(spark, n_docs: int, repeats: int) -> dict[str, list[float]]:
+def bench_query_path(
+    spark, n_docs: int, repeats: int
+) -> tuple[dict[str, list[float]], dict[str, dict[str, float]]]:
     """Online-surface latency: kg_query (hybrid + mix) and answer_query
     end-to-end — stage 1-4 including the driver-side context collects,
     exactly what a serving request pays. A fresh query string per repeat
-    defeats the LLM cache so every repeat is a cold answer."""
+    defeats the LLM cache so every repeat is a cold answer. Also returns
+    the median ``QueryContext.stage_s`` per kg_query mode and stage."""
     from graphrag_kb_server_spark.plans.query_pipeline import (
         QueryParams,
         answer_query,
@@ -270,21 +274,26 @@ def bench_query_path(spark, n_docs: int, repeats: int) -> dict[str, list[float]]
     out: dict[str, list[float]] = {
         "kg_query_hybrid": [], "kg_query_mix": [], "kg_answer_hybrid": [],
     }
+    stages: dict[str, dict[str, list[float]]] = {"hybrid": {}, "mix": {}}
     for i in range(repeats):
         q = f"What is the relationship between {hub} and others? (run {i})"
-        t = time.time()
-        kg_query(spark, g, q, QueryParams(mode="hybrid", top_k=60))
-        out["kg_query_hybrid"].append(time.time() - t)
-        t = time.time()
-        kg_query(spark, g, q, QueryParams(mode="mix", top_k=60))
-        out["kg_query_mix"].append(time.time() - t)
+        for mode in ("hybrid", "mix"):
+            t = time.time()
+            ctx = kg_query(spark, g, q, QueryParams(mode=mode, top_k=60))
+            out[f"kg_query_{mode}"].append(time.time() - t)
+            for stage, s in ctx.stage_s.items():
+                stages[mode].setdefault(stage, []).append(s)
         t = time.time()
         answer_query(
             spark, g, q, QueryParams(mode="hybrid", top_k=60),
             cache_path=f"/tmp/bench_llm_cache_{os.getpid()}",
         )
         out["kg_answer_hybrid"].append(time.time() - t)
-    return out
+    medians = {
+        mode: {stage: round(statistics.median(v), 4) for stage, v in per.items()}
+        for mode, per in stages.items()
+    }
+    return out, medians
 
 
 def main() -> None:
@@ -424,7 +433,8 @@ def main() -> None:
     # codegen/JIT warm-up spans the first 2-3 invocations (observed:
     # 22.5 → 5.8 → 5.4 → 4.4s on an idle box) — with 2 repeats the min
     # still lands mid-warm-up, so these always get ≥4.
-    for k, v in bench_query_path(spark, n_docs, max(repeats, 4)).items():
+    query_times, query_stages = bench_query_path(spark, n_docs, max(repeats, 4))
+    for k, v in query_times.items():
         repeat_times[k] = v
         repeat_load[k] = []
         repeat_steal[k] = []
@@ -459,6 +469,7 @@ def main() -> None:
                 "index_docs": n_docs,
                 "index_docs_per_sec": round(n_docs / min(idx_runs), 2),
                 "curation_docs_per_sec": round(n_docs / min(runs), 2),
+                "query_stages": query_stages,
             }
         )
     )

@@ -7,7 +7,9 @@ the evidence numbers.
 Usage:
     python bench_extra.py queries [name ...]   # noop-isolated repeats
     python bench_extra.py index                # kg_index stage laps
-    python bench_extra.py query_path           # per-action timings
+
+Per-stage kg_query latency is ``QueryContext.stage_s`` (bench.py reports
+it as ``query_stages``).
 """
 
 from __future__ import annotations
@@ -113,62 +115,9 @@ def cmd_index() -> None:
         print(f"  rep{rep} TOTAL: {t[-1] - t[0]:.3f}s", flush=True)
 
 
-def cmd_query_path() -> None:
-    """Per-driver-action timing of kg_query via instrumented
-    checkpoint/collect (the breakdown cited in OPTIMIZATION_r06.md)."""
-    import bench as benchmod
-    from pyspark.sql.classic.dataframe import DataFrame as CDF
-
-    from graphrag_kb_server_spark.plans.query_pipeline import (
-        QueryParams,
-        kg_query,
-    )
-
-    spark = _spark()
-    n_docs = int(os.environ.get("BENCH_DOCS", "5000"))
-    g = benchmod._graph_tables(spark, benchmod._ensure_index(spark, n_docs))
-    hub = g.nodes.orderBy(F.desc("mention_count"), "name").first()["name"]
-    orig_ckpt, orig_collect = CDF.localCheckpoint, CDF.collect
-    log: list = []
-
-    def timed_ckpt(self, eager=True):
-        t0 = time.time()
-        r = orig_ckpt(self, eager=eager)
-        log.append((f"ckpt_{'eager' if eager else 'lazy'}",
-                    round(time.time() - t0, 3)))
-        return r
-
-    def timed_collect(self):
-        t0 = time.time()
-        r = orig_collect(self)
-        log.append(("collect", round(time.time() - t0, 3)))
-        return r
-
-    CDF.localCheckpoint, CDF.collect = timed_ckpt, timed_collect
-    try:
-        for mode in ("hybrid", "mix"):
-            for rep in range(REPEATS):
-                log.clear()
-                t0 = time.time()
-                kg_query(
-                    spark, g,
-                    f"What is the relationship between {hub}? (x {mode} {rep})",
-                    QueryParams(mode=mode, top_k=60),
-                )
-                print(
-                    f"{mode} rep{rep}: total={round(time.time() - t0, 3)} "
-                    f"actions={log}",
-                    flush=True,
-                )
-    finally:
-        CDF.localCheckpoint, CDF.collect = orig_ckpt, orig_collect
-
-
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if cmd == "index":
         cmd_index()
-    elif cmd == "query_path":
-        cmd_query_path()
     else:
         cmd_queries(sys.argv[2:])

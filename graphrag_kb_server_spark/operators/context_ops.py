@@ -13,6 +13,9 @@
 - Q17 LLM-response cache: ``llm_cache(args_hash, content)`` keyed by a
   deterministic hash of (mode, query, params) — ``compute_args_hash``
   analogue (:499-513); the cache IS a table (determinism fixture).
+- Q12/Q15/Q21 each have a ``*_ids`` / ``*_rows`` driver twin right
+  after the Spark operator: kg_query runs the twin over its collected
+  rows, the standalone entries run the Spark operator.
 """
 
 from __future__ import annotations
@@ -31,6 +34,20 @@ from ..functions import vectors as V
 from ..functions.embedding import embed_text
 
 
+def query_scores(chunk_embeddings: DataFrame, query_text: str) -> DataFrame:
+    """(chunk_id, vscore): the Q12 cosine of each chunk to the query."""
+    return chunk_embeddings.select(
+        "chunk_id",
+        V.cosine_with_query(
+            V.to_double(F.col("embedding")), embed_text(query_text)
+        ).alias("vscore"),
+    )
+
+
+def _pick_size(n_entities: int, related_chunk_number: int) -> int:
+    return max(int(related_chunk_number * n_entities / 2), 1)
+
+
 def vector_similarity_chunk_pick(
     candidate_chunk_ids: DataFrame,
     chunk_embeddings: DataFrame,
@@ -40,26 +57,27 @@ def vector_similarity_chunk_pick(
 ) -> DataFrame:
     """Q12 — candidates(chunk_id) → top ``related_chunk_number *
     n_entities / 2`` by cosine to the query embedding."""
-    num = max(int(related_chunk_number * n_entities / 2), 1)
-    qvec = embed_text(query_text)
-    scored = candidate_chunk_ids.join(chunk_embeddings, "chunk_id").withColumn(
-        "vscore", V.cosine_with_query(V.to_double(F.col("embedding")), qvec)
+    scored = query_scores(
+        candidate_chunk_ids.join(chunk_embeddings, "chunk_id"), query_text
     )
-    return (
-        scored.orderBy(F.desc("vscore"), "chunk_id")
-        .limit(num)
-        .select("chunk_id", "vscore")
+    return scored.orderBy(F.desc("vscore"), "chunk_id").limit(
+        _pick_size(n_entities, related_chunk_number)
     )
 
 
-def reference_list(
-    surviving_chunks: DataFrame,
-    path_properties: DataFrame | None = None,
-    order_col: str = "merge_ix",
-) -> DataFrame:
-    """Q15 — (ref_ix, file_path, last_modified) numbered reference rows;
-    last_modified joined from the path-properties table (for webtext the
-    authoritative source is ``warc_ts`` — P12)."""
+def vector_pick_ids(
+    scores: dict, n_entities: int, related_chunk_number: int = 5
+) -> set:
+    """Driver twin of :func:`vector_similarity_chunk_pick` over the
+    candidates' {chunk_id: vscore}."""
+    ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
+    return {cid for cid, _ in ranked[: _pick_size(n_entities, related_chunk_number)]}
+
+
+def reference_list(surviving_chunks: DataFrame, order_col: str = "merge_ix") -> DataFrame:
+    """Q15 — (ref_ix, file_path) numbered reference rows, one per
+    distinct file_path in ``order_col`` order (kg_query adds
+    last_modified from the path-properties table — P12)."""
     w = bounded_global(order_col)
     refs = (
         surviving_chunks.select("file_path", order_col)
@@ -69,13 +87,16 @@ def reference_list(
         .withColumn("ref_ix", F.row_number().over(w))
         .drop(order_col)
     )
-    if path_properties is not None:
-        refs = refs.join(
-            path_properties.select("file_path", "last_modified"), "file_path", "left"
-        )
-    else:
-        refs = refs.withColumn("last_modified", F.lit(None).cast("timestamp"))
-    return refs.select("ref_ix", "file_path", "last_modified")
+    return refs.select("ref_ix", "file_path")
+
+
+def reference_rows(file_paths: list) -> list[dict]:
+    """Driver twin of :func:`reference_list` over the surviving chunks'
+    file paths in merge order (a null path gets a number too)."""
+    ix: dict = {}
+    for p in file_paths:
+        ix.setdefault(p, len(ix) + 1)
+    return [{"ref_ix": i, "file_path": p} for p, i in ix.items()]
 
 
 def dedup_by_content_combine(
@@ -121,6 +142,19 @@ def expand_file_references(refs: DataFrame, file_col: str = "file_path") -> Data
         .where(F.col("_rk") == 1)
         .drop("_rk")
     )
+
+
+def expand_reference_rows(refs: list[dict]) -> list[dict]:
+    """Driver twin of :func:`expand_file_references`, in ``ref_ix`` then
+    split order; a null path yields no row, as explode does."""
+    out, seen = [], set()
+    for r in sorted(refs, key=lambda r: r["ref_ix"]):
+        for p in (r["file_path"].split(GRAPH_FIELD_SEP)
+                  if r["file_path"] is not None else ()):
+            if p not in seen:
+                seen.add(p)
+                out.append({"ref_ix": r["ref_ix"], "file_path": p})
+    return out
 
 
 # The reference's rag_response system prompt, quoted as a behavioral

@@ -61,6 +61,21 @@ def round_robin_merge(
     )
 
 
+def round_robin_rows(branches: list[list[dict]], key_cols: list[str]) -> list[dict]:
+    """Driver twin of :func:`round_robin_merge` for branches already in
+    rank order: visits rows by interleave position ``pos * n + branch``."""
+    out: list[dict] = []
+    seen: set[tuple] = set()
+    for pos in range(max(map(len, branches), default=0)):
+        for rows in branches:
+            if pos < len(rows):
+                key = tuple(rows[pos][c] for c in key_cols)
+                if key not in seen:
+                    seen.add(key)
+                    out.append({**rows[pos], "merge_ix": len(out)})
+    return out
+
+
 def rrf_fuse(
     lists: list[tuple[DataFrame, str]],
     id_col: str,

@@ -11,10 +11,13 @@ Spark design: quotas are computed in-DataFrame from the entity rank
 (no driver loop): for entity rank r of R entities with budget B,
 ``quota(r) = max(1, round(B * (R - r) / (R * (R + 1) / 2)))`` — a linear
 gradient summing ≈ B. Selection = ``row_number`` per entity over the
-entity's own chunk ordering ≤ quota.
+entity's own chunk ordering ≤ quota. ``gradient_quota_map`` and
+``weighted_polling_rows`` are the driver twins kg_query runs.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -24,13 +27,9 @@ def gradient_quotas(
     entities_ranked: DataFrame,
     rank_col: str,
     total_budget_per_entity: int,
-    n_total: int | None = None,
 ) -> DataFrame:
-    """entities(rank) → + quota column (≥1, linear decreasing).
-
-    Pass ``n_total`` when the caller already knows the entity count
-    (e.g. it collected the truncated list) to avoid a count() job."""
-    r_total = entities_ranked.count() if n_total is None else n_total
+    """entities(rank) → + quota column (≥1, linear decreasing)."""
+    r_total = entities_ranked.count()
     if r_total == 0:
         # empty entity list (reachable since truncation faithfully
         # returns an empty prefix when the first row overflows the
@@ -70,3 +69,29 @@ def weighted_polling_pick(
         .where(F.col("_rn") <= F.col("quota"))
         .drop("_rn", "quota")
     )
+
+
+def gradient_quota_map(ranks: dict, total_budget_per_entity: int) -> dict:
+    """Driver twin of :func:`gradient_quotas`: {entity: rank} → {entity: quota}."""
+    r_total = len(ranks)
+    budget = total_budget_per_entity * r_total
+    tri = r_total * (r_total + 1) / 2.0
+    return {
+        name: max(1, math.floor(budget * (r_total - rank) / tri + 0.5))
+        for name, rank in ranks.items()
+    }
+
+
+def weighted_polling_rows(
+    chunks_per_entity: list[dict], quotas: dict, entity_key: str = "name"
+) -> list[dict]:
+    """Driver twin of :func:`weighted_polling_pick`; an entity without
+    a quota drops out, as in the inner join."""
+    by_entity: dict = {}
+    for r in chunks_per_entity:
+        by_entity.setdefault(r[entity_key], []).append(r)
+    picked: list[dict] = []
+    for name, rows in by_entity.items():
+        rows.sort(key=lambda r: (-r["occurrence"], r["chunk_id"]))
+        picked += rows[: quotas.get(name, 0)]
+    return picked

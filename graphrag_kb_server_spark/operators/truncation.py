@@ -12,13 +12,13 @@ Spark design: a running-sum window
 then ``filter(cumsum <= budget)`` — exactly the prefix the sequential
 loop keeps, expressed declaratively. Token counts come from the shared
 deterministic tokenizer via a pandas UDF (the only Python step).
+``token_budget_prefix`` is the driver twin kg_query runs on its
+already-collected rows.
 
 Scale note: a global ``Window.orderBy`` is a single-task sort — correct
 here because truncation inputs are ALREADY top-k-limited small lists
 (≤ a few thousand rows) by construction; the budget filter exists to cut
-LLM context, not to scan big data. For large inputs use
-``approx_token_prefix`` (two-phase: per-partition partial sums, then
-offset join) — provided for completeness.
+LLM context, not to scan big data.
 """
 
 from __future__ import annotations
@@ -62,6 +62,17 @@ def truncate_by_token_budget(
     if keep_at_least_one:
         cond = cond | (F.col("_rn") == 1)
     return out.where(cond).drop("_tok", "_cum", "_rn")
+
+
+def token_budget_prefix(rows: list[dict], text_key: str, budget: int) -> list[dict]:
+    """Driver twin of :func:`truncate_by_token_budget` (faithful default)
+    for rows already in ``order_col`` order."""
+    cum = 0
+    for i, r in enumerate(rows):
+        cum += count_tokens(r[text_key] or "")
+        if cum > budget:
+            return rows[:i]
+    return rows
 
 
 def cumulative_prefix_by_budget(

@@ -1,4 +1,4 @@
-"""The 4-stage kg_query pipeline as a parameterized DataFrame program.
+"""The 4-stage kg_query pipeline: one Spark search, then driver lists.
 
 Reference entry point: ``kg_query``
 (/root/reference/graphrag_kb_server/service/lightrag/lightrag_search.py:330-597),
@@ -6,11 +6,19 @@ stages labelled at :612-614 — 1. Search → 2. Truncate → 3. Merge chunks
 → 4. Build LLM context.
 
 Spark lifecycle (SURVEY.md §3.1): the query embedding is computed once
-(reference :959-974) and broadcast by value; local/global branches are
-independent sub-plans Spark schedules in parallel; every order-sensitive
-reference loop (round-robin dedup, prefix truncation, weighted polling)
-is an explicit window over an explicit rank; the final context rows
-(≤ ~1k) are collected to the driver for assembly — the LLM boundary.
+(reference :959-974) and broadcast by value into the stage-1 cosine
+top-k plans, the only part of a request that scales with the index.
+Their results (≤ top_k rows per branch) come back in ONE tagged-union
+collect. Stages 2-4 — round-robin dedup, token-prefix truncation,
+gradient polling or the vector pick, context assembly — run in plain
+Python over those rows, as the reference runs them over its in-process
+vector-store results; one id-filtered collect fetches the candidate
+chunks' text. Each driver list op has a Spark twin in ``operators/``
+(the standalone Q6/Q8/Q9/Q11/Q15/Q21 entries), pinned to it by
+tests/test_query_driver_parity.py. A request is therefore at most two
+Spark actions, run under the job groups ``kg_query:search`` and
+``kg_query:chunks``; ``QueryContext.stage_s`` holds each stage's wall
+time.
 
 Modes (reference :984-1034, normalization all→hybrid at
 model/rag_parameters.py:116): local = entity search; global = relation
@@ -20,20 +28,32 @@ search; hybrid = both; mix = both + direct chunk vector search.
 from __future__ import annotations
 
 import json
+import logging
 import re
+import time
 from collections import Counter
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import GRAPH_FIELD_SEP
 from ..functions.embedding import embed_text
 from ..tokenizer import count_tokens
-from ..operators.merge import rank_branch, round_robin_merge
-from ..operators.polling import gradient_quotas, weighted_polling_pick
-from ..operators.truncation import truncate_by_token_budget
+from ..operators.context_ops import (
+    build_rag_prompt,
+    expand_reference_rows,
+    query_scores,
+    reference_rows,
+    vector_pick_ids,
+)
+from ..operators.merge import round_robin_rows
+from ..operators.polling import gradient_quota_map, weighted_polling_rows
+from ..operators.truncation import token_budget_prefix
 from ..operators.vector_topk import cosine_topk
+
+_log = logging.getLogger(__name__)
 
 _STOPWORDS = {
     "the", "a", "an", "of", "in", "on", "to", "and", "or", "is", "are",
@@ -100,9 +120,10 @@ class GraphTables:
     entity_embeddings: DataFrame
     relation_embeddings: DataFrame
     chunk_embeddings: DataFrame
-    # (file_path, last_modified) — P12: for webtext the authoritative
-    # last-modified is warc_ts (operators.personalization.last_modified);
-    # joined into the query reference list (lightrag_search.py:826-861)
+    # (file_path, last_modified), one row per file_path — P12: for
+    # webtext the authoritative last-modified is warc_ts
+    # (operators.personalization.last_modified); joined into the query
+    # reference list (lightrag_search.py:826-861)
     path_properties: DataFrame | None = None
 
 
@@ -161,6 +182,9 @@ class QueryContext:
     references: list[dict] = field(default_factory=list)
     mode: str = "hybrid"
     processing_info: dict = field(default_factory=dict)
+    # wall seconds per stage (search, truncate, merge_chunks, context);
+    # kept out of processing_info and raw_data(), which are hashed
+    stage_s: dict = field(default_factory=dict)
 
     def reference_list_str(self) -> str:
         def fmt(r: dict) -> str:
@@ -247,6 +271,50 @@ def gather_chunks_from_members(
     )
 
 
+def gather_chunk_rows(selected: list[dict], member_key: str) -> list[dict]:
+    """Driver twin of :func:`gather_chunks_from_members`."""
+    occ: Counter = Counter()
+    first: dict = {}
+    for r in selected:
+        for cid in r["source_chunk_ids"] or ():
+            occ[cid] += 1
+            if cid not in first or r["merge_ix"] < first[cid]["merge_ix"]:
+                first[cid] = {"member": r[member_key],
+                              "merge_ix": r["merge_ix"], "chunk_id": cid}
+    return [{**e, "occurrence": occ[cid]} for cid, e in first.items()]
+
+
+def _collect_tagged(
+    spark: SparkSession, parts: dict[str, DataFrame], group: str
+) -> dict[str, list[dict]]:
+    """Collect several small frames in ONE action under job group
+    ``group`` (the caller's group is restored after); rows by tag."""
+    tagged = [df.withColumn("_sec", F.lit(sec)) for sec, df in parts.items()]
+    union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
+    sc = spark.sparkContext
+    caller_group = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        rows = union.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", caller_group)
+    out: dict[str, list[dict]] = {sec: [] for sec in parts}
+    for r in rows:
+        d = r.asDict()
+        out[d.pop("_sec")].append(d)
+    return out
+
+
+def _by_score(*tiebreak: str):
+    """Sort key for (vscore desc, *tiebreak asc) — rank_branch's order."""
+    return lambda r: (-r["vscore"], *(r[c] for c in tiebreak))
+
+
+def _by_occurrence(r: dict) -> tuple:
+    """Chunk order within a branch: occurrence desc, chunk_id asc."""
+    return (-r["occurrence"], r["chunk_id"])
+
+
 def kg_query(
     spark: SparkSession,
     g: GraphTables,
@@ -267,53 +335,50 @@ def kg_query(
     keywords = extract_keywords(query, user_keywords)
     # Q1: embed once, reuse across all vector ops (reference :959-974)
     qvec = embed_text(query if not keywords else " ".join(keywords))
+    hl, ll = extract_keywords_hl_ll(query, user_keywords)
+    ctx = QueryContext(keywords=keywords, keywords_hl=hl, keywords_ll=ll, mode=mode)
+    clock = [time.perf_counter()]
 
-    # ── Stage 1: search (independent branches; Spark runs them when
-    #    actions fire — the asyncio.gather analogue) ──────────────────
-    want_local = mode in ("local", "hybrid", "mix")
-    want_global = mode in ("global", "hybrid", "mix")
-    want_vector = mode == "mix"
+    def lap(stage: str) -> None:
+        now = time.perf_counter()
+        ctx.stage_s[stage] = now - clock[0]
+        clock[0] = now
 
+    # ── Stage 1: search — the one stage that scans the index ─────────
     # Reference hybrid semantics (lightrag_search.py:984-1066): the
     # local (entity) search ALSO yields the edges incident to its top
     # entities, and the global (relation) search ALSO yields its edges'
-    # endpoint entities; each final list is the round-robin interleave
-    # of its two branches with first-occurrence dedup.
-    # Each search result feeds two later branches (entities + incident
-    # relations / relations + endpoint entities). They are NOT
-    # checkpointed: both branches live inside the ONE stage-2b job, the
-    # duplicated top-k sub-plan is bounded (k rows over a TakeOrdered
-    # scan), and the lazy localCheckpoints used previously cost ~0.2s
-    # of plan→RDD compilation per query — more than the duplicated
-    # compute they saved (measured A/B, OPTIMIZATION_r06.md).
-    loc = _entity_search(g, qvec, params.top_k) if want_local else None
-    glob = _relation_search(g, qvec, params.top_k) if want_global else None
-
-    ent_branches: list[DataFrame] = []
-    if loc is not None:
-        ent_branches.append(rank_branch(loc, [F.desc("vscore"), "name"], 0))
-    if glob is not None:
-        # endpoint entities of the top relations, in relation-score order
-        endpoints = glob.select(
-            F.explode(F.array("src", "tgt")).alias("name"), "vscore"
-        ).groupBy("name").agg(F.max("vscore").alias("vscore"))
-        ep = endpoints.join(g.nodes, "name").select(
-            "name", "type", "description", "degree", "source_chunk_ids", "vscore"
-        )
-        ent_branches.append(
-            rank_branch(ep, [F.desc("vscore"), "name"], len(ent_branches))
-        )
-    entities = (
-        round_robin_merge(ent_branches, ["name"]) if ent_branches else None
-    )
-
-    rel_branches: list[DataFrame] = []
-    if glob is not None:
-        rel_branches.append(rank_branch(glob, [F.desc("vscore"), "src", "tgt"], 0))
-    if loc is not None:
-        # edges incident to the top local entities, ranked by the
-        # entity's score then edge weight (one-hop graph expansion)
-        inc = (
+    # endpoint entities. All four lists (+ mix's chunk top-k) come back
+    # in ONE tagged-union collect, each entity/relation row with the
+    # F.to_json payload stage 2 counts tokens on. That payload is the
+    # stripped row shape the reference counts (file_path/created_at
+    # removed, lightrag_search.py:1208-1240). Known deviation: to_json
+    # emits compact separators ("," ":") and omits null fields, while
+    # the reference counts json.dumps' spaced form (", " ": ") — rows
+    # within a few tokens of max_entity/relation_tokens may be kept
+    # here that the reference would cut. The kept-set rule and ordering
+    # are identical; only the boundary token arithmetic differs (the
+    # q8 oracle pins THIS accounting).
+    ent_cols = [
+        "name", "type", "description", "source_chunk_ids", "vscore",
+        F.to_json(F.struct(
+            F.col("name").alias("entity"), "type", "description"
+        )).alias("_ser"),
+    ]
+    rel_cols = [
+        "src", "tgt", "description", "weight", "source_chunk_ids", "vscore",
+        F.to_json(F.struct(
+            F.col("src").alias("entity1"), F.col("tgt").alias("entity2"),
+            "description",
+        )).alias("_ser"),
+    ]
+    parts: dict[str, DataFrame] = {}
+    if mode != "global":
+        loc = _entity_search(g, qvec, params.top_k)
+        parts["loc"] = loc.select(*ent_cols)
+        # edges incident to the top local entities, scored by the
+        # entity's score (one-hop graph expansion)
+        parts["inc"] = (
             loc.select("name", "vscore")
             .join(
                 g.edges,
@@ -322,321 +387,177 @@ def kg_query(
             .groupBy("src", "tgt")
             .agg(
                 F.max("vscore").alias("vscore"),
-                F.first("keywords").alias("keywords"),
                 F.first("description").alias("description"),
                 F.first("weight").alias("weight"),
-                F.first("combined_degree").alias("combined_degree"),
                 F.first("source_chunk_ids").alias("source_chunk_ids"),
             )
+            .select(*rel_cols)
         )
-        rel_branches.append(
-            rank_branch(
-                inc.select(
-                    "src", "tgt", "keywords", "description", "weight",
-                    "combined_degree", "source_chunk_ids", "vscore",
-                ),
-                [F.desc("vscore"), F.desc("weight"), "src", "tgt"],
-                len(rel_branches),
-            )
-        )
-    relations = (
-        round_robin_merge(rel_branches, ["src", "tgt"]) if rel_branches else None
+    if mode != "local":
+        glob = _relation_search(g, qvec, params.top_k)
+        parts["glob"] = glob.select(*rel_cols)
+        # endpoint entities of the top relations, in relation-score order
+        endpoints = glob.select(
+            F.explode(F.array("src", "tgt")).alias("name"), "vscore"
+        ).groupBy("name").agg(F.max("vscore").alias("vscore"))
+        parts["ep"] = endpoints.join(g.nodes, "name").select(*ent_cols)
+    if mode == "mix":
+        parts["vec"] = _chunk_search(
+            g, qvec, params.related_chunk_number * 2
+        ).select("chunk_id", "vscore")
+    found = _collect_tagged(spark, parts, "kg_query:search")
+    lap("search")
+
+    # ── Stage 2: round-robin merge + token truncation (Q6/Q7/Q8), on
+    #    the driver: each list holds ≤ top_k rows ────────────────────────
+    entities = round_robin_rows(
+        [sorted(found[s], key=_by_score("name")) for s in ("loc", "ep") if s in found],
+        ["name"],
     )
+    rel_order = {"glob": _by_score("src", "tgt"),
+                 "inc": lambda r: (-r["vscore"], -r["weight"], r["src"], r["tgt"])}
+    relations = round_robin_rows(
+        [sorted(found[s], key=k) for s, k in rel_order.items() if s in found],
+        ["src", "tgt"],
+    )
+    n_entities_found, n_relations_found = len(entities), len(relations)
+    entities = token_budget_prefix(entities, "_ser", params.max_entity_tokens)
+    relations = token_budget_prefix(relations, "_ser", params.max_relation_tokens)
+    ctx.entities = [
+        {"entity": r["name"], "type": r["type"], "description": r["description"]}
+        for r in entities
+    ]
+    ctx.relations = [
+        {"entity1": r["src"], "entity2": r["tgt"], "description": r["description"]}
+        for r in relations
+    ]
+    lap("truncate")
 
-    # ── Stage 2: token truncation (Q8) ───────────────────────────────
-    # token accounting serializes the same stripped row shape the
-    # reference does (file_path/created_at removed before counting,
-    # lightrag_search.py:1208-1240): entities as {entity, type,
-    # description}, relations as {entity1, entity2, description}.
-    # Known deviation: F.to_json emits compact separators ("," ":")
-    # while the reference counts json.dumps' spaced form (", " ": ") —
-    # the spaced punctuation can tokenize to slightly more tokens, so
-    # rows within a few tokens of max_entity/relation_tokens may be
-    # kept here that the reference would cut. The kept-set rule and
-    # ordering are identical; only the boundary token arithmetic
-    # differs (Catalyst's to_json has no separator option; the q8
-    # oracle pins THIS accounting).
-    # Pre-truncation counts ride Observations on the plan nodes the
-    # final collects execute anyway — zero extra Spark jobs (the
-    # reference's processing_info counts, lightrag_search.py:693-712).
-    ent_obs = rel_obs = None
-    if entities is not None:
-        ent_obs = Observation("n_entities_found")
-        entities = entities.observe(ent_obs, F.count(F.lit(1)).alias("n"))
-        entities = entities.withColumn(
-            "_ser",
-            F.to_json(
-                F.struct(
-                    F.col("name").alias("entity"), "type", "description"
-                )
-            ),
+    # ── Stage 3: chunk gathering, pick and merge (Q9-Q14) ─────────────
+    # ONE id-filtered scan fetches every candidate chunk's content and
+    # file_path, the path-properties rows of its expanded paths and, for
+    # the Q12 pick, the candidates' Spark-computed query cosine.
+    ent_chunks = gather_chunk_rows(entities, "name")
+    rel_chunks = gather_chunk_rows(
+        [{**r, "name": f"{r['src']}|{r['tgt']}"} for r in relations], "name"
+    )
+    vec_ids = [r["chunk_id"] for r in sorted(found.get("vec", []),
+                                             key=_by_score("chunk_id"))]
+    want_scores = params.chunk_pick == "vector" and bool(ent_chunks)
+    ids = {c["chunk_id"] for c in ent_chunks + rel_chunks} | set(vec_ids)
+    fetched = {"chunk": [], "score": []}
+    if ids:
+        scan = g.chunks.where(F.col("chunk_id").isin(sorted(ids))).select(
+            "chunk_id", "content", "file_path",
+            F.explode_outer(F.split("file_path", GRAPH_FIELD_SEP)).alias("path"),
         )
-        entities = truncate_by_token_budget(
-            entities, "_ser", "merge_ix", params.max_entity_tokens
-        ).drop("_ser")
-    if relations is not None:
-        rel_obs = Observation("n_relations_found")
-        relations = relations.observe(rel_obs, F.count(F.lit(1)).alias("n"))
-        relations = relations.withColumn(
-            "_ser",
-            F.to_json(
-                F.struct(
-                    F.col("src").alias("entity1"),
-                    F.col("tgt").alias("entity2"),
-                    "description",
-                )
-            ),
-        )
-        relations = truncate_by_token_budget(
-            relations, "_ser", "merge_ix", params.max_relation_tokens
-        ).drop("_ser")
-
-    # ── Stage 2b: materialize + collect the token-budgeted entity /
-    #    relation context. Q14's budget needs the tokens ACTUALLY kept
-    #    (lightrag_search.py:780-812); the eager checkpoint is the one
-    #    action that populates the pre-truncation Observations AND lets
-    #    stage 3 reuse the truncated lists without recomputing the
-    #    merge/truncate windows per downstream branch. ─────────────────
-    hl, ll = extract_keywords_hl_ll(query, user_keywords)
-    ctx = QueryContext(keywords=keywords, keywords_hl=hl, keywords_ll=ll, mode=mode)
-    n_entities_found = n_relations_found = 0
-    # Both truncated branches materialize in ONE tagged-union
-    # checkpoint (their independent sub-plans run as parallel stages of
-    # a single job — the asyncio.gather analogue made literal) and the
-    # driver reads the result back in ONE collect; the per-branch
-    # views below are trivial filters over the checkpointed RDD.
-    ent_cols = ["name", "type", "description", "degree",
-                "source_chunk_ids", "merge_ix"]
-    rel_cols = ["src", "tgt", "keywords", "description", "weight",
-                "combined_degree", "source_chunk_ids", "merge_ix"]
-    parts = []
-    if entities is not None:
-        parts.append(
-            entities.select(*ent_cols).withColumn("_sec", F.lit("ent"))
-        )
-    if relations is not None:
-        parts.append(
-            relations.select(*rel_cols).withColumn("_sec", F.lit("rel"))
-        )
-    if parts:
-        both = parts[0]
-        for p in parts[1:]:
-            both = both.unionByName(p, allowMissingColumns=True)
-        # NOTE: this EAGER checkpoint is the DataFrame action that
-        # fires the CollectMetrics nodes feeding ent_obs/rel_obs below —
-        # the checkpoint replaces the logical plan with a LogicalRDD, so
-        # the later collect() no longer contains them. If this ever
-        # becomes lazy (or a branch is pruned before it), Observation.get
-        # would block forever; keep eager=True or replace the
-        # Observations with explicit count aggregates.
-        both = both.localCheckpoint(eager=True)
-        rows = both.orderBy("_sec", "merge_ix").collect()
-        # (A local-relation rebuild of entities/relations from the
-        # collected rows was A/B-tested here and measured SLOWER than
-        # the filter-over-checkpoint views — the local relations lose
-        # the checkpoint's stats and Arrow-free construction costs more
-        # than the trivial filters; see OPTIMIZATION_r06.md.)
-        if entities is not None:
-            entities = both.where(F.col("_sec") == "ent").select(*ent_cols)
-            ctx.entities = [
-                {"entity": r["name"], "type": r["type"],
-                 "description": r["description"]}
-                for r in rows if r["_sec"] == "ent"
-            ]
-            n_entities_found = int(ent_obs.get["n"])
-        if relations is not None:
-            relations = both.where(F.col("_sec") == "rel").select(*rel_cols)
-            ctx.relations = [
-                {"entity1": r["src"], "entity2": r["tgt"],
-                 "description": r["description"]}
-                for r in rows if r["_sec"] == "rel"
-            ]
-            n_relations_found = int(rel_obs.get["n"])
-
-    # ── Stage 3: chunk gathering + merge (Q9/Q10/Q11/Q13) ────────────
-    chunk_branches: list[DataFrame] = []
-    branch_ix = 0
-    if want_vector:
-        vec_chunks = _chunk_search(g, qvec, params.related_chunk_number * 2)
-        chunk_branches.append(
-            rank_branch(
-                vec_chunks.select("chunk_id", "vscore"),
-                [F.desc("vscore"), "chunk_id"],
-                branch_ix,
-            ).select("chunk_id", "_pos", "_branch")
-        )
-        branch_ix += 1
-    ent_chunk_ids = None
-    if entities is not None:
-        ent_chunks = gather_chunks_from_members(entities, "name")
-        if params.chunk_pick == "vector":
-            # Q12: rank candidates by cosine to the query embedding;
-            # on failure the reference falls back to weighted polling
-            from ..operators.context_ops import vector_similarity_chunk_pick
-
-            try:
-                n_ent = len(ctx.entities)
-                picked = vector_similarity_chunk_pick(
-                    ent_chunks.select("chunk_id").distinct(),
-                    g.chunk_embeddings,
-                    query,
-                    n_entities=max(n_ent, 1),
-                    related_chunk_number=params.related_chunk_number,
-                ).join(ent_chunks, "chunk_id").withColumnRenamed("member", "name")
-            except Exception:
-                picked = None
-        else:
-            picked = None
-        if picked is None:
-            quotas = gradient_quotas(
-                entities.select("name", "merge_ix").withColumnRenamed("merge_ix", "rank"),
-                "rank",
-                params.related_chunk_number,
-                n_total=len(ctx.entities),  # known — no count() job
-            )
-            picked = weighted_polling_pick(
-                ent_chunks.withColumnRenamed("member", "name"), quotas, "name"
-            )
-        ent_chunk_ids = picked.select("chunk_id")
-        chunk_branches.append(
-            rank_branch(
-                picked.select("chunk_id", "occurrence"),
-                [F.desc("occurrence"), "chunk_id"],
-                branch_ix,
-            ).select("chunk_id", "_pos", "_branch")
-        )
-        branch_ix += 1
-    if relations is not None:
-        rel_sel = relations.withColumn("name", F.concat_ws("|", "src", "tgt"))
-        rel_chunks = gather_chunks_from_members(rel_sel, "name")
-        if ent_chunk_ids is not None:  # Q10 anti-dedup vs entity chunks
-            rel_chunks = rel_chunks.join(ent_chunk_ids, "chunk_id", "left_anti")
-        chunk_branches.append(
-            rank_branch(
-                rel_chunks.select("chunk_id", "occurrence"),
-                [F.desc("occurrence"), "chunk_id"],
-                branch_ix,
-            ).select("chunk_id", "_pos", "_branch")
-        )
-        branch_ix += 1
-
-    merged_chunks = None
-    chunk_obs = None
-    available_chunk_tokens = 0
-    if chunk_branches:
-        merged_ids = round_robin_merge(chunk_branches, ["chunk_id"])
-        chunk_obs = Observation("merged_chunks_count")
-        merged_chunks = merged_ids.join(
-            g.chunks.select("chunk_id", "content", "file_path"), "chunk_id"
-        ).observe(chunk_obs, F.count(F.lit(1)).alias("n"))
-        # ── Q14: dynamic chunk token budget (lightrag_search.py:761-823)
-        # available = max_total − tokens(system-prompt scaffold) −
-        # tokens(kg context ACTUALLY kept) − tokens(query) − 200 buffer,
-        # all through the shared tokenizer — the reference formula, not
-        # the configured-maxima estimate.
-        from ..operators.context_ops import build_rag_prompt
-
-        pre_kg_context = KG_QUERY_CONTEXT_TEMPLATE.format(
-            entities_str=_json_lines(
-                ctx.entities, ("entity", "type", "description")
-            ),
-            relations_str=_json_lines(
-                ctx.relations, ("entity1", "entity2", "description")
-            ),
-            text_chunks_str="",
-            reference_list_str="",
-        )
-        pre_sys_prompt = build_rag_prompt(
-            "", params.response_type, params.user_prompt
-        )
-        available_chunk_tokens = max(
-            params.max_total_tokens
-            - count_tokens(pre_sys_prompt)
-            - count_tokens(pre_kg_context)
-            - count_tokens(query)
-            - 200,  # reference: reserved for reference list + safety
-            0,
-        )
-        merged_chunks = truncate_by_token_budget(
-            merged_chunks, "content", "merge_ix", available_chunk_tokens
-        )
-        # ONE materialization of the gather/merge/truncate plan: the
-        # eager checkpoint publishes chunk_obs and both stage-4 reads
-        # (references, chunk rows) become trivial scans of the
-        # checkpointed result instead of re-executing the plan each.
-        merged_chunks = merged_chunks.localCheckpoint(eager=True)
-
-    # ── Stage 4: context assembly (collect the small result) ─────────
-    if merged_chunks is not None:
-        # Q15/Q21: numbered reference list (+ last_modified from the
-        # path-properties table, lightrag_search.py:826-861) with <SEP>
-        # expansion; each surviving chunk carries its reference_id.
-        # Both stage-4 reads (reference rows AND chunk rows) are folded
-        # into ONE action: a tagged union over the checkpointed
-        # merged_chunks, so the online path runs one driver job here
-        # instead of two (both sides are trivial scans of the same
-        # checkpoint; the refs side adds only the small
-        # path_properties broadcast join).
-        from ..operators.context_ops import expand_file_references, reference_list
-
-        refs = expand_file_references(reference_list(merged_chunks))
         if g.path_properties is not None:
-            refs = refs.drop("last_modified").join(
-                g.path_properties.select("file_path", "last_modified"),
-                "file_path",
+            scan = scan.join(
+                g.path_properties.select(
+                    F.col("file_path").alias("path"), "last_modified"
+                ),
+                "path",
                 "left",
             )
-        ref_part = refs.select(
-            F.lit("ref").alias("_sec"), F.col("ref_ix").alias("_ix"),
-            "file_path", "last_modified",
-            F.lit(None).cast("string").alias("chunk_id"),
-            F.lit(None).cast("string").alias("content"),
-        )
-        chunk_part = merged_chunks.select(
-            F.lit("chunk").alias("_sec"), F.col("merge_ix").alias("_ix"),
-            "file_path", F.lit(None).cast("timestamp").alias("last_modified"),
-            "chunk_id", "content",
-        )
-        all_rows = ref_part.unionByName(chunk_part).orderBy("_sec", "_ix").collect()
-        ref_rows = [r for r in all_rows if r["_sec"] == "ref"]
-        chunk_rows = [r for r in all_rows if r["_sec"] == "chunk"]
-        ctx.references = [
-            {"reference_id": r["_ix"], "file_path": r["file_path"],
-             "last_modified": r["last_modified"]}
-            for r in ref_rows
-        ]
-        ref_by_path = {r["file_path"]: r["_ix"] for r in ref_rows}
+        fetch = {"chunk": scan}
+        if want_scores:
+            fetch["score"] = query_scores(
+                g.chunk_embeddings.where(F.col("chunk_id").isin(
+                    sorted({c["chunk_id"] for c in ent_chunks})
+                )),
+                query,
+            )
+        fetched.update(_collect_tagged(spark, fetch, "kg_query:chunks"))
+    chunk_rows = {r["chunk_id"]: r for r in fetched["chunk"]}
+    last_modified = {r["path"]: r.get("last_modified") for r in fetched["chunk"]}
 
-        def _ref_for(raw_path: str) -> int:
-            # a chunk's file_path may be a <SEP>-joined multi-file
-            # string; refs are keyed on the EXPANDED single paths (Q21),
-            # so cite the first (min ref_ix) matching expanded path —
-            # the reference's generate_reference_list_from_chunks
-            # behavior (lightrag_search.py:826-861)
-            hits = [
-                ref_by_path[p]
-                for p in (raw_path or "").split(GRAPH_FIELD_SEP)
-                if p in ref_by_path
-            ]
-            return min(hits) if hits else 0
+    picked = None
+    if want_scores:
+        # Q12: the top candidates by cosine to the raw query; on failure
+        # the reference falls back to weighted polling
+        try:
+            keep = vector_pick_ids(
+                {r["chunk_id"]: r["vscore"] for r in fetched["score"]},
+                max(len(ctx.entities), 1),
+                params.related_chunk_number,
+            )
+            picked = [c for c in ent_chunks if c["chunk_id"] in keep]
+        except Exception:
+            _log.warning("kg_query: vector chunk pick failed; "
+                         "falling back to weighted polling", exc_info=True)
+    if picked is None:
+        picked = weighted_polling_rows(
+            ent_chunks,
+            gradient_quota_map(
+                {r["name"]: r["merge_ix"] for r in entities},
+                params.related_chunk_number,
+            ),
+            "member",
+        )
+    picked.sort(key=_by_occurrence)
+    picked_ids = {c["chunk_id"] for c in picked}
+    # Q10 anti-dedup: relation chunks skip those the entities picked
+    rel_picked = sorted(
+        (c for c in rel_chunks if c["chunk_id"] not in picked_ids),
+        key=_by_occurrence,
+    )
+    branches = [[{"chunk_id": c} for c in vec_ids]] if mode == "mix" else []
+    branches += [picked, rel_picked]
+    # Q13 merge; a candidate missing from the chunks table drops out,
+    # as in an inner join
+    merged = [chunk_rows[r["chunk_id"]]
+              for r in round_robin_rows(branches, ["chunk_id"])
+              if r["chunk_id"] in chunk_rows]
+    # Q14: dynamic chunk token budget (lightrag_search.py:761-823)
+    # available = max_total − tokens(system-prompt scaffold) −
+    # tokens(kg context ACTUALLY kept) − tokens(query) − 200 buffer,
+    # all through the shared tokenizer — the reference formula, not the
+    # configured-maxima estimate. With no chunks or references yet,
+    # context_str() is exactly the kg-only context.
+    available_chunk_tokens = max(
+        params.max_total_tokens
+        - count_tokens(build_rag_prompt("", params.response_type, params.user_prompt))
+        - count_tokens(ctx.context_str())
+        - count_tokens(query)
+        - 200,  # reference: reserved for reference list + safety
+        0,
+    )
+    kept = token_budget_prefix(merged, "content", available_chunk_tokens)
+    lap("merge_chunks")
 
-        ctx.chunks = [
-            {"reference_id": _ref_for(r["file_path"]),
-             "content": r["content"], "chunk_id": r["chunk_id"],
-             "file_path": r["file_path"]}
-            for r in chunk_rows
-        ]
+    # ── Stage 4: context assembly (Q15/Q21) ───────────────────────────
+    # Numbered reference list with <SEP> expansion (+ last_modified from
+    # the path-properties table, lightrag_search.py:826-861).
+    refs = expand_reference_rows(reference_rows([r["file_path"] for r in kept]))
+    ctx.references = [
+        {"reference_id": r["ref_ix"], "file_path": r["file_path"],
+         "last_modified": last_modified.get(r["file_path"])}
+        for r in refs
+    ]
+    # a chunk's file_path may be a <SEP>-joined multi-file string; refs
+    # are keyed on the EXPANDED single paths (Q21), so a chunk cites the
+    # first (min ref_ix) matching expanded path — the reference's
+    # generate_reference_list_from_chunks behavior (:826-861)
+    ref_by_path = {r["file_path"]: r["ref_ix"] for r in refs}
+    ctx.chunks = [
+        {"reference_id": min((ref_by_path[p] for p in
+                              (r["file_path"] or "").split(GRAPH_FIELD_SEP)
+                              if p in ref_by_path), default=0),
+         "content": r["content"], "chunk_id": r["chunk_id"],
+         "file_path": r["file_path"]}
+        for r in kept
+    ]
     ctx.processing_info = {
         "total_entities_found": n_entities_found,
         "total_relations_found": n_relations_found,
         "entities_after_truncation": len(ctx.entities),
         "relations_after_truncation": len(ctx.relations),
-        "merged_chunks_count": (
-            int(chunk_obs.get["n"]) if chunk_obs is not None else 0
-        ),
+        "merged_chunks_count": len(merged),
         "final_chunks_count": len(ctx.chunks),
         "available_chunk_tokens": available_chunk_tokens,
     }
+    lap("context")
+    _log.debug("kg_query mode=%s stage_s=%s", mode, ctx.stage_s)
     return ctx
 
 
@@ -676,8 +597,6 @@ def answer_query(
         return {"context": context_str, "references": ctx.references,
                 "raw_data": ctx.raw_data(),
                 "processing_info": ctx.processing_info}
-    from ..operators.context_ops import build_rag_prompt
-
     # the reference's rag_response system prompt wraps the context
     # (lightrag_search.py:87-117); the query is the user message
     sys_prompt = build_rag_prompt(

@@ -1,0 +1,238 @@
+"""kg_query runs its stages 2-4 on the driver. Each driver list op is
+pinned here to the Spark operator it mirrors: seeded random inputs go
+through both, and the outputs must be equal (ties, duplicate keys,
+empty inputs, null fields, non-ASCII and control characters included).
+"""
+
+from __future__ import annotations
+
+import random
+from itertools import accumulate
+
+import pytest
+from pyspark.sql import functions as F
+
+from graphrag_kb_server_spark import GRAPH_FIELD_SEP
+from graphrag_kb_server_spark.functions.embedding import embed_text
+from graphrag_kb_server_spark.operators.context_ops import (
+    expand_file_references,
+    expand_reference_rows,
+    query_scores,
+    reference_list,
+    reference_rows,
+    vector_pick_ids,
+    vector_similarity_chunk_pick,
+)
+from graphrag_kb_server_spark.operators.merge import (
+    rank_branch,
+    round_robin_merge,
+    round_robin_rows,
+)
+from graphrag_kb_server_spark.operators.polling import (
+    gradient_quota_map,
+    gradient_quotas,
+    weighted_polling_pick,
+    weighted_polling_rows,
+)
+from graphrag_kb_server_spark.operators.truncation import (
+    token_budget_prefix,
+    truncate_by_token_budget,
+)
+from graphrag_kb_server_spark.plans.query_pipeline import (
+    gather_chunk_rows,
+    gather_chunks_from_members,
+)
+from graphrag_kb_server_spark.tokenizer import count_tokens
+
+SEEDS = [0, 1, 2, 3]
+
+# names that sort differently by bytes, code points or case would show
+# a tie-order mismatch between Spark and Python
+NAMES = ["alpha", "Alpha", "Émile", "zeta", "東京", "a\x01b", "Ångström",
+         "beta", "b", "ß", "ǅ", "tab\there", "x" * 3, "Zoë"]
+TEXTS = ["word " * 4, "Ünïcödé ω≈ç √∫ 漢字かな", "ctrl\x00\x07\x1b[0m\r\n",
+         "emoji 🙂🙃 mix", "", None, "a,b;c: d", "\"quoted\" \\ back",
+         "tabs\t\tand  spaces", "12345 67.89"]
+
+
+def _rng(seed: int) -> random.Random:
+    return random.Random(1000 + seed)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_round_robin_merge_parity(spark, seed):
+    rng = _rng(seed)
+    branches = []
+    for _ in range(rng.randint(1, 3)):
+        names = rng.sample(NAMES, rng.randint(0, 8))
+        # few distinct scores: many ties, broken by name
+        branches.append([(n, rng.choice([0.1, 0.2, 0.5])) for n in names])
+    spark_branches = [
+        rank_branch(
+            spark.createDataFrame(rows, "name string, vscore double"),
+            [F.desc("vscore"), "name"], b,
+        )
+        for b, rows in enumerate(branches)
+    ]
+    got = [
+        (r["merge_ix"], r["name"], r["vscore"])
+        for r in round_robin_merge(spark_branches, ["name"])
+        .orderBy("merge_ix").collect()
+    ]
+    want = [
+        (r["merge_ix"], r["name"], r["vscore"])
+        for r in round_robin_rows(
+            [sorted(({"name": n, "vscore": s} for n, s in rows),
+                    key=lambda r: (-r["vscore"], r["name"]))
+             for rows in branches],
+            ["name"],
+        )
+    ]
+    assert got == want
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_truncate_by_token_budget_parity(spark, seed):
+    rng = _rng(seed)
+    rows = [(i, rng.choice(TEXTS)) for i in range(rng.randint(1, 12))]
+    df = spark.createDataFrame(rows, "pos int, txt string")
+    cums = list(accumulate(count_tokens(t or "") for _, t in rows))
+    # budgets from "the first row alone overflows" to "everything fits",
+    # plus a budget hit exactly by a prefix (that prefix is kept)
+    for budget in (0, 2, rng.choice(cums), rng.choice(cums) - 1, 10_000):
+        got = [r["pos"] for r in truncate_by_token_budget(df, "txt", "pos", budget)
+               .orderBy("pos").collect()]
+        want = [r["pos"] for r in token_budget_prefix(
+            [{"pos": p, "txt": t} for p, t in rows], "txt", budget)]
+        assert got == want, budget
+
+
+def test_truncate_first_row_overflow_gives_empty_prefix():
+    rows = [{"txt": "many words in the first row"}, {"txt": "x"}]
+    assert token_budget_prefix(rows, "txt", 3) == []
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_serialized_row_token_parity(spark, seed):
+    """kg_query counts tokens on the F.to_json payload stage 1 collects;
+    to_json omits null fields. The driver count over the collected
+    strings keeps the same prefix as Spark's token-count UDF."""
+    rng = _rng(seed)
+    rows = [
+        (i, rng.choice(NAMES), rng.choice(["org", None, "人物"]), rng.choice(TEXTS))
+        for i in range(rng.randint(2, 10))
+    ]
+    df = spark.createDataFrame(
+        rows, "merge_ix int, name string, type string, description string"
+    ).withColumn("_ser", F.to_json(F.struct(
+        F.col("name").alias("entity"), "type", "description")))
+    collected = [r.asDict() for r in df.orderBy("merge_ix").collect()]
+    for r in collected:
+        assert ('"type"' in r["_ser"]) == (r["type"] is not None)
+        assert ('"description"' in r["_ser"]) == (r["description"] is not None)
+    for budget in (5, 20, 60):
+        got = [r["merge_ix"] for r in truncate_by_token_budget(
+            df, "_ser", "merge_ix", budget).orderBy("merge_ix").collect()]
+        want = [r["merge_ix"] for r in token_budget_prefix(collected, "_ser", budget)]
+        assert got == want, budget
+
+
+def _members(rng: random.Random) -> list[dict]:
+    pool = [f"c{i:02d}" for i in range(12)] + ["ç-块"]
+    return [
+        {"name": n, "merge_ix": ix,
+         "source_chunk_ids": (None if rng.random() < 0.1
+                              else [rng.choice(pool) for _ in range(rng.randint(0, 5))])}
+        for ix, n in enumerate(rng.sample(NAMES, rng.randint(0, 8)))
+    ]
+
+
+_MEMBER_SCHEMA = "name string, merge_ix int, source_chunk_ids array<string>"
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_gather_chunks_from_members_parity(spark, seed):
+    members = _members(_rng(seed))
+    df = spark.createDataFrame(
+        [(m["name"], m["merge_ix"], m["source_chunk_ids"]) for m in members],
+        _MEMBER_SCHEMA,
+    )
+    got = sorted(
+        (r["member"], r["merge_ix"], r["chunk_id"], r["occurrence"])
+        for r in gather_chunks_from_members(df, "name").collect()
+    )
+    want = sorted(
+        (r["member"], r["merge_ix"], r["chunk_id"], r["occurrence"])
+        for r in gather_chunk_rows(members, "name")
+    )
+    assert got == want
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+@pytest.mark.parametrize("n_entities", [0, 1, 7])
+def test_gradient_polling_parity(spark, seed, n_entities):
+    rng = _rng(seed)
+    per_entity = rng.randint(1, 4)
+    names = rng.sample(NAMES, n_entities)
+    ranks = {n: i for i, n in enumerate(names)}
+    chunks = [
+        {"name": n, "chunk_id": f"{n}/{j}", "occurrence": rng.randint(1, 3)}
+        for n in names + ["not-an-entity"]
+        for j in range(rng.randint(0, 6))
+    ]
+    ents = spark.createDataFrame(list(ranks.items()), "name string, rank int")
+    quotas = gradient_quotas(ents, "rank", per_entity)
+    assert {r["name"]: r["quota"] for r in quotas.collect()} == \
+        gradient_quota_map(ranks, per_entity)
+    chunk_df = spark.createDataFrame(
+        [(c["name"], c["chunk_id"], c["occurrence"]) for c in chunks],
+        "name string, chunk_id string, occurrence int",
+    )
+    got = sorted((r["name"], r["chunk_id"])
+                 for r in weighted_polling_pick(chunk_df, quotas, "name").collect())
+    want = sorted((r["name"], r["chunk_id"]) for r in weighted_polling_rows(
+        chunks, gradient_quota_map(ranks, per_entity), "name"))
+    assert got == want
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_reference_list_expand_parity(spark, seed):
+    rng = _rng(seed)
+    paths = ["a.txt", "b.txt", "ü/ñ.md", "c.txt"]
+    sep_paths = [f"a.txt{GRAPH_FIELD_SEP}c.txt", f"d.txt{GRAPH_FIELD_SEP}a.txt",
+                 f"e.txt{GRAPH_FIELD_SEP}e.txt", f"f.txt{GRAPH_FIELD_SEP}"]
+    file_paths = [rng.choice(paths + sep_paths + [None])
+                  for _ in range(rng.randint(1, 10))]
+    chunks = spark.createDataFrame(
+        list(enumerate(file_paths)), "merge_ix int, file_path string"
+    )
+    refs = reference_list(chunks)
+    got = sorted(((r["ref_ix"], r["file_path"]) for r in refs.collect()),
+                 key=lambda t: t[0])
+    want_refs = reference_rows(file_paths)
+    assert got == [(r["ref_ix"], r["file_path"]) for r in want_refs]
+    got_exp = sorted((r["ref_ix"], r["file_path"])
+                     for r in expand_file_references(refs).collect())
+    want_exp = [(r["ref_ix"], r["file_path"]) for r in expand_reference_rows(want_refs)]
+    assert got_exp == sorted(want_exp)
+    # the driver list is in ref_ix order, each path in split order
+    assert [ix for ix, _ in want_exp] == sorted(ix for ix, _ in want_exp)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_vector_pick_parity(spark, seed):
+    rng = _rng(seed)
+    vecs = [[float(x) for x in embed_text(t)]
+            for t in ("alpha", "alpha beta gamma", "delta", "beta")]
+    vecs.append([0.0] * len(vecs[0]))
+    # repeated vectors give equal scores: ties broken by chunk_id
+    emb = [(f"k{i:02d}", rng.choice(vecs)) for i in range(12)]
+    emb_df = spark.createDataFrame(emb, "chunk_id string, embedding array<float>")
+    cands = rng.sample([cid for cid, _ in emb] + ["no-embedding"], 8)
+    cand_df = spark.createDataFrame([(c,) for c in cands], "chunk_id string")
+    n_entities = rng.randint(1, 4)
+    got = {r["chunk_id"] for r in vector_similarity_chunk_pick(
+        cand_df, emb_df, "alpha beta", n_entities, related_chunk_number=1).collect()}
+    scores = {r["chunk_id"]: r["vscore"] for r in query_scores(
+        emb_df.where(F.col("chunk_id").isin(cands)), "alpha beta").collect()}
+    assert got == vector_pick_ids(scores, n_entities, related_chunk_number=1)

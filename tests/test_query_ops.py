@@ -197,3 +197,133 @@ def test_rrf_fuse(spark):
     assert out[1] == (1, rr(1, 3), 2)
     assert {o[0] for o in out} == {1, 2, 3, 4}
     assert dict((o[0], o[2]) for o in out)[4] == 1
+
+
+_ACTIONS = ("collect", "toPandas", "first", "take", "head", "tail", "count",
+            "isEmpty", "toLocalIterator", "foreach", "foreachPartition",
+            "show", "checkpoint", "localCheckpoint")
+
+
+def _count_actions(spark, monkeypatch) -> list[str]:
+    """Record every outermost DataFrame action (an action called inside
+    another, e.g. first → head → take, is part of the outer one) and
+    every write, tagged ``cache:`` while LlmCache I/O runs."""
+    from graphrag_kb_server_spark.operators.context_ops import LlmCache
+
+    log: list[str] = []
+    state = {"depth": 0, "cache": 0}
+
+    def counted(orig, name):
+        def call(*a, **kw):
+            if state["depth"] == 0:
+                log.append(("cache:" if state["cache"] else "") + name)
+            state["depth"] += 1
+            try:
+                return orig(*a, **kw)
+            finally:
+                state["depth"] -= 1
+        return call
+
+    def cache_io(orig):
+        def call(*a, **kw):
+            state["cache"] += 1
+            try:
+                return orig(*a, **kw)
+            finally:
+                state["cache"] -= 1
+        return call
+
+    df_cls = type(spark.range(1))
+    writer_cls = type(spark.range(1).write)
+    for name in _ACTIONS:
+        monkeypatch.setattr(df_cls, name, counted(getattr(df_cls, name), name))
+    for name in ("save", "parquet", "saveAsTable", "insertInto"):
+        monkeypatch.setattr(writer_cls, name,
+                            counted(getattr(writer_cls, name), "write"))
+    for name in ("get", "put", "compact"):
+        monkeypatch.setattr(LlmCache, name, cache_io(getattr(LlmCache, name)))
+    return log
+
+
+def test_kg_query_action_budget(spark, monkeypatch, tmp_path):
+    """A request is at most two Spark actions (search collect + chunk
+    collect) and never a checkpoint; answer_query adds only the LLM
+    cache's own I/O."""
+    from graphrag_kb_server_spark.plans.query_pipeline import (
+        QueryParams, answer_query, kg_query,
+    )
+
+    g = _mini_graph(spark)
+    log = _count_actions(spark, monkeypatch)
+    for mode in ("local", "global", "hybrid", "mix"):
+        log.clear()
+        ctx = kg_query(spark, g, "Alpha", QueryParams(mode=mode, top_k=5))
+        assert ctx.chunks, mode
+        assert len(log) <= 2, (mode, log)
+        assert not [a for a in log if "checkpoint" in a.lower()], (mode, log)
+    log.clear()
+    res = answer_query(spark, g, "Alpha", QueryParams(mode="hybrid", top_k=5),
+                       cache_path=str(tmp_path / "llm_cache"))
+    assert res["answer"]
+    outside_cache = [a for a in log if not a.startswith("cache:")]
+    assert len(outside_cache) <= 2 and "write" not in outside_cache, log
+
+
+def test_kg_query_stage_times_and_job_groups(spark):
+    from graphrag_kb_server_spark.plans.query_pipeline import (
+        QueryParams, kg_query,
+    )
+
+    g = _mini_graph(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller")
+    try:
+        ctx = kg_query(spark, g, "Alpha", QueryParams(mode="mix", top_k=5))
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(ctx.stage_s) == {"search", "truncate", "merge_chunks", "context"}
+    assert all(v >= 0 for v in ctx.stage_s.values())
+    assert "stage_s" not in str(ctx.raw_data()) and "search" not in ctx.processing_info
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("kg_query:search")
+    assert tracker.getJobIdsForGroup("kg_query:chunks")
+
+
+def test_q12_pick_failure_falls_back_to_polling(spark, monkeypatch, caplog):
+    """The documented Q12 fallback: when the vector pick raises, the
+    request is served with the weighted-polling pick and a WARNING."""
+    import logging
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    import __spark_entry__ as entrymod
+    from graphrag_kb_server_spark.plans import query_pipeline as qp
+
+    g = entrymod._tiny_graph_tables(spark)
+    hub = g.nodes.orderBy(F.desc("mention_count"), "name").first()["name"]
+    query = f"What is the relationship between {hub} and others?"
+
+    def run(pick):
+        # no relations, so no relation chunks back-fill the entity pick
+        return qp.kg_query(spark, g, query, qp.QueryParams(
+            mode="hybrid", top_k=10, chunk_pick=pick, related_chunk_number=1,
+            max_entity_tokens=1000, max_relation_tokens=0))
+
+    polling = run("weighted_polling")
+    # the two picks differ on this graph, so the comparison below can fail
+    assert run("vector").context_str() != polling.context_str()
+
+    def broken(*a, **kw):
+        raise RuntimeError("embedding backend unavailable")
+
+    monkeypatch.setattr(qp, "vector_pick_ids", broken)
+    with caplog.at_level(logging.WARNING, logger=qp.__name__):
+        fallback = run("vector")
+    assert fallback.context_str() == polling.context_str()
+    assert fallback.processing_info == polling.processing_info
+    assert fallback.references == polling.references
+    assert any(r.levelno == logging.WARNING and "falling back" in r.getMessage()
+               for r in caplog.records)
