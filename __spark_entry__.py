@@ -78,6 +78,14 @@ SEP = "<SEP>"
 #: centrality over this exact graph (test/lightrag/test_lightrag_centrality.py)
 DWELL1_DIR = "/root/reference/docs/dummy_projects/lightrag/dwell1/lightrag"
 
+#: entries that read a fixture outside the sf data → the path they need;
+#: a host without it reports them as unavailable (tools/check_oracle.py)
+FIXTURE_DIRS = {
+    f"kg_ref_dwell1_{name}": DWELL1_DIR
+    for name in ("degree", "betweenness", "components", "histogram", "topk",
+                 "chunk_windows")
+}
+
 
 def _dwell1_chunk_totals() -> list[tuple[str, int]]:
     """(doc_id, total token count) implied by the recorded cl100k
@@ -5102,7 +5110,8 @@ SELECT s.doc_id, CAST(3 AS BIGINT) AS n_paras,
 FROM s LEFT JOIN kept ON s.doc_id = kept.doc_id
 """
 
-    o.update(_dwell1_oracles())
+    if Path(DWELL1_DIR).is_dir():
+        o.update(_dwell1_oracles())
     return o
 
 

@@ -257,12 +257,14 @@ def _graph_tables(spark, out: str):
 
 def bench_query_path(
     spark, n_docs: int, repeats: int
-) -> tuple[dict[str, list[float]], dict[str, dict[str, float]]]:
+) -> tuple[dict[str, list[float]], dict[str, dict[str, float]], float | None]:
     """Online-surface latency: kg_query (hybrid + mix) and answer_query
     end-to-end — stage 1-4 including the driver-side context collects,
     exactly what a serving request pays. A fresh query string per repeat
     defeats the LLM cache so every repeat is a cold answer. Also returns
-    the median ``QueryContext.stage_s`` per kg_query mode and stage."""
+    the median ``QueryContext.stage_s`` per kg_query mode and stage, and
+    the wall seconds of the KB's driver snapshot build, which the first
+    request pays (None when the KB is over the snapshot cap)."""
     from graphrag_kb_server_spark.plans.query_pipeline import (
         QueryParams,
         answer_query,
@@ -293,7 +295,8 @@ def bench_query_path(
         mode: {stage: round(statistics.median(v), 4) for stage, v in per.items()}
         for mode, per in stages.items()
     }
-    return out, medians
+    snap = g.snapshot(spark)  # built by the first request: no Spark work
+    return out, medians, None if snap is None else round(snap.build_s, 4)
 
 
 def main() -> None:
@@ -433,7 +436,9 @@ def main() -> None:
     # codegen/JIT warm-up spans the first 2-3 invocations (observed:
     # 22.5 → 5.8 → 5.4 → 4.4s on an idle box) — with 2 repeats the min
     # still lands mid-warm-up, so these always get ≥4.
-    query_times, query_stages = bench_query_path(spark, n_docs, max(repeats, 4))
+    query_times, query_stages, query_snapshot_s = bench_query_path(
+        spark, n_docs, max(repeats, 4)
+    )
     for k, v in query_times.items():
         repeat_times[k] = v
         repeat_load[k] = []
@@ -470,6 +475,7 @@ def main() -> None:
                 "index_docs_per_sec": round(n_docs / min(idx_runs), 2),
                 "curation_docs_per_sec": round(n_docs / min(runs), 2),
                 "query_stages": query_stages,
+                "query_snapshot_s": query_snapshot_s,
             }
         )
     )

@@ -20,9 +20,11 @@ from pyspark.sql import functions as F
 log = logging.getLogger(__name__)
 
 
-def collect_if_small(df: DataFrame, cap: int, op: str) -> pd.DataFrame | None:
-    """The size-adaptive gate: ``df`` as a pandas frame when it has at
-    most ``cap`` rows, else ``None``.
+def collect_if_small(
+    df: DataFrame, cap: int, op: str, rows: bool = False
+) -> pd.DataFrame | list | None:
+    """The size-adaptive gate: ``df`` as a pandas frame (with ``rows``,
+    as a list of Rows) when it has at most ``cap`` rows, else ``None``.
 
     The iterative graph operators (components, betweenness, PageRank,
     HITS, LPA, modularity refinement) and linking each have a driver
@@ -38,9 +40,14 @@ def collect_if_small(df: DataFrame, cap: int, op: str) -> pd.DataFrame | None:
     complete it IS the driver path's input, so no separate ``count()``
     job runs. ``cap <= 0`` forces the distributed path and runs no
     Spark job. Each decision is logged as one record whose ``args`` are
-    ``{op, probed_rows, cap, path}``.
+    ``{op, probed_rows, cap, path}``. ``rows=True`` collects instead of
+    going through pandas, so values stay exactly what ``Row`` gives
+    (``datetime``, ``None``, lists) with no NaN or NaT.
     """
-    probe = df.limit(cap + 1).toPandas() if cap > 0 else None
+    probe = None
+    if cap > 0:
+        limited = df.limit(cap + 1)
+        probe = limited.collect() if rows else limited.toPandas()
     small = probe is not None and len(probe) <= cap
     log.info(
         "%(op)s: %(probed_rows)s probed rows, cap %(cap)s -> %(path)s path",

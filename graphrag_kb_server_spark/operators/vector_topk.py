@@ -14,12 +14,18 @@ TakeOrderedAndProject: each partition keeps a k-heap, the driver merges
 — no global sort, no shuffle of the full table. That plan is the right
 one at any scale; an LSH-bucketed approximate variant for latency-bound
 serving lives in operators/similarity.py.
+
+Driver twin: ``cosine_topk_rows`` (with ``cosine_scores``, the twin of
+``V.cosine_with_query``) runs the same scores, order and cut in numpy
+over a float64 matrix. kg_query uses it on KBs small enough for a
+driver snapshot; tests/test_query_driver_parity.py pins its scores to
+``cosine_topk``'s bit for bit.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
@@ -41,12 +47,57 @@ def cosine_topk(
     if exclude_key is not None:
         col, val = exclude_key
         out = out.where(F.col(col) != val)
-    return out.orderBy(F.desc(score_alias), *_tiebreak(table)).limit(k)
+    tiebreak = tiebreak_col(table)
+    return out.orderBy(
+        F.desc(score_alias), *([F.col(tiebreak)] if tiebreak else [])
+    ).limit(k)
 
 
-def _tiebreak(table: DataFrame) -> list[Column]:
-    """Deterministic tie-break on the first string/id column."""
+def tiebreak_col(table: DataFrame) -> str | None:
+    """Deterministic tie-break: the first string/id column."""
     for f in table.schema.fields:
         if f.dataType.simpleString() in ("string", "bigint", "int"):
-            return [F.col(f.name)]
-    return []
+            return f.name
+    return None
+
+
+def _fold(x: np.ndarray) -> np.ndarray:
+    """Left-to-right float64 sum over the last axis, as F.aggregate
+    folds (np.cumsum is sequential; np.sum and np.dot are not)."""
+    if x.shape[-1] == 0:
+        return np.zeros(x.shape[:-1])
+    return np.cumsum(x, axis=-1)[..., -1]
+
+
+def cosine_scores(mat: np.ndarray, query_vec: np.ndarray | list[float]) -> np.ndarray:
+    """Driver twin of ``V.cosine_with_query`` over the rows of a float64
+    matrix: same folds, row norm times query norm as the denominator,
+    0.0 where that is 0 — bit-identical scores."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    denom = np.sqrt(_fold(mat * mat)) * np.sqrt(_fold(q * q))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom == 0.0, 0.0, _fold(mat * q) / denom)
+
+
+def cosine_topk_rows(
+    mat: np.ndarray,
+    query_vec: np.ndarray | list[float],
+    k: int,
+    tiebreak: list | None = None,
+) -> list[tuple[int, float]]:
+    """Driver twin of :func:`cosine_topk`: (row index, score) of the top
+    ``k`` rows of ``mat`` by score desc, then ``tiebreak`` value asc
+    (nulls first, as Spark sorts them)."""
+    scores = cosine_scores(mat, query_vec)
+    n = len(scores)
+    if k <= 0 or n == 0:
+        return []
+    cand = range(n) if k >= n else np.flatnonzero(
+        scores >= np.partition(scores, n - k)[n - k]
+    )
+
+    def key(i):
+        v = tiebreak[i] if tiebreak is not None else i
+        return (-scores[i], v is not None, v)
+
+    return [(int(i), float(scores[i])) for i in sorted(cand, key=key)[:k]]

@@ -1,24 +1,33 @@
-"""The 4-stage kg_query pipeline: one Spark search, then driver lists.
+"""The 4-stage kg_query pipeline: stage-1 search, then driver lists.
 
 Reference entry point: ``kg_query``
 (/root/reference/graphrag_kb_server/service/lightrag/lightrag_search.py:330-597),
 stages labelled at :612-614 — 1. Search → 2. Truncate → 3. Merge chunks
 → 4. Build LLM context.
 
-Spark lifecycle (SURVEY.md §3.1): the query embedding is computed once
-(reference :959-974) and broadcast by value into the stage-1 cosine
-top-k plans, the only part of a request that scales with the index.
-Their results (≤ top_k rows per branch) come back in ONE tagged-union
-collect. Stages 2-4 — round-robin dedup, token-prefix truncation,
-gradient polling or the vector pick, context assembly — run in plain
-Python over those rows, as the reference runs them over its in-process
-vector-store results; one id-filtered collect fetches the candidate
-chunks' text. Each driver list op has a Spark twin in ``operators/``
+The reference serves every query from in-process nano-vectordb matrices
+and in-memory KV stores. Here each ``GraphTables`` has a lazily built
+driver snapshot (:class:`KBSnapshot`): the first request on a KB
+collects its seven frames in ONE tagged-union action under job group
+``kg_query:snapshot``, gated by ``graph_support.collect_if_small``'s
+rule at ``SNAPSHOT_CAP`` total rows. From then on every request runs
+stages 1-4 in plain Python/numpy with zero Spark actions: stage 1 is
+``vector_topk.cosine_topk_rows`` (the numpy twin of ``cosine_topk``)
+plus dict joins that mirror the Spark plans' operator order. A KB over
+the cap keeps the distributed stage 1: the query embedding is
+broadcast by value into the cosine top-k plans, whose bounded results
+(≤ top_k rows per branch) come back in ONE tagged-union collect under
+``kg_query:search``, and one id-filtered collect under
+``kg_query:chunks`` fetches the candidate chunks' text.
+
+Stages 2-4 — round-robin dedup, token-prefix truncation, gradient
+polling or the vector pick, context assembly — run in plain Python over
+either path's rows, as the reference runs them over its in-process
+vector-store results. Each driver op has a Spark twin in ``operators/``
 (the standalone Q6/Q8/Q9/Q11/Q15/Q21 entries), pinned to it by
-tests/test_query_driver_parity.py. A request is therefore at most two
-Spark actions, run under the job groups ``kg_query:search`` and
-``kg_query:chunks``; ``QueryContext.stage_s`` holds each stage's wall
-time.
+tests/test_query_driver_parity.py, which also pins the snapshot path
+to the distributed one. ``QueryContext.stage_s`` holds each stage's
+wall time.
 
 Modes (reference :984-1034, normalization all→hybrid at
 model/rag_parameters.py:116): local = entity search; global = relation
@@ -30,16 +39,19 @@ from __future__ import annotations
 import json
 import logging
 import re
+import threading
 import time
 from collections import Counter
 from dataclasses import dataclass, field
 from functools import reduce
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import GRAPH_FIELD_SEP
-from ..functions.embedding import embed_text
+from ..functions.embedding import EMBEDDING_DIM, embed_text
 from ..tokenizer import count_tokens
 from ..operators.context_ops import (
     build_rag_prompt,
@@ -48,12 +60,22 @@ from ..operators.context_ops import (
     reference_rows,
     vector_pick_ids,
 )
+from ..operators.graph_support import collect_if_small
 from ..operators.merge import round_robin_rows
 from ..operators.polling import gradient_quota_map, weighted_polling_rows
 from ..operators.truncation import token_budget_prefix
-from ..operators.vector_topk import cosine_topk
+from ..operators.vector_topk import (
+    cosine_scores,
+    cosine_topk,
+    cosine_topk_rows,
+    tiebreak_col,
+)
 
 _log = logging.getLogger(__name__)
+
+# Total rows of a KB's seven frames up to which it is served from a
+# driver snapshot: the default cap of canonical_map and components.
+SNAPSHOT_CAP = 100_000
 
 _STOPWORDS = {
     "the", "a", "an", "of", "in", "on", "to", "and", "or", "is", "are",
@@ -114,6 +136,12 @@ class QueryParams:
 
 @dataclass
 class GraphTables:
+    """The frames of one KB. A GraphTables is read-only for its
+    lifetime: re-indexing a KB means building a new GraphTables over the
+    new tables. Its driver snapshot (:meth:`snapshot`) is keyed to the
+    identity of the seven frames, so assigning a new frame to a field
+    rebuilds it, but data changed under an unchanged frame is not seen.
+    """
     nodes: DataFrame
     edges: DataFrame
     chunks: DataFrame
@@ -125,6 +153,28 @@ class GraphTables:
     # (operators.personalization.last_modified); joined into the query
     # reference list (lightrag_search.py:826-861)
     path_properties: DataFrame | None = None
+    # (frames, cap, snapshot or None) of the last gate decision
+    _snapshot: tuple | None = field(default=None, init=False, repr=False,
+                                    compare=False)
+    _snapshot_lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
+
+    def snapshot(self, spark: SparkSession) -> KBSnapshot | None:
+        """The KB's driver snapshot, or None when it is over
+        ``SNAPSHOT_CAP``. Built (or declined) once per set of frames and
+        cap, under a lock, so concurrent first requests build it once."""
+        frames = (self.nodes, self.edges, self.chunks, self.entity_embeddings,
+                  self.relation_embeddings, self.chunk_embeddings,
+                  self.path_properties)
+        cap = SNAPSHOT_CAP
+        with self._snapshot_lock:
+            cached = self._snapshot
+            if (cached is None or cached[1] != cap
+                    or any(a is not b for a, b in zip(cached[0], frames))):
+                self._snapshot = cached = (frames, cap,
+                                           _build_snapshot(spark, self, cap))
+            return cached[2]
 
 
 # The four-slot context template (reference: PROMPTS["kg_query_context"]
@@ -285,24 +335,277 @@ def gather_chunk_rows(selected: list[dict], member_key: str) -> list[dict]:
 
 
 def _collect_tagged(
-    spark: SparkSession, parts: dict[str, DataFrame], group: str
-) -> dict[str, list[dict]]:
+    spark: SparkSession,
+    parts: dict[str, DataFrame],
+    group: str,
+    gate: tuple[str, int] | None = None,
+) -> dict[str, list[dict]] | None:
     """Collect several small frames in ONE action under job group
-    ``group`` (the caller's group is restored after); rows by tag."""
+    ``group`` (the caller's group is restored after); rows by tag, each
+    with its own frame's columns. With ``gate=(op, cap)`` the action is
+    ``collect_if_small``'s bounded probe of the union, and the result is
+    None when the union has more than ``cap`` rows."""
     tagged = [df.withColumn("_sec", F.lit(sec)) for sec, df in parts.items()]
     union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
     sc = spark.sparkContext
     caller_group = sc.getLocalProperty("spark.jobGroup.id")
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        rows = union.collect()
+        rows = (union.collect() if gate is None
+                else collect_if_small(union, gate[1], gate[0], rows=True))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", caller_group)
+    if rows is None:
+        return None
+    cols = {sec: df.columns for sec, df in parts.items()}
     out: dict[str, list[dict]] = {sec: [] for sec in parts}
     for r in rows:
         d = r.asDict()
-        out[d.pop("_sec")].append(d)
+        sec = d["_sec"]
+        out[sec].append({c: d[c] for c in cols[sec]})
     return out
+
+
+def _entity_payload() -> Column:
+    """The entity row shape stage 2 counts tokens on, as Spark JSON."""
+    return F.to_json(F.struct(
+        F.col("name").alias("entity"), "type", "description"
+    )).alias("_ser")
+
+
+def _relation_payload() -> Column:
+    """The relation row shape stage 2 counts tokens on, as Spark JSON."""
+    return F.to_json(F.struct(
+        F.col("src").alias("entity1"), F.col("tgt").alias("entity2"),
+        "description",
+    )).alias("_ser")
+
+
+_ENTITY_COLS = ("name", "type", "description", "source_chunk_ids")
+_RELATION_COLS = ("src", "tgt", "description", "weight", "source_chunk_ids")
+
+
+def _search_parts(
+    g: GraphTables, qvec, mode: str, params: QueryParams
+) -> dict[str, DataFrame]:
+    """The distributed stage 1: the search frames ``kg_query`` collects
+    in one tagged union on a KB over the snapshot cap. Each entity /
+    relation row carries the ``_ser`` payload stage 2 counts tokens on."""
+    ent_cols = [*_ENTITY_COLS, "vscore", _entity_payload()]
+    rel_cols = [*_RELATION_COLS, "vscore", _relation_payload()]
+    parts: dict[str, DataFrame] = {}
+    if mode != "global":
+        loc = _entity_search(g, qvec, params.top_k)
+        parts["loc"] = loc.select(*ent_cols)
+        # edges incident to the top local entities, scored by the
+        # entity's score (one-hop graph expansion)
+        parts["inc"] = (
+            loc.select("name", "vscore")
+            .join(
+                g.edges,
+                (F.col("name") == F.col("src")) | (F.col("name") == F.col("tgt")),
+            )
+            .groupBy("src", "tgt")
+            .agg(
+                F.max("vscore").alias("vscore"),
+                F.first("description").alias("description"),
+                F.first("weight").alias("weight"),
+                F.first("source_chunk_ids").alias("source_chunk_ids"),
+            )
+            .select(*rel_cols)
+        )
+    if mode != "local":
+        glob = _relation_search(g, qvec, params.top_k)
+        parts["glob"] = glob.select(*rel_cols)
+        # endpoint entities of the top relations, in relation-score order
+        endpoints = glob.select(
+            F.explode(F.array("src", "tgt")).alias("name"), "vscore"
+        ).groupBy("name").agg(F.max("vscore").alias("vscore"))
+        parts["ep"] = endpoints.join(g.nodes, "name").select(*ent_cols)
+    if mode == "mix":
+        parts["vec"] = _chunk_search(
+            g, qvec, params.related_chunk_number * 2
+        ).select("chunk_id", "vscore")
+    return parts
+
+
+def _fetch_chunks(
+    spark: SparkSession, g: GraphTables, ids: set, score_ids: set, query: str
+) -> tuple[dict, dict, dict]:
+    """The distributed chunk fetch: ONE id-filtered collect of the
+    candidate chunks (content, file_path, each expanded path's
+    last_modified) and, for ``score_ids``, the Spark-computed Q12
+    cosine to the raw query. Returns (chunk rows by id, last_modified
+    by path, score by chunk id)."""
+    fetched = {"chunk": [], "score": []}
+    if ids:
+        scan = g.chunks.where(F.col("chunk_id").isin(sorted(ids))).select(
+            "chunk_id", "content", "file_path",
+            F.explode_outer(F.split("file_path", GRAPH_FIELD_SEP)).alias("path"),
+        )
+        if g.path_properties is not None:
+            scan = scan.join(
+                g.path_properties.select(
+                    F.col("file_path").alias("path"), "last_modified"
+                ),
+                "path",
+                "left",
+            )
+        fetch = {"chunk": scan}
+        if score_ids:
+            fetch["score"] = query_scores(
+                g.chunk_embeddings.where(F.col("chunk_id").isin(sorted(score_ids))),
+                query,
+            )
+        fetched.update(_collect_tagged(spark, fetch, "kg_query:chunks"))
+    return (
+        {r["chunk_id"]: r for r in fetched["chunk"]},
+        {r["path"]: r.get("last_modified") for r in fetched["chunk"]},
+        {r["chunk_id"]: r["vscore"] for r in fetched["score"]},
+    )
+
+
+class _Vectors(NamedTuple):
+    """One embedding table on the driver: each row's join key and
+    tie-break value, and the embeddings as a float64 matrix."""
+    keys: list
+    tiebreak: list | None
+    mat: np.ndarray
+
+    def topk(self, qvec, k: int) -> list[tuple]:
+        return [(self.keys[i], s)
+                for i, s in cosine_topk_rows(self.mat, qvec, k, self.tiebreak)]
+
+
+@dataclass
+class KBSnapshot:
+    """A KB on the driver, for serving without Spark.
+
+    Rows hold the values ``Row.asDict()`` gives for the columns stage 1
+    selects, with the ``_ser`` payloads computed by Spark's ``to_json``.
+    Assumes what the index writes: nodes unique on name, edges on
+    (src, tgt), chunks on chunk_id, path_properties on file_path.
+    """
+    nodes: dict            # name → entity row
+    edges: dict            # (src, tgt) → relation row
+    incident: dict         # name → keys of the edges touching it
+    chunks: dict           # chunk_id → {chunk_id, content, file_path}
+    last_modified: dict    # file_path → last_modified
+    entity: _Vectors
+    relation: _Vectors
+    chunk: _Vectors
+    build_s: float         # wall seconds of the collect and conversion
+
+    def search(self, qvec, mode: str, params: QueryParams) -> dict[str, list[dict]]:
+        """Driver twin of the :func:`_search_parts` collect: top-k first,
+        then the inner join, as the Spark plans run them."""
+        found: dict[str, list[dict]] = {}
+        if mode != "global":
+            loc = [{**self.nodes[n], "vscore": s}
+                   for n, s in self.entity.topk(qvec, params.top_k)
+                   if n in self.nodes]
+            best: dict = {}
+            for r in loc:
+                for key in self.incident.get(r["name"], ()):
+                    best[key] = max(best.get(key, r["vscore"]), r["vscore"])
+            found["loc"] = loc
+            found["inc"] = [{**self.edges[k], "vscore": s} for k, s in best.items()]
+        if mode != "local":
+            glob = [{**self.edges[k], "vscore": s}
+                    for k, s in self.relation.topk(qvec, params.top_k)
+                    if None not in k and k in self.edges]
+            best = {}
+            for r in glob:
+                for n in (r["src"], r["tgt"]):
+                    best[n] = max(best.get(n, r["vscore"]), r["vscore"])
+            found["glob"] = glob
+            found["ep"] = [{**self.nodes[n], "vscore": s}
+                           for n, s in best.items() if n in self.nodes]
+        if mode == "mix":
+            found["vec"] = [
+                {"chunk_id": c, "vscore": s}
+                for c, s in self.chunk.topk(qvec, params.related_chunk_number * 2)
+                if c in self.chunks
+            ]
+        return found
+
+    def fetch_chunks(self, score_ids: set, query: str) -> tuple[dict, dict, dict]:
+        """Driver twin of :func:`_fetch_chunks`."""
+        rows = [i for i, c in enumerate(self.chunk.keys)
+                if c is not None and c in score_ids]
+        scores = cosine_scores(self.chunk.mat[rows], embed_text(query))
+        return self.chunks, self.last_modified, {
+            self.chunk.keys[i]: float(s) for i, s in zip(rows, scores)
+        }
+
+
+def _vectors(
+    rows: list[dict], key_cols: tuple[str, ...], tiebreak: str
+) -> _Vectors | None:
+    """The matrix of one embedding table; None unless every row has a
+    finite EMBEDDING_DIM-long embedding (the query's length)."""
+    embs = [r["embedding"] for r in rows]
+    if any(e is None or len(e) != EMBEDDING_DIM for e in embs):
+        return None
+    mat = np.array(embs, dtype=np.float64).reshape(len(embs), EMBEDDING_DIM)
+    if not np.isfinite(mat).all():
+        return None
+    keys = [r[key_cols[0]] if len(key_cols) == 1
+            else tuple(r[c] for c in key_cols) for r in rows]
+    has_tiebreak = bool(rows) and tiebreak in rows[0]
+    return _Vectors(keys, [r[tiebreak] for r in rows] if has_tiebreak else None, mat)
+
+
+def _build_snapshot(spark: SparkSession, g: GraphTables, cap: int) -> KBSnapshot | None:
+    """Collect ``g`` in one tagged-union action under job group
+    ``kg_query:snapshot``, gated at ``cap`` total rows (logged as op
+    ``kg_snapshot``); None when over the cap."""
+    t0 = time.perf_counter()
+
+    embeddings = {"entity": (g.entity_embeddings, ("name",)),
+                  "relation": (g.relation_embeddings, ("src", "tgt")),
+                  "chunk": (g.chunk_embeddings, ("chunk_id",))}
+    parts = {
+        "nodes": g.nodes.select(*_ENTITY_COLS, _entity_payload()),
+        "edges": g.edges.select(*_RELATION_COLS, _relation_payload()),
+        "chunks": g.chunks.select("chunk_id", "content", "file_path"),
+    }
+    for sec, (df, key_cols) in embeddings.items():
+        # cosine_topk's tie-break column, one name per table: the three
+        # may differ in type
+        tb = tiebreak_col(df)
+        parts[sec] = df.select(*key_cols, "embedding",
+                               *([F.col(tb).alias(f"_tb_{sec}")] if tb else []))
+    if g.path_properties is not None:
+        parts["paths"] = g.path_properties.select("file_path", "last_modified")
+    found = _collect_tagged(spark, parts, "kg_query:snapshot",
+                            gate=("kg_snapshot", cap))
+    if found is None:
+        return None
+    vectors = {}
+    for sec, (_, key_cols) in embeddings.items():
+        vectors[sec] = _vectors(found.pop(sec), key_cols, f"_tb_{sec}")
+        if vectors[sec] is None:
+            _log.info("kg_snapshot: %s embeddings are not all finite %d-d "
+                      "vectors -> distributed path", sec, EMBEDDING_DIM)
+            return None
+    edges = {(r["src"], r["tgt"]): r for r in found["edges"]}
+    incident: dict = {}
+    for key in edges:
+        for name in dict.fromkeys(key):
+            incident.setdefault(name, []).append(key)
+    # a null key never matches in a join
+    return KBSnapshot(
+        nodes={r["name"]: r for r in found["nodes"] if r["name"] is not None},
+        edges=edges,
+        incident=incident,
+        chunks={r["chunk_id"]: r for r in found["chunks"]
+                if r["chunk_id"] is not None},
+        last_modified={r["file_path"]: r["last_modified"]
+                       for r in found.get("paths", ()) if r["file_path"] is not None},
+        build_s=time.perf_counter() - t0,
+        **vectors,
+    )
 
 
 def _by_score(*tiebreak: str):
@@ -344,14 +647,16 @@ def kg_query(
         ctx.stage_s[stage] = now - clock[0]
         clock[0] = now
 
-    # ── Stage 1: search — the one stage that scans the index ─────────
+    # ── Stage 1: search ───────────────────────────────────────────────
     # Reference hybrid semantics (lightrag_search.py:984-1066): the
     # local (entity) search ALSO yields the edges incident to its top
     # entities, and the global (relation) search ALSO yields its edges'
-    # endpoint entities. All four lists (+ mix's chunk top-k) come back
-    # in ONE tagged-union collect, each entity/relation row with the
-    # F.to_json payload stage 2 counts tokens on. That payload is the
-    # stripped row shape the reference counts (file_path/created_at
+    # endpoint entities. All four lists (+ mix's chunk top-k) come from
+    # the KB's driver snapshot (zero Spark actions once it is built) or,
+    # on a KB over SNAPSHOT_CAP, from ONE tagged-union collect of the
+    # Spark search plans. Either way each entity/relation row carries
+    # the F.to_json payload stage 2 counts tokens on. That payload is
+    # the stripped row shape the reference counts (file_path/created_at
     # removed, lightrag_search.py:1208-1240). Known deviation: to_json
     # emits compact separators ("," ":") and omits null fields, while
     # the reference counts json.dumps' spaced form (", " ": ") — rows
@@ -359,53 +664,12 @@ def kg_query(
     # here that the reference would cut. The kept-set rule and ordering
     # are identical; only the boundary token arithmetic differs (the
     # q8 oracle pins THIS accounting).
-    ent_cols = [
-        "name", "type", "description", "source_chunk_ids", "vscore",
-        F.to_json(F.struct(
-            F.col("name").alias("entity"), "type", "description"
-        )).alias("_ser"),
-    ]
-    rel_cols = [
-        "src", "tgt", "description", "weight", "source_chunk_ids", "vscore",
-        F.to_json(F.struct(
-            F.col("src").alias("entity1"), F.col("tgt").alias("entity2"),
-            "description",
-        )).alias("_ser"),
-    ]
-    parts: dict[str, DataFrame] = {}
-    if mode != "global":
-        loc = _entity_search(g, qvec, params.top_k)
-        parts["loc"] = loc.select(*ent_cols)
-        # edges incident to the top local entities, scored by the
-        # entity's score (one-hop graph expansion)
-        parts["inc"] = (
-            loc.select("name", "vscore")
-            .join(
-                g.edges,
-                (F.col("name") == F.col("src")) | (F.col("name") == F.col("tgt")),
-            )
-            .groupBy("src", "tgt")
-            .agg(
-                F.max("vscore").alias("vscore"),
-                F.first("description").alias("description"),
-                F.first("weight").alias("weight"),
-                F.first("source_chunk_ids").alias("source_chunk_ids"),
-            )
-            .select(*rel_cols)
-        )
-    if mode != "local":
-        glob = _relation_search(g, qvec, params.top_k)
-        parts["glob"] = glob.select(*rel_cols)
-        # endpoint entities of the top relations, in relation-score order
-        endpoints = glob.select(
-            F.explode(F.array("src", "tgt")).alias("name"), "vscore"
-        ).groupBy("name").agg(F.max("vscore").alias("vscore"))
-        parts["ep"] = endpoints.join(g.nodes, "name").select(*ent_cols)
-    if mode == "mix":
-        parts["vec"] = _chunk_search(
-            g, qvec, params.related_chunk_number * 2
-        ).select("chunk_id", "vscore")
-    found = _collect_tagged(spark, parts, "kg_query:search")
+    snap = g.snapshot(spark)
+    if snap is not None:
+        found = snap.search(qvec, mode, params)
+    else:
+        found = _collect_tagged(spark, _search_parts(g, qvec, mode, params),
+                                "kg_query:search")
     lap("search")
 
     # ── Stage 2: round-robin merge + token truncation (Q6/Q7/Q8), on
@@ -434,9 +698,9 @@ def kg_query(
     lap("truncate")
 
     # ── Stage 3: chunk gathering, pick and merge (Q9-Q14) ─────────────
-    # ONE id-filtered scan fetches every candidate chunk's content and
-    # file_path, the path-properties rows of its expanded paths and, for
-    # the Q12 pick, the candidates' Spark-computed query cosine.
+    # Every candidate chunk's content and file_path, the last_modified
+    # of its expanded paths and, for the Q12 pick, the candidates' query
+    # cosine: from the snapshot, or from ONE id-filtered Spark scan.
     ent_chunks = gather_chunk_rows(entities, "name")
     rel_chunks = gather_chunk_rows(
         [{**r, "name": f"{r['src']}|{r['tgt']}"} for r in relations], "name"
@@ -444,32 +708,14 @@ def kg_query(
     vec_ids = [r["chunk_id"] for r in sorted(found.get("vec", []),
                                              key=_by_score("chunk_id"))]
     want_scores = params.chunk_pick == "vector" and bool(ent_chunks)
-    ids = {c["chunk_id"] for c in ent_chunks + rel_chunks} | set(vec_ids)
-    fetched = {"chunk": [], "score": []}
-    if ids:
-        scan = g.chunks.where(F.col("chunk_id").isin(sorted(ids))).select(
-            "chunk_id", "content", "file_path",
-            F.explode_outer(F.split("file_path", GRAPH_FIELD_SEP)).alias("path"),
+    score_ids = {c["chunk_id"] for c in ent_chunks} if want_scores else set()
+    if snap is not None:
+        chunk_rows, last_modified, scores = snap.fetch_chunks(score_ids, query)
+    else:
+        ids = {c["chunk_id"] for c in ent_chunks + rel_chunks} | set(vec_ids)
+        chunk_rows, last_modified, scores = _fetch_chunks(
+            spark, g, ids, score_ids, query
         )
-        if g.path_properties is not None:
-            scan = scan.join(
-                g.path_properties.select(
-                    F.col("file_path").alias("path"), "last_modified"
-                ),
-                "path",
-                "left",
-            )
-        fetch = {"chunk": scan}
-        if want_scores:
-            fetch["score"] = query_scores(
-                g.chunk_embeddings.where(F.col("chunk_id").isin(
-                    sorted({c["chunk_id"] for c in ent_chunks})
-                )),
-                query,
-            )
-        fetched.update(_collect_tagged(spark, fetch, "kg_query:chunks"))
-    chunk_rows = {r["chunk_id"]: r for r in fetched["chunk"]}
-    last_modified = {r["path"]: r.get("last_modified") for r in fetched["chunk"]}
 
     picked = None
     if want_scores:
@@ -477,7 +723,7 @@ def kg_query(
         # the reference falls back to weighted polling
         try:
             keep = vector_pick_ids(
-                {r["chunk_id"]: r["vscore"] for r in fetched["score"]},
+                scores,
                 max(len(ctx.entities), 1),
                 params.related_chunk_number,
             )
@@ -557,7 +803,8 @@ def kg_query(
         "available_chunk_tokens": available_chunk_tokens,
     }
     lap("context")
-    _log.debug("kg_query mode=%s stage_s=%s", mode, ctx.stage_s)
+    _log.debug("kg_query mode=%s stage1=%s stage_s=%s", mode,
+               "distributed" if snap is None else "driver", ctx.stage_s)
     return ctx
 
 

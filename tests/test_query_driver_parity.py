@@ -2,13 +2,19 @@
 pinned here to the Spark operator it mirrors: seeded random inputs go
 through both, and the outputs must be equal (ties, duplicate keys,
 empty inputs, null fields, non-ASCII and control characters included).
+Stage 1 on a KB's driver snapshot is pinned to the distributed stage 1
+the same way: whole requests through both paths must give equal
+contexts.
 """
 
 from __future__ import annotations
 
+import logging
 import random
+from datetime import datetime, timedelta
 from itertools import accumulate
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -38,9 +44,17 @@ from graphrag_kb_server_spark.operators.truncation import (
     token_budget_prefix,
     truncate_by_token_budget,
 )
+from graphrag_kb_server_spark.operators.vector_topk import (
+    cosine_topk,
+    cosine_topk_rows,
+)
+from graphrag_kb_server_spark.plans import query_pipeline as qp
 from graphrag_kb_server_spark.plans.query_pipeline import (
+    GraphTables,
+    QueryParams,
     gather_chunk_rows,
     gather_chunks_from_members,
+    kg_query,
 )
 from graphrag_kb_server_spark.tokenizer import count_tokens
 
@@ -236,3 +250,171 @@ def test_vector_pick_parity(spark, seed):
     scores = {r["chunk_id"]: r["vscore"] for r in query_scores(
         emb_df.where(F.col("chunk_id").isin(cands)), "alpha beta").collect()}
     assert got == vector_pick_ids(scores, n_entities, related_chunk_number=1)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_cosine_topk_rows_parity(spark, seed):
+    """The numpy twin gives cosine_topk's rows and bit-identical scores."""
+    rng = np.random.default_rng(seed)
+    dim = int(rng.integers(1, 24))
+    base = rng.standard_normal((6, dim)).astype(np.float32)
+    base[0] = 0.0  # zero vector: score 0.0
+    # repeated rows give exactly tied scores, broken by id
+    mat = base[rng.integers(0, len(base), 40)]
+    ids = [f"r{i:02d}" for i in range(len(mat))]
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in zip(ids, mat)],
+        "id string, embedding array<float>",
+    )
+    query = rng.standard_normal(dim).astype(np.float32)
+    for k in (0, 1, 7, 40, 50):
+        got = [(r["id"], r["score"]) for r in cosine_topk(df, query, k).collect()]
+        want = [(ids[i], s) for i, s in
+                cosine_topk_rows(mat.astype(np.float64), query, k, ids)]
+        assert got == want, k
+
+
+def _vec(text: str) -> list[float]:
+    return [float(x) for x in embed_text(text)]
+
+
+def _random_graph(spark, seed: int, query: str) -> GraphTables:
+    """A seeded random KB with null type/description/file_path/
+    last_modified and dangling embedding rows (no matching node, edge
+    or chunk) that score as high as the query itself, so the top-k cut
+    before the join decides what survives."""
+    rng = _rng(seed)
+    qvec = _vec(" ".join(qp.extract_keywords(query)))
+    names = rng.sample(NAMES, 10) + [f"n{i}" for i in range(6)]
+    chunk_ids = [f"c{i:02d}" for i in range(14)]
+    paths = ["a.txt", "b.txt", "ü/ñ.md", f"a.txt{GRAPH_FIELD_SEP}c.txt",
+             f"d.txt{GRAPH_FIELD_SEP}a.txt", None]
+    t0 = datetime(2024, 1, 1, 12, 30)
+    nodes = [(n, rng.choice(["org", None, "人物"]), rng.choice(TEXTS),
+              rng.randint(0, 5), rng.sample(chunk_ids, rng.randint(0, 4)))
+             for n in names]
+    pairs = sorted({tuple(sorted(rng.sample(names, 2))) for _ in range(24)})
+    edges = [(a, b, "kw", rng.choice(TEXTS), rng.choice([0.5, 1.0, 2.0]),
+              rng.randint(0, 9), rng.sample(chunk_ids, rng.randint(0, 3)))
+             for a, b in pairs]
+    chunks = [(c, rng.choice(TEXTS) or "", rng.choice(paths)) for c in chunk_ids]
+    props = [(p, rng.choice([t0 + timedelta(days=i), None]))
+             for i, p in enumerate(["a.txt", "b.txt", "c.txt", "d.txt"])]
+    pool = [_vec(t) for t in ("alpha", "beta gamma", "delta", "Émile zeta")]
+
+    def emb():  # few distinct vectors: many exact score ties
+        return rng.choice(pool + [qvec])
+
+    dangling = ["ghost", "幽霊"]
+    ent_emb = [(n, emb()) for n in names] + [(n, qvec) for n in dangling]
+    rel_emb = [(a, b, emb()) for a, b, *_ in edges] + [
+        ("ghost", names[0], qvec), (names[0], "ghost", qvec)]
+    chunk_emb = [(c, emb()) for c in chunk_ids] + [("c-missing", qvec)]
+    return GraphTables(
+        nodes=spark.createDataFrame(
+            nodes, "name string, type string, description string, "
+            "degree int, source_chunk_ids array<string>"),
+        edges=spark.createDataFrame(
+            edges, "src string, tgt string, keywords string, description "
+            "string, weight double, combined_degree bigint, "
+            "source_chunk_ids array<string>"),
+        chunks=spark.createDataFrame(
+            chunks, "chunk_id string, content string, file_path string"),
+        entity_embeddings=spark.createDataFrame(
+            ent_emb, "name string, embedding array<float>"),
+        relation_embeddings=spark.createDataFrame(
+            rel_emb, "src string, tgt string, embedding array<float>"),
+        chunk_embeddings=spark.createDataFrame(
+            chunk_emb, "chunk_id string, embedding array<float>"),
+        path_properties=spark.createDataFrame(
+            props, "file_path string, last_modified timestamp"),
+    )
+
+
+def _served(spark, g, query, combos):
+    out = []
+    for params in combos:
+        ctx = kg_query(spark, g, query, params)
+        out.append((ctx.context_str(), ctx.processing_info, ctx.references,
+                    ctx.chunks, ctx.entities, ctx.relations))
+    return out
+
+
+_TIGHT = dict(top_k=4, max_entity_tokens=30, max_relation_tokens=40,
+              max_total_tokens=1100, related_chunk_number=1)
+_LOOSE = dict(top_k=20, max_entity_tokens=4000, max_relation_tokens=4000,
+              max_total_tokens=20000, related_chunk_number=3)
+_COMBOS = [
+    QueryParams(mode=mode, chunk_pick=pick, **budget)
+    for mode in ("local", "global", "hybrid", "mix")
+    for pick, budget in (("weighted_polling", _TIGHT), ("weighted_polling", _LOOSE),
+                         ("vector", _TIGHT))
+]
+
+
+@pytest.mark.parametrize("graph", ["sep_mini", 0, 1])
+def test_snapshot_matches_distributed_stage1(spark, monkeypatch, graph):
+    """Whole requests on the driver snapshot equal the distributed
+    stage 1 (snapshot cap forced to 0): every mode, both chunk picks,
+    tight and loose token budgets."""
+    if graph == "sep_mini":
+        from test_query_ops import _mini_graph
+
+        query, frames = "Alpha", _mini_graph(spark)
+    else:
+        query = "What links Alpha and Émile to the 東京 office?"
+        frames = _random_graph(spark, graph, query)
+
+    def fresh() -> GraphTables:
+        return GraphTables(**{f: getattr(frames, f) for f in (
+            "nodes", "edges", "chunks", "entity_embeddings",
+            "relation_embeddings", "chunk_embeddings", "path_properties")})
+
+    g = fresh()
+    assert g.snapshot(spark) is not None
+    driver = _served(spark, g, query, _COMBOS)
+    monkeypatch.setattr(qp, "SNAPSHOT_CAP", 0)
+    g = fresh()
+    assert g.snapshot(spark) is None
+    distributed = _served(spark, g, query, _COMBOS)
+    for params, a, b in zip(_COMBOS, driver, distributed):
+        assert a == b, params
+    # the random graphs reach the cases the test is for
+    if graph != "sep_mini":
+        assert any(r["last_modified"] for _, _, refs, *_ in driver for r in refs)
+        assert any(len(chunks) > 1 for _, _, _, chunks, *_ in driver)
+
+
+def test_snapshot_gate_boundary(spark, monkeypatch, caplog):
+    """The snapshot takes the driver path at cap == the KB's total rows
+    and the distributed path one row below, as collect_if_small logs."""
+    from test_query_ops import _mini_graph
+
+    g = _mini_graph(spark)
+    total = sum(df.count() for df in (
+        g.nodes, g.edges, g.chunks, g.entity_embeddings,
+        g.relation_embeddings, g.chunk_embeddings))
+
+    def decision(cap):
+        monkeypatch.setattr(qp, "SNAPSHOT_CAP", cap)
+        caplog.clear()
+        with caplog.at_level(logging.INFO,
+                             logger="graphrag_kb_server_spark.operators.graph_support"):
+            snap = g.snapshot(spark)
+        (rec,) = [r.args for r in caplog.records if r.args["op"] == "kg_snapshot"]
+        return snap, rec
+
+    snap, rec = decision(total)
+    assert snap is not None
+    assert rec == {"op": "kg_snapshot", "probed_rows": total, "cap": total,
+                   "path": "driver"}
+    snap, rec = decision(total - 1)
+    assert snap is None
+    assert rec == {"op": "kg_snapshot", "probed_rows": total,
+                   "cap": total - 1, "path": "distributed"}
+    # the decision is cached: no second probe for the same frames and cap
+    caplog.clear()
+    with caplog.at_level(logging.INFO):
+        assert g.snapshot(spark) is None
+    assert not [r for r in caplog.records
+                if isinstance(r.args, dict) and r.args.get("op") == "kg_snapshot"]

@@ -269,6 +269,115 @@ def test_kg_query_action_budget(spark, monkeypatch, tmp_path):
     assert len(outside_cache) <= 2 and "write" not in outside_cache, log
 
 
+def test_kg_query_warm_path_action_budget(spark, monkeypatch, tmp_path):
+    """The first request on a KB makes exactly one Spark action, the
+    driver snapshot's collect; every later request makes none, and
+    answer_query adds only the LLM cache's own I/O. With the snapshot
+    cap forced to 0 the distributed budget holds: at most two actions,
+    never a checkpoint."""
+    from graphrag_kb_server_spark.plans import query_pipeline as qp
+
+    modes = ("local", "global", "hybrid", "mix")
+    log = _count_actions(spark, monkeypatch)
+    g = _mini_graph(spark)
+    assert qp.kg_query(spark, g, "Alpha", qp.QueryParams(top_k=5)).chunks
+    assert log == ["collect"], log
+    for mode in modes:
+        log.clear()
+        ctx = qp.kg_query(spark, g, "Alpha", qp.QueryParams(mode=mode, top_k=5))
+        assert ctx.chunks and log == [], (mode, log)
+    log.clear()
+    res = qp.answer_query(spark, g, "Alpha", qp.QueryParams(top_k=5),
+                          cache_path=str(tmp_path / "llm_cache"))
+    assert res["answer"]
+    assert log and all(a.startswith("cache:") for a in log), log
+
+    monkeypatch.setattr(qp, "SNAPSHOT_CAP", 0)
+    g = _mini_graph(spark)
+    for mode in modes:
+        log.clear()
+        ctx = qp.kg_query(spark, g, "Alpha", qp.QueryParams(mode=mode, top_k=5))
+        assert ctx.chunks, mode
+        assert 0 < len(log) <= 2, (mode, log)
+        assert not [a for a in log if "checkpoint" in a.lower()], (mode, log)
+
+
+def test_kg_query_snapshot_job_group_and_path_record(spark, monkeypatch, caplog):
+    """The snapshot collect runs under kg_query:snapshot and restores
+    the caller's job group; each request's DEBUG record names its
+    stage-1 path."""
+    import logging
+
+    from graphrag_kb_server_spark.plans import query_pipeline as qp
+
+    sc = spark.sparkContext
+
+    def request(g):
+        sc.setJobGroup("caller-group", "caller")
+        try:
+            with caplog.at_level(logging.DEBUG, logger=qp.__name__):
+                ctx = qp.kg_query(spark, g, "Alpha", qp.QueryParams(mode="mix", top_k=5))
+            assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert set(ctx.stage_s) == {"search", "truncate", "merge_chunks", "context"}
+        return [r.getMessage() for r in caplog.records
+                if r.name == qp.__name__ and r.levelno == logging.DEBUG]
+
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup("kg_query:snapshot"))
+    g = _mini_graph(spark)
+    assert "stage1=driver" in request(g)[-1]
+    assert set(tracker.getJobIdsForGroup("kg_query:snapshot")) - before
+    monkeypatch.setattr(qp, "SNAPSHOT_CAP", 0)
+    caplog.clear()
+    assert "stage1=distributed" in request(_mini_graph(spark))[-1]
+
+
+def test_snapshot_built_once_under_concurrent_first_requests(spark, monkeypatch):
+    """Concurrent first requests on a fresh KB share one snapshot build."""
+    import sys
+    import threading
+
+    from graphrag_kb_server_spark.plans import query_pipeline as qp
+
+    builds = []
+    real_build = qp._build_snapshot
+
+    def counted_build(*a, **kw):
+        builds.append(threading.get_ident())
+        return real_build(*a, **kw)
+
+    monkeypatch.setattr(qp, "_build_snapshot", counted_build)
+    g = _mini_graph(spark)
+    results, errors = [], []
+
+    def request():
+        try:
+            ctx = qp.kg_query(spark, g, "Alpha", qp.QueryParams(top_k=5))
+            results.append((g.snapshot(spark), ctx.context_str()))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=request) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(builds) == 1
+    assert len(results) == 8
+    assert len({id(snap) for snap, _ in results}) == 1
+    assert len({ctx for _, ctx in results}) == 1
+
+
 def test_kg_query_stage_times_and_job_groups(spark):
     from graphrag_kb_server_spark.plans.query_pipeline import (
         QueryParams, kg_query,

@@ -9,6 +9,10 @@ sorted-value comparison). Usage:
 rows/schema/hash record per entry, NO 50-entry cap) — the committed
 CORRECTNESS_full_r{N}.json that witnesses every registered entry even
 when the driver's own correctness window is smaller.
+
+An entry whose fixture (``__spark_entry__.FIXTURE_DIRS``) is missing on
+this host is reported as ``UNAVAIL <name>: missing <path>`` and
+recorded with ``"status": "unavailable"``: neither a failure nor a pass.
 """
 
 from __future__ import annotations
@@ -57,7 +61,7 @@ def main() -> int:
         )
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failures = 0
+    failures = unavailable = 0
     records: dict[str, dict] = {}
 
     def rec(name, rows_match, schema_match, hash_match, srows, orows, err):
@@ -72,6 +76,12 @@ def main() -> int:
 
     for name, fn in qs.items():
         if only and name not in only:
+            continue
+        fixture = entrymod.FIXTURE_DIRS.get(name)
+        if fixture is not None and not Path(fixture).is_dir():
+            print(f"UNAVAIL {name}: missing {fixture}")
+            records[name] = {"status": "unavailable", "missing": fixture}
+            unavailable += 1
             continue
         t0 = time.time()
         try:
@@ -117,14 +127,15 @@ def main() -> int:
             continue
         print(f"OK    {name}: {len(a)} rows match ({took:.1f}s)")
         rec(name, True, True, True, len(a), len(b), None)
-    print(f"\n{failures} failures")
+    print(f"\n{failures} failures, {unavailable} unavailable")
     if json_out:
         import json
 
         with open(json_out, "w") as f:
             json.dump(
                 {"sf_dir": sf_dir, "entries": len(records),
-                 "failures": failures, "results": records},
+                 "failures": failures, "unavailable": unavailable,
+                 "results": records},
                 f, indent=1,
             )
         print(f"wrote {json_out} ({len(records)} entries)")
