@@ -78,13 +78,12 @@ SEP = "<SEP>"
 #: centrality over this exact graph (test/lightrag/test_lightrag_centrality.py)
 DWELL1_DIR = "/root/reference/docs/dummy_projects/lightrag/dwell1/lightrag"
 
-#: entries that read a fixture outside the sf data → the path they need;
-#: a host without it reports them as unavailable (tools/check_oracle.py)
-FIXTURE_DIRS = {
-    f"kg_ref_dwell1_{name}": DWELL1_DIR
-    for name in ("degree", "betweenness", "components", "histogram", "topk",
-                 "chunk_windows")
-}
+
+def fixture_dir(name: str) -> str | None:
+    """The fixture outside the sf data that entry ``name`` reads, if
+    any: every ``kg_ref_dwell1_*`` entry reads ``DWELL1_DIR``. A host
+    without it reports the entry as unavailable (tools/check_oracle.py)."""
+    return DWELL1_DIR if name.startswith("kg_ref_dwell1_") else None
 
 
 def _dwell1_chunk_totals() -> list[tuple[str, int]]:

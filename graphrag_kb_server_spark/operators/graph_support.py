@@ -12,6 +12,7 @@
 from __future__ import annotations
 
 import logging
+from typing import Any, Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -21,7 +22,11 @@ log = logging.getLogger(__name__)
 
 
 def collect_if_small(
-    df: DataFrame, cap: int, op: str, rows: bool = False
+    df: DataFrame,
+    cap: int,
+    op: str,
+    rows: bool = False,
+    accept: Callable[[Any], bool] | None = None,
 ) -> pd.DataFrame | list | None:
     """The size-adaptive gate: ``df`` as a pandas frame (with ``rows``,
     as a list of Rows) when it has at most ``cap`` rows, else ``None``.
@@ -42,13 +47,19 @@ def collect_if_small(
     Spark job. Each decision is logged as one record whose ``args`` are
     ``{op, probed_rows, cap, path}``. ``rows=True`` collects instead of
     going through pandas, so values stay exactly what ``Row`` gives
-    (``datetime``, ``None``, lists) with no NaN or NaT.
+    (``datetime``, ``None``, lists) with no NaN or NaT. ``accept``, when
+    given, is called with a probe that fits; when it returns False the
+    decision is the distributed path (logged with ``probed_rows <=
+    cap``). A caller whose probe is narrower than its input loads the
+    input there, and a driver twin that cannot take some inputs declines
+    them there, in the same one record.
     """
     probe = None
     if cap > 0:
         limited = df.limit(cap + 1)
         probe = limited.collect() if rows else limited.toPandas()
-    small = probe is not None and len(probe) <= cap
+    small = (probe is not None and len(probe) <= cap
+             and (accept is None or accept(probe)))
     log.info(
         "%(op)s: %(probed_rows)s probed rows, cap %(cap)s -> %(path)s path",
         {

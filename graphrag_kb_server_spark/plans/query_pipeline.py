@@ -8,10 +8,12 @@ stages labelled at :612-614 — 1. Search → 2. Truncate → 3. Merge chunks
 The reference serves every query from in-process nano-vectordb matrices
 and in-memory KV stores. Here each ``GraphTables`` has a lazily built
 driver snapshot (:class:`KBSnapshot`): the first request on a KB
-collects its seven frames in ONE tagged-union action under job group
+collects its seven frames in ONE tagged-union collect under job group
 ``kg_query:snapshot``, gated by ``graph_support.collect_if_small``'s
-rule at ``SNAPSHOT_CAP`` total rows. From then on every request runs
-stages 1-4 in plain Python/numpy with zero Spark actions: stage 1 is
+rule at ``SNAPSHOT_CAP`` total rows, probed on a column-free union
+(and declined when an embedding is not a finite vector of the query's
+length). From then on every request runs stages 1-4 in plain
+Python/numpy with zero Spark actions: stage 1 is
 ``vector_topk.cosine_topk_rows`` (the numpy twin of ``cosine_topk``)
 plus dict joins that mirror the Spark plans' operator order. A KB over
 the cap keeps the distributed stage 1: the query embedding is
@@ -44,7 +46,7 @@ import time
 from collections import Counter
 from dataclasses import dataclass, field
 from functools import reduce
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -74,7 +76,11 @@ from ..operators.vector_topk import (
 _log = logging.getLogger(__name__)
 
 # Total rows of a KB's seven frames up to which it is served from a
-# driver snapshot: the default cap of canonical_map and components.
+# driver snapshot. Inherited, not measured: it is the default cap of
+# canonical_map and components, whose rows are narrow, while snapshot
+# rows carry chunk text, descriptions and embeddings. Neither the
+# driver memory at this cap nor where the two paths cross over has
+# been measured; sizing it is ROADMAP B's open item.
 SNAPSHOT_CAP = 100_000
 
 _STOPWORDS = {
@@ -153,7 +159,7 @@ class GraphTables:
     # (operators.personalization.last_modified); joined into the query
     # reference list (lightrag_search.py:826-861)
     path_properties: DataFrame | None = None
-    # (frames, cap, snapshot or None) of the last gate decision
+    # (frames, snapshot or None) of the last gate decision
     _snapshot: tuple | None = field(default=None, init=False, repr=False,
                                     compare=False)
     _snapshot_lock: threading.Lock = field(
@@ -161,20 +167,17 @@ class GraphTables:
     )
 
     def snapshot(self, spark: SparkSession) -> KBSnapshot | None:
-        """The KB's driver snapshot, or None when it is over
-        ``SNAPSHOT_CAP``. Built (or declined) once per set of frames and
-        cap, under a lock, so concurrent first requests build it once."""
+        """The KB's driver snapshot, or None when the gate declined it.
+        Built (or declined) once per set of frames, under a lock, so
+        concurrent first requests build it once."""
         frames = (self.nodes, self.edges, self.chunks, self.entity_embeddings,
                   self.relation_embeddings, self.chunk_embeddings,
                   self.path_properties)
-        cap = SNAPSHOT_CAP
         with self._snapshot_lock:
             cached = self._snapshot
-            if (cached is None or cached[1] != cap
-                    or any(a is not b for a, b in zip(cached[0], frames))):
-                self._snapshot = cached = (frames, cap,
-                                           _build_snapshot(spark, self, cap))
-            return cached[2]
+            if cached is None or any(a is not b for a, b in zip(cached[0], frames)):
+                self._snapshot = cached = (frames, _build_snapshot(spark, self))
+            return cached[1]
 
 
 # The four-slot context template (reference: PROMPTS["kg_query_context"]
@@ -339,12 +342,14 @@ def _collect_tagged(
     parts: dict[str, DataFrame],
     group: str,
     gate: tuple[str, int] | None = None,
+    accept: Callable[[list], bool] | None = None,
 ) -> dict[str, list[dict]] | None:
     """Collect several small frames in ONE action under job group
     ``group`` (the caller's group is restored after); rows by tag, each
     with its own frame's columns. With ``gate=(op, cap)`` the action is
     ``collect_if_small``'s bounded probe of the union, and the result is
-    None when the union has more than ``cap`` rows."""
+    None when the union has more than ``cap`` rows or the union's rows
+    fail ``accept``."""
     tagged = [df.withColumn("_sec", F.lit(sec)) for sec, df in parts.items()]
     union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
     sc = spark.sparkContext
@@ -352,7 +357,8 @@ def _collect_tagged(
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
         rows = (union.collect() if gate is None
-                else collect_if_small(union, gate[1], gate[0], rows=True))
+                else collect_if_small(union, gate[1], gate[0], rows=True,
+                                      accept=accept))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", caller_group)
     if rows is None:
@@ -539,11 +545,16 @@ class KBSnapshot:
         }
 
 
+_EMBEDDING_KEYS = {"entity": ("name",), "relation": ("src", "tgt"),
+                   "chunk": ("chunk_id",)}
+
+
 def _vectors(
     rows: list[dict], key_cols: tuple[str, ...], tiebreak: str
 ) -> _Vectors | None:
     """The matrix of one embedding table; None unless every row has a
-    finite EMBEDDING_DIM-long embedding (the query's length)."""
+    finite EMBEDDING_DIM-long embedding (the query's length), as the
+    numpy search needs."""
     embs = [r["embedding"] for r in rows]
     if any(e is None or len(e) != EMBEDDING_DIM for e in embs):
         return None
@@ -556,21 +567,25 @@ def _vectors(
     return _Vectors(keys, [r[tiebreak] for r in rows] if has_tiebreak else None, mat)
 
 
-def _build_snapshot(spark: SparkSession, g: GraphTables, cap: int) -> KBSnapshot | None:
-    """Collect ``g`` in one tagged-union action under job group
-    ``kg_query:snapshot``, gated at ``cap`` total rows (logged as op
-    ``kg_snapshot``); None when over the cap."""
+def _build_snapshot(spark: SparkSession, g: GraphTables) -> KBSnapshot | None:
+    """``g`` on the driver, or None when the gate declines; two actions
+    under job group ``kg_query:snapshot``.
+
+    The gate (one record, op ``kg_snapshot``) first probes the tagged
+    union of the seven frames with no columns, so a KB over
+    ``SNAPSHOT_CAP`` costs a bounded scan, not ``SNAPSHOT_CAP`` wide rows
+    pulled to the driver and dropped. A probe that fits runs ONE
+    tagged-union collect of the frames; a KB with an embedding the numpy
+    search cannot take is then declined in the same record."""
     t0 = time.perf_counter()
 
-    embeddings = {"entity": (g.entity_embeddings, ("name",)),
-                  "relation": (g.relation_embeddings, ("src", "tgt")),
-                  "chunk": (g.chunk_embeddings, ("chunk_id",))}
     parts = {
         "nodes": g.nodes.select(*_ENTITY_COLS, _entity_payload()),
         "edges": g.edges.select(*_RELATION_COLS, _relation_payload()),
         "chunks": g.chunks.select("chunk_id", "content", "file_path"),
     }
-    for sec, (df, key_cols) in embeddings.items():
+    for sec, key_cols in _EMBEDDING_KEYS.items():
+        df = getattr(g, f"{sec}_embeddings")
         # cosine_topk's tie-break column, one name per table: the three
         # may differ in type
         tb = tiebreak_col(df)
@@ -578,17 +593,19 @@ def _build_snapshot(spark: SparkSession, g: GraphTables, cap: int) -> KBSnapshot
                                *([F.col(tb).alias(f"_tb_{sec}")] if tb else []))
     if g.path_properties is not None:
         parts["paths"] = g.path_properties.select("file_path", "last_modified")
-    found = _collect_tagged(spark, parts, "kg_query:snapshot",
-                            gate=("kg_snapshot", cap))
-    if found is None:
+    found: dict = {}
+    vectors: dict = {}
+
+    def load(_probe: list) -> bool:
+        found.update(_collect_tagged(spark, parts, "kg_query:snapshot"))
+        for sec, key_cols in _EMBEDDING_KEYS.items():
+            vectors[sec] = _vectors(found.pop(sec), key_cols, f"_tb_{sec}")
+        return None not in vectors.values()
+
+    probe = {sec: df.select() for sec, df in parts.items()}
+    if _collect_tagged(spark, probe, "kg_query:snapshot",
+                       gate=("kg_snapshot", SNAPSHOT_CAP), accept=load) is None:
         return None
-    vectors = {}
-    for sec, (_, key_cols) in embeddings.items():
-        vectors[sec] = _vectors(found.pop(sec), key_cols, f"_tb_{sec}")
-        if vectors[sec] is None:
-            _log.info("kg_snapshot: %s embeddings are not all finite %d-d "
-                      "vectors -> distributed path", sec, EMBEDDING_DIM)
-            return None
     edges = {(r["src"], r["tgt"]): r for r in found["edges"]}
     incident: dict = {}
     for key in edges:

@@ -385,6 +385,17 @@ def test_snapshot_matches_distributed_stage1(spark, monkeypatch, graph):
         assert any(len(chunks) > 1 for _, _, _, chunks, *_ in driver)
 
 
+def _snapshot_decision(spark, caplog, g):
+    """``g``'s snapshot and the one gate record its build logged."""
+    caplog.clear()
+    with caplog.at_level(logging.INFO,
+                         logger="graphrag_kb_server_spark.operators.graph_support"):
+        snap = g.snapshot(spark)
+    (rec,) = [r.args for r in caplog.records
+              if isinstance(r.args, dict) and r.args.get("op") == "kg_snapshot"]
+    return snap, rec
+
+
 def test_snapshot_gate_boundary(spark, monkeypatch, caplog):
     """The snapshot takes the driver path at cap == the KB's total rows
     and the distributed path one row below, as collect_if_small logs."""
@@ -397,24 +408,44 @@ def test_snapshot_gate_boundary(spark, monkeypatch, caplog):
 
     def decision(cap):
         monkeypatch.setattr(qp, "SNAPSHOT_CAP", cap)
-        caplog.clear()
-        with caplog.at_level(logging.INFO,
-                             logger="graphrag_kb_server_spark.operators.graph_support"):
-            snap = g.snapshot(spark)
-        (rec,) = [r.args for r in caplog.records if r.args["op"] == "kg_snapshot"]
-        return snap, rec
+        g = _mini_graph(spark)
+        snap, rec = _snapshot_decision(spark, caplog, g)
+        return g, snap, rec
 
-    snap, rec = decision(total)
+    _, snap, rec = decision(total)
     assert snap is not None
     assert rec == {"op": "kg_snapshot", "probed_rows": total, "cap": total,
                    "path": "driver"}
-    snap, rec = decision(total - 1)
+    g, snap, rec = decision(total - 1)
     assert snap is None
     assert rec == {"op": "kg_snapshot", "probed_rows": total,
                    "cap": total - 1, "path": "distributed"}
-    # the decision is cached: no second probe for the same frames and cap
+    # the decision is cached: no second probe for the same frames
     caplog.clear()
     with caplog.at_level(logging.INFO):
         assert g.snapshot(spark) is None
     assert not [r for r in caplog.records
                 if isinstance(r.args, dict) and r.args.get("op") == "kg_snapshot"]
+
+
+@pytest.mark.parametrize("bad", ["nan", "short", "null"])
+def test_snapshot_declines_unusable_embeddings(spark, caplog, bad):
+    """A KB under the cap with an embedding the numpy search cannot
+    take stays on the distributed path, and the gate's one record says
+    so."""
+    from test_query_ops import _mini_graph
+
+    g = _mini_graph(spark)
+    vec = [float(x) for x in embed_text("Beta")]
+    emb = {"nan": [float("nan")] + vec[1:], "short": vec[:-1], "null": None}[bad]
+    g = GraphTables(**{**{f: getattr(g, f) for f in (
+        "nodes", "edges", "chunks", "relation_embeddings", "chunk_embeddings")},
+        "entity_embeddings": g.entity_embeddings.union(spark.createDataFrame(
+            [("Beta", emb)], "name string, embedding array<float>"))})
+    snap, rec = _snapshot_decision(spark, caplog, g)
+    assert snap is None
+    assert rec["path"] == "distributed" and rec["probed_rows"] <= rec["cap"], rec
+    if bad == "nan":
+        # the distributed path serves it; a short or null embedding
+        # scores null there, which stage 2 cannot rank
+        assert kg_query(spark, g, "Alpha", QueryParams(top_k=5)).entities

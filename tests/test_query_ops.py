@@ -270,18 +270,18 @@ def test_kg_query_action_budget(spark, monkeypatch, tmp_path):
 
 
 def test_kg_query_warm_path_action_budget(spark, monkeypatch, tmp_path):
-    """The first request on a KB makes exactly one Spark action, the
-    driver snapshot's collect; every later request makes none, and
-    answer_query adds only the LLM cache's own I/O. With the snapshot
-    cap forced to 0 the distributed budget holds: at most two actions,
-    never a checkpoint."""
+    """The first request on a KB makes exactly two Spark actions, the
+    snapshot gate's column-free probe and the snapshot's collect; every
+    later request makes none, and answer_query adds only the LLM cache's
+    own I/O. With the snapshot cap forced to 0 the distributed budget
+    holds: at most two actions, never a checkpoint."""
     from graphrag_kb_server_spark.plans import query_pipeline as qp
 
     modes = ("local", "global", "hybrid", "mix")
     log = _count_actions(spark, monkeypatch)
     g = _mini_graph(spark)
     assert qp.kg_query(spark, g, "Alpha", qp.QueryParams(top_k=5)).chunks
-    assert log == ["collect"], log
+    assert log == ["collect", "collect"], log
     for mode in modes:
         log.clear()
         ctx = qp.kg_query(spark, g, "Alpha", qp.QueryParams(mode=mode, top_k=5))
@@ -326,13 +326,23 @@ def test_kg_query_snapshot_job_group_and_path_record(spark, monkeypatch, caplog)
                 if r.name == qp.__name__ and r.levelno == logging.DEBUG]
 
     tracker = sc.statusTracker()
-    before = set(tracker.getJobIdsForGroup("kg_query:snapshot"))
-    g = _mini_graph(spark)
-    assert "stage1=driver" in request(g)[-1]
-    assert set(tracker.getJobIdsForGroup("kg_query:snapshot")) - before
+
+    def job_ids():
+        return {grp: set(tracker.getJobIdsForGroup(grp)) for grp in
+                ("kg_query:snapshot", "kg_query:search", "kg_query:chunks")}
+
+    before = job_ids()
+    assert "stage1=driver" in request(_mini_graph(spark))[-1]
+    new = {grp: ids - before[grp] for grp, ids in job_ids().items()}
+    assert new["kg_query:snapshot"]
+    assert not new["kg_query:search"] and not new["kg_query:chunks"], new
     monkeypatch.setattr(qp, "SNAPSHOT_CAP", 0)
     caplog.clear()
+    before = job_ids()
     assert "stage1=distributed" in request(_mini_graph(spark))[-1]
+    new = {grp: ids - before[grp] for grp, ids in job_ids().items()}
+    assert new["kg_query:search"] and new["kg_query:chunks"], new
+    assert not new["kg_query:snapshot"], new
 
 
 def test_snapshot_built_once_under_concurrent_first_requests(spark, monkeypatch):
@@ -378,11 +388,13 @@ def test_snapshot_built_once_under_concurrent_first_requests(spark, monkeypatch)
     assert len({ctx for _, ctx in results}) == 1
 
 
-def test_kg_query_stage_times_and_job_groups(spark):
+def test_kg_query_stage_times_and_job_groups(spark, monkeypatch):
+    from graphrag_kb_server_spark.plans import query_pipeline as qp
     from graphrag_kb_server_spark.plans.query_pipeline import (
         QueryParams, kg_query,
     )
 
+    monkeypatch.setattr(qp, "SNAPSHOT_CAP", 0)  # the distributed stage 1
     g = _mini_graph(spark)
     sc = spark.sparkContext
     sc.setJobGroup("caller-group", "caller")

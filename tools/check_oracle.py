@@ -10,7 +10,7 @@ rows/schema/hash record per entry, NO 50-entry cap) — the committed
 CORRECTNESS_full_r{N}.json that witnesses every registered entry even
 when the driver's own correctness window is smaller.
 
-An entry whose fixture (``__spark_entry__.FIXTURE_DIRS``) is missing on
+An entry whose fixture (``__spark_entry__.fixture_dir``) is missing on
 this host is reported as ``UNAVAIL <name>: missing <path>`` and
 recorded with ``"status": "unavailable"``: neither a failure nor a pass.
 """
@@ -77,7 +77,7 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        fixture = entrymod.FIXTURE_DIRS.get(name)
+        fixture = entrymod.fixture_dir(name)
         if fixture is not None and not Path(fixture).is_dir():
             print(f"UNAVAIL {name}: missing {fixture}")
             records[name] = {"status": "unavailable", "missing": fixture}
