@@ -12,7 +12,8 @@
 - Q21 <SEP> file-reference expansion (:1791-1817).
 - Q17 LLM-response cache: ``llm_cache(args_hash, content)`` keyed by a
   deterministic hash of (mode, query, params) — ``compute_args_hash``
-  analogue (:499-513); the cache IS a table (determinism fixture).
+  analogue (:499-513); a parquet table on disk served from an
+  in-process dict (no Spark job).
 - Q12/Q15/Q21 each have a ``*_ids`` / ``*_rows`` driver twin right
   after the Spark operator: kg_query runs the twin over its collected
   rows, the standalone entries run the Spark operator.
@@ -234,54 +235,47 @@ def compute_args_hash(mode: str, query: str, params: dict) -> str:
 
 
 class LlmCache:
-    """The llm_cache table: parquet-backed KV of args_hash → content.
+    """The llm_cache table: a directory of parquet part files on disk,
+    a dict ``args_hash → (written_at, content)`` in process.
 
-    Stays a *table* (not an in-process dict) because it is the
-    determinism fixture the reference relies on (kv_store_llm_response_cache).
-    Writes are append + last-write-wins on read (max by written_at).
+    The cache is a point-lookup KV outside the data engine (SURVEY Q17,
+    the reference's ``kv_store_llm_response_cache``), so no Spark job
+    serves it. The dict is loaded once per path with pyarrow. ``put``
+    appends one ``part-*.parquet`` file, written under a hidden
+    ``.part-*`` name and renamed in, so a crashed put leaves no torn
+    file (Spark and pyarrow both skip ``.``/``_`` files). On disk it
+    stays a table Spark can read: schema ``(args_hash string, content
+    string, written_at timestamp)``, last-write-wins by ``written_at``
+    compared as UTC instants.
 
-    Small-file hygiene: each ``put`` appends one tiny file, so once the
-    directory holds ``compact_every`` part-files ``put`` folds it back
-    into a single last-write-wins file (``compact``). File counts stay
-    bounded at sustained QPS instead of growing one-file-per-answer.
-    Single-writer by design (the fixture contract); a shared production
-    cache would sit on a real table format's MERGE instead.
+    Small-file hygiene: once the directory holds ``COMPACT_EVERY``
+    part files, ``put`` rewrites the dict as one file (``compact``).
+    Single-writer by design (one process, one thread writing a path at
+    a time): the dict is the writer's view, and ``compact`` writes it
+    back. A shared production cache would sit on a real table format's
+    MERGE instead.
     """
 
-    #: per-process instance memo (LRU, bounded) — answer_query reuses
-    #: ONE LlmCache (and its cached parquet DataFrame) per path instead
-    #: of re-listing and re-reading the cache directory on every query.
-    #: Bounded + unpersist-on-evict: every memoized instance pins a
-    #: Spark-cached DataFrame, so an unbounded dict in a long-lived
-    #: driver would accumulate persisted blocks one per cache path.
+    #: part files in the directory at which ``put`` compacts it
+    COMPACT_EVERY = 64
+    #: per-process instance memo (LRU): answer_query reuses ONE loaded
+    #: dict per path; the bound caps how many dicts a long-lived driver
+    #: keeps in memory.
     _instances: "OrderedDict[str, LlmCache]" = OrderedDict()
     _MAX_INSTANCES = 8
 
     @classmethod
-    def for_path(cls, spark, path: str, compact_every: int = 64) -> "LlmCache":
-        inst = cls._instances.get(path)
-        if inst is not None and inst.spark is spark:
-            # honor the caller's compaction setting on lookup, not only
-            # on first construction
-            inst.compact_every = compact_every
-            cls._instances.move_to_end(path)
-            return inst
-        if inst is not None:  # stale session: release its pinned cache
-            inst._invalidate()
-        inst = cls(spark, path, compact_every)
+    def for_path(cls, path: str) -> "LlmCache":
+        inst = cls._instances.pop(path, None) or cls(path)
         cls._instances[path] = inst
-        cls._instances.move_to_end(path)
         while len(cls._instances) > cls._MAX_INSTANCES:
-            _, evicted = cls._instances.popitem(last=False)
-            evicted._invalidate()
+            cls._instances.popitem(last=False)
         return inst
 
-    def __init__(self, spark, path: str, compact_every: int = 64):
-        self.spark = spark
+    def __init__(self, path: str):
         self.path = path
-        self.compact_every = compact_every
-        self._df = None  # cached reader view; invalidated on put/compact
         self._recover()
+        self._rows = self._load()
 
     def _recover(self) -> None:
         """compact() has an unavoidable instant between renaming
@@ -303,93 +297,97 @@ class LlmCache:
             os.rename(old, self.path)
             shutil.rmtree(tmp, ignore_errors=True)
 
-    def _part_files(self) -> int:
+    def _parts(self) -> list[str]:
         import os
 
         try:
-            return sum(
-                1 for f in os.scandir(self.path) if f.name.startswith("part-")
-            )
+            return [f.path for f in os.scandir(self.path)
+                    if f.name.startswith("part-")]
         except FileNotFoundError:
-            return 0
+            return []
 
-    def _view(self):
-        """Spark-cached view of the cache table, built once per
-        generation (invalidated by put/compact): repeated gets skip the
-        file listing + parquet scan after the first."""
-        if self._df is None:
-            self._recover()  # heal a crashed compact() before reading
-            if self._part_files() == 0:
-                return None
-            self._df = self.spark.read.parquet(self.path).cache()
-        return self._df
+    def _part_files(self) -> int:
+        return len(self._parts())
 
-    def _invalidate(self) -> None:
-        if self._df is not None:
-            self._df.unpersist()
-            self._df = None
+    def _load(self) -> dict[str, tuple[int, str]]:
+        """Newest row per args_hash over every part file. Each file is
+        read on its own: a directory mixes Spark's naive INT96 (UTC)
+        and pyarrow's ``timestamp[us, UTC]``, and both cast to the same
+        UTC microseconds."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        rows: dict[str, tuple[int, str]] = {}
+        for part in self._parts():
+            t = pq.read_table(part)
+            written = t.column("written_at").cast(
+                pa.timestamp("us", tz="UTC")).cast(pa.int64())
+            for h, content, w in zip(t.column("args_hash").to_pylist(),
+                                     t.column("content").to_pylist(),
+                                     written.to_pylist()):
+                if h not in rows or w > rows[h][0]:
+                    rows[h] = (w, content)
+        return rows
+
+    @staticmethod
+    def _write(rows: dict[str, tuple[int, str]], path: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        pq.write_table(pa.table({
+            "args_hash": pa.array(list(rows), pa.string()),
+            "content": pa.array([c for _, c in rows.values()], pa.string()),
+            "written_at": pa.array([w for w, _ in rows.values()],
+                                   pa.timestamp("us", tz="UTC")),
+        }), path)
 
     def get(self, args_hash: str) -> str | None:
-        df = self._view()
-        if df is None:
-            return None
-        row = (
-            df.where(F.col("args_hash") == args_hash)
-            .orderBy(F.desc("written_at"))
-            .select("content")
-            .first()
-        )
-        return row["content"] if row else None
+        hit = self._rows.get(args_hash)
+        return hit[1] if hit else None
 
     def put(self, args_hash: str, content: str) -> None:
+        import os
+        import time
+        import uuid
+
         # heal a crashed compact() BEFORE appending: writing first
         # would recreate the live path as a fresh one-row cache, after
         # which _recover() never restores the stranded __old/__compact
         # dir and the next compact() rmtree's it — silently dropping
         # every previously cached answer
         self._recover()
-        self.spark.createDataFrame(
-            [(args_hash, content)], "args_hash string, content string"
-        ).withColumn("written_at", F.current_timestamp()).write.mode(
-            "append"
-        ).parquet(self.path)
-        self._invalidate()
-        if self.compact_every and self._part_files() >= self.compact_every:
+        row = {args_hash: (time.time_ns() // 1000, content)}
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, "." + name)
+        os.makedirs(self.path, exist_ok=True)
+        self._write(row, tmp)
+        os.rename(tmp, os.path.join(self.path, name))
+        self._rows.update(row)
+        if self._part_files() >= self.COMPACT_EVERY:
             self.compact()
 
     def compact(self) -> None:
-        """Fold the append log into one file, keeping the newest row per
-        args_hash (same last-write-wins the reads apply)."""
+        """Fold the append log into one file: the dict, which holds the
+        newest row per args_hash (the same last-write-wins as a load)."""
         import os
         import shutil
 
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("args_hash").orderBy(F.desc("written_at"))
-        latest = (
-            self.spark.read.parquet(self.path)
-            .withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") == 1)
-            .drop("_rk")
-            .coalesce(1)
-        )
         # crash-safe swap: write compacted → move live aside → move
         # compacted in → drop the old dir. Between the two renames the
         # LIVE path is briefly absent; _recover() (run on init and
-        # before every fresh read) restores the stranded __compact or
-        # __old dir automatically, so a crash in that window costs
-        # nothing but the restore. The local rename/rmtree calls match
-        # the cache's contract — a single-writer local-fixture path; a
-        # cluster deployment replaces this class with a real table
-        # format's MERGE.
+        # before every put) restores the stranded __compact or __old
+        # dir automatically, so a crash in that window costs nothing
+        # but the restore. _SUCCESS marks the compacted dir complete.
         tmp = f"{self.path}__compact"
         old = f"{self.path}__old"
-        latest.write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        self._write(self._rows, os.path.join(tmp, "part-00000.parquet"))
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
         shutil.rmtree(old, ignore_errors=True)
         os.rename(self.path, old)
         os.rename(tmp, self.path)
         shutil.rmtree(old)
-        self._invalidate()
 
 
 def answer_with_cache(

@@ -871,7 +871,7 @@ def answer_query(
         return {"prompt": prompt, "references": ctx.references,
                 "raw_data": ctx.raw_data(),
                 "processing_info": ctx.processing_info}
-    cache = LlmCache.for_path(spark, cache_path or "/tmp/kgspark_llm_cache")
+    cache = LlmCache.for_path(cache_path or "/tmp/kgspark_llm_cache")
     # cache key mirrors the reference's composition (lightrag_search.py
     # :499-513: mode, query, response_type, top_k, token budgets,
     # user_prompt, project_dir) — the kb scope here is the cache path

@@ -65,8 +65,8 @@ def test_q20_dedup_combine(spark):
     assert [r["id"] for r in out] == [1, 2, 3]  # ids reassigned
 
 
-def test_q17_llm_cache(spark, tmp_out):
-    cache = LlmCache(spark, f"{tmp_out}/llm_cache")
+def test_q17_llm_cache(tmp_out):
+    cache = LlmCache(f"{tmp_out}/llm_cache")
     h = compute_args_hash("hybrid", "q?", {"k": 1})
     assert cache.get(h) is None
     a1 = answer_with_cache(cache, "hybrid", "q?", {"k": 1}, "ctx")
@@ -76,11 +76,12 @@ def test_q17_llm_cache(spark, tmp_out):
     assert a3 != a1 or compute_args_hash("local", "q?", {"k": 1}) != h
 
 
-def test_llm_cache_compaction_bounds_files(spark, tmp_out):
+def test_llm_cache_compaction_bounds_files(tmp_out, monkeypatch):
     """Sustained puts don't grow one-file-per-answer forever: at
-    compact_every part-files the cache folds into a single
+    COMPACT_EVERY part-files the cache folds into a single
     last-write-wins file, and reads still see the newest value."""
-    cache = LlmCache(spark, f"{tmp_out}/llm_cache_c", compact_every=4)
+    monkeypatch.setattr(LlmCache, "COMPACT_EVERY", 4)
+    cache = LlmCache(f"{tmp_out}/llm_cache_c")
     for i in range(10):
         cache.put(f"h{i % 3}", f"v{i}")
         assert cache._part_files() <= 4
@@ -90,7 +91,7 @@ def test_llm_cache_compaction_bounds_files(spark, tmp_out):
     assert cache.get("missing") is None
 
 
-def test_llm_cache_crash_recovery(spark, tmp_out):
+def test_llm_cache_crash_recovery(tmp_out):
     """A crash between compact()'s two renames leaves the live path
     absent with the data stranded in __compact (or __old); the next
     reader restores it instead of silently rebuilding empty."""
@@ -98,44 +99,105 @@ def test_llm_cache_crash_recovery(spark, tmp_out):
     import shutil
 
     base = f"{tmp_out}/llm_cache_crash"
-    cache = LlmCache(spark, base)
+    cache = LlmCache(base)
     cache.put("k1", "v1")
     cache.put("k2", "v2")
+    cache.compact()  # the live dir is a compacted one: it holds _SUCCESS
     # simulate the crash window: live dir renamed aside, compacted dir
     # fully written but not yet swapped in
     shutil.copytree(base, f"{base}__compact")
     os.rename(base, f"{base}__old")
     assert not os.path.exists(base)
-    fresh = LlmCache(spark, base)  # __init__ recovery path
+    fresh = LlmCache(base)  # __init__ recovery path
     assert fresh.get("k1") == "v1" and fresh.get("k2") == "v2"
     assert not os.path.exists(f"{base}__old")
-    # ...and the same via _view when only __old survives (no _SUCCESS
-    # in a partial __compact)
+    # ...and the same for a fresh for_path instance when only __old
+    # survives (no _SUCCESS in a partial __compact)
     os.rename(base, f"{base}__old")
     os.makedirs(f"{base}__compact")  # partial: no _SUCCESS
-    fresh2 = LlmCache.for_path(spark, base)
-    fresh2._df = None
+    fresh2 = LlmCache.for_path(base)
     assert fresh2.get("k2") == "v2"
     assert not os.path.exists(f"{base}__compact")
 
 
-def test_llm_cache_memo_bounded(spark, tmp_out):
-    """The for_path memo is LRU-bounded and unpersists evicted
-    instances' pinned DataFrames (ADVICE r4)."""
+def test_llm_cache_memo_bounded(tmp_out):
+    """The for_path memo is LRU-bounded: it keeps at most _MAX_INSTANCES
+    loaded dicts, and a path evicted from it reloads its answers from
+    disk on the next for_path."""
     LlmCache._instances.clear()
     insts = []
     for i in range(LlmCache._MAX_INSTANCES + 3):
-        c = LlmCache.for_path(spark, f"{tmp_out}/memo_{i}")
+        c = LlmCache.for_path(f"{tmp_out}/memo_{i}")
         c.put("h", f"v{i}")
-        assert c.get("h") == f"v{i}"  # builds the pinned view
+        assert c.get("h") == f"v{i}"
         insts.append(c)
     assert len(LlmCache._instances) == LlmCache._MAX_INSTANCES
-    # the oldest instances were evicted AND their views released
-    for c in insts[:3]:
-        assert c._df is None
-    # compact_every is honored on lookup, not just first construction
-    again = LlmCache.for_path(spark, f"{tmp_out}/memo_5", compact_every=2)
-    assert again.compact_every == 2
+    assert list(LlmCache._instances.values()) == insts[3:]
+    # the oldest paths were evicted; a lookup builds a new instance
+    # whose dict is reloaded from the path's part files
+    for i, c in enumerate(insts[:3]):
+        again = LlmCache.for_path(f"{tmp_out}/memo_{i}")
+        assert again is not c
+        assert again.get("h") == f"v{i}"
+    assert len(LlmCache._instances) == LlmCache._MAX_INSTANCES
+    # a path still memoized returns the same instance
+    last = LlmCache._MAX_INSTANCES + 2
+    assert LlmCache.for_path(f"{tmp_out}/memo_{last}") is insts[last]
+
+
+def test_llm_cache_spark_interop(spark, tmp_out):
+    """The on-disk contract: a directory mixing a part appended by
+    Spark (the legacy writer) with pyarrow puts reads back as one table
+    in Spark and in a fresh LlmCache, newest-wins across both writers;
+    a crashed put's hidden temp file is ignored by both; the compacted
+    file stays Spark-readable."""
+    import os
+    import time
+
+    path = f"{tmp_out}/llm_cache_interop"
+    spark.createDataFrame(
+        [("h_spark", "from spark"), ("h_both", "old from spark")],
+        "args_hash string, content string",
+    ).withColumn("written_at", F.current_timestamp()).write.mode(
+        "append"
+    ).parquet(path)
+    cache = LlmCache(path)
+    # the INT96 part loads as a UTC instant: its written_at is "now"
+    assert abs(cache._rows["h_spark"][0] / 1e6 - time.time()) < 600
+    cache.put("h_arrow", "from arrow")
+    cache.put("h_both", "new from arrow")
+    with open(os.path.join(path, ".part-crashed.parquet"), "wb") as f:
+        f.write(b"PAR1 torn")  # what a put that crashed mid-write leaves
+
+    def spark_rows():
+        df = spark.read.parquet(path)
+        assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+            ("args_hash", "string"), ("content", "string"),
+            ("written_at", "timestamp"),
+        ]
+        return df
+
+    df = spark_rows()
+    assert sorted((r["args_hash"], r["content"]) for r in df.collect()) == [
+        ("h_arrow", "from arrow"), ("h_both", "new from arrow"),
+        ("h_both", "old from spark"), ("h_spark", "from spark"),
+    ]
+    newest = (df.orderBy(F.desc("written_at")).where(F.col("args_hash") == "h_both")
+              .first()["content"])
+    assert newest == "new from arrow"
+
+    fresh = LlmCache(path)
+    assert fresh.get("h_spark") == "from spark"
+    assert fresh.get("h_arrow") == "from arrow"
+    assert fresh.get("h_both") == "new from arrow"
+
+    fresh.compact()
+    assert fresh._part_files() == 1
+    assert sorted((r["args_hash"], r["content"]) for r in spark_rows().collect()) == [
+        ("h_arrow", "from arrow"), ("h_both", "new from arrow"),
+        ("h_spark", "from spark"),
+    ]
+    assert LlmCache(path).get("h_both") == "new from arrow"
 
 
 def _centrality(spark):

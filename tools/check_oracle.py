@@ -6,7 +6,8 @@ sorted-value comparison). Usage:
     python tools/check_oracle.py --json OUT.json [sf_dir]
 
 --json additionally writes a driver-artifact-shaped file (one
-rows/schema/hash record per entry, NO 50-entry cap) — the committed
+rows/schema/hash record per entry, with the entry's Spark wall time as
+``seconds``, NO 50-entry cap) — the committed
 CORRECTNESS_full_r{N}.json that witnesses every registered entry even
 when the driver's own correctness window is smaller.
 
@@ -72,6 +73,7 @@ def main() -> int:
             "spark_rows": srows,
             "oracle_rows": orows,
             "err": err,
+            "seconds": round(took, 3),  # the entry's Spark wall time
         }
 
     for name, fn in qs.items():
@@ -83,15 +85,16 @@ def main() -> int:
             records[name] = {"status": "unavailable", "missing": fixture}
             unavailable += 1
             continue
-        t0 = time.time()
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
+            took = time.perf_counter() - t0
             print(f"FAIL  {name}: spark error: {e}")
             rec(name, False, False, False, None, None, f"spark error: {e}"[:400])
             failures += 1
             continue
-        took = time.time() - t0
+        took = time.perf_counter() - t0
         if name not in oracles:
             print(f"rows  {name}: {len(sdf)} rows ({took:.1f}s) [rows-only]")
             rec(name, len(sdf) > 0, None, None, len(sdf), None, "rows-only")
