@@ -946,10 +946,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import tempfile
 
         g, query = _kg_query_inputs(spark)
-        res = answer_query(
-            spark, g, query, QueryParams(mode="hybrid", top_k=10),
-            cache_path=tempfile.mkdtemp(prefix="kg_answer_oracle_"),
-        )
+        # the frame below is built from a local list: nothing reads the
+        # cache dir once the answer is back
+        with tempfile.TemporaryDirectory(prefix="kg_answer_oracle_") as d:
+            res = answer_query(
+                spark, g, query, QueryParams(mode="hybrid", top_k=10),
+                cache_path=d,
+            )
         rows = [("answer", 0, res["answer"])]
         for r in res["references"]:
             rows.append(("reference", r["reference_id"], r["file_path"]))

@@ -56,7 +56,13 @@ def cosine_with_query(a: Column, query_vec) -> Column:
     and the whole denominator is bound once as a lambda variable, so
     each row pays one norm + one dot instead of five aggregates
     (cosine's when-condition and branch each re-evaluate both norms
-    under interpreted-HOF evaluation)."""
+    under interpreted-HOF evaluation).
+
+    Null where ``a`` is not a finite vector of the query's length: a
+    null array or element, another length (``zip_with`` pads with null;
+    a zero-norm one is caught by the size test), NaN or ±inf (NaN,
+    mapped to null). Such a row has no score, so it is never a
+    candidate: callers keep the rows whose score is not null."""
     import math
 
     qn = 0.0
@@ -64,7 +70,8 @@ def cosine_with_query(a: Column, query_vec) -> Column:
         qn += float(x) * float(x)
     qn = math.sqrt(qn)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return F.transform(
+    return F.nanvl(F.transform(
         F.array(norm(a) * F.lit(qn)),
-        lambda d: F.when(d == 0.0, F.lit(0.0)).otherwise(dot(a, q) / d),
-    )[0]
+        lambda d: F.when(d == 0.0, F.when(F.size(a) == len(query_vec), F.lit(0.0)))
+        .otherwise(dot(a, q) / d),
+    )[0], F.lit(None))

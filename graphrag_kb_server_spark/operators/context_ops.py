@@ -33,16 +33,19 @@ from ..functions.windows import bounded_global
 from .. import GRAPH_FIELD_SEP
 from ..functions import vectors as V
 from ..functions.embedding import embed_text
+from .vector_topk import cosine_topk
 
 
 def query_scores(chunk_embeddings: DataFrame, query_text: str) -> DataFrame:
-    """(chunk_id, vscore): the Q12 cosine of each chunk to the query."""
+    """(chunk_id, vscore): the Q12 cosine of each chunk to the query.
+    A chunk whose embedding is unusable has no score and no row
+    (operators/vector_topk.py states the rule)."""
     return chunk_embeddings.select(
         "chunk_id",
         V.cosine_with_query(
             V.to_double(F.col("embedding")), embed_text(query_text)
         ).alias("vscore"),
-    )
+    ).where(F.col("vscore").isNotNull())
 
 
 def _pick_size(n_entities: int, related_chunk_number: int) -> int:
@@ -57,13 +60,14 @@ def vector_similarity_chunk_pick(
     related_chunk_number: int = 5,
 ) -> DataFrame:
     """Q12 — candidates(chunk_id) → top ``related_chunk_number *
-    n_entities / 2`` by cosine to the query embedding."""
-    scored = query_scores(
-        candidate_chunk_ids.join(chunk_embeddings, "chunk_id"), query_text
-    )
-    return scored.orderBy(F.desc("vscore"), "chunk_id").limit(
-        _pick_size(n_entities, related_chunk_number)
-    )
+    n_entities / 2`` by cosine to the query embedding (ties by
+    chunk_id)."""
+    return cosine_topk(
+        candidate_chunk_ids.join(chunk_embeddings, "chunk_id"),
+        embed_text(query_text),
+        _pick_size(n_entities, related_chunk_number),
+        score_alias="vscore",
+    ).select("chunk_id", "vscore")
 
 
 def vector_pick_ids(

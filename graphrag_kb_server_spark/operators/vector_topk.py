@@ -15,6 +15,13 @@ TakeOrderedAndProject: each partition keeps a k-heap, the driver merges
 one at any scale; an LSH-bucketed approximate variant for latency-bound
 serving lives in operators/similarity.py.
 
+One rule for unusable embeddings: a row whose embedding is not a
+finite vector of the query's length is not a candidate. Its
+``V.cosine_with_query`` score is null, and ``F.desc`` sorts nulls last,
+so ``cosine_topk`` drops such rows after the cut (a filter before it
+would be pushed below the projection and run the cosine twice). The
+driver side drops them when it builds its matrix.
+
 Driver twin: ``cosine_topk_rows`` (with ``cosine_scores``, the twin of
 ``V.cosine_with_query``) runs the same scores, order and cut in numpy
 over a float64 matrix. kg_query uses it on KBs small enough for a
@@ -50,7 +57,7 @@ def cosine_topk(
     tiebreak = tiebreak_col(table)
     return out.orderBy(
         F.desc(score_alias), *([F.col(tiebreak)] if tiebreak else [])
-    ).limit(k)
+    ).limit(k).where(F.col(score_alias).isNotNull())
 
 
 def tiebreak_col(table: DataFrame) -> str | None:

@@ -11,9 +11,8 @@ driver snapshot (:class:`KBSnapshot`): the first request on a KB
 collects its seven frames in ONE tagged-union collect under job group
 ``kg_query:snapshot``, gated by ``graph_support.collect_if_small``'s
 rule at ``SNAPSHOT_CAP`` total rows, probed on a column-free union
-(and declined when an embedding is not a finite vector of the query's
-length). From then on every request runs stages 1-4 in plain
-Python/numpy with zero Spark actions: stage 1 is
+(declined on size only). From then on every request runs stages 1-4
+in plain Python/numpy with zero Spark actions: stage 1 is
 ``vector_topk.cosine_topk_rows`` (the numpy twin of ``cosine_topk``)
 plus dict joins that mirror the Spark plans' operator order. A KB over
 the cap keeps the distributed stage 1: the query embedding is
@@ -46,7 +45,8 @@ import time
 from collections import Counter
 from dataclasses import dataclass, field
 from functools import reduce
-from typing import Callable, NamedTuple
+from itertools import compress
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -167,9 +167,10 @@ class GraphTables:
     )
 
     def snapshot(self, spark: SparkSession) -> KBSnapshot | None:
-        """The KB's driver snapshot, or None when the gate declined it.
-        Built (or declined) once per set of frames, under a lock, so
-        concurrent first requests build it once."""
+        """The KB's driver snapshot, or None when the KB is over
+        ``SNAPSHOT_CAP`` rows. Built (or declined) once per set of
+        frames, under a lock, so concurrent first requests build it
+        once."""
         frames = (self.nodes, self.edges, self.chunks, self.entity_embeddings,
                   self.relation_embeddings, self.chunk_embeddings,
                   self.path_properties)
@@ -342,14 +343,12 @@ def _collect_tagged(
     parts: dict[str, DataFrame],
     group: str,
     gate: tuple[str, int] | None = None,
-    accept: Callable[[list], bool] | None = None,
 ) -> dict[str, list[dict]] | None:
     """Collect several small frames in ONE action under job group
     ``group`` (the caller's group is restored after); rows by tag, each
     with its own frame's columns. With ``gate=(op, cap)`` the action is
     ``collect_if_small``'s bounded probe of the union, and the result is
-    None when the union has more than ``cap`` rows or the union's rows
-    fail ``accept``."""
+    None when the union has more than ``cap`` rows."""
     tagged = [df.withColumn("_sec", F.lit(sec)) for sec, df in parts.items()]
     union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
     sc = spark.sparkContext
@@ -357,8 +356,7 @@ def _collect_tagged(
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
         rows = (union.collect() if gate is None
-                else collect_if_small(union, gate[1], gate[0], rows=True,
-                                      accept=accept))
+                else collect_if_small(union, gate[1], gate[0], rows=True))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", caller_group)
     if rows is None:
@@ -551,16 +549,17 @@ _EMBEDDING_KEYS = {"entity": ("name",), "relation": ("src", "tgt"),
 
 def _vectors(
     rows: list[dict], key_cols: tuple[str, ...], tiebreak: str
-) -> _Vectors | None:
-    """The matrix of one embedding table; None unless every row has a
-    finite EMBEDDING_DIM-long embedding (the query's length), as the
-    numpy search needs."""
-    embs = [r["embedding"] for r in rows]
-    if any(e is None or len(e) != EMBEDDING_DIM for e in embs):
-        return None
-    mat = np.array(embs, dtype=np.float64).reshape(len(embs), EMBEDDING_DIM)
-    if not np.isfinite(mat).all():
-        return None
+) -> _Vectors:
+    """The matrix of one embedding table's usable rows: those whose
+    embedding is a finite EMBEDDING_DIM-long vector (the query's
+    length), the rows ``cosine_topk`` scores."""
+    rows = [r for r in rows
+            if r["embedding"] is not None and len(r["embedding"]) == EMBEDDING_DIM]
+    # a null element becomes NaN
+    mat = np.array([r["embedding"] for r in rows],
+                   dtype=np.float64).reshape(len(rows), EMBEDDING_DIM)
+    finite = np.isfinite(mat).all(axis=1)
+    mat, rows = mat[finite], list(compress(rows, finite))
     keys = [r[key_cols[0]] if len(key_cols) == 1
             else tuple(r[c] for c in key_cols) for r in rows]
     has_tiebreak = bool(rows) and tiebreak in rows[0]
@@ -568,15 +567,15 @@ def _vectors(
 
 
 def _build_snapshot(spark: SparkSession, g: GraphTables) -> KBSnapshot | None:
-    """``g`` on the driver, or None when the gate declines; two actions
-    under job group ``kg_query:snapshot``.
+    """``g`` on the driver, or None when it has more than
+    ``SNAPSHOT_CAP`` rows; two actions under job group
+    ``kg_query:snapshot``.
 
-    The gate (one record, op ``kg_snapshot``) first probes the tagged
-    union of the seven frames with no columns, so a KB over
-    ``SNAPSHOT_CAP`` costs a bounded scan, not ``SNAPSHOT_CAP`` wide rows
-    pulled to the driver and dropped. A probe that fits runs ONE
-    tagged-union collect of the frames; a KB with an embedding the numpy
-    search cannot take is then declined in the same record."""
+    The gate (one record, op ``kg_snapshot``) probes the tagged union of
+    the seven frames with no columns, so a KB over ``SNAPSHOT_CAP``
+    costs a bounded scan, not ``SNAPSHOT_CAP`` wide rows pulled to the
+    driver and dropped. A probe that fits runs ONE tagged-union collect
+    of the frames."""
     t0 = time.perf_counter()
 
     parts = {
@@ -593,19 +592,13 @@ def _build_snapshot(spark: SparkSession, g: GraphTables) -> KBSnapshot | None:
                                *([F.col(tb).alias(f"_tb_{sec}")] if tb else []))
     if g.path_properties is not None:
         parts["paths"] = g.path_properties.select("file_path", "last_modified")
-    found: dict = {}
-    vectors: dict = {}
-
-    def load(_probe: list) -> bool:
-        found.update(_collect_tagged(spark, parts, "kg_query:snapshot"))
-        for sec, key_cols in _EMBEDDING_KEYS.items():
-            vectors[sec] = _vectors(found.pop(sec), key_cols, f"_tb_{sec}")
-        return None not in vectors.values()
-
     probe = {sec: df.select() for sec, df in parts.items()}
     if _collect_tagged(spark, probe, "kg_query:snapshot",
-                       gate=("kg_snapshot", SNAPSHOT_CAP), accept=load) is None:
+                       gate=("kg_snapshot", SNAPSHOT_CAP)) is None:
         return None
+    found = _collect_tagged(spark, parts, "kg_query:snapshot")
+    vectors = {sec: _vectors(found.pop(sec), key_cols, f"_tb_{sec}")
+               for sec, key_cols in _EMBEDDING_KEYS.items()}
     edges = {(r["src"], r["tgt"]): r for r in found["edges"]}
     incident: dict = {}
     for key in edges:

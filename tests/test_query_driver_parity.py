@@ -19,7 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphrag_kb_server_spark import GRAPH_FIELD_SEP
-from graphrag_kb_server_spark.functions.embedding import embed_text
+from graphrag_kb_server_spark.functions.embedding import EMBEDDING_DIM, embed_text
 from graphrag_kb_server_spark.operators.context_ops import (
     expand_file_references,
     expand_reference_rows,
@@ -278,11 +278,44 @@ def _vec(text: str) -> list[float]:
     return [float(x) for x in embed_text(text)]
 
 
-def _random_graph(spark, seed: int, query: str) -> GraphTables:
+def _unusable(kind: str, vec: list[float]) -> list | None:
+    """``vec`` made into an embedding that is not a finite vector of the
+    query's length."""
+    return {"nan": [float("nan")] + vec[1:], "inf": vec[:-1] + [float("inf")],
+            "short": vec[:-1], "long": vec + [0.0], "empty": [],
+            "null": None, "null_element": [None] + vec[1:]}[kind]
+
+
+_KINDS = ("nan", "inf", "short", "long", "empty", "null", "null_element")
+
+
+def test_cosine_topk_skips_unusable_rows(spark):
+    """cosine_topk gives the top k of the usable rows, and the driver
+    matrix keeps exactly those rows: every unusable kind is dropped,
+    zero-norm ones (which a bare cosine scores 0.0) included."""
+    good = [(f"g{i}", _vec(t)) for i, t in enumerate(("alpha", "beta", "delta"))]
+    bad = [(f"x-{kind}-{j}", _unusable(kind, base)) for kind in _KINDS
+           for j, base in enumerate((_vec("alpha beta"), [0.0] * EMBEDDING_DIM))]
+    schema = "id string, embedding array<float>"
+    df = spark.createDataFrame(good + bad, schema)
+    clean = spark.createDataFrame(good, schema)
+    vectors = qp._vectors([r.asDict() for r in df.collect()], ("id",), "id")
+    assert vectors.keys == [i for i, _ in good]
+    qvec = _vec("alpha beta")
+    for k in (1, 2, len(good) + len(bad)):
+        got = [(r["id"], r["score"]) for r in cosine_topk(df, qvec, k).collect()]
+        assert got == [(r["id"], r["score"])
+                       for r in cosine_topk(clean, qvec, k).collect()], k
+        assert got == vectors.topk(qvec, k), k
+
+
+def _random_graph(spark, seed: int, query: str, unusable: bool = False) -> GraphTables:
     """A seeded random KB with null type/description/file_path/
     last_modified and dangling embedding rows (no matching node, edge
     or chunk) that score as high as the query itself, so the top-k cut
-    before the join decides what survives."""
+    before the join decides what survives. ``unusable`` adds, to each
+    embedding table, one row per kind of unusable embedding on a random
+    real key."""
     rng = _rng(seed)
     qvec = _vec(" ".join(qp.extract_keywords(query)))
     names = rng.sample(NAMES, 10) + [f"n{i}" for i in range(6)]
@@ -310,6 +343,12 @@ def _random_graph(spark, seed: int, query: str) -> GraphTables:
     rel_emb = [(a, b, emb()) for a, b, *_ in edges] + [
         ("ghost", names[0], qvec), (names[0], "ghost", qvec)]
     chunk_emb = [(c, emb()) for c in chunk_ids] + [("c-missing", qvec)]
+    if unusable:
+        for kind in _KINDS:
+            bad = _unusable(kind, qvec)
+            ent_emb.append((rng.choice(names), bad))
+            rel_emb.append((*rng.choice(edges)[:2], bad))
+            chunk_emb.append((rng.choice(chunk_ids), bad))
     return GraphTables(
         nodes=spark.createDataFrame(
             nodes, "name string, type string, description string, "
@@ -329,6 +368,10 @@ def _random_graph(spark, seed: int, query: str) -> GraphTables:
         path_properties=spark.createDataFrame(
             props, "file_path string, last_modified timestamp"),
     )
+
+
+_FIELDS = ("nodes", "edges", "chunks", "entity_embeddings",
+           "relation_embeddings", "chunk_embeddings", "path_properties")
 
 
 def _served(spark, g, query, combos):
@@ -352,7 +395,7 @@ _COMBOS = [
 ]
 
 
-@pytest.mark.parametrize("graph", ["sep_mini", 0, 1])
+@pytest.mark.parametrize("graph", ["sep_mini", 0, 1, "unusable_2"])
 def test_snapshot_matches_distributed_stage1(spark, monkeypatch, graph):
     """Whole requests on the driver snapshot equal the distributed
     stage 1 (snapshot cap forced to 0): every mode, both chunk picks,
@@ -363,12 +406,11 @@ def test_snapshot_matches_distributed_stage1(spark, monkeypatch, graph):
         query, frames = "Alpha", _mini_graph(spark)
     else:
         query = "What links Alpha and Émile to the 東京 office?"
-        frames = _random_graph(spark, graph, query)
+        frames = (_random_graph(spark, 2, query, unusable=True)
+                  if graph == "unusable_2" else _random_graph(spark, graph, query))
 
     def fresh() -> GraphTables:
-        return GraphTables(**{f: getattr(frames, f) for f in (
-            "nodes", "edges", "chunks", "entity_embeddings",
-            "relation_embeddings", "chunk_embeddings", "path_properties")})
+        return GraphTables(**{f: getattr(frames, f) for f in _FIELDS})
 
     g = fresh()
     assert g.snapshot(spark) is not None
@@ -428,24 +470,41 @@ def test_snapshot_gate_boundary(spark, monkeypatch, caplog):
                 if isinstance(r.args, dict) and r.args.get("op") == "kg_snapshot"]
 
 
-@pytest.mark.parametrize("bad", ["nan", "short", "null"])
-def test_snapshot_declines_unusable_embeddings(spark, caplog, bad):
-    """A KB under the cap with an embedding the numpy search cannot
-    take stays on the distributed path, and the gate's one record says
-    so."""
+@pytest.mark.parametrize("bad", ["nan", "inf", "short", "null", "null_element"])
+def test_unusable_embeddings_answer_alike(spark, monkeypatch, caplog, bad):
+    """A KB with an unusable embedding row in each embedding table, each
+    on a real key, is served from the snapshot, and the snapshot, the
+    distributed stage 1 and the same KB without those rows answer
+    alike: such a row is not a candidate on either path."""
     from test_query_ops import _mini_graph
 
-    g = _mini_graph(spark)
-    vec = [float(x) for x in embed_text("Beta")]
-    emb = {"nan": [float("nan")] + vec[1:], "short": vec[:-1], "null": None}[bad]
-    g = GraphTables(**{**{f: getattr(g, f) for f in (
-        "nodes", "edges", "chunks", "relation_embeddings", "chunk_embeddings")},
-        "entity_embeddings": g.entity_embeddings.union(spark.createDataFrame(
-            [("Beta", emb)], "name string, embedding array<float>"))})
-    snap, rec = _snapshot_decision(spark, caplog, g)
-    assert snap is None
-    assert rec["path"] == "distributed" and rec["probed_rows"] <= rec["cap"], rec
-    if bad == "nan":
-        # the distributed path serves it; a short or null embedding
-        # scores null there, which stage 2 cannot rank
-        assert kg_query(spark, g, "Alpha", QueryParams(top_k=5)).entities
+    clean = _mini_graph(spark)
+    emb = _unusable(bad, _vec("Beta"))
+    extra = {"entity_embeddings": [("Beta", emb)],
+             "relation_embeddings": [("Alpha", "Beta", emb)],
+             "chunk_embeddings": [("c1", emb)]}
+
+    def with_bad_rows() -> GraphTables:
+        frames = {f: getattr(clean, f) for f in _FIELDS}
+        for f, rows in extra.items():
+            frames[f] = frames[f].union(
+                spark.createDataFrame(rows, frames[f].schema))
+        return GraphTables(**frames)
+
+    # top_k=1: a bad row ranked first would displace the real one
+    combos = [QueryParams(mode=m, top_k=1)
+              for m in ("local", "global", "hybrid", "mix")]
+    combos.append(QueryParams(mode="hybrid", top_k=1, chunk_pick="vector"))
+    with caplog.at_level(logging.WARNING, logger=qp.__name__):
+        g = with_bad_rows()
+        snap, rec = _snapshot_decision(spark, caplog, g)
+        assert snap is not None and rec["path"] == "driver", rec
+        driver = _served(spark, g, "Alpha", combos)
+        want = _served(spark, clean, "Alpha", combos)
+        monkeypatch.setattr(qp, "SNAPSHOT_CAP", 0)
+        g = with_bad_rows()
+        assert g.snapshot(spark) is None
+        distributed = _served(spark, g, "Alpha", combos)
+    for params, a, b, c in zip(combos, driver, distributed, want):
+        assert a == b == c, params
+    assert not [r for r in caplog.records if "chunk pick failed" in r.getMessage()]

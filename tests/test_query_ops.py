@@ -449,3 +449,22 @@ def test_q12_pick_failure_falls_back_to_polling(spark, monkeypatch, caplog):
     assert fallback.references == polling.references
     assert any(r.levelno == logging.WARNING and "falling back" in r.getMessage()
                for r in caplog.records)
+
+
+def test_kg_answer_entry_leaves_no_temp_dir(spark):
+    """The kg_answer entry keeps its answer cache in a temporary
+    directory that is gone once the entry returns."""
+    import glob
+    import os
+    import sys
+    import tempfile
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    import __spark_entry__ as entrymod
+
+    pattern = os.path.join(tempfile.gettempdir(), "kg_answer_oracle_*")
+    before = set(glob.glob(pattern))
+    rows = entrymod.queries()["kg_answer"](spark, None).collect()
+    assert [r["section"] for r in rows][0] == "answer"
+    assert set(glob.glob(pattern)) <= before
