@@ -27,9 +27,10 @@ Pipeline:
 Skew note: a degenerate band bucket (stopword-ish names) would create
 a quadratic pair explosion; any bucket over ``max_bucket`` is SPLIT
 into bounded deterministic sub-buckets (operators.dedup.
-split_oversized_buckets) — never silently dropped — and callers can
-surface how many buckets were split via ``candidate_bucket_stats``
-(the index pipeline records it in its metrics sidecar).
+split_oversized_buckets) — never silently dropped. The index pipeline
+records how many buckets were split in its metrics sidecar: the driver
+path of ``canonical_map`` reports it from the buckets it built, the
+distributed path via ``candidate_bucket_stats``.
 """
 
 from __future__ import annotations
@@ -114,7 +115,12 @@ def candidate_bucket_stats(
     metrics sidecar — how many band buckets exceeded ``max_bucket`` and
     were therefore split. A non-zero n_oversized at production scale is
     the signal to add bands/hashes (smaller collision probability) or
-    raise max_bucket."""
+    raise max_bucket.
+
+    This recomputes the band buckets, so the index pipeline calls it
+    only when ``canonical_map`` took the distributed path; the driver
+    path reports the same row from its own buckets (``bucket_stats``),
+    pinned equal to this one by tests/test_r06_driver_parity.py."""
     bucketed = _banded_names(names, name_col, num_hashes, bands)
     return oversized_bucket_stats(bucketed, "band", max_bucket)
 
@@ -197,7 +203,9 @@ def _canonical_map_driver(names_list: list, threshold: float,
       semantics); representative = (longest, then lexicographically
       smallest) member.
 
-    Returns a sorted list of (name, canonical_name) pairs."""
+    Returns a sorted list of (name, canonical_name) pairs and the
+    ``candidate_bucket_stats`` row of the band buckets as a dict (with
+    its nulls on an empty vocabulary)."""
     import hashlib
     import math
     from collections import defaultdict
@@ -222,6 +230,12 @@ def _canonical_map_driver(names_list: list, threshold: float,
         for bnd in range(DEFAULT_BANDS):
             key = (bnd, tuple(sig[bnd * rows_per_band:(bnd + 1) * rows_per_band]))
             buckets[key].append(nm)
+    sizes = [len(members) for members in buckets.values()]
+    stats = {
+        "n_buckets": len(sizes),
+        "n_oversized": sum(n > max_bucket for n in sizes) if sizes else None,
+        "max_size": max(sizes, default=None),
+    }
     pairs: set = set()
     for members in buckets.values():
         if len(members) > max_bucket:
@@ -300,7 +314,7 @@ def _canonical_map_driver(names_list: list, threshold: float,
         rep = min(members, key=lambda n: (-len(n), n))
         for nm in members:
             canon[nm] = rep
-    return sorted((nm, canon.get(nm, nm)) for nm in names_list)
+    return sorted((nm, canon.get(nm, nm)) for nm in names_list), stats
 
 
 def canonical_map(
@@ -309,6 +323,7 @@ def canonical_map(
     threshold: float = DEFAULT_THRESHOLD,
     include_abbreviations: bool = True,
     driver_cap: int = 100_000,
+    bucket_stats: dict | None = None,
 ) -> DataFrame:
     """nodes → (name, canonical_name) for EVERY input name (identity
     rows included), via LSH → cosine → components.
@@ -318,7 +333,12 @@ def canonical_map(
     distinct printable-ASCII names the identical pipeline runs
     driver-side (_canonical_map_driver, bit-identical by construction);
     see ``graph_support.collect_if_small``. Larger or non-ASCII
-    vocabularies take the distributed operators; 0 forces them."""
+    vocabularies take the distributed operators; 0 forces them.
+
+    The driver path hands its mapping to Spark as a pandas frame, so
+    the rows cross to the JVM as Arrow batches, and fills
+    ``bucket_stats`` (when given) with the ``candidate_bucket_stats``
+    row of its LSH buckets. The distributed path leaves it empty."""
     names = nodes.select(F.col(name_col).alias("name")).distinct()
     probe = collect_if_small(names, driver_cap, "canonical_map")
     if probe is not None:
@@ -327,14 +347,17 @@ def canonical_map(
             isinstance(nm, str) and all(32 <= ord(c) < 127 for c in nm)
             for nm in names_list
         ):
+            import pandas as pd
             from pyspark.sql import types as T
 
-            out = _canonical_map_driver(
+            out, stats = _canonical_map_driver(
                 names_list, threshold, include_abbreviations
             )
+            if bucket_stats is not None:
+                bucket_stats.update(stats)
             dt = names.schema["name"].dataType
             return nodes.sparkSession.createDataFrame(
-                out,
+                pd.DataFrame(out, columns=["name", "canonical_name"]),
                 T.StructType(
                     [
                         T.StructField("name", dt),

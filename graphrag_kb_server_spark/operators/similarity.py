@@ -1,11 +1,9 @@
 """Similarity search over embedding columns (ARRAY<FLOAT>).
 
-- ``brute_force_topk``        — exact cosine top-k per query (the G6
-  baseline; TakeOrderedAndProject, no full shuffle).
-- ``brute_force_topk_batch``  — many queries at once: broadcast the
-  query table, cross-join-free (broadcast nested loop on small query
-  side), per-query window top-k.
-- ``ivf_topk``                — the scale path: coarse quantization by
+- ``brute_force_topk_batch``  — exact cosine top-k for many queries at
+  once (the G6 baseline): broadcast the query table, cross-join-free
+  (broadcast nested loop on small query side), per-query window top-k.
+- ``ivf_topk_batch``          — the scale path: coarse quantization by
   seeded hyperplane signs (IVF-style cells); queries probe only their
   own cell (+optionally neighboring cells via reduced sign prefixes),
   turning O(N·Q) into O(N·Q/cells) with an equi-join on the cell key.
@@ -23,23 +21,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
-
-
-def brute_force_topk(
-    table: DataFrame,
-    query_vec,
-    k: int,
-    id_col: str,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    return (
-        table.withColumn(
-            "score", V.cosine_with_query(V.to_double(F.col(vec_col)), query_vec)
-        )
-        .select(id_col, "score")
-        .orderBy(F.desc("score"), id_col)
-        .limit(k)
-    )
 
 
 def brute_force_topk_batch(

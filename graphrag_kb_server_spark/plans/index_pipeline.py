@@ -17,9 +17,19 @@ two salted groupBys and the writes; every stage is idempotently
 resumable: reruns skip stages whose output already exists (doc-level
 incremental indexing is an anti-join against ``doc_status``, T9).
 
+Outputs of one step are written as concurrent driver actions
+(``documents``‖``chunks``, ``nodes_raw``‖``edges_raw``,
+``nodes_pre``‖``edges_pre``, ``nodes``‖``edges``, the three embedding
+tables‖``doc_status``), and each stage is read back with the schema of
+the frame just written, so no schema-inference job follows a write;
+only a stage skipped on resume is read with inference.
+
 Per-partition lineage + metrics: every write is accompanied by a
 ``_metrics`` row set (stage, rows, partitions, wall seconds) appended to
-``metrics`` — the reference's TB_* telemetry sidecar analogue.
+``metrics`` — the reference's TB_* telemetry sidecar analogue. The
+``canonical_map:lsh_buckets`` row comes from ``canonical_map`` itself
+when it links on the driver (the buckets it already built) and from
+``candidate_bucket_stats`` when it takes the distributed path.
 """
 
 from __future__ import annotations
@@ -27,10 +37,13 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import text as TXT
 from ..functions.embedding import embed_udf
@@ -86,10 +99,18 @@ def _ident(path: str) -> str:
     return path.replace("/", ".").lstrip(".") if _is_iceberg() else path
 
 
-def _read_table(spark: SparkSession, path: str) -> DataFrame:
+def _read_table(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """Read a stage table. A file-format read given the ``schema`` of the
+    frame that was written skips schema inference, which for parquet is
+    a Spark job over the file footers."""
     if _is_iceberg():
         return spark.read.table(_ident(path))
-    return spark.read.format(_table_format()).load(path)
+    reader = spark.read.format(_table_format())
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.load(path)
 
 
 @dataclass
@@ -192,7 +213,7 @@ def run_index(
     """
     res = IndexResult(out_dir=out_dir)
 
-    def _write_observed(name: str, df: DataFrame, partition_by) -> None:
+    def _write_observed(name: str, df: DataFrame) -> None:
         """Write one stage output with a write-side row count: the
         Observation aggregates rows DURING the write action — no extra
         scan of the output (a per-stage ``count()`` re-read would double
@@ -200,7 +221,7 @@ def run_index(
         t0 = time.time()
         obs = Observation(f"stage:{name}")
         path = f"{out_dir}/{name}"
-        _write(df.observe(obs, F.count(F.lit(1)).alias("rows")), path, partition_by)
+        _write(df.observe(obs, F.count(F.lit(1)).alias("rows")), path)
         # Written-file layout from the filesystem, NOT df.rdd: converting
         # an AQE plan to an RDD can finalize/re-execute its shuffle stages
         # (a silent second pass of the UDF work the Observation exists to
@@ -228,116 +249,113 @@ def run_index(
             }
         )
 
-    def stage(name: str, build, partition_by: list[str] | None = None) -> DataFrame:
-        path = f"{out_dir}/{name}"
-        if resume and _exists(path, spark):
-            res.metrics.append({"stage": name, "skipped": True})
-            return _read_table(spark, path)
-        _write_observed(name, build(), partition_by)
-        return _read_table(spark, path)
+    def stages(names: list[str], build) -> list[DataFrame]:
+        """Write the stages ``names`` from ``build()``, which returns one
+        frame per name, and read them back.
 
-    def stages_concurrent(specs) -> list[DataFrame]:
-        """Write INDEPENDENT stages as concurrent driver actions.
-
-        Each spec is (name, build, partition_by). The stages share no
-        inputs-to-be-computed (their upstreams are already-written
-        tables, or lazily-checkpointed frames shared by construction),
-        so submitting their write actions from a small thread pool
-        overlaps their scheduling and IO — on a cluster this is the
+        The frames are the outputs of one step: either one shared
+        computation (canonicalized nodes+edges: build once, write both)
+        or independent builds over already-written tables. Resume is per
+        stage: a stage whose output exists is skipped, and ``build`` runs
+        only when at least one stage is missing. The missing stages are
+        written as concurrent driver actions from a small thread pool,
+        which overlaps their scheduling and IO — on a cluster the
         standard multi-branch-DAG pattern (independent jobs fill
-        executor slots the tail of a lone job leaves idle; pair with
-        spark.scheduler.mode=FAIR for slot sharing). Resume and
-        metrics semantics are per-stage, identical to sequential
-        execution; list.append is atomic so the metrics sidecar is
-        merely order-jittered, and it is canonically re-sorted before
-        the final dump.
+        executor slots the tail of a lone job leaves idle). The pool
+        threads inherit the caller's Spark job group. list.append is
+        atomic, so the metrics sidecar is merely order-jittered, and it
+        is canonically re-sorted before the final dump.
+
+        A written stage is read back with the schema of the frame just
+        written — what parquet/ORC inference would return, since a file
+        source read makes every field nullable either way — so no
+        schema-inference job runs between a write and the next build.
         """
-        from concurrent.futures import ThreadPoolExecutor
+        paths = [f"{out_dir}/{n}" for n in names]
+        todo = [n for n, p in zip(names, paths) if not (resume and _exists(p, spark))]
+        res.metrics.extend(
+            {"stage": n, "skipped": True} for n in names if n not in todo
+        )
+        schemas = {}
+        if todo:
+            frames = dict(zip(names, build()))
+            # one wrap per write: each thread gets its own copy of the
+            # caller's local properties (job group), not a shared one
+            with ThreadPoolExecutor(max_workers=len(todo)) as ex:
+                futs = [
+                    ex.submit(
+                        inheritable_thread_target(spark)(_write_observed),
+                        n, frames[n],
+                    )
+                    for n in todo
+                ]
+                for fut in futs:
+                    fut.result()
+            schemas = {n: frames[n].schema for n in todo}
+        return [_read_table(spark, p, schemas.get(n)) for n, p in zip(names, paths)]
 
-        if len(specs) == 1:
-            name, build, pb = specs[0]
-            return [stage(name, build, pb)]
-        with ThreadPoolExecutor(max_workers=len(specs)) as ex:
-            futs = [
-                ex.submit(stage, name, build, pb) for name, build, pb in specs
-            ]
-            return [f.result() for f in futs]
+    def stage(name: str, build) -> DataFrame:
+        return stages([name], lambda: [build()])[0]
 
-    def stage_pair(
-        name_a: str, name_b: str, build
-    ) -> tuple[DataFrame, DataFrame]:
-        """Two outputs of ONE shared computation (e.g. canonicalized
-        nodes+edges): build once, write both — never build per output
-        and discard half."""
-        path_a, path_b = f"{out_dir}/{name_a}", f"{out_dir}/{name_b}"
-        if not (resume and _exists(path_a, spark) and _exists(path_b, spark)):
-            df_a, df_b = build()
-            _write_observed(name_a, df_a, None)
-            _write_observed(name_b, df_b, None)
-        else:
-            res.metrics.append({"stage": name_a, "skipped": True})
-            res.metrics.append({"stage": name_b, "skipped": True})
-        return _read_table(spark, path_a), _read_table(spark, path_b)
-
-    # ── extract text (S2/T1): the byte-identical invariant ──────────
-    def build_documents() -> DataFrame:
+    # ── extract text (S2/T1: the byte-identical invariant) and T2
+    #     chunking (narrow mapInPandas), written together: chunks is
+    #     built from the documents plan, so the first mapInPandas (Python
+    #     worker start) overlaps the first JVM job; the text extraction,
+    #     JVM expressions, runs in both writes ────────────────────────
+    def build_documents_and_chunks() -> list[DataFrame]:
         src = web_pages
         if lang_filter:
             src = src.where(F.col("lang") == lang_filter)
-        return src.select(
+        docs = src.select(
             F.col("url"),
             F.col("warc_ts"),
             TXT.extract_text(F.col("text"), F.col("url")).alias("content"),
         ).withColumn("doc_id", TXT.doc_id(F.col("content")))
+        return [docs, chunk_documents(ensure_parallelism(
+            docs.select("doc_id", "content", F.col("url").alias("file_path"))
+        ))]
 
-    documents = stage("documents", build_documents)
-
-    # ── T2 chunking (narrow mapInPandas) ─────────────────────────────
-    chunks = stage(
-        "chunks",
-        lambda: chunk_documents(
-            ensure_parallelism(
-                documents.select("doc_id", "content", F.col("url").alias("file_path"))
-            )
-        ),
-    )
+    documents, chunks = stages(["documents", "chunks"], build_documents_and_chunks)
 
     # ── T3 extraction (LLM slot, mapInPandas) ────────────────────────
     mentions = stage("mentions", lambda: extract_mentions(ensure_parallelism(chunks)))
 
     # ── T4/T5 salted two-phase merges ────────────────────────────────
-    nodes_raw, edges_raw = stages_concurrent([
-        ("nodes_raw", lambda: build_nodes(mentions), None),
-        ("edges_raw", lambda: build_edges(mentions), None),
-    ])
+    nodes_raw, edges_raw = stages(
+        ["nodes_raw", "edges_raw"],
+        lambda: [build_nodes(mentions), build_edges(mentions)],
+    )
 
     # ── entity linking + canonicalization (LSH → cosine → components) ─
     if link_entities:
         def build_mapping() -> DataFrame:
             # LSH blocking health: how many band buckets were split
             # (bounded sub-buckets, nothing dropped) — recorded in the
-            # metrics sidecar alongside the stage row (a small agg over
-            # distinct entity names, only when the stage actually runs)
-            stats = candidate_bucket_stats(
-                nodes_raw.select(F.col("name")).distinct()
-            ).first()
-            res.metrics.append(
-                {"stage": "canonical_map:lsh_buckets", **stats.asDict()}
-            )
-            return canonical_map(nodes_raw)
+            # metrics sidecar alongside the stage row, only when the
+            # stage actually runs. The driver path reports it from its
+            # own buckets; the distributed path pays a small agg over
+            # distinct entity names. Both names are looked up as module
+            # globals so a caller can wrap them.
+            stats: dict = {}
+            mapping = canonical_map(nodes_raw, bucket_stats=stats)
+            if not stats:
+                stats = candidate_bucket_stats(
+                    nodes_raw.select(F.col("name")).distinct()
+                ).first().asDict()
+            res.metrics.append({"stage": "canonical_map:lsh_buckets", **stats})
+            return mapping
 
         mapping = stage("canonical_map", build_mapping)
-        nodes_c, edges_c = stage_pair(
-            "nodes_pre",
-            "edges_pre",
+        nodes_c, edges_c = stages(
+            ["nodes_pre", "edges_pre"],
             lambda: canonicalize_graph(nodes_raw, edges_raw, mapping),
         )
     else:
         nodes_c, edges_c = nodes_raw, edges_raw
 
     # ── T7 degrees (one shared degree computation for both outputs) ──
-    nodes, edges = stage_pair(
-        "nodes", "edges", lambda: finalize_graph(nodes_c, edges_c)
+    nodes, edges = stages(
+        ["nodes", "edges"], lambda: finalize_graph(nodes_c, edges_c)
     )
 
     # ── T6 embeddings (LLM slot, pandas UDF; content formats mirror
@@ -392,12 +410,12 @@ def run_index(
         )
 
     (chunk_embeddings, entity_embeddings, relation_embeddings,
-     doc_status) = stages_concurrent([
-        ("chunk_embeddings", build_chunk_embeddings, None),
-        ("entity_embeddings", build_entity_embeddings, None),
-        ("relation_embeddings", build_relation_embeddings, None),
-        ("doc_status", build_doc_status, None),
-    ])
+     doc_status) = stages(
+        ["chunk_embeddings", "entity_embeddings", "relation_embeddings",
+         "doc_status"],
+        lambda: [build_chunk_embeddings(), build_entity_embeddings(),
+                 build_relation_embeddings(), build_doc_status()],
+    )
 
     # canonical sidecar order regardless of concurrent completion order
     order = {n: i for i, n in enumerate(STAGES)}

@@ -55,6 +55,16 @@ def test_index_outputs(spark, indexed):
     # every stage reported metrics
     stages = {m["stage"] for m in res.metrics}
     assert {"documents", "chunks", "mentions", "nodes", "edges"} <= stages
+    # the LSH bucket stats the driver linking path reports are the row
+    # candidate_bucket_stats computes over the same vocabulary
+    from graphrag_kb_server_spark.operators.linking import candidate_bucket_stats
+
+    lsh = [m for m in res.metrics if m["stage"] == "canonical_map:lsh_buckets"]
+    names = spark.read.parquet(f"{out}/nodes_raw").select("name").distinct()
+    assert lsh == [
+        {"stage": "canonical_map:lsh_buckets",
+         **candidate_bucket_stats(names).first().asDict()}
+    ]
 
 
 def test_kg_query_modes(spark, indexed):
@@ -127,6 +137,107 @@ def test_resume_skips_and_is_identical(spark, indexed, tmp_out):
     import pandas as pd
 
     pd.testing.assert_frame_equal(nodes_before, nodes_after)
+
+
+def _table_rows(spark, out, name, keys):
+    return spark.read.parquet(f"{out}/{name}").orderBy(*keys).collect()
+
+
+def test_resume_redoes_only_missing_stages(spark, indexed):
+    """Resume is per stage, also for the outputs of one step: with only
+    edges_pre gone, only edges_pre is rewritten; with documents and
+    chunks (built together from the input pages) gone, both are."""
+    out, _ = indexed
+    pages = generate(spark, 80)
+    keys = {"edges_pre": ["src", "tgt"], "documents": ["url", "doc_id"],
+            "chunks": ["chunk_id"], "nodes": ["name"], "edges": ["src", "tgt"]}
+    before = {n: _table_rows(spark, out, n, k) for n, k in keys.items()}
+
+    def rerun_without(*names):
+        for n in names:
+            shutil.rmtree(f"{out}/{n}")
+        res = run_index(spark, pages, out, resume=True)
+        return {m["stage"] for m in res.metrics if not m.get("skipped")}
+
+    assert rerun_without("edges_pre") == {"edges_pre"}
+    assert rerun_without("chunks") == {"chunks"}
+    redo = {"documents", "chunks", "nodes", "edges"}
+    assert rerun_without(*redo) == redo
+    for n, k in keys.items():
+        assert _table_rows(spark, out, n, k) == before[n], n
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_schema_carrying_read_matches_inferring_read(spark, tmp_out, monkeypatch, fmt):
+    """A stage read given the written frame's schema returns the schema
+    and rows an inferring read returns: a file source read makes every
+    field nullable either way."""
+    from graphrag_kb_server_spark.plans.index_pipeline import _read_table, _write
+
+    monkeypatch.setenv("KGSPARK_TABLE_FORMAT", fmt)
+    df = spark.range(6).select(
+        F.col("id"),
+        F.lit(1).alias("not_null"),
+        F.when(F.col("id") % 2 == 0, F.col("id").cast("string")).alias("s"),
+        (F.col("id") / 3).alias("d"),
+        F.array(F.col("id").cast("float"), F.lit(0.5).cast("float")).alias("vec"),
+        F.array(F.lit("a"), F.col("id").cast("string")).alias("ids"),
+        F.timestamp_seconds(F.col("id") * 86400).alias("ts"),
+        F.struct(F.col("id").alias("x"), F.lit("y").alias("y")).alias("st"),
+    )
+    assert not df.schema["not_null"].nullable
+    path = f"{tmp_out}/schema_read_{fmt}"
+    _write(df, path)
+    carried = _read_table(spark, path, df.schema)
+    inferred = _read_table(spark, path)
+    assert carried.schema == inferred.schema
+    assert carried.orderBy("id").collect() == inferred.orderBy("id").collect()
+    assert carried.orderBy("id").collect() == df.orderBy("id").collect()
+
+
+def test_index_job_budget(spark, tmp_out, monkeypatch):
+    """A fresh run_index over generate(spark, 40) at 4 shuffle
+    partitions runs at most 33 Spark jobs:
+
+    - one write per stage table (14);
+    - the stages AQE submits as jobs of their own inside those writes
+      (16: chunks 2, mentions 1, nodes_raw 2, edges_raw 2, nodes_pre 2,
+      edges_pre 2, nodes 1, edges 1, chunk_embeddings 1, doc_status 2);
+    - the canonical_map size probe (2: its distinct and the bounded
+      collect);
+    - the degree table nodes and edges share (1: finalize_graph's lazy
+      localCheckpoint, planned while the pair is built).
+
+    No LSH bucket-stats chain runs (the driver linking path reports the
+    stats), and no job runs while a written stage is read back: the
+    read carries the written frame's schema, so no parquet
+    schema-inference job runs between a write and the next build."""
+    from graphrag_kb_server_spark.plans import index_pipeline
+
+    sc = spark.sparkContext
+    group = "test_index_job_budget"
+    pages = generate(spark, 40)
+    jobs = lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    read_jobs = []
+    read = index_pipeline._read_table
+
+    def counted_read(spark_, path, schema=None):
+        before = jobs()
+        df = read(spark_, path, schema)
+        read_jobs.append((os.path.basename(path), jobs() - before))
+        return df
+
+    monkeypatch.setattr(index_pipeline, "_read_table", counted_read)
+    sc.setJobGroup(group, "run_index job budget")
+    try:
+        run_index(spark, pages, f"{tmp_out}/job_budget")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(read_jobs) == 14
+    assert all(n == 0 for _, n in read_jobs), read_jobs
+    # every stage write runs on a pool thread, so the writes count here
+    # only when those threads inherit the caller's job group
+    assert 14 <= jobs() <= 33
 
 
 def test_incremental_anti_join(spark, indexed):

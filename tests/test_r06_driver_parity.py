@@ -3,7 +3,8 @@ bit-identical to its distributed twin on graphs that exercise the
 tie-break rules.
 
 - canonical_map: driver path (LSH → cosine → components in-process)
-  vs the distributed operator composition (driver_cap=0).
+  vs the distributed operator composition (driver_cap=0); the LSH
+  bucket stats the driver path reports vs candidate_bucket_stats.
 - label_propagation / modularity_refine: numpy-vectorized driver loops
   vs the distributed rounds (driver_cap=0) — integer weights
   (the documented bit-parity contract).
@@ -77,6 +78,44 @@ def test_canonical_map_driver_skips_non_ascii(spark):
     )
     assert drv == dist
 
+
+
+@pytest.mark.parametrize(
+    "names",
+    [
+        ["Quantum Analytics Systems", "Quantum Analytic Systems", "AI",
+         "Artificial Intelligence", "Zebra", "Xx", "Xy"]
+        + [f"Node {i} Alpha" for i in range(30)],
+        # one shingle for every name: each band holds a single
+        # 80-member bucket, over max_bucket=64
+        ["aaa" + "a" * i for i in range(80)],
+        [],
+    ],
+    ids=["normal", "oversized", "empty"],
+)
+def test_canonical_map_bucket_stats_match_distributed(spark, names):
+    """The driver path's LSH bucket stats are candidate_bucket_stats'
+    row, nulls included on an empty vocabulary; the distributed path
+    reports none, so the index pipeline calls candidate_bucket_stats."""
+    from graphrag_kb_server_spark.operators.linking import (
+        candidate_bucket_stats,
+        canonical_map,
+    )
+
+    nodes = spark.createDataFrame([(n,) for n in names], "name string")
+    want = candidate_bucket_stats(nodes).first().asDict()
+    got: dict = {}
+    drv = sorted(canonical_map(nodes, bucket_stats=got).collect())
+    assert got == want
+    assert list(got) == ["n_buckets", "n_oversized", "max_size"]
+    if not names:
+        assert want == {"n_buckets": 0, "n_oversized": None, "max_size": None}
+    if len(names) == 80:
+        assert want["n_oversized"] == 4 and want["max_size"] == 80
+    dist_stats: dict = {}
+    dist = sorted(canonical_map(nodes, driver_cap=0, bucket_stats=dist_stats).collect())
+    assert dist_stats == {}
+    assert drv == dist
 
 def _random_edges(seed: int, n_nodes: int = 40, n_edges: int = 90):
     rnd = random.Random(seed)
