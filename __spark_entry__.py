@@ -592,15 +592,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("text"),
             F.col("lang"),
         )
-        base = tempfile.mkdtemp(prefix="s_incr_")
-        pages_dir = f"{base}/pages"
-        pages.write.mode("overwrite").parquet(pages_dir)
-        run_incremental(spark, pages_dir, f"{base}/out", f"{base}/ck")
-        # replay with a fresh checkpoint: doc_status dedup must absorb it
-        run_incremental(spark, pages_dir, f"{base}/out", f"{base}/ck2")
-        return spark.read.parquet(f"{base}/out/documents_stream").select(
-            "doc_id", "url", "content"
-        )
+        with tempfile.TemporaryDirectory(prefix="s_incr_") as base:
+            pages_dir = f"{base}/pages"
+            pages.write.mode("overwrite").parquet(pages_dir)
+            run_incremental(spark, pages_dir, f"{base}/out", f"{base}/ck")
+            # replay with a fresh checkpoint: doc_status dedup must absorb it
+            run_incremental(spark, pages_dir, f"{base}/out", f"{base}/ck2")
+            # materialized before the directory it reads is removed
+            return spark.read.parquet(f"{base}/out/documents_stream").select(
+                "doc_id", "url", "content"
+            ).localCheckpoint(eager=True)
     q["s_incremental_docs"] = s_incremental_docs
 
     # ---- sessionization (training-pipeline op) ----
@@ -1353,11 +1354,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.lit(1.0).alias("weight"),
             F.lit("member").alias("keywords"),
         )
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="kg_graphml_rt_"), "g.graphml"
-        )
-        to_graphml(nodes, edges, path)
-        rnodes, redges = read_graphml(spark, path)
+        # read_graphml parses on the driver: nothing reads the file
+        # once it returns
+        with tempfile.TemporaryDirectory(prefix="kg_graphml_rt_") as d:
+            path = os.path.join(d, "g.graphml")
+            to_graphml(nodes, edges, path)
+            rnodes, redges = read_graphml(spark, path)
         node_rows = rnodes.select(
             F.lit("node").alias("kind"),
             F.col("name").alias("a"),
@@ -1479,9 +1481,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("r_name").alias("parent_cluster"),
             F.lit(1).alias("size"),
         )
-        path = os.path.join(tempfile.mkdtemp(prefix="kg_gexf_rt_"), "c.gexf")
-        communities_to_gexf(comms, path)
-        gnodes, gedges = read_gexf(spark, path)
+        # read_gexf parses on the driver
+        with tempfile.TemporaryDirectory(prefix="kg_gexf_rt_") as d:
+            path = os.path.join(d, "c.gexf")
+            communities_to_gexf(comms, path)
+            gnodes, gedges = read_gexf(spark, path)
         return gnodes.select(
             F.lit("node").alias("kind"),
             F.col("id").alias("a"),
@@ -1515,9 +1519,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             # bit-identical, no rounding coupling
             (F.col("n_nationkey").cast("double") / F.lit(8.0)).alias("score"),
         )
-        path = os.path.join(tempfile.mkdtemp(prefix="kg_xlsx_rt_"), "c.xlsx")
-        centrality_to_xlsx(cent, path)
-        parsed = read_xlsx(spark, path)
+        # read_xlsx parses on the driver
+        with tempfile.TemporaryDirectory(prefix="kg_xlsx_rt_") as d:
+            path = os.path.join(d, "c.xlsx")
+            centrality_to_xlsx(cent, path)
+            parsed = read_xlsx(spark, path)
         return parsed.select(
             "name", "info", F.col("score").cast("double").alias("score")
         )

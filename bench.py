@@ -38,6 +38,7 @@ import os
 import statistics
 import sys
 import time
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -325,30 +326,34 @@ def main() -> None:
             1,
         )
 
-    idx_runs, idx_load, idx_steal = [], [], []
-    for _ in range(volatile_repeats):
-        idx_load.append(_loadavg1())
-        ja = _cpu_jiffies()
-        idx_runs.append(bench_kg_index(spark, n_docs))
-        idx_steal.append(_steal_between(ja, _cpu_jiffies()))
-    repeat_times["kg_index_e2e"] = idx_runs
-    repeat_load["kg_index_e2e"] = idx_load
-    repeat_steal["kg_index_e2e"] = idx_steal
-
-    qs = entrymod.queries()
-    for name in BENCH_QUERIES:
+    def timed(name: str, n: int, run) -> list[float]:
+        """Call ``run`` (it returns seconds) ``n`` times and record its
+        times, the 1-min loadavg before each call and the host steal%
+        during each, under ``name``."""
         runs, loads, steals = [], [], []
-        n = volatile_repeats if name in VOLATILE_QUERIES else repeats
         for _ in range(n):
             loads.append(_loadavg1())
             ja = _cpu_jiffies()
-            t1 = time.time()
-            _noop_write(qs[name](spark, sf_dir))
-            runs.append(time.time() - t1)
+            runs.append(run())
             steals.append(_steal_between(ja, _cpu_jiffies()))
         repeat_times[name] = runs
         repeat_load[name] = loads
         repeat_steal[name] = steals
+        return runs
+
+    def noop_seconds(build) -> float:
+        """Seconds to build a frame and run it into the noop sink."""
+        t1 = time.time()
+        _noop_write(build())
+        return time.time() - t1
+
+    idx_runs = timed("kg_index_e2e", volatile_repeats,
+                     partial(bench_kg_index, spark, n_docs))
+
+    qs = entrymod.queries()
+    for name in BENCH_QUERIES:
+        n = volatile_repeats if name in VOLATILE_QUERIES else repeats
+        timed(name, n, partial(noop_seconds, partial(qs[name], spark, sf_dir)))
 
     # G2b: Louvain-style refinement over the SAME sf-derived KG graph
     # that g2_lpa_communities benches — tracks the refinement's cost at
@@ -366,17 +371,7 @@ def main() -> None:
         edges = build_edges(m)
         return modularity_refine(edges, label_propagation(edges))
 
-    runs, loads, steals = [], [], []
-    for _ in range(repeats):
-        loads.append(_loadavg1())
-        ja = _cpu_jiffies()
-        t1 = time.time()
-        _noop_write(_refine_kg())
-        runs.append(time.time() - t1)
-        steals.append(_steal_between(ja, _cpu_jiffies()))
-    repeat_times["g2_refine_kg"] = runs
-    repeat_load["g2_refine_kg"] = loads
-    repeat_steal["g2_refine_kg"] = steals
+    timed("g2_refine_kg", repeats, partial(noop_seconds, _refine_kg))
 
     # G1c: 20 PageRank power iterations over the same sf-derived KG
     # edge graph — tracks the strided-checkpoint iteration schedule's
@@ -389,17 +384,7 @@ def main() -> None:
         )
         return pagerank(build_edges(m))
 
-    runs, loads, steals = [], [], []
-    for _ in range(repeats):
-        loads.append(_loadavg1())
-        ja = _cpu_jiffies()
-        t1 = time.time()
-        _noop_write(_pagerank_kg())
-        runs.append(time.time() - t1)
-        steals.append(_steal_between(ja, _cpu_jiffies()))
-    repeat_times["g1_pagerank_kg"] = runs
-    repeat_load["g1_pagerank_kg"] = loads
-    repeat_steal["g1_pagerank_kg"] = steals
+    timed("g1_pagerank_kg", repeats, partial(noop_seconds, _pagerank_kg))
 
     # Composed curation funnel over the SAME web corpus the indexing
     # headline uses: C4 lines → repetition → quality → lang-ID → PII →
@@ -422,15 +407,7 @@ def main() -> None:
         stats.collect()
         return time.time() - t1
 
-    runs, loads, steals = [], [], []
-    for _ in range(repeats):
-        loads.append(_loadavg1())
-        ja = _cpu_jiffies()
-        runs.append(_curation_e2e())
-        steals.append(_steal_between(ja, _cpu_jiffies()))
-    repeat_times["curation_e2e"] = runs
-    repeat_load["curation_e2e"] = loads
-    repeat_steal["curation_e2e"] = steals
+    curation_runs = timed("curation_e2e", repeats, _curation_e2e)
 
     # The online query path issues many small driver actions whose
     # codegen/JIT warm-up spans the first 2-3 invocations (observed:
@@ -473,7 +450,7 @@ def main() -> None:
                 "cpus": cpus,
                 "index_docs": n_docs,
                 "index_docs_per_sec": round(n_docs / min(idx_runs), 2),
-                "curation_docs_per_sec": round(n_docs / min(runs), 2),
+                "curation_docs_per_sec": round(n_docs / min(curation_runs), 2),
                 "query_stages": query_stages,
                 "query_snapshot_s": query_snapshot_s,
             }

@@ -33,18 +33,12 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two double arrays; 0.0 for zero vectors."""
-    denom = norm(a) * norm(b)
-    return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot(a, b) / denom)
-
-
 def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """``cosine`` with the norms supplied as precomputed columns —
-    per-row/per-pair cost drops to ONE dot aggregate (interpreted HOFs
-    re-evaluate the norm aggregates per reference otherwise).
-    Bit-identical to ``cosine`` when ``na``/``nb`` were produced by
-    ``norm`` on the same arrays (same fold, same multiply order)."""
+    """Cosine similarity of two double arrays, 0.0 for zero vectors,
+    with the norms supplied as precomputed columns (``norm`` of the
+    same arrays): the per-row/per-pair cost is ONE dot aggregate
+    (interpreted HOFs would re-evaluate the norm aggregates per
+    reference otherwise)."""
     denom = na * nb
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot(a, b) / denom)
 

@@ -581,30 +581,6 @@ def community_hierarchy(
     )
 
 
-def community_table(assignments: DataFrame, nodes: DataFrame) -> DataFrame:
-    """G9 — the communities output table (legacy GraphRAG shape:
-    community/level/parent/children/entity_ids/size, SURVEY.md §1.2)."""
-    per_cluster = assignments.groupBy("level", "cluster", "parent_cluster").agg(
-        F.array_sort(F.collect_set("node")).alias("entity_ids"),
-        F.count(F.lit(1)).alias("size"),
-    )
-    children = (
-        per_cluster.where(F.col("parent_cluster").isNotNull())
-        .groupBy("parent_cluster")
-        .agg(F.array_sort(F.collect_set("cluster")).alias("_kids"))
-        .withColumnRenamed("parent_cluster", "cluster")
-    )
-    return (
-        per_cluster.join(children, "cluster", "left")
-        .select(
-            "cluster", "level", "parent_cluster",
-            F.coalesce("_kids", F.array().cast("array<string>")).alias("children"),
-            "entity_ids", "size",
-        )
-        .orderBy("level", F.desc("size"), "cluster")
-    )
-
-
 # ──────────────────────────────────────────────────────────────────────
 # Louvain-style modularity refinement on top of LPA
 # ──────────────────────────────────────────────────────────────────────

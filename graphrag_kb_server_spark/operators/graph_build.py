@@ -161,23 +161,19 @@ def node_degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def finalize_graph(
-    nodes: DataFrame, edges: DataFrame, share_degrees: bool = True
-) -> tuple[DataFrame, DataFrame]:
+def finalize_graph(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Attach degree to nodes and combined_degree to edges.
 
     degrees is one row per entity — small relative to mentions but
     potentially large at web scale; Spark picks broadcast vs shuffle
     join by size (autoBroadcastJoinThreshold + AQE), we don't force it.
 
-    ``share_degrees`` lazily localCheckpoints the degree table so that
-    when the two returned plans are executed as two actions (the
-    pipeline writes nodes and edges separately) the explode+groupBy over
-    the full edge list runs ONCE, not once per output.
+    The degree table is lazily localCheckpointed so that when the two
+    returned plans are executed as two actions (the pipeline writes
+    nodes and edges separately) the explode+groupBy over the full edge
+    list runs ONCE, not once per output.
     """
-    deg = node_degrees(edges)
-    if share_degrees:
-        deg = deg.localCheckpoint(eager=False)
+    deg = node_degrees(edges).localCheckpoint(eager=False)
     nodes_out = nodes.join(deg, "name", "left").withColumn(
         "degree", F.coalesce(F.col("degree"), F.lit(0)).cast("int")
     )

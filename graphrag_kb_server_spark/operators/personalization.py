@@ -1,14 +1,14 @@
-"""P1-P14 — search / personalization operators (SURVEY.md §2.5).
+"""P1-P12 — search / personalization operators (SURVEY.md §2.5).
 
 Reference pipeline (service/search/matching.py:62-97 +
 search_documents.py:33-75): centrality-ranked candidates → LLM
-match/score vs user profile → threshold filter → abbreviation removal
-→ embedding-cosine dedup → group by type; then document search =
-question synthesis → hybrid kg_query → relevance sort.
+match/score vs user profile → threshold filter; then document search =
+hybrid kg_query → per-doc summary → relevance sort; per-topic question
+generation; last-modified per file.
 
-LLM slots (P2 scoring, P7 summaries, P9 topic rewrite, P10 question
-generation) are deterministic stand-ins with the reference contracts;
-swap a model client into the *_fn parameter.
+LLM slots (P2 scoring, P7 summaries, P10 question generation) are
+deterministic stand-ins with the reference contracts; swap a model
+client into the *_fn parameter.
 
 No per-row Python anywhere: the deterministic stand-ins are pure
 Catalyst expressions (codegen'd, JVM-side); a caller-supplied *_fn
@@ -18,14 +18,10 @@ never a row-at-a-time ``F.udf``.
 
 from __future__ import annotations
 
-import hashlib
-
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-
-from ..functions.text import initials
 
 RELEVANCE_POINTS = {  # model/search/search.py:19-25
     "very_high": 100, "high": 75, "medium": 50, "low": 25, "very_low": 0,
@@ -45,22 +41,13 @@ def candidate_entities(
     return out.orderBy(F.desc("centrality"), "entity_id").limit(limit)
 
 
-def _score_stub(entity: str, profile: str) -> tuple[float, str]:
-    """Deterministic P2 stand-in: score = token-overlap ratio between
-    entity words and profile words, plus a seeded epsilon for stable
-    tie-breaks; abstraction = 'high' for single-word entities."""
-    ew = set(entity.lower().split())
-    pw = set(profile.lower().split())
-    overlap = len(ew & pw) / max(len(ew), 1)
-    eps = int(hashlib.md5(entity.encode()).hexdigest()[:4], 16) / 65535 * 0.01
-    return (min(overlap + 0.5 + eps, 1.0) if overlap else 0.3 + eps,
-            "high" if len(ew) == 1 else "low")
-
-
 def _score_columns(name: Column, profile: str) -> tuple[Column, Column]:
-    """Pure-Catalyst twin of ``_score_stub`` (codegen'd — no Python in
-    the hot path): word sets via split + array_distinct, overlap via
-    array_intersect, epsilon from the md5 prefix."""
+    """Deterministic P2 stand-in as pure Catalyst (codegen'd — no Python
+    in the hot path): score = overlap ratio of the entity's word set
+    with the profile's (split + array_distinct + array_intersect), plus
+    0.5, capped at 1.0, or 0.3 with no overlap; plus an md5-prefix
+    epsilon (< 0.01) for stable tie-breaks. abstraction = 'high' for
+    single-word entities."""
     ew = F.array_distinct(F.split(F.trim(F.lower(name)), r"\s+"))
     pw = F.array(*[F.lit(w) for w in sorted(set(profile.lower().split()))])
     n_ew = F.greatest(F.size(ew), F.lit(1))
@@ -108,41 +95,6 @@ def match_and_score(
     return scored.where(F.col("score") > threshold).dropDuplicates(["entity_id"])
 
 
-def remove_abbreviations(entities: DataFrame, name_col: str = "entity_id") -> DataFrame:
-    """P3 — drop an entity whose uppercased form equals the initials of
-    ANOTHER entity's words (matching.py:38-59): a theta self-join on the
-    initials expression. Single-word entities are expansions too — the
-    reference's is_abbreviation_of builds initials from any split()
-    ('W' is an abbreviation of 'Wombat'); only the self-pair is
-    excluded, mirroring its ``entity != entity2`` guard."""
-    expansions = entities.select(
-        F.col(name_col).alias("_src"), initials(F.col(name_col)).alias("_init")
-    ).distinct()
-    return entities.join(
-        expansions,
-        (F.upper(F.col(name_col)) == F.col("_init"))
-        & (F.col(name_col) != F.col("_src")),
-        "left_anti",
-    )
-
-
-def group_by_type(entities: DataFrame, name_col: str = "entity_id") -> DataFrame:
-    """P5 — {entity_type: [entities]} (matching.py:88-95)."""
-    return entities.groupBy("entity_type").agg(
-        F.array_sort(F.collect_set(name_col)).alias("entities")
-    )
-
-
-def build_search_question(profile: str, keywords: list[str]) -> str:
-    """P6 — the question template (search_documents.py:180-211 shape)."""
-    kw = ", ".join(keywords)
-    return (
-        f"Given the user profile: {profile}\n"
-        f"and the topics of interest: {kw}\n"
-        f"which documents are most relevant and why?"
-    )
-
-
 def sort_by_relevance(docs: DataFrame, score_col: str = "relevancy_score") -> DataFrame:
     """P6 — map relevance labels to points and sort desc
     (search_documents.py:70-75, model/search/search.py:19-25)."""
@@ -172,34 +124,6 @@ def summarize_documents(
         return contents.map(summarize_fn)
 
     return docs.withColumn("summary", summarize(F.col("content")))
-
-
-def postprocess_topics(
-    topics: DataFrame, desc_col: str = "description", max_desc: int = 1024
-) -> DataFrame:
-    """P9 — truncate descriptions to 1024 then dedup by name
-    (topics_post_processing.py:9-47; the LLM rewrite slot is identity
-    in deterministic mode)."""
-    return topics.withColumn(desc_col, F.substring(F.col(desc_col), 1, max_desc)).dropDuplicates(
-        ["name"]
-    )
-
-
-def topics_from_text(
-    nodes: DataFrame, keywords: list[str], name_col: str = "name"
-) -> DataFrame:
-    """P10 — resolve topics from text: case-insensitive intersection of
-    extracted keywords with graph node names
-    (lightrag_related_topics.py:46-62)."""
-    spark = nodes.sparkSession
-    # the reference computes a SET intersection — case-insensitive
-    # duplicate keywords must not duplicate topic rows
-    kw = spark.createDataFrame(
-        [(k,) for k in sorted({k.lower() for k in keywords})], "kw string"
-    )
-    return nodes.join(
-        F.broadcast(kw), F.lower(F.col(name_col)) == F.lower(F.col("kw"))
-    ).drop("kw")
 
 
 def generate_questions(
@@ -239,32 +163,4 @@ def last_modified(web_pages_docs: DataFrame) -> DataFrame:
     # partition-order-dependent row)
     return web_pages_docs.groupBy(F.col("url").alias("file_path")).agg(
         F.max("warc_ts").alias("last_modified")
-    )
-
-
-def enrich_references(
-    refs: DataFrame,
-    path_links: DataFrame | None = None,
-    path_properties: DataFrame | None = None,
-) -> DataFrame:
-    """P13 — join references to links + last_modified; drop type='KG'
-    refs; dedup by file (main/query_support.py:94-199)."""
-    out = refs
-    if "type" in out.columns:
-        out = out.where(F.col("type") != "KG")
-    if path_links is not None:
-        out = out.join(path_links, "file_path", "left")
-    if path_properties is not None:
-        out = out.join(
-            path_properties.select("file_path", "last_modified"), "file_path", "left"
-        )
-    w = Window.partitionBy("file_path").orderBy("ref_ix")
-    return out.withColumn("_rk", F.row_number().over(w)).where(F.col("_rk") == 1).drop("_rk")
-
-
-def doc_summary_lookup(doc_status: DataFrame, file_paths: DataFrame) -> DataFrame:
-    """P14 — file_path → content_summary from doc_status
-    (lightrag_summary.py:12-33)."""
-    return file_paths.join(
-        doc_status.select("file_path", "content_summary"), "file_path", "left"
     )

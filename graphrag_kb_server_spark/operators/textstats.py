@@ -6,8 +6,6 @@ Catalyst expressions (whole-stage codegen; no Python UDFs).
 - quality scoring    — length / punctuation / stopword-ratio features
                        with an interpretable 0..1 score
 - token counting     — whitespace tokens + a BPE-ish regex token count
-- fingerprinting     — winnowing-style rolling-hash doc fingerprints
-                       (functions/hashing.py)
 
 Reference analogue: the reference filters/normalizes text only lightly
 (link extraction regex at service/link_extraction_service.py:80-104,
@@ -20,8 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.hashing import rolling_fingerprint
 
 #: stopword markers for the 12 highest-web-share LATIN-script languages
 #: (distinctive small sets; ties broken by code order, deterministic)
@@ -274,12 +270,6 @@ def quality_features(df: DataFrame, text_col: str) -> DataFrame:
         .withColumn("alpha_ratio", F.round(alpha_ratio, 6))
         .withColumn("punct_ratio", F.round(punct_ratio, 6))
         .withColumn("quality_score", F.round(score, 6))
-    )
-
-
-def fingerprint(df: DataFrame, text_col: str, window: int = 8, keep: int = 4) -> DataFrame:
-    return df.withColumn(
-        "fingerprint", rolling_fingerprint(F.col(text_col), window, keep)
     )
 
 

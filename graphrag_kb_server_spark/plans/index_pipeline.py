@@ -182,17 +182,11 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     return df
 
 
-def _write(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+def _write(df: DataFrame, path: str) -> None:
     if _is_iceberg():
-        wt = df.writeTo(_ident(path)).using("iceberg")
-        if partition_by:
-            wt = wt.partitionedBy(*[F.col(c) for c in partition_by])
-        wt.createOrReplace()
+        df.writeTo(_ident(path)).using("iceberg").createOrReplace()
         return
-    w = df.write.mode("overwrite").format(_table_format())
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
+    df.write.mode("overwrite").format(_table_format()).save(path)
 
 
 def run_index(
@@ -200,9 +194,6 @@ def run_index(
     web_pages: DataFrame,
     out_dir: str,
     resume: bool = True,
-    link_entities: bool = True,
-    lang_filter: str | None = None,
-    run_ts: str | None = None,
 ) -> IndexResult:
     """Run (or resume) the full indexing pipeline.
 
@@ -303,10 +294,7 @@ def run_index(
     #     worker start) overlaps the first JVM job; the text extraction,
     #     JVM expressions, runs in both writes ────────────────────────
     def build_documents_and_chunks() -> list[DataFrame]:
-        src = web_pages
-        if lang_filter:
-            src = src.where(F.col("lang") == lang_filter)
-        docs = src.select(
+        docs = web_pages.select(
             F.col("url"),
             F.col("warc_ts"),
             TXT.extract_text(F.col("text"), F.col("url")).alias("content"),
@@ -327,31 +315,28 @@ def run_index(
     )
 
     # ── entity linking + canonicalization (LSH → cosine → components) ─
-    if link_entities:
-        def build_mapping() -> DataFrame:
-            # LSH blocking health: how many band buckets were split
-            # (bounded sub-buckets, nothing dropped) — recorded in the
-            # metrics sidecar alongside the stage row, only when the
-            # stage actually runs. The driver path reports it from its
-            # own buckets; the distributed path pays a small agg over
-            # distinct entity names. Both names are looked up as module
-            # globals so a caller can wrap them.
-            stats: dict = {}
-            mapping = canonical_map(nodes_raw, bucket_stats=stats)
-            if not stats:
-                stats = candidate_bucket_stats(
-                    nodes_raw.select(F.col("name")).distinct()
-                ).first().asDict()
-            res.metrics.append({"stage": "canonical_map:lsh_buckets", **stats})
-            return mapping
+    def build_mapping() -> DataFrame:
+        # LSH blocking health: how many band buckets were split
+        # (bounded sub-buckets, nothing dropped) — recorded in the
+        # metrics sidecar alongside the stage row, only when the
+        # stage actually runs. The driver path reports it from its
+        # own buckets; the distributed path pays a small agg over
+        # distinct entity names. Both names are looked up as module
+        # globals so a caller can wrap them.
+        stats: dict = {}
+        mapping = canonical_map(nodes_raw, bucket_stats=stats)
+        if not stats:
+            stats = candidate_bucket_stats(
+                nodes_raw.select(F.col("name")).distinct()
+            ).first().asDict()
+        res.metrics.append({"stage": "canonical_map:lsh_buckets", **stats})
+        return mapping
 
-        mapping = stage("canonical_map", build_mapping)
-        nodes_c, edges_c = stages(
-            ["nodes_pre", "edges_pre"],
-            lambda: canonicalize_graph(nodes_raw, edges_raw, mapping),
-        )
-    else:
-        nodes_c, edges_c = nodes_raw, edges_raw
+    mapping = stage("canonical_map", build_mapping)
+    nodes_c, edges_c = stages(
+        ["nodes_pre", "edges_pre"],
+        lambda: canonicalize_graph(nodes_raw, edges_raw, mapping),
+    )
 
     # ── T7 degrees (one shared degree computation for both outputs) ──
     nodes, edges = stages(
@@ -390,12 +375,9 @@ def run_index(
     # ── T8 doc_status lineage ────────────────────────────────────────
     def build_doc_status() -> DataFrame:
         per_doc = chunks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("chunks_count"))
-        # updated_at derives from the doc's own warc_ts (or the caller's
-        # run_ts) — NOT current_timestamp(), which would break the
-        # kill-and-rerun-produces-identical-outputs invariant
-        updated = (
-            F.lit(run_ts).cast("timestamp") if run_ts else F.col("warc_ts")
-        )
+        # updated_at is the doc's own warc_ts — NOT current_timestamp(),
+        # which would break the kill-and-rerun-produces-identical-outputs
+        # invariant
         return (
             documents.join(per_doc, "doc_id", "left")
             .select(
@@ -405,7 +387,7 @@ def run_index(
                 F.length("content").alias("content_length"),
                 F.substring("content", 1, 120).alias("content_summary"),
                 F.lit("processed").alias("status"),
-                updated.alias("updated_at"),
+                F.col("warc_ts").alias("updated_at"),
             )
         )
 

@@ -13,6 +13,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: spark.sql.objectHashAggregate.sortBased.fallbackThreshold: in-memory
+#: groups per partition before ObjectHashAggregate (collect_set /
+#: collect_list aggs) falls back to sort-based aggregation. Spark's
+#: default is 128; every KG merge partition holds 10k+ groups of small
+#: bounded state (capped sorted sets), so the fallback's per-partition
+#: sort is pure overhead (~8% on the edge merge, measured). Every
+#: collect aggregate in this engine is order-free (array_sort/
+#: array_min-wrapped), so the aggregation mode cannot affect results.
+#: Memory-constrained deployments override it through ``extra_conf``.
+OBJ_AGG_FALLBACK_THRESHOLD = 1 << 20
+
 
 def _default_driver_mem() -> str:
     """min(16g, half the host's MemTotal). Xms = Xmx (below) commits the
@@ -71,18 +82,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # ObjectHashAggregate (collect_set/collect_list aggs) falls back
-        # to sort-based aggregation after only 128 in-memory groups per
-        # partition by default; every KG merge partition holds 10k+
-        # groups of small bounded state (capped sorted sets), so the
-        # fallback's per-partition sort is pure overhead (~8% on the
-        # edge merge, measured). Raised default, env-overridable for
-        # memory-constrained deployments; every collect aggregate in
-        # this engine is order-free (array_sort/array_min-wrapped), so
-        # the aggregation mode cannot affect results.
         .config(
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-            os.environ.get("SPARK_GRAFT_OBJ_AGG_FALLBACK", str(1 << 20)),
+            str(OBJ_AGG_FALLBACK_THRESHOLD),
         )
     )
     if extra_conf:

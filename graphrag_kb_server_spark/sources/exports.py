@@ -13,7 +13,6 @@ from __future__ import annotations
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MAX_EXPORT_ROWS = 200_000
 
@@ -166,98 +165,6 @@ def centrality_to_xlsx(
             "</Relationships>",
         )
         z.writestr("xl/worksheets/sheet1.xml", sheet)
-
-
-def graph_to_html(
-    nodes: DataFrame, edges: DataFrame, path: str, max_nodes: int = 2000
-) -> None:
-    """G10 — interactive HTML graph visualization, the pyvis surface
-    (lightrag_visualization.py:12-44: pyvis Network over the nx graph,
-    per-node colors, physics layout, .show(path)). Self-contained
-    output: embedded JSON + a small canvas force-directed layout — no
-    pyvis/js-CDN dependency. Documented deviation: node colors are
-    md5-derived (deterministic) instead of random.randint, so reruns
-    produce identical files. Driver-side compatibility boundary; capped
-    at ``max_nodes`` highest-degree nodes like any sane viewer."""
-    import hashlib
-    import json as _json
-
-    top = nodes.orderBy(F.desc("degree"), "name").limit(max_nodes).collect() \
-        if "degree" in nodes.columns else nodes.limit(max_nodes).collect()
-    keep = {r["name"] for r in top}
-    ns = [
-        {
-            "id": r["name"],
-            "label": r["name"],
-            "title": (r["description"] or "")[:200] if "description" in nodes.columns else "",
-            "color": "#" + hashlib.md5(r["name"].encode()).hexdigest()[:6],
-        }
-        for r in top
-    ]
-    # filter to the kept node set IN SPARK before collecting: edges are
-    # unbounded (nodes are capped at max_nodes, edges are not) and a
-    # driver-side 'in keep' filter would first materialize every edge
-    keep_df = nodes.sparkSession.createDataFrame(
-        [(k,) for k in sorted(keep)], "name string"
-    )
-    kept_edges = (
-        edges.select("src", "tgt", "weight")
-        .join(F.broadcast(keep_df.withColumnRenamed("name", "src")), "src")
-        .join(F.broadcast(keep_df.withColumnRenamed("name", "tgt")), "tgt")
-        .collect()
-    )
-    es = [
-        # explicit None check: a legitimate weight of 0.0 is falsy and
-        # must not render as 1.0
-        {
-            "from": r["src"],
-            "to": r["tgt"],
-            "value": float(r["weight"]) if r["weight"] is not None else 1.0,
-        }
-        for r in kept_edges
-    ]
-    # '</' must not appear verbatim inside the <script> element: a node
-    # description containing '</script>' would otherwise terminate the
-    # block and inject markup into the viewer (json.dumps does not
-    # escape '/')
-    payload = _json.dumps({"nodes": ns, "edges": es}).replace("</", "<\\/")
-    html = f"""<!DOCTYPE html>
-<html><head><meta charset="utf-8"><title>knowledge graph</title></head>
-<body style="margin:0"><canvas id="c"></canvas><script>
-const data = {payload};
-const cv = document.getElementById('c'), cx = cv.getContext('2d');
-cv.width = innerWidth; cv.height = innerHeight;
-const idx = new Map(data.nodes.map((n,i)=>[n.id,i]));
-const P = data.nodes.map((n,i)=>({{x: cv.width/2 + Math.cos(i*2.4)*i*2,
-                                   y: cv.height/2 + Math.sin(i*2.4)*i*2,
-                                   vx:0, vy:0}}));
-function step() {{
-  for (let i=0;i<P.length;i++) for (let j=i+1;j<P.length;j++) {{
-    let dx=P[j].x-P[i].x, dy=P[j].y-P[i].y, d2=dx*dx+dy*dy+0.01, f=800/d2;
-    P[i].vx-=dx*f; P[i].vy-=dy*f; P[j].vx+=dx*f; P[j].vy+=dy*f;
-  }}
-  for (const e of data.edges) {{
-    const a=P[idx.get(e.from)], b=P[idx.get(e.to)];
-    const dx=b.x-a.x, dy=b.y-a.y;
-    a.vx+=dx*0.002; a.vy+=dy*0.002; b.vx-=dx*0.002; b.vy-=dy*0.002;
-  }}
-  for (const p of P) {{ p.x+=p.vx*=0.85; p.y+=p.vy*=0.85; }}
-  cx.clearRect(0,0,cv.width,cv.height);
-  cx.strokeStyle='#ccc';
-  for (const e of data.edges) {{
-    const a=P[idx.get(e.from)], b=P[idx.get(e.to)];
-    cx.beginPath(); cx.moveTo(a.x,a.y); cx.lineTo(b.x,b.y); cx.stroke();
-  }}
-  data.nodes.forEach((n,i)=>{{
-    cx.fillStyle=n.color;
-    cx.beginPath(); cx.arc(P[i].x,P[i].y,4,0,7); cx.fill();
-  }});
-  requestAnimationFrame(step);
-}}
-step();
-</script></body></html>"""
-    with open(path, "w", encoding="utf-8") as f:
-        f.write(html)
 
 
 def read_gexf(spark, path: str) -> tuple[DataFrame, DataFrame]:

@@ -10,7 +10,6 @@ from graphrag_kb_server_spark.operators.communities import (
     hierarchical_communities,
     label_propagation,
     largest_connected_component,
-    community_table,
 )
 from graphrag_kb_server_spark.operators.components import (
     component_sizes,
@@ -138,10 +137,6 @@ def test_hierarchical_communities_max_size(spark):
     ).where("rk = 1")
     sizes = final.groupBy("cluster").count().collect()
     assert all(r["count"] <= 5 for r in sizes)
-    tbl = community_table(asg, None)
-    assert {"cluster", "level", "parent_cluster", "children", "entity_ids", "size"} <= set(
-        tbl.columns
-    )
 
 
 def test_lcc(spark):

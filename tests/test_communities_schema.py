@@ -12,7 +12,6 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from graphrag_kb_server_spark.operators.communities import community_hierarchy
 
@@ -70,16 +69,3 @@ def test_hierarchy_links(spark):
     assert list(a["text_unit_ids"]) == ["c1", "c2"]
     assert all(r["period"] == "2026-08" for r in out)
     assert len(by_title) == 4  # titles are unique Community <id>
-
-
-def test_community_table_legacy_shape(spark):
-    # the pre-existing flat shape keeps working alongside the pinned one
-    from graphrag_kb_server_spark.operators.communities import community_table
-
-    nodes = spark.createDataFrame(
-        [("n%d" % i,) for i in range(1, 6)], "name string"
-    ).withColumn("degree", F.lit(1))
-    out = community_table(_tiny_assignments(spark), nodes)
-    assert out.columns == [
-        "cluster", "level", "parent_cluster", "children", "entity_ids", "size",
-    ]

@@ -12,17 +12,13 @@ from graphrag_kb_server_spark.operators.context_ops import (
     reference_list,
     vector_similarity_chunk_pick,
 )
+from graphrag_kb_server_spark.operators.linking import abbreviation_pairs
 from graphrag_kb_server_spark.operators.personalization import (
-    build_search_question,
     candidate_entities,
     generate_questions,
-    group_by_type,
     last_modified,
     match_and_score,
-    postprocess_topics,
-    remove_abbreviations,
     sort_by_relevance,
-    topics_from_text,
 )
 from graphrag_kb_server_spark.operators.reports import community_inputs, generate_reports
 
@@ -218,27 +214,20 @@ def test_p1_p2_p3_p5(spark):
     scored = match_and_score(cand, "profile interested in artificial intelligence berlin", threshold=0.5)
     names = {r["entity_id"] for r in scored.collect()}
     assert "Berlin" in names
-    no_abbrev = remove_abbreviations(_centrality(spark))
-    assert "AI" not in {r["entity_id"] for r in no_abbrev.collect()}
-    grouped = {r["entity_type"]: r["entities"] for r in group_by_type(_centrality(spark)).collect()}
-    assert grouped["geo"] == ["Berlin"]
+    # P3: the abbreviation channel of canonical_map links "AI" to its
+    # expansion, so the two merge into one entity
+    pairs = abbreviation_pairs(_centrality(spark), name_col="entity_id")
+    assert [tuple(r) for r in pairs.collect()] == [("AI", "Artificial Intelligence")]
 
 
 def test_p3_single_word_expansion_and_self_survival(spark):
     """Reference initials come from any split(): 'W' abbreviates the
-    single word 'Wombat' and is dropped; a lone single-letter entity
-    survives (only the self-pair is excluded)."""
-    ents = spark.createDataFrame(
-        [("W", "geo", 0.5), ("Wombat", "geo", 0.9)],
-        "entity_id string, entity_type string, centrality double",
-    )
-    kept = {r["entity_id"] for r in remove_abbreviations(ents).collect()}
-    assert kept == {"Wombat"}
-    alone = spark.createDataFrame(
-        [("W", "geo", 0.5)],
-        "entity_id string, entity_type string, centrality double",
-    )
-    assert {r["entity_id"] for r in remove_abbreviations(alone).collect()} == {"W"}
+    single word 'Wombat'; a lone single-letter entity is paired with
+    nothing (the self-pair is excluded)."""
+    ents = spark.createDataFrame([("W",), ("Wombat",)], "name string")
+    assert [tuple(r) for r in abbreviation_pairs(ents).collect()] == [("W", "Wombat")]
+    alone = spark.createDataFrame([("W",)], "name string")
+    assert abbreviation_pairs(alone).collect() == []
 
 
 def test_p12_last_modified_picks_latest_recrawl(spark):
@@ -255,11 +244,6 @@ def test_p12_last_modified_picks_latest_recrawl(spark):
     assert out[0]["last_modified"] == dt.datetime(2026, 3, 4)
 
 
-def test_p6_relevance_sort_and_question():
-    q = build_search_question("data engineer", ["spark", "graphs"])
-    assert "data engineer" in q and "spark, graphs" in q
-
-
 def test_p6_sort(spark):
     docs = spark.createDataFrame(
         [("a", "low"), ("b", "very_high"), ("c", "medium")],
@@ -270,15 +254,7 @@ def test_p6_sort(spark):
 
 
 def test_p9_p10(spark):
-    topics = spark.createDataFrame(
-        [("T1", "x" * 3000), ("T1", "dup"), ("T2", "ok")], "name string, description string"
-    )
-    pp = postprocess_topics(topics)
-    assert pp.count() == 2
-    assert pp.where("name = 'T1'").first()["description"].__len__() <= 1024
-    nodes = spark.createDataFrame([("Berlin",), ("Acme Systems",)], "name string")
-    t = topics_from_text(nodes, ["berlin", "unknown"])
-    assert [r["name"] for r in t.collect()] == ["Berlin"]
+    t = spark.createDataFrame([("Berlin",)], "name string")
     qs = generate_questions(t).first()
     assert len(qs["questions"]) == 3 and "Berlin" in qs["questions"][0]
 
@@ -316,44 +292,6 @@ def test_p8_topics(spark):
     out = topics(cent, ["concept", "geo"], limit=2).collect()
     assert [(r["name"], r["type"]) for r in out] == [("A", "concept"), ("B", "concept")]
     assert set(out[0].asDict()) == {"name", "description", "type"}
-
-
-def test_p13_enrich_references(spark):
-    """P13 (main/query_support.py:94-199): drop KG-type refs, join links
-    + last_modified, dedup by file keeping the lowest ref_ix."""
-    from graphrag_kb_server_spark.operators.personalization import enrich_references
-
-    refs = spark.createDataFrame(
-        [(1, "f1", "DC"), (2, "f2", "KG"), (3, "f1", "DC"), (4, "f3", "DC")],
-        "ref_ix int, file_path string, type string",
-    )
-    links = spark.createDataFrame(
-        [("f1", "https://l1")], "file_path string, link string"
-    )
-    props = spark.createDataFrame(
-        [("f1", dt.datetime(2026, 2, 1)), ("f3", dt.datetime(2026, 3, 1))],
-        "file_path string, last_modified timestamp",
-    )
-    out = {r["file_path"]: r for r in
-           enrich_references(refs, links, props).collect()}
-    assert set(out) == {"f1", "f3"}, "KG ref dropped, f1 deduped"
-    assert out["f1"]["ref_ix"] == 1 and out["f1"]["link"] == "https://l1"
-    assert out["f3"]["last_modified"] == dt.datetime(2026, 3, 1)
-    assert out["f3"]["link"] is None
-
-
-def test_p14_doc_summary_lookup(spark):
-    """P14 (lightrag_summary.py:12-33): file_path → content_summary."""
-    from graphrag_kb_server_spark.operators.personalization import doc_summary_lookup
-
-    status = spark.createDataFrame(
-        [("f1", "sum1", "processed"), ("f2", "sum2", "processed")],
-        "file_path string, content_summary string, status string",
-    )
-    paths = spark.createDataFrame([("f1",), ("fX",)], "file_path string")
-    out = {r["file_path"]: r["content_summary"]
-           for r in doc_summary_lookup(status, paths).collect()}
-    assert out == {"f1": "sum1", "fX": None}
 
 
 def test_p2_custom_fn_arrow_batched(spark):

@@ -246,98 +246,6 @@ def test_textstats(spark):
     assert links == ["https://a.example/x", "http://b.example/y"]
 
 
-def test_multimodal_plumbing(spark):
-    from graphrag_kb_server_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        audio_to_text,
-        image_features,
-        sample_video_frames,
-    )
-
-    rows = [
-        ("m1", "image", b"imgbytes", "image/png", 640, 480, None),
-        ("m2", "video", b"vidbytes", "video/mp4", 1280, 720, 3500),
-        ("m3", "audio", b"audbytes", "audio/wav", None, None, 2000),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = image_features(media).collect()
-    assert len(feats) == 1 and len(feats[0]["feature"]) == 16
-    frames = sample_video_frames(media, every_ms=1000).collect()
-    assert [f["frame_ix"] for f in frames] == [0, 1, 2]
-    txt = audio_to_text(media).first()
-    assert txt["transcript"].startswith("transcript-")
-
-
-def _tiny_bmp() -> bytes:
-    """2x2 24-bit BMP: top row red+green, bottom row blue+white."""
-    import struct
-
-    width, height = 2, 2
-    row = width * 3
-    pad = (4 - row % 4) % 4
-    # rows bottom-up, pixels BGR
-    pixels = (
-        bytes([255, 0, 0]) + bytes([255, 255, 255]) + b"\x00" * pad   # blue, white
-        + bytes([0, 0, 255]) + bytes([0, 255, 0]) + b"\x00" * pad     # red, green
-    )
-    header = struct.pack("<2sIHHI", b"BM", 54 + len(pixels), 0, 0, 54)
-    dib = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0,
-                      len(pixels), 2835, 2835, 0, 0)
-    return header + dib + pixels
-
-
-def _tiny_wav(rate: int = 8000, n: int = 800) -> bytes:
-    """PCM-16 mono WAV: a square wave (half amplitude 16000, alternating
-    every sample → zero-crossing rate ~1)."""
-    import struct
-
-    import numpy as np
-
-    samples = (np.tile([16000, -16000], n // 2)).astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(samples)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(samples)) + samples
-    )
-
-
-def test_multimodal_real_bmp_wav_decode(spark):
-    """S3 decode is REAL for codec-free formats: BMP pixel statistics
-    and WAV sample statistics come from the actual payload bytes."""
-    from graphrag_kb_server_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        audio_features,
-        decode_bmp,
-        decode_wav,
-        image_features,
-    )
-
-    bmp, wav = _tiny_bmp(), _tiny_wav()
-    w, h, px = decode_bmp(bmp)
-    assert (w, h) == (2, 2)
-    assert px[0, 0].tolist() == [255, 0, 0]   # red top-left (RGB)
-    assert px[1, 1].tolist() == [255, 255, 255]
-    rate, ch, samples = decode_wav(wav)
-    assert (rate, ch, len(samples)) == (8000, 1, 800)
-
-    rows = [
-        ("img", "image", bmp, "image/bmp", None, None, None),
-        ("imgfake", "image", b"\x89PNGfake", "image/png", 640, 480, None),
-        ("aud", "audio", wav, "audio/wav", None, None, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r["media_id"]: r for r in image_features(media).collect()}
-    assert feats["img"]["width"] == 2 and feats["img"]["height"] == 2
-    # mean RGB of {red, green, blue, white} = (510/4, 510/4, 510/4)/255
-    assert abs(feats["img"]["feature"][0] - 0.5) < 1e-6
-    assert len(feats["imgfake"]["feature"]) == 16  # fake path intact
-    af = audio_features(media).first()
-    assert af["duration_ms"] == 100  # 800 samples @ 8 kHz
-    assert abs(af["rms"] - 16000 / 32768) < 1e-3
-    assert af["zero_crossing_rate"] > 0.9
-
-
 def test_embedding_multiprobe_recovers_boundary_pair(spark):
     """probe_hamming=1 (one-deletion masked keys): a true near-dup pair
     straddling exactly ONE hyperplane is invisible to exact-bucket
@@ -363,152 +271,6 @@ def test_embedding_multiprobe_recovers_boundary_pair(spark):
     ).collect()
     assert [(r["id_a"], r["id_b"]) for r in probed] == [(1, 2)]
     assert probed[0]["cosine"] > 0.99
-
-
-def test_multimodal_null_metadata_and_malformed_wav(spark):
-    """Regression (ADVICE r2): Arrow hands nullable ints to pandas as
-    NaN — the fake path must not crash on NULL width/height/duration;
-    a malformed WAV fmt (channels=0) must fall to the fake path as a
-    ValueError, not escape as ZeroDivisionError."""
-    import struct
-
-    from graphrag_kb_server_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        audio_features,
-        decode_wav,
-        image_features,
-        sample_video_frames,
-    )
-
-    # PCM WAV header claiming channels=0 (division bait)
-    fmt = struct.pack("<HHIIHH", 1, 0, 8000, 0, 2, 16)
-    bad_wav = (
-        b"RIFF" + struct.pack("<I", 36 + 4) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        decode_wav(bad_wav)
-
-    rows = [
-        ("i_null", "image", b"\x89PNGfake", "image/png", None, None, None),
-        ("a_null", "audio", b"mp3fake", "audio/mpeg", None, None, None),
-        ("a_bad", "audio", bad_wav, "audio/wav", None, None, None),
-        ("v_null", "video", b"vidfake", "video/mp4", None, None, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r["media_id"]: r for r in image_features(media).collect()}
-    assert feats["i_null"]["width"] == 0 and feats["i_null"]["height"] == 0
-    af = {r["media_id"]: r for r in audio_features(media).collect()}
-    assert af["a_null"]["duration_ms"] == 0
-    assert af["a_bad"]["duration_ms"] == 0  # fake path absorbed it
-    frames = sample_video_frames(media, every_ms=1000).collect()
-    assert [f["frame_ix"] for f in frames] == [0]  # null duration → 1 frame
-
-
-def _encode_png(px, color, filters, palette=None):
-    """Minimal PNG writer for the decoder test: 8-bit, chosen color
-    type, one chosen filter byte per row (applying the spec's forward
-    transform so decode must invert it)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    def chunk(ctype, body):
-        c = ctype + body
-        return struct.pack(">I", len(body)) + c + struct.pack(
-            ">I", zlib.crc32(c) & 0xFFFFFFFF
-        )
-
-    h, w = px.shape[0], px.shape[1]
-    nch = px.shape[2] if px.ndim == 3 else 1
-    flat = px.reshape(h, w * nch).astype(np.int32)
-    raw = bytearray()
-    prev = np.zeros(w * nch, dtype=np.int32)
-    for y in range(h):
-        cur = flat[y]
-        f = filters[y % len(filters)]
-        enc = np.zeros_like(cur)
-        for i in range(w * nch):
-            a = int(cur[i - nch]) if i >= nch else 0
-            b = int(prev[i])
-            c = int(prev[i - nch]) if i >= nch else 0
-            if f == 0:
-                pred = 0
-            elif f == 1:
-                pred = a
-            elif f == 2:
-                pred = b
-            elif f == 3:
-                pred = (a + b) >> 1
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            enc[i] = (int(cur[i]) - pred) & 0xFF
-        raw.append(f)
-        raw.extend(enc.astype(np.uint8).tobytes())
-        prev = cur
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-    if palette is not None:
-        out += chunk(b"PLTE", palette)
-    out += chunk(b"IDAT", zlib.compress(bytes(raw)))
-    return out + chunk(b"IEND", b"")
-
-
-def test_png_decode_all_filters_and_color_types():
-    """decode_png inverts every scanline filter (0/1/2/3/4) and maps
-    each supported color type to RGB — against a spec-faithful inline
-    encoder, not a library."""
-    import numpy as np
-
-    from graphrag_kb_server_spark.operators.multimodal import (
-        bmp_feature,
-        decode_png,
-    )
-
-    rng = np.random.default_rng(7)
-    # RGB, 6x5, every filter type used across rows
-    px = rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint8)
-    w, h, got = decode_png(_encode_png(px, 2, [0, 1, 2, 3, 4, 3]))
-    assert (w, h) == (5, 6)
-    assert np.array_equal(got, px)
-
-    # grayscale replicated to RGB
-    g = rng.integers(0, 256, size=(4, 7, 1), dtype=np.uint8)
-    _, _, got_g = decode_png(_encode_png(g, 0, [4, 2, 1, 3]))
-    assert np.array_equal(got_g, np.repeat(g, 3, axis=2))
-
-    # RGBA drops alpha
-    rgba = rng.integers(0, 256, size=(3, 3, 4), dtype=np.uint8)
-    _, _, got_a = decode_png(_encode_png(rgba, 6, [1, 4, 2]))
-    assert np.array_equal(got_a, rgba[:, :, :3])
-
-    # palette lookup
-    pal = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255])  # R, G, B entries
-    idx = np.array([[0, 1], [2, 0]], dtype=np.uint8)[:, :, None]
-    _, _, got_p = decode_png(_encode_png(idx, 3, [0, 1], palette=pal))
-    assert got_p[0, 0].tolist() == [255, 0, 0]
-    assert got_p[1, 0].tolist() == [0, 0, 255]
-
-    # the image-features entry point now takes PNG for real
-    w2, h2, feat = bmp_feature(_encode_png(px, 2, [0]))
-    assert (w2, h2) == (5, 6) and len(feat) == 19
-
-    # unsupported variants stay on the declared-slot (ValueError) path
-    import pytest
-
-    with pytest.raises(ValueError):
-        decode_png(b"\x89PNG\r\n\x1a\nnot-chunks")
-    with pytest.raises(ValueError):
-        # 16-bit: flip bits field
-        bad = bytearray(_encode_png(px, 2, [0]))
-        bad[24] = 16
-        decode_png(bytes(bad))
 
 
 def test_ivf_multi_probe_recall_dominates(spark):

@@ -79,35 +79,6 @@ def test_xlsx_export_roundtrip(spark, tmp_out):
     assert r2_strings == ["B&B <Ltd>"]  # escaped and parsed back
 
 
-def test_g10_html_visualization(spark, tmp_out):
-    """G10 (lightrag_visualization.py:12-44): self-contained HTML with
-    the full node/edge payload embedded; deterministic colors."""
-    import json
-    import re
-
-    from graphrag_kb_server_spark.sources.exports import graph_to_html
-
-    nodes = spark.createDataFrame(
-        [("A", "da", 2), ("B", "db", 1), ("C", None, 1)],
-        "name string, description string, degree int",
-    )
-    edges = spark.createDataFrame(
-        [("A", "B", 2.0), ("A", "C", 1.0)],
-        "src string, tgt string, weight double",
-    )
-    path = f"{tmp_out}/g.html"
-    graph_to_html(nodes, edges, path)
-    html = open(path).read()
-    payload = json.loads(re.search(r"const data = (\{.*?\});\n", html).group(1))
-    assert {n["id"] for n in payload["nodes"]} == {"A", "B", "C"}
-    assert len(payload["edges"]) == 2
-    colors = {n["id"]: n["color"] for n in payload["nodes"]}
-    graph_to_html(nodes, edges, path)  # rerun → identical colors
-    html2 = open(path).read()
-    assert html == html2
-    assert all(re.match(r"^#[0-9a-f]{6}$", c) for c in colors.values())
-
-
 def test_graphml_quotes_null_weight_and_edge_description(spark, tmp_out):
     """Attribute-position escaping (a double quote in a node id must
     not break the XML), null weights serialize as empty (not 'None'),
@@ -135,27 +106,3 @@ def test_graphml_quotes_null_weight_and_edge_description(spark, tmp_out):
     row = edf.first()
     assert row["weight"] is None
     assert row["description"] == "edge sentence"
-
-
-def test_html_export_script_injection_and_zero_weight(spark, tmp_out):
-    from graphrag_kb_server_spark.sources.exports import graph_to_html
-
-    nodes = spark.createDataFrame(
-        [("X", "</script><script>alert(1)</script>", 1),
-         ("Y", "ok", 1)],
-        "name string, description string, degree int",
-    )
-    edges = spark.createDataFrame(
-        [("X", "Y", 0.0)], "src string, tgt string, weight double"
-    )
-    path = f"{tmp_out}/g.html"
-    graph_to_html(nodes, edges, path)
-    html = open(path).read()
-    # the closing-tag sequence must not appear verbatim inside the
-    # embedded JSON payload (json.dumps leaves '/' unescaped)
-    payload_js = html.split("const data = ", 1)[1].split(";\n", 1)[0]
-    assert "</script>" not in payload_js
-    import json as _json
-
-    payload = _json.loads(payload_js.replace("<\\/", "</"))
-    assert payload["edges"][0]["value"] == 0.0  # falsy weight preserved

@@ -138,34 +138,3 @@ def test_chunk_text_cl100k_parity():
         f"({i * 3}) and linkage." for i in range(120)
     )
     assert decode(encode(text)) == text
-
-
-@given(
-    st.integers(1, 8), st.integers(1, 8),
-    st.sampled_from([0, 2, 6]),
-    st.lists(st.integers(0, 4), min_size=1, max_size=8),
-    st.integers(0, 2**32 - 1),
-)
-@settings(max_examples=60, deadline=None)
-def test_png_decode_roundtrip_property(w, h, color, filters, seed):
-    """For any small image, color type and per-row filter choice, the
-    dependency-free decoder inverts the spec's forward filter transform
-    exactly (pixel-perfect round trip through the inline encoder)."""
-    import numpy as np
-
-    from graphrag_kb_server_spark.operators.multimodal import decode_png
-    from tests.test_dedup_similarity_textstats import _encode_png
-
-    nch = {0: 1, 2: 3, 6: 4}[color]
-    px = np.random.default_rng(seed).integers(
-        0, 256, size=(h, w, nch), dtype=np.uint8
-    )
-    gw, gh, got = decode_png(_encode_png(px, color, filters))
-    assert (gw, gh) == (w, h)
-    if color == 0:
-        expected = np.repeat(px, 3, axis=2)
-    elif color == 6:
-        expected = px[:, :, :3]
-    else:
-        expected = px
-    assert np.array_equal(got, expected)

@@ -1,4 +1,5 @@
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from graphrag_kb_server_spark.operators.merge import rank_branch, round_robin_merge
@@ -451,9 +452,36 @@ def test_q12_pick_failure_falls_back_to_polling(spark, monkeypatch, caplog):
                for r in caplog.records)
 
 
-def test_kg_answer_entry_leaves_no_temp_dir(spark):
-    """The kg_answer entry keeps its answer cache in a temporary
-    directory that is gone once the entry returns."""
+@pytest.fixture
+def tiny_sf(spark, tmp_path):
+    """A directory with the three tables the temp-dir entries read."""
+    spark.createDataFrame(
+        [(1, "Alpha met Beta in Gamma.", "en", "web"),
+         (2, "Delta works at Epsilon.", "en", "web")],
+        "doc_id bigint, text string, lang string, source string",
+    ).write.parquet(f"{tmp_path}/documents.parquet")
+    spark.createDataFrame(
+        [(0, "ALGERIA", 0), (1, "FRANCE", 1)],
+        "n_nationkey int, n_name string, n_regionkey int",
+    ).write.parquet(f"{tmp_path}/nation.parquet")
+    spark.createDataFrame(
+        [(0, "AFRICA"), (1, "EUROPE")], "r_regionkey int, r_name string"
+    ).write.parquet(f"{tmp_path}/region.parquet")
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize("name, prefix", [
+    pytest.param(name, prefix, id=name) for name, prefix in [
+        ("kg_answer", "kg_answer_oracle_"),
+        ("s_incremental_docs", "s_incr_"),
+        ("kg_export_roundtrip", "kg_graphml_rt_"),
+        ("kg_export_gexf", "kg_gexf_rt_"),
+        ("kg_export_xlsx", "kg_xlsx_rt_"),
+    ]
+])
+def test_entry_leaves_no_temp_dir(spark, tiny_sf, name, prefix):
+    """An entry that works in a temporary directory removes it before
+    it returns, and its result is still readable afterwards."""
     import glob
     import os
     import sys
@@ -463,8 +491,8 @@ def test_kg_answer_entry_leaves_no_temp_dir(spark):
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import __spark_entry__ as entrymod
 
-    pattern = os.path.join(tempfile.gettempdir(), "kg_answer_oracle_*")
+    pattern = os.path.join(tempfile.gettempdir(), prefix + "*")
     before = set(glob.glob(pattern))
-    rows = entrymod.queries()["kg_answer"](spark, None).collect()
-    assert [r["section"] for r in rows][0] == "answer"
+    rows = entrymod.queries()[name](spark, tiny_sf).collect()
+    assert rows
     assert set(glob.glob(pattern)) <= before

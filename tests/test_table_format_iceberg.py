@@ -56,7 +56,7 @@ df = spark.range(5).select(F.col("id").cast("long").alias("v"),
                            (F.col("id") % 2).cast("string").alias("p"))
 path = "local/db/seam_smoke"
 assert not _exists(path, spark)
-_write(df, path, partition_by=["p"])
+_write(df, path)
 assert _exists(path, spark)
 back = _read_table(spark, path)
 assert back.count() == 5
