@@ -831,13 +831,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["kg_chunks"] = kg_chunks
 
     def kg_triples(spark, sf):
-        pages = corpus_mod.generate(spark, 120)
-        docs = pages.select(
-            "url", TXT.extract_text(F.col("text"), F.col("url")).alias("content")
-        ).withColumn("doc_id", TXT.doc_id(F.col("content"))).withColumn(
-            "file_path", F.col("url")
-        )
-        mentions = extract_mentions(chunk_documents(docs))
+        mentions = extract_mentions(_tiny_graph_tables(spark).chunks)
         return mentions.select("subj", "pred", "obj").distinct()
     q["kg_triples"] = kg_triples
 

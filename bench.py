@@ -1,8 +1,9 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the host's
+CPU count) and prints ONE JSON line:
+{"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
 
 Headline #1 is the north-rule metric: end-to-end KG indexing throughput
 (docs/sec) over the deterministic synthetic web_pages corpus
@@ -302,7 +303,7 @@ def bench_query_path(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
     n_docs = int(os.environ.get("BENCH_DOCS", "5000" if sf >= 0.1 else "1000"))
     repeats = max(int(os.environ.get("BENCH_REPEATS", "2")), 1)

@@ -140,22 +140,26 @@ def row(seed: int, i: int, sent_range: tuple[int, int] = (3, 9)) -> dict:
     }
 
 
-def generate_pandas(n_rows: int, seed: int = 42) -> pd.DataFrame:
+#: the seed of the generated corpus
+SEED = 42
+
+
+def generate_pandas(n_rows: int, seed: int = SEED) -> pd.DataFrame:
     return pd.DataFrame([row(seed, i) for i in range(n_rows)])
 
 
-def generate(spark: SparkSession, n_rows: int, seed: int = 42,
+def generate(spark: SparkSession, n_rows: int,
              n_partitions: int | None = None,
              sent_range: tuple[int, int] = (3, 9)) -> DataFrame:
     """Distributed generation: each partition generates its own row range
     via mapInPandas, so the corpus scales without a driver bottleneck
     (at 10^12 rows this is the same pattern — range() is a distributed
-    source and row(seed, i) is partition-location-independent)."""
+    source and row(SEED, i) is partition-location-independent)."""
     n_partitions = n_partitions or max(1, min(32, n_rows // 250 or 1))
     base = spark.range(0, n_rows, 1, n_partitions)
 
     def gen(batches):
         for pdf in batches:
-            yield pd.DataFrame([row(seed, int(i), sent_range) for i in pdf["id"]])
+            yield pd.DataFrame([row(SEED, int(i), sent_range) for i in pdf["id"]])
 
     return base.mapInPandas(gen, schema=WEB_PAGES_SCHEMA)

@@ -7,10 +7,11 @@ pandas UDF (series → series), L2-normalized. Swapping a real embedding
 client in is a one-line change inside ``embed_batch`` — the Spark plan
 (mapInPandas/pandas_udf stage) is identical.
 
-The stand-in: character-3-gram feature hashing into ``dim`` buckets with
-a hash-derived sign, then L2 normalization. Pure function of the text →
-identical across partitions/runs; similar strings get similar vectors
-(shared n-grams), which is what the linking cosine threshold relies on.
+The stand-in: character-3-gram feature hashing into ``EMBEDDING_DIM``
+buckets with a hash-derived sign, then L2 normalization. Pure function
+of the text → identical across partitions/runs; similar strings get
+similar vectors (shared n-grams), which is what the linking cosine
+threshold relies on.
 """
 
 from __future__ import annotations
@@ -42,7 +43,7 @@ def _mix64(x: np.ndarray) -> np.ndarray:
     return x
 
 
-def embed_text(text: str, dim: int = EMBEDDING_DIM) -> np.ndarray:
+def embed_text(text: str) -> np.ndarray:
     """Vectorized 3-gram feature hashing (no per-gram Python loop —
     ~100x faster than a hashlib-per-gram implementation, which matters
     when embedding 10^12 chunks)."""
@@ -53,9 +54,9 @@ def embed_text(text: str, dim: int = EMBEDDING_DIM) -> np.ndarray:
     grams = (b[:-2] << np.uint64(16)) | (b[1:-1] << np.uint64(8)) | b[2:]
     with np.errstate(over="ignore"):
         h = _mix64(grams)
-    buckets = (h % np.uint64(dim)).astype(np.int64)
+    buckets = (h % np.uint64(EMBEDDING_DIM)).astype(np.int64)
     signs = np.where((h >> np.uint64(7)) & np.uint64(1), 1.0, -1.0)
-    v = np.zeros(dim, dtype=np.float64)
+    v = np.zeros(EMBEDDING_DIM, dtype=np.float64)
     np.add.at(v, buckets, signs)
     n = np.linalg.norm(v)
     if n > 0:
@@ -63,9 +64,9 @@ def embed_text(text: str, dim: int = EMBEDDING_DIM) -> np.ndarray:
     return v.astype(np.float32)
 
 
-def embed_batch(texts: pd.Series, dim: int = EMBEDDING_DIM) -> pd.Series:
+def embed_batch(texts: pd.Series) -> pd.Series:
     """The LLM-slot boundary: replace body with a real client for prod."""
-    return texts.map(lambda t: embed_text(t, dim))
+    return texts.map(embed_text)
 
 
 @F.pandas_udf(T.ArrayType(T.FloatType()))

@@ -45,14 +45,20 @@ def bind_once(value: Column, body) -> Column:
 _bind_once = bind_once
 
 
-def char_shingles(col: Column, k: int = 3) -> Column:
-    """Distinct character k-grams of a string (ARRAY<STRING>).
+#: length k of the character grams of ``char_shingles``
+CHAR_SHINGLE_K = 3
+
+
+def char_shingles(col: Column) -> Column:
+    """Distinct character k-grams of a string (ARRAY<STRING>), k =
+    ``CHAR_SHINGLE_K``.
 
     Pure expression: sequence + transform + substring, then
     array_distinct. Empty/short strings yield the whole string.
     """
 
     def _body(s):
+        k = CHAR_SHINGLE_K
         n = F.greatest(F.length(s) - (k - 1), F.lit(1))
         return F.array_distinct(
             F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(s, i, k))

@@ -7,7 +7,7 @@ independent execution path (no Spark) against which the distributed
 pipeline's outputs are compared:
 
 - golden_text(url)        → byte-identical extracted text invariant
-- golden_chunks(doc)      → expected token-window chunking
+- golden_kg_chunks(n)     → expected token-window chunking
 - golden_triples(corpus)  → expected distinct (subj, pred, obj) per url
 
 The ``golden_kg_*`` family below are exact twins of the driver-contract
@@ -38,22 +38,6 @@ def golden_documents(n_rows: int, seed: int = 42) -> pd.DataFrame:
         extract_text_py(t, u) for t, u in zip(pages["text"], pages["url"])
     ]
     return pages[["url", "warc_ts", "lang", "content"]]
-
-
-def golden_chunks(n_rows: int, seed: int = 42) -> pd.DataFrame:
-    docs = golden_documents(n_rows, seed)
-    rows = []
-    for url, content in zip(docs["url"], docs["content"]):
-        for c in chunk_text(content):
-            rows.append(
-                {
-                    "url": url,
-                    "chunk_ix": c["chunk_ix"],
-                    "n_tokens": c["tokens"],
-                    "content": c["content"],
-                }
-            )
-    return pd.DataFrame(rows)
 
 
 def golden_pack_sequences(

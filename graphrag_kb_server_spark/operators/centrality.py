@@ -23,9 +23,13 @@ from pyspark.sql import functions as F
 
 from .graph_support import collect_if_small
 
+#: PageRank's damping factor d and its fixed iteration count
+DAMPING = 0.85
+ITERATIONS = 20
+
 
 def degree_centrality(
-    edges: DataFrame, nodes: DataFrame | None = None, node_col: str = "name"
+    edges: DataFrame, nodes: DataFrame | None = None
 ) -> DataFrame:
     """(name, centrality) with centrality = degree / (n-1), ranked desc.
 
@@ -47,7 +51,7 @@ def degree_centrality(
         # all_nodes ONCE and the count + final join reuse them
         deg = deg.localCheckpoint(eager=False)
         all_nodes = (
-            nodes.select(F.col(node_col).alias("name"))
+            nodes.select("name")
             .distinct()
             .localCheckpoint(eager=False)
         )
@@ -348,8 +352,6 @@ def pagerank(
     nodes: DataFrame | None = None,
     src: str = "src",
     dst: str = "tgt",
-    damping: float = 0.85,
-    iterations: int = 20,
     weight: str | None = None,
     driver_cap: int = 200_000,
 ) -> DataFrame:
@@ -364,8 +366,8 @@ def pagerank(
     weight instead of 1/out_degree.
 
     Returns ``(name, rank)`` with ``sum(rank) = 1``; fixed iteration
-    count for determinism (20 ≈ the classic convergence budget at
-    d = 0.85).
+    count ``ITERATIONS`` for determinism (20 ≈ the classic convergence
+    budget at ``DAMPING`` d = 0.85).
 
     Shape at 100 TB: per iteration ONE shuffle — the contribution sum
     keyed on the destination (partial-aggregated; a 10^9-in-degree hub
@@ -426,8 +428,7 @@ def pagerank(
         if n == 0:
             return all_nodes.select(F.col("name"), F.lit(0.0).alias("rank"))
         return _pagerank_driver(
-            edges.sparkSession, all_nodes, nodes_pd, frac_pd,
-            damping, iterations, n,
+            edges.sparkSession, all_nodes, nodes_pd, frac_pd, n
         )
     n = all_nodes.count()
     if n == 0:
@@ -448,8 +449,8 @@ def pagerank(
     ).localCheckpoint(eager=False)
 
     _PR_STRIDE = 5
-    base = (1.0 - damping) / n
-    for it in range(iterations):
+    base = (1.0 - DAMPING) / n
+    for it in range(ITERATIONS):
         dm = (
             ranks.join(dangling, "name", "left_semi")
             .groupBy()
@@ -468,7 +469,7 @@ def pagerank(
                 "name",
                 (
                     F.lit(base)
-                    + F.lit(damping)
+                    + F.lit(DAMPING)
                     * (
                         F.coalesce(F.col("_c"), F.lit(0.0))
                         + F.col("_dm") / F.lit(float(n))
@@ -476,14 +477,13 @@ def pagerank(
                 ).alias("rank"),
             )
         ).localCheckpoint(eager=False)
-        if (it + 1) % _PR_STRIDE == 0 and it + 1 < iterations:
+        if (it + 1) % _PR_STRIDE == 0 and it + 1 < ITERATIONS:
             ranks.count()  # materialize the lazy-checkpoint group
     return ranks.orderBy(F.desc("rank"), "name")
 
 
 def _pagerank_driver(
-    spark, all_nodes: DataFrame, nodes_pd, e_pd,
-    damping: float, iterations: int, n: int,
+    spark, all_nodes: DataFrame, nodes_pd, e_pd, n: int
 ) -> DataFrame:
     """Collected power iteration for sub-threshold graphs — same
     update rule as the distributed rounds, numpy scatter-add instead
@@ -503,12 +503,12 @@ def _pagerank_driver(
     has_out = np.zeros(n, dtype=bool)
     has_out[s] = True
     ranks = np.full(n, 1.0 / n, dtype=np.float64)
-    base = (1.0 - damping) / n
-    for _ in range(iterations):
+    base = (1.0 - DAMPING) / n
+    for _ in range(ITERATIONS):
         dm = float(ranks[~has_out].sum())
         contrib = np.zeros(n, dtype=np.float64)
         np.add.at(contrib, t, ranks[s] * f)
-        ranks = base + damping * (contrib + dm / n)
+        ranks = base + DAMPING * (contrib + dm / n)
     nodes_pd = nodes_pd.assign(rank=ranks)
     schema = T.StructType(
         list(all_nodes.schema.fields)

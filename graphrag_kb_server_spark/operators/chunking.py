@@ -74,9 +74,6 @@ def chunk_text(
 
 def chunk_documents(
     docs: DataFrame,
-    text_col: str = "content",
-    doc_id_col: str = "doc_id",
-    file_path_col: str = "file_path",
     max_token_size: int = DEFAULT_MAX_TOKENS,
     overlap_token_size: int = DEFAULT_OVERLAP,
 ) -> DataFrame:
@@ -91,7 +88,7 @@ def chunk_documents(
             # dict-of-lists batch construction (see extraction.py)
             data = {c: [] for c in cols}
             for did, content, fp in zip(
-                pdf[doc_id_col], pdf[text_col], pdf[file_path_col]
+                pdf["doc_id"], pdf["content"], pdf["file_path"]
             ):
                 for c in chunk_text(content, max_token_size, overlap_token_size):
                     data["chunk_id"].append("")  # filled JVM-side below
@@ -102,7 +99,7 @@ def chunk_documents(
                     data["file_path"].append(fp)
             yield pd.DataFrame(data, columns=cols)
 
-    chunks = docs.select(doc_id_col, text_col, file_path_col).mapInPandas(
+    chunks = docs.select("doc_id", "content", "file_path").mapInPandas(
         explode_chunks, schema=CHUNKS_SCHEMA
     )
     # content-hash id computed by the JVM md5 builtin (codegen), not Python

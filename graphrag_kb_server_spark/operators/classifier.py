@@ -36,6 +36,9 @@ from pyspark.sql import functions as F
 
 _ETA_CLAMP = 30.0
 _W_FLOOR = 1e-12
+#: IRLS iterations of logistic_train, and its ridge term
+ITERS = 6
+RIDGE = 1e-3
 
 
 def _eta(beta: list[float], feats: list[F.Column]) -> F.Column:
@@ -49,8 +52,6 @@ def logistic_train(
     df: DataFrame,
     feature_cols: list[str],
     label_col: str,
-    iters: int = 6,
-    ridge: float = 1e-3,
 ) -> list[float]:
     """IRLS fit; returns [intercept, coef_1, ..., coef_k]."""
     import numpy as np
@@ -64,7 +65,7 @@ def logistic_train(
     feats = [F.col(f"_f{i}") for i in range(k)]
 
     beta = [0.0] * (k + 1)
-    for _ in range(iters):
+    for _ in range(ITERS):
         eta = _eta(beta, feats)
         mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
         w = F.greatest(mu * (F.lit(1.0) - mu), F.lit(_W_FLOOR))
@@ -85,7 +86,7 @@ def logistic_train(
             for j in range(i, k + 1):
                 A[i, j] = A[j, i] = row[f"a_{i}_{j}"]
         b = np.array([row[f"b_{i}"] for i in range(k + 1)])
-        A += ridge * np.eye(k + 1)
+        A += RIDGE * np.eye(k + 1)
         beta = [float(v) for v in np.linalg.solve(A, b)]
     return beta
 
@@ -94,13 +95,12 @@ def logistic_predict(
     df: DataFrame,
     feature_cols: list[str],
     beta: list[float],
-    prob_col: str = "prob",
 ) -> DataFrame:
-    """Adds the predicted probability (6-dp rounded) — a row-local
+    """Adds the predicted probability ``prob`` (6-dp rounded) — a row-local
     codegen'd expression, the cheap corpus-wide scoring pass."""
     feats = [F.col(c).cast("double") for c in feature_cols]
     eta = _eta(beta, feats)
     return df.withColumn(
-        prob_col,
+        "prob",
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-eta)), 6),
     )

@@ -33,6 +33,9 @@ from .graph_support import collect_if_small
 #: md5-hash parity equals r % stride (see label_propagation docstring)
 LPA_STRIDE = 3
 
+#: LPA rounds per level of hierarchical_communities
+LPA_ITERATIONS = 10
+
 #: weak-keyed per-DataFrame memo for _edge_frames — lets the standard
 #: LPA→refine composition share ONE materialization of the caller's
 #: edges plan (a whole KG build in the bench's case) instead of each
@@ -42,14 +45,12 @@ LPA_STRIDE = 3
 _EDGE_FRAMES_MEMO: "weakref.WeakKeyDictionary" = None  # set below
 
 
-def _edge_frames(
-    edges: DataFrame, src: str, dst: str, weight: str | None
-) -> tuple[DataFrame, DataFrame]:
-    """(e, sym) for an edges frame: ``e`` = the (a, b, w) projection,
-    ``sym`` = both directions + voter parity; both lazy checkpoints
-    (the caller's first action on either materializes it, and sym's
-    lineage runs through e's checkpoint so e is cached as a side
-    effect). Memoized per edges DataFrame OBJECT so
+def _edge_frames(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(e, sym) for an edges(src, tgt, weight) frame: ``e`` = the
+    (a, b, w) projection, ``sym`` = both directions + voter parity;
+    both lazy checkpoints (the caller's first action on either
+    materializes it, and sym's lineage runs through e's checkpoint so
+    e is cached as a side effect). Memoized per edges DataFrame OBJECT so
     label_propagation + modularity_refine over the same frame pay the
     upstream edge build once."""
     global _EDGE_FRAMES_MEMO
@@ -57,13 +58,12 @@ def _edge_frames(
         import weakref
 
         _EDGE_FRAMES_MEMO = weakref.WeakKeyDictionary()
-    key = (src, dst, weight)
-    per = _EDGE_FRAMES_MEMO.get(edges)
-    if per is not None and key in per:
-        return per[key]
-    w = F.col(weight) if weight else F.lit(1.0)
+    hit = _EDGE_FRAMES_MEMO.get(edges)
+    if hit is not None:
+        return hit
     e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b"), w.alias("w")
+        F.col("src").alias("a"), F.col("tgt").alias("b"),
+        F.col("weight").alias("w"),
     ).localCheckpoint(eager=False)
     # sym is LAZY: the driver paths never touch it (they collect the
     # half-size e and mirror it in numpy), so its union+parity pass and
@@ -76,13 +76,10 @@ def _edge_frames(
         .withColumn("_par", _lpa_parity(F.col("a")))
         .localCheckpoint(eager=False)
     )
-    if per is None:
-        per = {}
-        try:
-            _EDGE_FRAMES_MEMO[edges] = per
-        except TypeError:
-            pass  # non-weakrefable frame: just skip memoization
-    per[key] = (e, sym)
+    try:
+        _EDGE_FRAMES_MEMO[edges] = (e, sym)
+    except TypeError:
+        pass  # non-weakrefable frame: just skip memoization
     return e, sym
 
 
@@ -212,14 +209,11 @@ def _label_propagation_driver(
 
 def label_propagation(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "tgt",
-    weight: str | None = "weight",
     max_iterations: int = 12,
     driver_cap: int = 300_000,
 ) -> DataFrame:
-    """edges → (node, label): SEMI-synchronous weighted LPA,
-    deterministic.
+    """edges(src, tgt, weight) → (node, label): SEMI-synchronous
+    weighted LPA, deterministic.
 
     Fully synchronous LPA oscillates on bipartite-ish structure — on
     the reference's shipped onepoint graph (793 edges) it lands on a
@@ -245,7 +239,7 @@ def label_propagation(
     # on every edge every round (VERDICT r4 item 3). _edge_frames memo:
     # a following modularity_refine over the SAME edges frame reuses
     # this materialization.
-    e, sym = _edge_frames(edges, src, dst, weight)
+    e, sym = _edge_frames(edges)
 
     # Driver twin (see graph_support.collect_if_small): the EXACT same
     # semi-synchronous rounds as a driver loop, string ids only (the md5
@@ -330,7 +324,6 @@ def hierarchical_communities(
     edges: DataFrame,
     max_cluster_size: int = 10,
     max_levels: int = 4,
-    lpa_iterations: int = 10,
     use_lcc: bool = True,
     refine: bool = False,
 ) -> DataFrame:
@@ -361,7 +354,7 @@ def hierarchical_communities(
             .join(lcc.withColumnRenamed("node", "tgt"), "tgt")
         )
     assignments: list[DataFrame] = []
-    lvl0_lab = label_propagation(edges, max_iterations=lpa_iterations)
+    lvl0_lab = label_propagation(edges, max_iterations=LPA_ITERATIONS)
     if refine:
         lvl0_lab = modularity_refine(edges, lvl0_lab)
     lvl0 = lvl0_lab.select(
@@ -392,7 +385,7 @@ def hierarchical_communities(
                 + F.pmod(F.xxhash64(F.concat(F.lit(str(level)), "src", "tgt")), F.lit(7))
                 / F.lit(100.0),
             ),
-            max_iterations=lpa_iterations,
+            max_iterations=LPA_ITERATIONS,
         )
         parent_of = members.withColumnRenamed("cluster", "parent")
         # LEFT join: members with no intra-cluster edge never appear in
@@ -585,20 +578,16 @@ def community_hierarchy(
 # Louvain-style modularity refinement on top of LPA
 # ──────────────────────────────────────────────────────────────────────
 
-def graph_modularity(
-    edges: DataFrame,
-    labels: DataFrame,
-    src: str = "src",
-    dst: str = "tgt",
-    weight: str | None = "weight",
-) -> float:
-    """Weighted Newman modularity of a (node, label) partition —
+def graph_modularity(edges: DataFrame, labels: DataFrame) -> float:
+    """Weighted Newman modularity of a (node, label) partition of
+    edges(src, tgt, weight) —
     ``Q = Σ_c [intra_c/m − (tot_c/2m)²]`` with m = total edge weight,
     intra_c counting each undirected edge once, tot_c the summed
     endpoint degrees. Three partial-aggregated jobs; returns a driver
     float (it is a diagnostic scalar, not a pipeline stage)."""
-    w = F.col(weight) if weight else F.lit(1.0)
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"), w.alias("w"))
+    e = edges.select(
+        F.col("src").alias("a"), F.col("tgt").alias("b"), F.col("weight").alias("w")
+    )
     la = labels.select(F.col("node").alias("a"), F.col("label").alias("la"))
     lb = labels.select(F.col("node").alias("b"), F.col("label").alias("lb"))
     el = e.join(la, "a").join(lb, "b")
@@ -790,9 +779,6 @@ def _refine_driver(
 def modularity_refine(
     edges: DataFrame,
     labels: DataFrame,
-    src: str = "src",
-    dst: str = "tgt",
-    weight: str | None = "weight",
     outer_rounds: int = 2,
     max_merge_passes: int = 8,
     local_rounds: int = 6,
@@ -839,7 +825,7 @@ def modularity_refine(
     # case) is never replayed inside the loop; via the _edge_frames
     # memo, an LPA→refine composition over the same edges frame shares
     # ONE materialization of that upstream plan.
-    e, sym = _edge_frames(edges, src, dst, weight)
+    e, sym = _edge_frames(edges)
     # The driver twin probes the half-size e frame, as LPA does; m
     # derives from the probe rows in-process (exact for the
     # integer-valued weights the bit-parity contract covers — summation

@@ -38,12 +38,18 @@ from pyspark.sql import functions as F
 
 from .graph_support import collect_if_small
 
+#: round budget of connected_components (and the default of
+#: connected_components_star's alternations)
+MAX_ITERATIONS = 50
+#: k_core peel rounds per convergence check, and its round budget
+K_CORE_STRIDE = 3
+K_CORE_MAX_ROUNDS = 60
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "tgt",
-    max_iterations: int = 50,
     driver_cap: int = 100_000,
 ) -> DataFrame:
     """edges(src, tgt) → (node STRING, component STRING).
@@ -129,8 +135,8 @@ def connected_components(
     check_every = 2
     it = 0
     converged = False
-    while it < max_iterations:
-        group = min(check_every, max_iterations - it)
+    while it < MAX_ITERATIONS:
+        group = min(check_every, MAX_ITERATIONS - it)
         for _ in range(group):
             neigh = (
                 sym.join(labels.withColumnRenamed("node", "b"), "b")
@@ -171,20 +177,17 @@ def connected_components(
             break
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
+            f"connected_components did not converge in {MAX_ITERATIONS} "
             "rounds (labels still changing) — a partially-contracted "
             "labeling must not be mistaken for components; raise "
-            "max_iterations (rounds ~ log2(diameter) with pointer jumping)"
+            "MAX_ITERATIONS (rounds ~ log2(diameter) with pointer jumping)"
         )
 
     return labels.select("node", F.col("label").alias("component"))
 
 
 def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "tgt",
-    max_iterations: int = 50,
+    edges: DataFrame, max_iterations: int = MAX_ITERATIONS
 ) -> DataFrame:
     """edges(src, tgt) → (node STRING, component STRING) via alternating
     large-star / small-star (Kiveris et al., SoCC'14). Same contract as
@@ -199,7 +202,7 @@ def connected_components_star(
     action per round.
     """
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("tgt").alias("b"))
         .where(F.col("a").isNotNull() & F.col("b").isNotNull())
         .where(F.col("a") != F.col("b"))
         .distinct()
@@ -265,8 +268,8 @@ def connected_components_star(
         )
 
     # stars: every edge is (child, component-min); minima label themselves
-    nodes = edges.select(F.col(src).alias("node")).unionByName(
-        edges.select(F.col(dst).alias("node"))
+    nodes = edges.select(F.col("src").alias("node")).unionByName(
+        edges.select(F.col("tgt").alias("node"))
     ).where(F.col("node").isNotNull()).distinct()
     labels = e.groupBy(F.col("a").alias("node")).agg(
         F.min("b").alias("component")
@@ -286,18 +289,11 @@ def component_sizes(components: DataFrame) -> DataFrame:
     )
 
 
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "tgt",
-    stride: int = 3,
-    max_rounds: int = 60,
-) -> DataFrame:
-    """The k-core of an undirected graph: iteratively peel nodes of
-    degree < k until none remain (Seidman 1983) — the web-graph
-    density/spam primitive (link farms melt away below their core
-    number; crawl seeds come from high cores).
+def k_core(edges: DataFrame, k: int) -> DataFrame:
+    """The k-core of an undirected graph edges(src, tgt): iteratively
+    peel nodes of degree < k until none remain (Seidman 1983) — the
+    web-graph density/spam primitive (link farms melt away below their
+    core number; crawl seeds come from high cores).
 
     Returns ``(node, core_deg)`` — surviving nodes with their degree
     inside the core.
@@ -305,17 +301,17 @@ def k_core(
     Scale shape: each peel round is ONE map-side-combined degree
     aggregation plus two semi joins that drop edges incident to peeled
     nodes; per-round lazy localCheckpoints keep the plan linear, and
-    the convergence check is BATCHED — one count action per ``stride``
-    rounds. Peeling is monotone (edges only leave), so an unchanged
-    edge count across a stride proves the fixpoint: the extra rounds
-    past it are identity, the same argument the min-label CC loop
-    uses. Worst-case rounds is the degeneracy peel depth — tiny for
+    the convergence check is BATCHED — one count action per
+    ``K_CORE_STRIDE`` rounds. Peeling is monotone (edges only leave),
+    so an unchanged edge count across a stride proves the fixpoint: the
+    extra rounds past it are identity, the same argument the min-label
+    CC loop uses. Worst-case rounds is the degeneracy peel depth — tiny for
     power-law web graphs (O(log n) in practice).
     """
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("tgt").alias("b"))
         .unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+            edges.select(F.col("tgt").alias("a"), F.col("src").alias("b"))
         )
         .distinct()
         .localCheckpoint(eager=True)
@@ -323,8 +319,8 @@ def k_core(
     prev = sym.count()
     cur = sym
     rounds = 0
-    while rounds < max_rounds:
-        for _ in range(stride):
+    while rounds < K_CORE_MAX_ROUNDS:
+        for _ in range(K_CORE_STRIDE):
             keep = (
                 cur.groupBy("a")
                 .agg(F.count(F.lit(1)).alias("_d"))
@@ -344,7 +340,7 @@ def k_core(
         prev = n
     else:
         raise RuntimeError(
-            f"k_core did not converge within {max_rounds} rounds"
+            f"k_core did not converge within {K_CORE_MAX_ROUNDS} rounds"
         )
     return (
         cur.groupBy(F.col("a").alias("node"))

@@ -79,18 +79,18 @@ def vector_pick_ids(
     return {cid for cid, _ in ranked[: _pick_size(n_entities, related_chunk_number)]}
 
 
-def reference_list(surviving_chunks: DataFrame, order_col: str = "merge_ix") -> DataFrame:
+def reference_list(surviving_chunks: DataFrame) -> DataFrame:
     """Q15 — (ref_ix, file_path) numbered reference rows, one per
-    distinct file_path in ``order_col`` order (kg_query adds
+    distinct file_path in ``merge_ix`` order (kg_query adds
     last_modified from the path-properties table — P12)."""
-    w = bounded_global(order_col)
+    w = bounded_global("merge_ix")
     refs = (
-        surviving_chunks.select("file_path", order_col)
-        .withColumn("_rk", F.row_number().over(Window.partitionBy("file_path").orderBy(order_col)))
+        surviving_chunks.select("file_path", "merge_ix")
+        .withColumn("_rk", F.row_number().over(Window.partitionBy("file_path").orderBy("merge_ix")))
         .where(F.col("_rk") == 1)
         .drop("_rk")
         .withColumn("ref_ix", F.row_number().over(w))
-        .drop(order_col)
+        .drop("merge_ix")
     )
     return refs.select("ref_ix", "file_path")
 
@@ -108,7 +108,6 @@ def dedup_by_content_combine(
     parts: list[DataFrame],
     content_cols: list[str],
     order_cols: list[str] | None = None,
-    id_col: str = "id",
 ) -> DataFrame:
     """Q20 — union context lists, dedup on every column except
     id/created_at, reassign sequential ids in first-occurrence order.
@@ -116,7 +115,7 @@ def dedup_by_content_combine(
     "First occurrence" is made explicit: position = (part index,
     order_cols within the part) — distributed row order is never used
     (order_cols defaults to the existing id column)."""
-    order_cols = order_cols or [id_col]
+    order_cols = order_cols or ["id"]
     tagged_parts = [
         p.withColumn("_part", F.lit(i)) for i, p in enumerate(parts)
     ]
@@ -129,19 +128,19 @@ def dedup_by_content_combine(
     out = (
         tagged.withColumn("_rk", F.row_number().over(first_w))
         .where(F.col("_rk") == 1)
-        .withColumn(id_col, F.row_number().over(bounded_global("_pos")))
+        .withColumn("id", F.row_number().over(bounded_global("_pos")))
         .drop("_pos", "_rk", "_part")
     )
     return out
 
 
-def expand_file_references(refs: DataFrame, file_col: str = "file_path") -> DataFrame:
+def expand_file_references(refs: DataFrame) -> DataFrame:
     """Q21 — split ``<SEP>``-joined multi-file references into separate
-    rows, dedup by file (first occurrence wins by ref_ix)."""
+    rows, dedup by file_path (first occurrence wins by ref_ix)."""
     exploded = refs.withColumn(
-        file_col, F.explode(F.split(F.col(file_col), GRAPH_FIELD_SEP))
+        "file_path", F.explode(F.split(F.col("file_path"), GRAPH_FIELD_SEP))
     )
-    w = Window.partitionBy(file_col).orderBy("ref_ix")
+    w = Window.partitionBy("file_path").orderBy("ref_ix")
     return (
         exploded.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") == 1)

@@ -49,21 +49,21 @@ def _regex_literal(sep: str) -> str:
     return "\\Q" + sep.replace("\\E", "\\E\\\\E\\Q") + "\\E"
 
 
-def c4_line_filter(
-    df: DataFrame,
-    text_col: str,
-    min_words: int = 3,
-    min_kept_lines: int = 3,
-) -> DataFrame:
+#: C4's line floor (whitespace words) and document floor (kept lines)
+MIN_WORDS = 3
+MIN_KEPT_LINES = 3
+
+
+def c4_line_filter(df: DataFrame, text_col: str) -> DataFrame:
     """Apply the C4 line/document heuristics to ``text_col``.
 
     Line level (a line is KEPT iff all hold):
       - ends in terminal punctuation (``. ! ? "``),
-      - has at least ``min_words`` whitespace words,
+      - has at least ``MIN_WORDS`` whitespace words,
       - does not contain the word ``javascript`` (case-insensitive),
       - does not contain ``{`` or ``}``.
     Document level (``c4_keep``):
-      - at least ``min_kept_lines`` lines survived,
+      - at least ``MIN_KEPT_LINES`` lines survived,
       - the document does not contain ``lorem ipsum``
         (case-insensitive) or an opening curly brace ``{`` (the
         C4 code-page heuristic keys on ``{``; line level drops both).
@@ -79,7 +79,7 @@ def c4_line_filter(
         lw = F.lower(line)
         return (
             line.rlike(_TERMINAL_RE)
-            & (F.size(F.split(F.trim(line), r"\s+")) >= min_words)
+            & (F.size(F.split(F.trim(line), r"\s+")) >= MIN_WORDS)
             & ~lw.contains("javascript")
             & ~line.contains("{")
             & ~line.contains("}")
@@ -91,7 +91,7 @@ def c4_line_filter(
     # non-cheap expr referenced >1x in its own projection)
     kept = F.filter(F.col("_lines"), _keep)
     doc_ok = (
-        (F.size(F.col("_kept")) >= min_kept_lines)
+        (F.size(F.col("_kept")) >= MIN_KEPT_LINES)
         & ~F.lower(t).contains("lorem ipsum")
         & ~t.contains("{")
     )
@@ -153,9 +153,9 @@ def gopher_repetition(
     return out.withColumnRenamed("id", id_col)
 
 
-def repetition_signal_cols(units: Column, unit: str = "line") -> dict[str, Column]:
+def repetition_signal_cols(units: Column) -> dict[str, Column]:
     """Row-local variant of :func:`gopher_repetition` over an
-    already-split array of units — for composed pipelines where the
+    already-split array of lines — for composed pipelines where the
     text is a staged column and a shuffle per signal is wasteful.
 
     Identical arithmetic: the explode form sums ``cnt − 1`` per
@@ -179,11 +179,11 @@ def repetition_signal_cols(units: Column, unit: str = "line") -> dict[str, Colum
         dis, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
     )
     return {
-        f"n_{unit}s": n.cast("bigint"),
-        f"dup_{unit}_frac": F.round(
+        "n_lines": n.cast("bigint"),
+        "dup_line_frac": F.round(
             (n - F.size(dis)) / F.greatest(n, F.lit(1)), 6
         ),
-        f"dup_{unit}_char_frac": F.round(
+        "dup_line_char_frac": F.round(
             (total_chars - distinct_chars)
             / F.greatest(total_chars, F.lit(1)).cast("double"),
             6,
@@ -513,8 +513,6 @@ def boilerplate_ngram_stats(
     text_col: str,
     n: int = 3,
     min_doc_freq: int = 3,
-    hot: DataFrame | None = None,
-    broadcast_hot: bool = True,
 ) -> DataFrame:
     """Per-document boilerplate signal: the fraction of a document's
     n-gram POSITIONS whose gram is corpus-hot (per :func:`hot_ngrams`)
@@ -525,19 +523,14 @@ def boilerplate_ngram_stats(
     Returns every input row as ``(id, n_ngrams, hot_ngrams,
     boilerplate_frac)``.
 
-    Shape: the hot set (pass ``hot`` to reuse a precomputed one) is
-    **broadcast** by default — by construction it holds only grams
-    crossing ``min_doc_freq``, orders of magnitude smaller than the
-    gram stream; at a threshold low enough to overflow the driver, set
-    ``broadcast_hot=False`` for a shuffle join keyed on the gram. The
-    left join has multiplicity 1 (``hot`` is distinct-by-key), so the
-    only other exchange is the per-doc count aggregation on ``id``.
+    Shape: the hot set is **broadcast** — by construction it holds only
+    grams crossing ``min_doc_freq``, orders of magnitude smaller than
+    the gram stream. The left join has multiplicity 1 (the hot set is
+    distinct-by-key), so the only other exchange is the per-doc count
+    aggregation on ``id``.
     """
-    if hot is None:
-        hot = hot_ngrams(df, text_col, n, min_doc_freq)
-    probe = hot.select("g").withColumn("_hot", F.lit(1))
-    if broadcast_hot:
-        probe = F.broadcast(probe)
+    hot = hot_ngrams(df, text_col, n, min_doc_freq)
+    probe = F.broadcast(hot.select("g").withColumn("_hot", F.lit(1)))
     positions = df.select(
         F.col(id_col).alias("id"),
         F.explode_outer(word_ngrams(F.col(text_col), n)).alias("g"),

@@ -10,12 +10,11 @@ played by writing the index table (parquet/Iceberg) before probing it,
 which also survives executor loss; localCheckpoint trades that
 durability for zero extra IO in a single-job run.
 
-- exact_dedup            — hash groupBy on content (or normalized content)
+- exact_dedup            — hash groupBy on content
 - minhash_lsh_dedup      — shingle → minhash → band → bucket self-join
 - simhash_dedup          — 64-bit simhash, multi-permutation rotated
                            prefix blocks + hamming check
 - ngram_jaccard_pairs    — token-shingle Jaccard via explode + join
-                           (optional doc-frequency hot-key cutoff)
 - embedding_near_dup     — cosine over hash-embeddings with LSH-style
                            bucket blocking (the scale path for
                            matching.py:100-128's dense similarity matrix)
@@ -39,15 +38,21 @@ from ..functions import hashing as H
 from ..functions import vectors as V
 from ..functions.embedding import embed_udf
 
+#: MinHash LSH shape: hash functions, bands, and words per shingle
+NUM_HASHES = 16
+BANDS = 8
+SHINGLE_WORDS = 3
+#: sub-bucket cap of the simhash and embedding blockings
+MAX_BUCKET = 4096
+#: expected bucket size embedding_near_dup_pairs aims at with n_planes=None
+TARGET_BUCKET_ROWS = 8192
 
-def exact_dedup(
-    df: DataFrame, content_col: str, order_col: str, normalize: bool = False
-) -> DataFrame:
+
+def exact_dedup(df: DataFrame, content_col: str, order_col: str) -> DataFrame:
     """Keep the min-``order_col`` row per identical content. Adds
     ``dup_group_size``. Shuffle key = md5(content) (bounded-width key,
     avoids shuffling full text for comparison)."""
-    key = F.lower(F.regexp_replace(F.col(content_col), r"\s+", " ")) if normalize else F.col(content_col)
-    keyed = df.withColumn("_k", F.md5(key))
+    keyed = df.withColumn("_k", F.md5(F.col(content_col)))
     w = Window.partitionBy("_k").orderBy(order_col)
     return (
         keyed.withColumn("_rn", F.row_number().over(w))
@@ -63,17 +68,16 @@ def _band_table(
     id_col: str,
     num_hashes: int,
     bands: int,
-    shingle_words: int,
 ) -> DataFrame:
-    """(id, band) — one row per LSH band key. Staged projections: the
-    hex stage pays ONE md5 per shingle; the signature references it
-    num_hashes times, so CollapseProject keeps it in its own project
-    (evaluated once per row) instead of inlining the md5 into every
-    slice."""
+    """(id, band) — one row per LSH band key over SHINGLE_WORDS-word
+    shingles. Staged projections: the hex stage pays ONE md5 per
+    shingle; the signature references it num_hashes times, so
+    CollapseProject keeps it in its own project (evaluated once per
+    row) instead of inlining the md5 into every slice."""
     rows_per_band = num_hashes // bands
     sh = df.select(
         F.col(id_col).alias("id"),
-        H.word_shingles(F.lower(F.col(content_col)), shingle_words).alias("_sh"),
+        H.word_shingles(F.lower(F.col(content_col)), SHINGLE_WORDS).alias("_sh"),
     )
     hx = sh.select("id", H.shingle_hexes(F.col("_sh"), num_hashes).alias("_hx"))
     sig = hx.select(
@@ -89,9 +93,6 @@ def minhash_lsh_dedup_incremental(
     seen_df: DataFrame,
     content_col: str,
     id_col: str,
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_words: int = 3,
 ) -> DataFrame:
     """Incremental near-dup probe: drop NEW documents whose any LSH
     band collides with the already-indexed corpus — the production
@@ -106,12 +107,8 @@ def minhash_lsh_dedup_incremental(
     ``minhash_lsh_dedup``'s job — compose the two. Returns the
     surviving new rows.
     """
-    nb = _band_table(
-        new_df, content_col, id_col, num_hashes, bands, shingle_words
-    )
-    sb = _band_table(
-        seen_df, content_col, id_col, num_hashes, bands, shingle_words
-    )
+    nb = _band_table(new_df, content_col, id_col, NUM_HASHES, BANDS)
+    sb = _band_table(seen_df, content_col, id_col, NUM_HASHES, BANDS)
     hit = (
         nb.join(sb.select("band"), "band", "left_semi")
         .select(F.col("id").alias(id_col))
@@ -124,15 +121,14 @@ def minhash_lsh_pairs(
     df: DataFrame,
     content_col: str,
     id_col: str,
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_words: int = 3,
+    num_hashes: int = NUM_HASHES,
+    bands: int = BANDS,
     max_bucket: int = 256,
 ) -> DataFrame:
     """Near-duplicate candidate pairs (id_a < id_b) via word-shingle
     MinHash LSH. Pair formation is band-bucket-local (equi-join on the
     band key), never all-pairs."""
-    b = _band_table(df, content_col, id_col, num_hashes, bands, shingle_words)
+    b = _band_table(df, content_col, id_col, num_hashes, bands)
     b = split_oversized_buckets(b, "band", "id", max_bucket)
     return (
         b.alias("x")
@@ -207,7 +203,6 @@ def minhash_lsh_dedup(
     content_col: str,
     id_col: str,
     order_col: str | None = None,
-    **lsh_kwargs,
 ) -> DataFrame:
     """Drop near-duplicates: LSH pairs → connected components over the
     duplicate graph → keep ONE member per component.
@@ -219,7 +214,7 @@ def minhash_lsh_dedup(
     from .components import connected_components
 
     order_col = order_col or id_col
-    pairs = minhash_lsh_pairs(df, content_col, id_col, **lsh_kwargs)
+    pairs = minhash_lsh_pairs(df, content_col, id_col)
     comp = connected_components(pairs, src="id_a", dst="id_b")
     if order_col == id_col:
         keep = comp.groupBy("component").agg(F.min("node").alias("_keep"))
@@ -247,7 +242,6 @@ def minhash_cluster_ids(
     df: DataFrame,
     content_col: str,
     id_col: str,
-    **lsh_kwargs,
 ) -> DataFrame:
     """Near-dup CLUSTER assignment: every row gets a stable
     ``cluster_id`` (the min id of its duplicate component; singletons
@@ -256,7 +250,7 @@ def minhash_cluster_ids(
     cluster, pick winners later, audit dup mass per domain)."""
     from .components import connected_components
 
-    pairs = minhash_lsh_pairs(df, content_col, id_col, **lsh_kwargs)
+    pairs = minhash_lsh_pairs(df, content_col, id_col)
     # min-label CC: the component label IS the min member id
     comp = connected_components(pairs, src="id_a", dst="id_b")
     mapped = comp.select(
@@ -279,7 +273,6 @@ def simhash_dedup_pairs(
     prefix_nibbles: int = 4,
     max_hamming_nibbles: int = 2,
     rotations: int = 4,
-    max_bucket: int = 4096,
 ) -> DataFrame:
     """SimHash near-dup pairs: 64-bit simhash over word tokens; block on
     the hash prefix under ``rotations`` nibble-rotations of the hash
@@ -340,7 +333,7 @@ def simhash_dedup_pairs(
             )
         ).alias("block"),
     )
-    rotated = split_oversized_buckets(rotated, "block", "id", max_bucket)
+    rotated = split_oversized_buckets(rotated, "block", "id", MAX_BUCKET)
     x, y = rotated.alias("x"), rotated.alias("y")
     # nibble hamming: count non-zero nibbles of the xor-ed halves
     xh = F.col("x._hi").bitwiseXOR(F.col("y._hi"))
@@ -368,39 +361,23 @@ def ngram_jaccard_pairs(
     id_col: str,
     shingle_words: int = 3,
     threshold: float = 0.8,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard over word-shingle sets, computed distributively:
     explode shingles → self-join on shingle (inverted index) → count
     intersections → |A∩B| / (|A|+|B|−|A∩B|). The shingle join IS the
-    blocking: pairs sharing no shingle never meet.
-
-    ``max_doc_freq`` is the 100 TB hot-key guard: a shingle appearing in
-    more than this many documents (a stopword phrase) is a quadratic hot
-    key in the self-join and is excluded from the JOIN side while still
-    counting toward |A| and |B| — so reported Jaccard is a LOWER BOUND
-    for pairs whose only shared shingles were ultra-common (they connect
-    only via rarer shingles, which is what near-duplicate detection
-    wants). Default None = exact semantics at every key."""
+    blocking: pairs sharing no shingle never meet."""
     sh = df.select(
         F.col(id_col).alias("id"),
         F.explode(H.word_shingles(F.lower(F.col(content_col)), shingle_words)).alias("s"),
     ).distinct().localCheckpoint(eager=False)
     # the inverted index is computed once (LAZY checkpoint: no job at
     # build time; the first action persists it) — it is read by the
-    # size aggregate, the doc-frequency guard, and BOTH sides of the
-    # shingle self-join; at scale this is the analogue of writing the
-    # index table before probing it
+    # size aggregate and BOTH sides of the shingle self-join; at scale
+    # this is the analogue of writing the index table before probing it
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    join_side = sh
-    if max_doc_freq is not None:
-        dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
-        join_side = sh.join(
-            dfreq.where(F.col("_df") <= max_doc_freq).select("s"), "s"
-        )
     inter = (
-        join_side.alias("x")
-        .join(join_side.alias("y"), "s")
+        sh.alias("x")
+        .join(sh.alias("y"), "s")
         .where(F.col("x.id") < F.col("y.id"))
         .groupBy(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
@@ -422,8 +399,6 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     n_planes: int | None = 8,
     seed: int = 42,
-    max_bucket: int = 4096,
-    target_bucket_rows: int = 8192,
     probe_hamming: int = 0,
 ) -> DataFrame:
     """Embedding-cosine near-dup with random-hyperplane (SimHash-for-
@@ -435,9 +410,9 @@ def embedding_near_dup_pairs(
     members and the within-bucket self-join explodes):
 
     - ``n_planes=None`` sizes the plane count from the corpus:
-      ceil(log2(rows / target_bucket_rows)), clamped to [4, 28], so the
-      EXPECTED bucket stays ~target_bucket_rows at any corpus size.
-    - ``max_bucket`` splits any still-degenerate bucket (near-duplicate
+      ceil(log2(rows / TARGET_BUCKET_ROWS)), clamped to [4, 28], so the
+      EXPECTED bucket stays ~TARGET_BUCKET_ROWS at any corpus size.
+    - ``MAX_BUCKET`` splits any still-degenerate bucket (near-duplicate
       pile-ups are exactly where buckets concentrate) into bounded
       sub-buckets instead of silently dropping it
       (``split_oversized_buckets``).
@@ -467,7 +442,7 @@ def embedding_near_dup_pairs(
     dim = dim_row["d"] if dim_row else 0
     if n_planes is None:
         n_rows = df.count()
-        n_planes = min(28, max(4, math.ceil(math.log2(max(n_rows, 1) / target_bucket_rows))))
+        n_planes = min(28, max(4, math.ceil(math.log2(max(n_rows, 1) / TARGET_BUCKET_ROWS))))
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_planes, dim))
     # staged select: the double-cast vector is materialized as its own
@@ -522,7 +497,7 @@ def embedding_near_dup_pairs(
         keyed = keyed.select(
             "id", "v", "nrm", F.explode(keys).alias("bucket")
         )
-    keyed = split_oversized_buckets(keyed, "bucket", "id", max_bucket)
+    keyed = split_oversized_buckets(keyed, "bucket", "id", MAX_BUCKET)
     x, y = keyed.alias("x"), keyed.alias("y")
     cos = V.cosine_with_norms(
         F.col("x.v"), F.col("y.v"), F.col("x.nrm"), F.col("y.nrm")

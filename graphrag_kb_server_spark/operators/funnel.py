@@ -22,14 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def funnel(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Returns one row per funnel step: (step_ix, step, n_users) with
+def funnel(events: DataFrame, steps: list[str]) -> DataFrame:
+    """events(user_id, event_type, ts) → one row per funnel step:
+    (step_ix, step, n_users) with
     n_users = users whose first qualifying step-k event follows their
     step-(k−1) time. Deterministic: counts only, no timestamps
     surfaced."""
@@ -37,8 +32,8 @@ def funnel(
     prev: DataFrame | None = None
     counts: list[tuple[int, str, int]] = []
     for ix, step in enumerate(steps):
-        ev = events.where(F.col(type_col) == step).select(
-            F.col(user_col).alias("_u"), F.col(ts_col).alias("_ts")
+        ev = events.where(F.col("event_type") == step).select(
+            F.col("user_id").alias("_u"), F.col("ts").alias("_ts")
         )
         if prev is not None:
             ev = ev.join(prev, "_u").where(

@@ -66,8 +66,6 @@ def _merge_capped(col: str, k: int):
 def build_nodes(
     mentions: DataFrame,
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    max_source_chunks: int = MAX_SOURCE_CHUNKS,
-    max_descriptions: int = MAX_DESCRIPTIONS,
 ) -> DataFrame:
     """mentions → nodes(name, type, description, source_chunk_ids,
     mention_count, chunk_count). T4 entity merge."""
@@ -90,7 +88,7 @@ def build_nodes(
     # scale salt_buckets with corpus size.)
     partial = salted.groupBy("name", "_salt").agg(
         F.collect_set("type").alias("p_types"),
-        _capped_sorted_set("description", max_descriptions).alias("p_descs"),
+        _capped_sorted_set("description", MAX_DESCRIPTIONS).alias("p_descs"),
         F.count(F.lit(1)).alias("p_cnt"),
         F.collect_set("chunk_id").alias("_chunk_set"),
     ).select(
@@ -98,25 +96,20 @@ def build_nodes(
         # chunk ids are disjoint across salts (salt = hash(chunk_id)),
         # so per-salt distinct counts are additive → exact global count
         F.size("_chunk_set").alias("p_chunk_cnt"),
-        F.slice(F.array_sort("_chunk_set"), 1, max_source_chunks).alias("p_chunks"),
+        F.slice(F.array_sort("_chunk_set"), 1, MAX_SOURCE_CHUNKS).alias("p_chunks"),
     )
     return partial.groupBy("name").agg(
         F.array_min(F.flatten(F.collect_set("p_types"))).alias("type"),
         F.concat_ws(
-            GRAPH_FIELD_SEP, _merge_capped("p_descs", max_descriptions)
+            GRAPH_FIELD_SEP, _merge_capped("p_descs", MAX_DESCRIPTIONS)
         ).alias("description"),
-        _merge_capped("p_chunks", max_source_chunks).alias("source_chunk_ids"),
+        _merge_capped("p_chunks", MAX_SOURCE_CHUNKS).alias("source_chunk_ids"),
         F.sum("p_cnt").alias("mention_count"),
         F.sum("p_chunk_cnt").alias("chunk_count"),
     )
 
 
-def build_edges(
-    mentions: DataFrame,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    max_source_chunks: int = MAX_SOURCE_CHUNKS,
-    max_descriptions: int = MAX_DESCRIPTIONS,
-) -> DataFrame:
+def build_edges(mentions: DataFrame) -> DataFrame:
     """mentions → edges(src, tgt, weight, keywords, description,
     source_chunk_ids, chunk_count). T5 relation merge: undirected key,
     SUMmed weights (reference sums LLM scores)."""
@@ -126,17 +119,17 @@ def build_edges(
         "pred", "description", "chunk_id", "weight",
     )
     salted = undirected.withColumn(
-        "_salt", F.pmod(F.xxhash64("chunk_id"), F.lit(salt_buckets))
+        "_salt", F.pmod(F.xxhash64("chunk_id"), F.lit(DEFAULT_SALT_BUCKETS))
     )
     partial = salted.groupBy("src", "tgt", "_salt").agg(
         F.sum("weight").alias("p_weight"),
         F.collect_set("pred").alias("p_preds"),
-        _capped_sorted_set("description", max_descriptions).alias("p_descs"),
+        _capped_sorted_set("description", MAX_DESCRIPTIONS).alias("p_descs"),
         F.collect_set("chunk_id").alias("_chunk_set"),
     ).select(
         "src", "tgt", "_salt", "p_weight", "p_preds", "p_descs",
         F.size("_chunk_set").alias("p_chunk_cnt"),
-        F.slice(F.array_sort("_chunk_set"), 1, max_source_chunks).alias("p_chunks"),
+        F.slice(F.array_sort("_chunk_set"), 1, MAX_SOURCE_CHUNKS).alias("p_chunks"),
     )
     return partial.groupBy("src", "tgt").agg(
         F.sum("p_weight").alias("weight"),
@@ -145,9 +138,9 @@ def build_edges(
             F.array_sort(F.array_distinct(F.flatten(F.collect_set("p_preds")))),
         ).alias("keywords"),
         F.concat_ws(
-            GRAPH_FIELD_SEP, _merge_capped("p_descs", max_descriptions)
+            GRAPH_FIELD_SEP, _merge_capped("p_descs", MAX_DESCRIPTIONS)
         ).alias("description"),
-        _merge_capped("p_chunks", max_source_chunks).alias("source_chunk_ids"),
+        _merge_capped("p_chunks", MAX_SOURCE_CHUNKS).alias("source_chunk_ids"),
         F.sum("p_chunk_cnt").alias("chunk_count"),
     )
 

@@ -35,19 +35,14 @@ from pyspark.sql import functions as F
 def label_spread(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "src",
-    dst: str = "tgt",
-    weight: str | None = None,
-    node_col: str = "node",
-    label_col: str = "label",
     iters: int = 4,
     alpha: float = 0.8,
 ) -> DataFrame:
-    """Returns (node, pred_label, score) for every edge endpoint;
-    pred_label NULL where no labeled mass ever arrives."""
-    w = F.col(weight).cast("double") if weight else F.lit(1.0)
+    """Unweighted edges(src, tgt) and seeds(node, label) → (node,
+    pred_label, score) for every edge endpoint; pred_label NULL where
+    no labeled mass ever arrives."""
     e = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("t"), w.alias("w")
+        F.col("src").alias("s"), F.col("tgt").alias("t"), F.lit(1.0).alias("w")
     )
     sym = (
         e.unionByName(
@@ -67,14 +62,14 @@ def label_spread(
     # constant (0.2 != float64(1.0 - 0.8) by 5.6e-17 — enough to
     # straddle a rounding boundary once per ~10^6 sums)
     seed = seeds.select(
-        F.col(node_col).alias("node"),
-        F.col(label_col).cast("string").alias("lab"),
+        "node",
+        F.col("label").cast("string").alias("lab"),
         F.lit(1.0 - float(alpha)).alias("sc"),
     ).localCheckpoint(eager=True)
 
     scores = seeds.select(
-        F.col(node_col).alias("node"),
-        F.col(label_col).cast("string").alias("lab"),
+        "node",
+        F.col("label").cast("string").alias("lab"),
         F.lit(1.0).alias("sc"),
     )
     for _ in range(iters):

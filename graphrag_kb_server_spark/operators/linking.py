@@ -25,7 +25,7 @@ Pipeline:
    rewrite nodes and edges onto canonical ids and re-merge.
 
 Skew note: a degenerate band bucket (stopword-ish names) would create
-a quadratic pair explosion; any bucket over ``max_bucket`` is SPLIT
+a quadratic pair explosion; any bucket over ``MAX_BUCKET`` is SPLIT
 into bounded deterministic sub-buckets (operators.dedup.
 split_oversized_buckets) — never silently dropped. The index pipeline
 records how many buckets were split in its metrics sidecar: the driver
@@ -54,46 +54,34 @@ log = logging.getLogger(__name__)
 DEFAULT_THRESHOLD = 0.80
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BANDS = 4  # 4 bands × 2 rows
+#: members of a band bucket above which it is split
+MAX_BUCKET = 64
 
 
-def _banded_names(
-    names: DataFrame,
-    name_col: str,
-    num_hashes: int,
-    bands: int,
-) -> DataFrame:
+def _banded_names(names: DataFrame) -> DataFrame:
     """(name, band) — the staged LSH blocking pipeline (shingles → hex
     digests → signature → band keys → explode), shared by
     candidate_pairs and candidate_bucket_stats so the md5/minhash work
     (the dominant linking cost) has exactly one implementation. Staged
     projections: the hex stage pays ONE md5 per shingle and
     CollapseProject keeps it as its own project because the signature
-    references it num_hashes times."""
-    rows_per_band = num_hashes // bands
+    references it DEFAULT_NUM_HASHES times."""
+    num_hashes, bands = DEFAULT_NUM_HASHES, DEFAULT_BANDS
     sig = (
-        names.select(
-            F.col(name_col).alias("name"),
-            H.char_shingles(F.lower(F.col(name_col))).alias("_sh"),
-        )
+        names.select("name", H.char_shingles(F.lower(F.col("name"))).alias("_sh"))
         .select("name", H.shingle_hexes(F.col("_sh"), num_hashes).alias("_hx"))
         .select("name", H.minhash_from_hexes(F.col("_hx"), num_hashes).alias("_sig"))
-        .select("name", H.lsh_bands(F.col("_sig"), bands, rows_per_band).alias("bands"))
+        .select("name", H.lsh_bands(F.col("_sig"), bands, num_hashes // bands).alias("bands"))
     )
     return sig.select("name", F.explode("bands").alias("band"))
 
 
-def candidate_pairs(
-    names: DataFrame,
-    name_col: str = "name",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    max_bucket: int = 64,
-) -> DataFrame:
+def candidate_pairs(names: DataFrame) -> DataFrame:
     """names → (name_a, name_b) candidate pairs, name_a < name_b."""
-    bucketed = _banded_names(names, name_col, num_hashes, bands)
+    bucketed = _banded_names(names)
     # split pathological buckets before the self-join (LSH guardrail —
     # bounded cost, nothing silently dropped)
-    bucketed = split_oversized_buckets(bucketed, "band", "name", max_bucket)
+    bucketed = split_oversized_buckets(bucketed, "band", "name", MAX_BUCKET)
     a = bucketed.select(F.col("band"), F.col("name").alias("name_a"))
     b = bucketed.select(F.col("band"), F.col("name").alias("name_b"))
     return (
@@ -104,31 +92,23 @@ def candidate_pairs(
     )
 
 
-def candidate_bucket_stats(
-    names: DataFrame,
-    name_col: str = "name",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    max_bucket: int = 64,
-) -> DataFrame:
+def candidate_bucket_stats(names: DataFrame) -> DataFrame:
     """One-row (n_buckets, n_oversized, max_size) for the LSH blocking
-    metrics sidecar — how many band buckets exceeded ``max_bucket`` and
+    metrics sidecar — how many band buckets exceeded ``MAX_BUCKET`` and
     were therefore split. A non-zero n_oversized at production scale is
     the signal to add bands/hashes (smaller collision probability) or
-    raise max_bucket.
+    raise MAX_BUCKET.
 
     This recomputes the band buckets, so the index pipeline calls it
     only when ``canonical_map`` took the distributed path; the driver
     path reports the same row from its own buckets (``bucket_stats``),
     pinned equal to this one by tests/test_r06_driver_parity.py."""
-    bucketed = _banded_names(names, name_col, num_hashes, bands)
-    return oversized_bucket_stats(bucketed, "band", max_bucket)
+    return oversized_bucket_stats(_banded_names(names), "band", MAX_BUCKET)
 
 
 def score_pairs(
     pairs: DataFrame,
     names: DataFrame,
-    name_col: str = "name",
     threshold: float = DEFAULT_THRESHOLD,
 ) -> DataFrame:
     """Attach embedding-cosine scores; keep pairs ≥ threshold."""
@@ -136,7 +116,7 @@ def score_pairs(
     # frame; the pair scorer then pays one dot per pair (cosine would
     # re-aggregate both norms per pair under interpreted HOFs)
     emb = names.select(
-        F.col(name_col).alias("name"), V.to_double(embed_udf(F.col(name_col))).alias("vec")
+        "name", V.to_double(embed_udf(F.col("name"))).alias("vec")
     ).withColumn("nrm", V.norm(F.col("vec")))
     ea = (
         emb.withColumnRenamed("name", "name_a")
@@ -182,8 +162,7 @@ def abbreviation_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
     )
 
 
-def _canonical_map_driver(names_list: list, threshold: float,
-                          include_abbreviations: bool):
+def _canonical_map_driver(names_list: list, threshold: float):
     """Driver-side twin of the LSH → cosine → components pipeline for
     small vocabularies — BIT-IDENTICAL to the distributed operators it
     mirrors (gated to printable-ASCII names so lower()/\\s+ semantics
@@ -191,7 +170,7 @@ def _canonical_map_driver(names_list: list, threshold: float,
 
     - shingles/minhash/bands: the same md5-hex slices
       (functions/hashing.py) via hashlib;
-    - oversized-bucket split: the same ceil(n/max_bucket) +
+    - oversized-bucket split: the same ceil(n/MAX_BUCKET) +
       md5-mod sub-bucketing (operators/dedup.split_oversized_buckets);
     - scoring: the SAME ``embed_text`` the embed_udf slot calls, with
       the dot/norm folds accumulated left-to-right in float64 exactly
@@ -213,7 +192,6 @@ def _canonical_map_driver(names_list: list, threshold: float,
     from ..functions.embedding import embed_text
 
     rows_per_band = DEFAULT_NUM_HASHES // DEFAULT_BANDS
-    max_bucket = 64
 
     def shingles(nm: str) -> list[str]:
         s = nm.lower()
@@ -233,13 +211,13 @@ def _canonical_map_driver(names_list: list, threshold: float,
     sizes = [len(members) for members in buckets.values()]
     stats = {
         "n_buckets": len(sizes),
-        "n_oversized": sum(n > max_bucket for n in sizes) if sizes else None,
+        "n_oversized": sum(n > MAX_BUCKET for n in sizes) if sizes else None,
         "max_size": max(sizes, default=None),
     }
     pairs: set = set()
     for members in buckets.values():
-        if len(members) > max_bucket:
-            nsub = -(-len(members) // max_bucket)
+        if len(members) > MAX_BUCKET:
+            nsub = -(-len(members) // MAX_BUCKET)
             subs: dict = defaultdict(list)
             for nm in members:
                 subs[
@@ -275,23 +253,20 @@ def _canonical_map_driver(names_list: list, threshold: float,
         if dot / denom >= threshold:
             linked.append((a, b))
 
-    if include_abbreviations:
-        import re
+    import re
 
-        def _initials(nm: str) -> str:
-            return "".join(
-                p[:1] for p in re.split(r"\s+", nm)
-            ).upper()
+    def _initials(nm: str) -> str:
+        return "".join(p[:1] for p in re.split(r"\s+", nm)).upper()
 
-        by_initials: dict = defaultdict(list)
-        for nm in names_list:
-            by_initials[_initials(nm)].append(nm)
-        for nm in names_list:
-            if " " in nm:
-                continue
-            for exp in by_initials.get(nm.upper(), ()):  # noqa: B909
-                if exp != nm:
-                    linked.append((nm, exp))
+    by_initials: dict = defaultdict(list)
+    for nm in names_list:
+        by_initials[_initials(nm)].append(nm)
+    for nm in names_list:
+        if " " in nm:
+            continue
+        for exp in by_initials.get(nm.upper(), ()):  # noqa: B909
+            if exp != nm:
+                linked.append((nm, exp))
 
     parent: dict = {}
 
@@ -319,9 +294,7 @@ def _canonical_map_driver(names_list: list, threshold: float,
 
 def canonical_map(
     nodes: DataFrame,
-    name_col: str = "name",
     threshold: float = DEFAULT_THRESHOLD,
-    include_abbreviations: bool = True,
     driver_cap: int = 100_000,
     bucket_stats: dict | None = None,
 ) -> DataFrame:
@@ -339,7 +312,7 @@ def canonical_map(
     the rows cross to the JVM as Arrow batches, and fills
     ``bucket_stats`` (when given) with the ``candidate_bucket_stats``
     row of its LSH buckets. The distributed path leaves it empty."""
-    names = nodes.select(F.col(name_col).alias("name")).distinct()
+    names = nodes.select("name").distinct()
     probe = collect_if_small(names, driver_cap, "canonical_map")
     if probe is not None:
         names_list = probe["name"].tolist()
@@ -350,9 +323,7 @@ def canonical_map(
             import pandas as pd
             from pyspark.sql import types as T
 
-            out, stats = _canonical_map_driver(
-                names_list, threshold, include_abbreviations
-            )
+            out, stats = _canonical_map_driver(names_list, threshold)
             if bucket_stats is not None:
                 bucket_stats.update(stats)
             dt = names.schema["name"].dataType
@@ -368,9 +339,7 @@ def canonical_map(
         log.info("canonical_map: non-ASCII names -> distributed path")
     pairs = score_pairs(candidate_pairs(names), names, threshold=threshold).select(
         "name_a", "name_b"
-    )
-    if include_abbreviations:
-        pairs = pairs.unionByName(abbreviation_pairs(names)).distinct()
+    ).unionByName(abbreviation_pairs(names)).distinct()
     comp = connected_components(pairs, src="name_a", dst="name_b")
     # canonical surface form = the LONGEST member of the component
     # (ties: lexicographically smallest). The component label itself is

@@ -31,6 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: the stupid-backoff factor α of trigram_backoff_nll
+ALPHA = 0.4
+#: BM25's term-frequency saturation k1 and length normalization b
+K1 = 1.2
+B = 0.75
+
 
 def tokens_col(text_col) -> F.Column:
     """Whitespace tokens of lowercased text, empties removed — the
@@ -84,7 +90,6 @@ def trigram_backoff_nll(
     id_col: str,
     text_col: str,
     train: DataFrame | None = None,
-    alpha: float = 0.4,
 ) -> DataFrame:
     """Per-document NLL under a trigram LM with STUPID BACKOFF (Brants
     et al. 2007 — the web-scale LM recipe: no discounting to tune,
@@ -137,7 +142,7 @@ def trigram_backoff_nll(
     c_u = uni.groupBy("w3").agg(F.count(F.lit(1)).alias("_cu"))
     n_tot = uni.agg(F.count(F.lit(1)).cast("double").alias("_nt"))
 
-    a = F.lit(float(alpha))
+    a = F.lit(ALPHA)
     score = F.when(
         F.coalesce(F.col("_c3"), F.lit(0)) > 0,
         F.col("_c3") / F.col("_c12"),
@@ -178,8 +183,6 @@ def bm25_topk(
     text_col: str,
     query: str,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 lexical retrieval: top-k documents for a query string —
     the lexical twin of the engine's vector top-k family (the
@@ -231,10 +234,10 @@ def bm25_topk(
                     + (F.col("_nn") - F.col("_df") + 0.5)
                     / (F.col("_df") + 0.5)
                 )
-                * (F.col("_tf") * (k1 + 1.0))
+                * (F.col("_tf") * (K1 + 1.0))
                 / (
                     F.col("_tf")
-                    + k1 * (1.0 - b + b * F.col("_dl") / F.col("_avgdl"))
+                    + K1 * (1.0 - B + B * F.col("_dl") / F.col("_avgdl"))
                 )
             ).alias("_s"),
         )

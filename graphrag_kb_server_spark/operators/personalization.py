@@ -95,13 +95,13 @@ def match_and_score(
     return scored.where(F.col("score") > threshold).dropDuplicates(["entity_id"])
 
 
-def sort_by_relevance(docs: DataFrame, score_col: str = "relevancy_score") -> DataFrame:
-    """P6 — map relevance labels to points and sort desc
+def sort_by_relevance(docs: DataFrame) -> DataFrame:
+    """P6 — map the ``relevancy_score`` labels to points and sort desc
     (search_documents.py:70-75, model/search/search.py:19-25)."""
     points = F.create_map(
         *[x for k, v in RELEVANCE_POINTS.items() for x in (F.lit(k), F.lit(v))]
     )
-    return docs.withColumn("_pts", points[F.col(score_col)]).orderBy(
+    return docs.withColumn("_pts", points[F.col("relevancy_score")]).orderBy(
         F.desc("_pts"), "file_path"
     ).drop("_pts")
 

@@ -54,13 +54,10 @@ def weighted_polling_pick(
     chunks_per_entity: DataFrame,
     entity_quotas: DataFrame,
     entity_col: str = "name",
-    chunk_order_col: str = "occurrence",
-    descending: bool = True,
 ) -> DataFrame:
-    """Keep top-quota chunks per entity by the entity's chunk ordering
-    (occurrence desc in the reference, lightrag_search.py:1389-1464)."""
-    order = F.desc(chunk_order_col) if descending else F.asc(chunk_order_col)
-    w = Window.partitionBy(entity_col).orderBy(order, "chunk_id")
+    """Keep top-quota chunks per entity by ``occurrence`` desc, as the
+    reference does (lightrag_search.py:1389-1464)."""
+    w = Window.partitionBy(entity_col).orderBy(F.desc("occurrence"), "chunk_id")
     return (
         chunks_per_entity.join(
             F.broadcast(entity_quotas.select(entity_col, "quota")), entity_col

@@ -26,10 +26,11 @@ REPORT_SCHEMA = (
     "rank double"
 )
 
+#: members per community in the report prompt payload
+MAX_MEMBERS = 10
 
-def community_inputs(
-    assignments: DataFrame, nodes: DataFrame, max_members: int = 10
-) -> DataFrame:
+
+def community_inputs(assignments: DataFrame, nodes: DataFrame) -> DataFrame:
     """(cluster, level, size, member_names ARRAY, member_descs ARRAY) —
     the per-community prompt payload; members capped deterministically
     by degree desc then name (the reference prompts with member node
@@ -43,12 +44,12 @@ def community_inputs(
         F.desc("degree"), "node"
     )
     top = members.withColumn("_rk", F.row_number().over(w)).where(
-        F.col("_rk") <= max_members
+        F.col("_rk") <= MAX_MEMBERS
     )
     return top.groupBy("level", "cluster").agg(
         F.count(F.lit(1)).alias("n_top"),
         F.array_sort(F.collect_list("node")).alias("member_names"),
-        F.slice(F.array_sort(F.collect_list("description")), 1, max_members).alias(
+        F.slice(F.array_sort(F.collect_list("description")), 1, MAX_MEMBERS).alias(
             "member_descs"
         ),
     ).join(

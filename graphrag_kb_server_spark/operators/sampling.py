@@ -96,16 +96,15 @@ def train_val_split(
     id_col: str,
     val_fraction: float = 0.01,
     seed: str = "42",
-    split_col: str = "split",
 ) -> DataFrame:
-    """Stable train/val assignment: adds ``split_col`` ∈ {train, val}.
+    """Stable train/val assignment: adds ``split`` ∈ {train, val}.
 
     The same document lands in the same split in every rerun and in
     every engine that computes the same md5 slice — the contamination
     guarantee a held-out set needs. Row-local; no shuffle.
     """
     return df.withColumn(
-        split_col,
+        "split",
         F.when(
             _unit_hash(F.col(id_col), _op_seed("split", seed))
             < F.lit(float(val_fraction)),
@@ -120,7 +119,6 @@ def pack_sequences(
     tokens_col: str,
     budget: int,
     n_buckets: int = 1024,
-    seed: str = "42",
 ) -> DataFrame:
     """Training-sequence packing: assign each document to a
     (bucket, bin_ix) so that each bin's token total fits ``budget``.
@@ -129,7 +127,7 @@ def pack_sequences(
     scale-correct decomposition is LOCAL first-fit-decreasing inside
     deterministic hash buckets:
 
-    - **bucket** = md5-slice(id, seed) mod ``n_buckets`` — a row-local
+    - **bucket** = md5-slice(id, "42") mod ``n_buckets`` — a row-local
       assignment, so the only shuffle is the one ``applyInPandas``
       needs to co-locate each bucket (one exchange on a uniform key;
       bucket count, not document skew, sets task balance).
@@ -137,7 +135,7 @@ def pack_sequences(
       placed first-fit into the lowest-index bin with room — classic
       FFD (≤ 11/9·OPT + 1 bins per bucket). Oversize documents
       (tokens ≥ budget) get a dedicated bin each, flagged.
-    - **deterministic end to end**: same (id, seed) → same bucket; the
+    - **deterministic end to end**: same id → same bucket; the
       in-bucket order is a total order → same bins on every run and
       engine, which is what makes packed-corpus reproducibility and
       resume possible.
@@ -153,7 +151,7 @@ def pack_sequences(
     src = docs.select(
         F.col(id_col).cast("string").alias("id"),
         F.col(tokens_col).cast("long").alias("tokens"),
-        (F.pmod(_int_hash(F.col(id_col), _op_seed("pack", seed)), F.lit(n_buckets)))
+        (F.pmod(_int_hash(F.col(id_col), _op_seed("pack", "42")), F.lit(n_buckets)))
         .cast("int")
         .alias("bucket"),
     )
@@ -262,7 +260,6 @@ def domain_cap(
     cap: int = 100,
     seed: str = "42",
     margin: float = 8.0,
-    domain_col: str | None = None,
 ) -> DataFrame:
     """Per-domain cap: keep at most ``cap`` documents per domain — the
     Common-Crawl-style curation pass that stops a single mega-host from
@@ -296,11 +293,7 @@ def domain_cap(
     """
     from pyspark.sql import Window
 
-    dom = (
-        F.col(domain_col) if domain_col is not None
-        else url_domain(F.col(url_col))
-    )
-    d = docs.withColumn("domain", dom).withColumn(
+    d = docs.withColumn("domain", url_domain(F.col(url_col))).withColumn(
         "_h", _int_hash(F.col(id_col), _op_seed("domcap", seed))
     )
     counts = d.groupBy("domain").agg(F.count(F.lit(1)).alias("_n"))
@@ -347,7 +340,6 @@ def group_split(
     group_col: str,
     fractions: dict[str, float],
     seed: str = "42",
-    split_col: str = "split",
 ) -> DataFrame:
     """Group-aware split: EVERY row of a group (domain, author, site)
     lands in the same split — the leakage guard a plain per-row split
@@ -375,7 +367,7 @@ def group_split(
         )
     # float accumulation can land acc at 0.9999...: close the interval
     last = sorted(fractions)[-1]
-    return df.withColumn(split_col, expr.otherwise(F.lit(last)))
+    return df.withColumn("split", expr.otherwise(F.lit(last)))
 
 
 def weighted_sample(
@@ -418,17 +410,16 @@ def split_leak_audit(
     split_df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    split_col: str = "split",
-    a_col: str = "a",
-    b_col: str = "b",
     score_col: str | None = None,
 ) -> DataFrame:
     """Contamination audit: held-out rows whose near-duplicate partner
     landed in train — the leak every dedup-after-split pipeline must
     check before trusting its eval numbers.
 
-    ``pairs`` is any undirected near-dup pair frame (minhash, SimHash,
-    embedding-cosine, SemDeDup — they all emit (a, b[, score])).
+    ``split_df`` carries the ``split`` column of train_val_split or
+    group_split. ``pairs`` is any undirected near-dup pair frame
+    (minhash, SimHash, embedding-cosine, SemDeDup) with columns
+    (a, b) and an optional ``score_col``.
     Returns (id, n_train_neighbors, max_score) for each val row with
     at least one train partner. Pure joins + one aggregation: the pair
     frame is symmetrized (union of both directions), each side joins
@@ -439,16 +430,16 @@ def split_leak_audit(
     """
     score = F.col(score_col) if score_col else F.lit(None).cast("double")
     sym = pairs.select(
-        F.col(a_col).alias("_x"), F.col(b_col).alias("_y"),
+        F.col("a").alias("_x"), F.col("b").alias("_y"),
         score.alias("_s"),
     ).unionByName(
         pairs.select(
-            F.col(b_col).alias("_x"), F.col(a_col).alias("_y"),
+            F.col("b").alias("_x"), F.col("a").alias("_y"),
             score.alias("_s"),
         )
     )
     splits = split_df.select(
-        F.col(id_col).alias("_id"), F.col(split_col).alias("_split")
+        F.col(id_col).alias("_id"), F.col("split").alias("_split")
     )
     val_side = splits.where(F.col("_split") == "val").select(
         F.col("_id").alias("_x")

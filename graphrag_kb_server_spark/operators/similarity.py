@@ -29,20 +29,19 @@ def brute_force_topk_batch(
     k: int,
     id_col: str,
     query_id_col: str,
-    vec_col: str = "embedding",
-    query_vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k for EVERY query row: broadcast(queries) × table →
-    per-query row_number ≤ k. Right plan when |queries| is small; the
+    """Exact top-k for EVERY query row, both frames carrying an
+    ``embedding`` column: broadcast(queries) × table → per-query
+    row_number ≤ k. Right plan when |queries| is small; the
     broadcast keeps the big table un-shuffled."""
     # norms precomputed per side: the scoring join then pays one dot
     # aggregate per (row, query) instead of five (see cosine_with_norms)
     q = queries.select(
-        F.col(query_id_col).alias("qid"), V.to_double(F.col(query_vec_col)).alias("qv")
+        F.col(query_id_col).alias("qid"), V.to_double(F.col("embedding")).alias("qv")
     ).withColumn("qn", V.norm(F.col("qv")))
     scored = (
         table.select(
-            F.col(id_col).alias("id"), V.to_double(F.col(vec_col)).alias("v")
+            F.col(id_col).alias("id"), V.to_double(F.col("embedding")).alias("v")
         )
         .withColumn("vn", V.norm(F.col("v")))
         .join(F.broadcast(q))
@@ -98,15 +97,13 @@ def ivf_topk_batch(
     k: int,
     id_col: str,
     query_id_col: str,
-    vec_col: str = "embedding",
-    query_vec_col: str = "embedding",
     n_planes: int | None = 4,
     seed: int = 42,
     target_cell_rows: int = 4096,
     probe_bits: int = 0,
 ) -> DataFrame:
-    """Approximate batched top-k: both sides keyed by hyperplane-sign
-    cell; candidates = same-cell rows only (2^n_planes cells). Recall
+    """Approximate batched top-k over the ``embedding`` columns: both
+    sides keyed by hyperplane-sign cell; candidates = same-cell rows only (2^n_planes cells). Recall
     rises as n_planes falls; n_planes=0 degenerates to exact.
 
     ``n_planes=None`` auto-sizes the plane count from the corpus the
@@ -123,14 +120,14 @@ def ivf_topk_batch(
     symmetric masked-key trick when the sides are asymmetric); cost is
     an (n_planes+1)× bigger broadcast of the tiny query table, and
     each probe cell is distinct so no candidate dedup is needed."""
-    dim_row = table.select(F.size(vec_col).alias("d")).first()
+    dim_row = table.select(F.size("embedding").alias("d")).first()
     dim = dim_row["d"] if dim_row else 0
     if n_planes is None:
         n_planes = auto_n_planes(table.count(), target_cell_rows)
     planes = np.random.default_rng(seed).standard_normal((n_planes, dim))
     t = (
         table.select(
-            F.col(id_col).alias("id"), V.to_double(F.col(vec_col)).alias("v")
+            F.col(id_col).alias("id"), V.to_double(F.col("embedding")).alias("v")
         )
         .withColumn("cell", _cell_expr(F.col("v"), planes))
         .withColumn("vn", V.norm(F.col("v")))
@@ -138,7 +135,7 @@ def ivf_topk_batch(
     q = (
         queries.select(
             F.col(query_id_col).alias("qid"),
-            V.to_double(F.col(query_vec_col)).alias("qv"),
+            V.to_double(F.col("embedding")).alias("qv"),
         )
         .withColumn("cell", _cell_expr(F.col("qv"), planes))
         .withColumn("qn", V.norm(F.col("qv")))

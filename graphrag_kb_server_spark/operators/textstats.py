@@ -70,13 +70,15 @@ def _char_count(text_col: Column, char_class: str) -> Column:
 #: regardless of document length, and 600 chars of running text carry
 #: ample script/stopword signal
 LANG_ID_SAMPLE_CHARS = 600
+#: the quantiles corpus_profile reports
+QUANTILES = (0.25, 0.5, 0.75, 0.95)
 
 
-def language_id(text_col: Column, sample_chars: int = LANG_ID_SAMPLE_CHARS) -> Column:
+def language_id(text_col: Column) -> Column:
     """Best-scoring language code, 'und' when nothing hits.
 
     Two-stage web-scale cascade, all pure Catalyst, over the first
-    ``sample_chars`` characters:
+    ``LANG_ID_SAMPLE_CHARS`` characters:
     1. dominant-SCRIPT detection — when non-Latin script characters
        outnumber Latin letters, classify by the winning Unicode block
        (zh/ja/ko/ru/ar/hi/el; Han with any kana present → ja, since
@@ -89,7 +91,7 @@ def language_id(text_col: Column, sample_chars: int = LANG_ID_SAMPLE_CHARS) -> C
     non-ASCII chars every script count is zero and the cascade falls
     through to the marker branch anyway.
     """
-    text_col = F.substring(text_col, 1, sample_chars)
+    text_col = F.substring(text_col, 1, LANG_ID_SAMPLE_CHARS)
     lower = F.lower(text_col)
     script_counts = {
         code: _char_count(text_col, rng)
@@ -134,7 +136,6 @@ def add_language_id(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "lang_pred",
-    sample_chars: int = LANG_ID_SAMPLE_CHARS,
 ) -> DataFrame:
     """Staged (fast) form of :func:`language_id` — identical result.
 
@@ -147,7 +148,7 @@ def add_language_id(
     CASE then only references cheap int columns. Same cascade, same
     tie-breaks, ~50× faster.
     """
-    t = F.substring(F.col(text_col), 1, sample_chars)
+    t = F.substring(F.col(text_col), 1, LANG_ID_SAMPLE_CHARS)
     out = df.withColumn("_lid_t", t)
     out = out.withColumn(
         "_lid_words",
@@ -290,14 +291,14 @@ def tfidf_top_terms(
     id_col: str,
     text_col: str,
     k: int = 5,
-    min_term_len: int = 2,
 ) -> DataFrame:
     """Per-document top-``k`` terms by tf-idf over the whole corpus —
     the corpus-statistics keyword extractor (vs Q1's per-query regex
-    keywords). Tokens are lowercase ``[a-z0-9]`` runs (the tokenizer
-    shared with decontamination/hot-ngrams); smoothed idf =
-    ``ln((N+1)/(df+1)) + 1`` (scikit-learn's convention) so corpus-
-    universal terms still score, and ties break on the term string.
+    keywords). Terms are the lowercase ``[a-z0-9]`` runs of 2+
+    characters (the tokenizer shared with decontamination/hot-ngrams);
+    smoothed idf = ``ln((N+1)/(df+1)) + 1`` (scikit-learn's convention)
+    so corpus-universal terms still score, and ties break on the term
+    string.
 
     Returns ``(id, term, tf, df, tfidf, term_rank)``, ≤ k rows/doc.
 
@@ -314,7 +315,7 @@ def tfidf_top_terms(
 
     toks = F.filter(
         F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-        lambda t: F.length(t) >= min_term_len,
+        lambda t: F.length(t) >= 2,
     )
     pairs = (
         df.select(F.col(id_col).alias("id"), F.explode(toks).alias("term"))
@@ -402,7 +403,6 @@ def corpus_profile(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    quantiles: tuple[float, ...] = (0.25, 0.5, 0.75, 0.95),
 ) -> DataFrame:
     """Per-group distribution profile: count / min / max / mean and
     EXACT linear-interpolation quantiles of ``value_col`` — the
@@ -416,18 +416,18 @@ def corpus_profile(
     ``approx_percentile`` when a 1e-4 relative error is acceptable;
     the profile contract stays the same.
 
-    Returns (group, n, vmin, vmax, mean, q_25, q_50, ... one column
-    per requested quantile, 4-dp rounded).
+    Returns (group, n, vmin, vmax, mean, q_25, q_5, q_75, q_95), the
+    quantiles of ``QUANTILES`` 4-dp rounded.
     """
     pct = F.percentile(
         F.col(value_col).cast("double"),
-        F.array(*[F.lit(float(q)) for q in quantiles]),
+        F.array(*[F.lit(float(q)) for q in QUANTILES]),
     )
     qcols = [
         F.round(F.element_at(F.col("_qs"), i + 1), 4).alias(
             f"q_{str(q).replace('0.', '')}"
         )
-        for i, q in enumerate(quantiles)
+        for i, q in enumerate(QUANTILES)
     ]
     return (
         df.groupBy(group_col)

@@ -8,18 +8,14 @@ training tractable at web scale:
 1. **word_freqs** — one distributed pass over the corpus: lowercase,
    whitespace-split, groupBy(word).count(). Shuffles the DISTINCT word
    table, not the corpus; map-side partial aggregation compresses each
-   partition to its own vocabulary first. ``min_freq`` is the scale
-   guard: hapax legomena (the long tail that dominates distinct-word
-   counts on web text) are dropped before the table leaves the
-   executors.
+   partition to its own vocabulary first.
 2. **bpe_train** — the merge loop runs driver-side over the collected
    (word, freq) table. This is NOT a scale compromise: the frequency
    table IS the sufficient statistic for BPE (identical merges to a
    corpus-order pass), it is bounded (``max_words`` errors rather than
    silently truncating), and each merge mutates a few thousand symbol
    sequences — work that would be pure scheduling overhead as a Spark
-   job per merge. 10^12 documents with min_freq=O(10) still collapse
-   to a few million distinct words.
+   job per merge.
 3. **bpe_encode** — applying the trained merges is distributed again,
    with the distinct-word trick: encode each DISTINCT word once (a
    Pandas UDF over the deduplicated word table — Arrow-batched, never
@@ -48,6 +44,13 @@ from pyspark.sql import functions as F
 
 #: end-of-word sentinel symbol (kept out of the in-word character set)
 EOW = "</w>"
+#: bound on the collected distinct-word table (errors, never truncates)
+MAX_WORDS = 5_000_000
+#: unigram seed vocabulary: longest piece, min piece count, multi-char
+#: pieces kept
+MAX_PIECE_LEN = 6
+UNIGRAM_MIN_FREQ = 2
+MAX_VOCAB = 2000
 
 
 def words_of(text_col: Column) -> Column:
@@ -58,20 +61,15 @@ def words_of(text_col: Column) -> Column:
     )
 
 
-def word_freqs(
-    df: DataFrame, text_col: str, min_freq: int = 1
-) -> DataFrame:
+def word_freqs(df: DataFrame, text_col: str) -> DataFrame:
     """(word, freq) over the corpus — the compressed sufficient
     statistic BPE trains on. One explode + one partial-aggregated
     groupBy; the corpus itself is never shuffled."""
-    out = (
+    return (
         df.select(F.explode(words_of(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
     )
-    if min_freq > 1:
-        out = out.where(F.col("freq") >= min_freq)
-    return out
 
 
 def _pair_counts(seqs: dict[str, list[str]], freqs: dict[str, int]):
@@ -130,9 +128,7 @@ def bpe_merges(
     spark_df: DataFrame,
     text_col: str,
     num_merges: int,
-    min_freq: int = 1,
-    min_pair_freq: int = 2,
-    max_words: int = 5_000_000,
+    max_words: int = MAX_WORDS,
 ) -> DataFrame:
     """Train BPE over a corpus DataFrame → (rank, left, right, merged,
     freq) merge table.
@@ -140,19 +136,17 @@ def bpe_merges(
     The distributed part is the word-frequency pass; the merge loop is
     driver-side over the collected frequency table (see module
     docstring — the table is the sufficient statistic and is bounded).
-    ``max_words`` ERRORS when the distinct-word table exceeds it:
-    raise ``min_freq`` rather than silently truncating the vocabulary.
+    ``max_words`` ERRORS when the distinct-word table exceeds it
+    rather than silently truncating the vocabulary.
     """
-    wf = word_freqs(spark_df, text_col, min_freq=min_freq)
-    pdf = wf.toPandas()  # Arrow batch, not Rows
+    pdf = word_freqs(spark_df, text_col).toPandas()  # Arrow batch, not Rows
     if len(pdf) > max_words:
         raise ValueError(
             f"bpe_merges: {len(pdf)} distinct words exceed "
-            f"max_words={max_words}; raise min_freq (the web-scale "
-            "long-tail guard) instead of truncating"
+            f"max_words={max_words}; refusing to truncate"
         )
     merges = bpe_train_from_freqs(
-        list(zip(pdf["word"], pdf["freq"])), num_merges, min_pair_freq
+        list(zip(pdf["word"], pdf["freq"])), num_merges
     )
     return spark_df.sparkSession.createDataFrame(
         merges, "rank int, left string, right string, merged string, freq bigint"
@@ -268,34 +262,30 @@ def bpe_encode(
 _UNK_LOGP = -100.0
 
 
-def unigram_seed_vocab(
-    freq_rows: list[tuple[str, int]],
-    max_piece_len: int = 6,
-    min_freq: int = 2,
-    max_vocab: int = 2000,
-) -> dict[str, int]:
+def unigram_seed_vocab(freq_rows: list[tuple[str, int]]) -> dict[str, int]:
     """Seed vocabulary: every single character (coverage guarantee)
-    plus the ``max_vocab`` most frequent substrings of length
-    2..max_piece_len (occurrence-weighted by word frequency), ties to
-    the lexicographically smaller piece."""
+    plus the ``MAX_VOCAB`` most frequent substrings of length
+    2..MAX_PIECE_LEN seen at least ``UNIGRAM_MIN_FREQ`` times
+    (occurrence-weighted by word frequency), ties to the
+    lexicographically smaller piece."""
     counts: dict[str, int] = {}
     for w, f in freq_rows:
         n = len(w)
         for i in range(n):
-            for j in range(i + 1, min(i + max_piece_len, n) + 1):
+            for j in range(i + 1, min(i + MAX_PIECE_LEN, n) + 1):
                 p = w[i:j]
                 counts[p] = counts.get(p, 0) + f
     vocab = {p: c for p, c in counts.items() if len(p) == 1}
     multi = sorted(
-        ((p, c) for p, c in counts.items() if len(p) > 1 and c >= min_freq),
+        ((p, c) for p, c in counts.items() if len(p) > 1 and c >= UNIGRAM_MIN_FREQ),
         key=lambda t: (-t[1], t[0]),
-    )[:max_vocab]
+    )[:MAX_VOCAB]
     vocab.update(dict(multi))
     return vocab
 
 
 def viterbi_segment(
-    word: str, logp: dict[str, float], max_piece_len: int = 6
+    word: str, logp: dict[str, float], max_piece_len: int = MAX_PIECE_LEN
 ) -> list[str]:
     """Best segmentation under piece log-probs. Deterministic
     tie-break: at equal score the LONGEST candidate piece ending at a
@@ -327,11 +317,7 @@ def viterbi_segment(
 
 
 def unigram_train_from_freqs(
-    freq_rows: list[tuple[str, int]],
-    iters: int = 4,
-    max_piece_len: int = 6,
-    min_freq: int = 2,
-    max_vocab: int = 2000,
+    freq_rows: list[tuple[str, int]], iters: int = 4
 ) -> list[tuple[int, str, int, float]]:
     """SentencePiece-style unigram LM via hard EM over the (word,
     freq) sufficient statistic: E-step = Viterbi-segment every distinct
@@ -348,13 +334,13 @@ def unigram_train_from_freqs(
     import math
 
     rows = sorted(freq_rows)
-    counts = unigram_seed_vocab(rows, max_piece_len, min_freq, max_vocab)
+    counts = unigram_seed_vocab(rows)
     total = float(sum(counts.values()))
     logp = {p: math.log(c / total) for p, c in counts.items()}
     for _ in range(iters):
         new_counts: dict[str, float] = {}
         for w, f in rows:
-            for piece in viterbi_segment(w, logp, max_piece_len):
+            for piece in viterbi_segment(w, logp):
                 new_counts[piece] = new_counts.get(piece, 0.0) + f
         # coverage floor: characters never pruned
         for p in counts:
@@ -374,30 +360,20 @@ def unigram_vocab(
     df: DataFrame,
     text_col: str,
     iters: int = 4,
-    max_piece_len: int = 6,
-    min_freq: int = 2,
-    max_vocab: int = 2000,
-    min_word_freq: int = 1,
-    max_words: int = 5_000_000,
 ) -> DataFrame:
     """Distributed wrapper: the (word, freq) aggregation runs in Spark
     (the corpus never reaches the driver); the EM loop runs over the
-    collected frequency table. ``min_word_freq``/``max_words`` are the
-    same web-scale long-tail guard ``bpe_merges`` applies: ERROR when
-    the distinct-word table exceeds the bound — raise ``min_word_freq``
-    rather than silently truncating. Returns (rank, piece, count,
-    logp)."""
-    wf = word_freqs(df, text_col, min_freq=min_word_freq)
-    pdf = wf.toPandas()  # Arrow batch, not Rows
-    if len(pdf) > max_words:
+    collected frequency table. ERRORS when the distinct-word table
+    exceeds ``MAX_WORDS``, as ``bpe_merges`` does, rather than silently
+    truncating. Returns (rank, piece, count, logp)."""
+    pdf = word_freqs(df, text_col).toPandas()  # Arrow batch, not Rows
+    if len(pdf) > MAX_WORDS:
         raise ValueError(
             f"unigram_vocab: {len(pdf)} distinct words exceed "
-            f"max_words={max_words}; raise min_word_freq (the "
-            "web-scale long-tail guard) instead of truncating"
+            f"MAX_WORDS={MAX_WORDS}; refusing to truncate"
         )
     model = unigram_train_from_freqs(
-        list(zip(pdf["word"], (int(f) for f in pdf["freq"]))),
-        iters, max_piece_len, min_freq, max_vocab,
+        list(zip(pdf["word"], (int(f) for f in pdf["freq"]))), iters
     )
     return df.sparkSession.createDataFrame(
         model, "rank int, piece string, count bigint, logp double"
@@ -409,7 +385,6 @@ def unigram_encode(
     id_col: str,
     text_col: str,
     vocab: DataFrame,
-    max_piece_len: int | None = None,
 ) -> DataFrame:
     """Viterbi-tokenize a corpus under a trained unigram vocabulary —
     the same distinct-word architecture as ``bpe_encode``: each
@@ -421,9 +396,7 @@ def unigram_encode(
     # derive the lattice width from the trained vocab: an independent
     # encode-time parameter could silently exclude the vocab's longest
     # pieces from every segmentation
-    if max_piece_len is None:
-        max_piece_len = max((len(p) for p in logp), default=1)
-    mpl = max_piece_len
+    mpl = max((len(p) for p in logp), default=1)
 
     @F.pandas_udf("string")
     def encode_udf(words: pd.Series) -> pd.Series:

@@ -105,15 +105,14 @@ def triangle_counts(
     )
 
 
-def adamic_adar(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "tgt",
-    top_k: int = 50,
-    max_hub_degree: int = 10_000,
-) -> DataFrame:
-    """Adamic–Adar link prediction: for non-adjacent pairs (a, b),
-    ``AA = Σ_{w ∈ N(a)∩N(b)} 1/ln(deg(w))`` — the classic
+#: middle nodes above this degree are left out of adamic_adar's wedges
+MAX_HUB_DEGREE = 10_000
+
+
+def adamic_adar(edges: DataFrame, top_k: int = 50) -> DataFrame:
+    """Adamic–Adar link prediction over edges(src, tgt): for
+    non-adjacent pairs (a, b), ``AA = Σ_{w ∈ N(a)∩N(b)} 1/ln(deg(w))``
+    — the classic
     common-neighbor score (rare shared neighbors count more). Returns
     the ``top_k`` candidate links (a < b, no existing edge) by
     (score desc, a, b), score 6-dp rounded.
@@ -121,13 +120,13 @@ def adamic_adar(
     Scale shape: candidates come from the wedge join through the
     common neighbor (two key-partitioned joins + one pair-keyed
     aggregation — the triangle-counting machinery pointed at OPEN
-    wedges). Wedge volume is Σ deg(w)², so ``max_hub_degree`` excludes
+    wedges). Wedge volume is Σ deg(w)², so ``MAX_HUB_DEGREE`` excludes
     super-hubs from the middle position — the standard cut, and nearly
     free on the score: a 10^4-degree hub contributes 1/ln(10^4) ≈ 0.1
     to every one of its 10^8 pairs, all noise. Degree-1 middles are
     excluded by construction (they cannot join two distinct nodes).
     """
-    sym, deg = _sym_deg(edges, src, dst)
+    sym, deg = _sym_deg(edges, "src", "tgt")
     # checkpoint the wedge input: the self-join below would otherwise
     # recompute the degree aggregation + join on both sides
     mid = (
@@ -136,7 +135,7 @@ def adamic_adar(
             deg.select(
                 F.col("a").alias("w"), F.col("d").alias("dw")
             ).where(
-                (F.col("dw") >= 2) & (F.col("dw") <= max_hub_degree)
+                (F.col("dw") >= 2) & (F.col("dw") <= MAX_HUB_DEGREE)
             ),
             "w",
         )

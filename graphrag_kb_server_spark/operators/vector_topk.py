@@ -42,14 +42,13 @@ def cosine_topk(
     table: DataFrame,
     query_vec: np.ndarray | list[float],
     k: int,
-    vec_col: str = "embedding",
     score_alias: str = "score",
     exclude_key: tuple[str, str] | None = None,
 ) -> DataFrame:
-    """Top-k rows by cosine(query, vec_col). ``exclude_key=(col, value)``
+    """Top-k rows by cosine(query, embedding). ``exclude_key=(col, value)``
     drops the query row itself (the reference's k+1-then-drop-self)."""
     out = table.withColumn(
-        score_alias, V.cosine_with_query(V.to_double(F.col(vec_col)), query_vec)
+        score_alias, V.cosine_with_query(V.to_double(F.col("embedding")), query_vec)
     )
     if exclude_key is not None:
         col, val = exclude_key

@@ -12,7 +12,7 @@ service/lightrag/lightrag_related_topics.py:20-43).
 Spark design: ALL walks advance simultaneously as one DataFrame of
 (walk_id, cur_node) joined per step against the adjacency list — an
 iterative hash join, not a driver loop over walks. Randomness is
-deterministic: the step choice is ``md5(seed, walk_id, step)`` reduced
+deterministic: the step choice is ``md5(SEED, walk_id, step)`` reduced
 mod the node's degree, picking the i-th neighbor in sorted order —
 reproducible for any partitioning (no rand() whose draw order would
 depend on physical row order).
@@ -24,6 +24,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.windows import bounded_global
+
+#: the seed every walk's step hash starts from
+SEED = 42
+#: a walk restarts at the source with this probability per step
+RESTART_PROB = 0.15
 
 
 def _adjacency(edges: DataFrame) -> DataFrame:
@@ -40,9 +45,7 @@ def random_walk_with_restart(
     source: str,
     samples: int = 100,
     path_length: int = 10,
-    restart_prob: float = 0.15,
     topk: int = 10,
-    seed: int = 42,
 ) -> DataFrame:
     """→ (name, score) top-k nodes by visit frequency.
 
@@ -66,7 +69,7 @@ def random_walk_with_restart(
                 F.conv(
                     F.substring(
                         F.md5(
-                            F.concat_ws(":", F.lit(str(seed)), "walk_id", F.lit(str(step)))
+                            F.concat_ws(":", F.lit(str(SEED)), "walk_id", F.lit(str(step)))
                         ),
                         1,
                         12,
@@ -75,7 +78,7 @@ def random_walk_with_restart(
                     10,
                 ).cast("bigint"),
             )
-            .withColumn("_restart", (F.pmod(F.col("_h"), F.lit(100)) < int(restart_prob * 100)))
+            .withColumn("_restart", (F.pmod(F.col("_h"), F.lit(100)) < int(RESTART_PROB * 100)))
             .withColumn(
                 "node",
                 F.when(F.col("_restart"), F.lit(source)).otherwise(
@@ -109,7 +112,6 @@ def panther_similarity(
     k: int = 5,
     path_length: int = 5,
     num_paths: int = 200,
-    seed: int = 42,
 ) -> DataFrame:
     """G5 — Panther-style: sample random paths; similarity(u) = fraction
     of source-containing paths that also contain u
@@ -139,7 +141,7 @@ def panther_similarity(
         "_ix",
         F.pmod(
             F.conv(
-                F.substring(F.md5(F.concat_ws(":", F.lit(str(seed)), "path_id")), 1, 12),
+                F.substring(F.md5(F.concat_ws(":", F.lit(str(SEED)), "path_id")), 1, 12),
                 16, 10,
             ).cast("bigint"),
             F.lit(n_nodes),
@@ -155,7 +157,7 @@ def panther_similarity(
                 "_h",
                 F.conv(
                     F.substring(
-                        F.md5(F.concat_ws(":", F.lit(f"p{seed}"), "path_id", F.lit(str(step)))),
+                        F.md5(F.concat_ws(":", F.lit(f"p{SEED}"), "path_id", F.lit(str(step)))),
                         1, 12,
                     ),
                     16, 10,

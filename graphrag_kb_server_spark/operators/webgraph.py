@@ -23,12 +23,9 @@ from .textstats import extract_links
 __all__ = ["host_graph", "host_pagerank"]
 
 
-def host_graph(
-    docs: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """Weighted host-level link graph: ``(src_host, dst_host, weight)``
+def host_graph(docs: DataFrame) -> DataFrame:
+    """Pages(url, text) → weighted host-level link graph:
+    ``(src_host, dst_host, weight)``
     where ``weight`` counts distinct (page, outbound URL) pairs —
     ``extract_links`` dedups URLs within a page, so one page spamming
     the same link 50 times contributes 1. Intra-host links are dropped
@@ -42,8 +39,8 @@ def host_graph(
     smaller than the page table.
     """
     links = docs.select(
-        url_domain(F.col(url_col)).alias("src_host"),
-        F.explode(extract_links(F.col(text_col))).alias("_u"),
+        url_domain(F.col("url")).alias("src_host"),
+        F.explode(extract_links(F.col("text"))).alias("_u"),
     ).select("src_host", url_domain(F.col("_u")).alias("dst_host"))
     return (
         links.where(F.col("src_host") != F.col("dst_host"))
@@ -52,18 +49,13 @@ def host_graph(
     )
 
 
-def host_cocitation(
-    docs: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    min_weight: int = 1,
-) -> DataFrame:
-    """Host co-citation graph: ``(host_a, host_b, weight)`` with
-    ``weight`` = number of pages whose outbound links hit BOTH hosts
-    (a < b; the page's own host excluded, matching ``host_graph``).
-    Co-citation is the classic relatedness signal (Small 1973) — two
-    hosts repeatedly cited together are topically close even if they
-    never link each other.
+def host_cocitation(docs: DataFrame) -> DataFrame:
+    """Pages(url, text) → host co-citation graph:
+    ``(host_a, host_b, weight)`` with ``weight`` = number of pages whose
+    outbound links hit BOTH hosts (a < b; the page's own host excluded,
+    matching ``host_graph``). Co-citation is the classic relatedness
+    signal (Small 1973) — two hosts repeatedly cited together are
+    topically close even if they never link each other.
 
     Shape: the per-page distinct host list is the same row-local
     extract+collapse ``host_graph`` uses; the pair expansion is a
@@ -74,9 +66,9 @@ def host_cocitation(
     """
     cites = (
         docs.select(
-            F.col(url_col).alias("_page"),
-            url_domain(F.col(url_col)).alias("_own"),
-            F.explode(extract_links(F.col(text_col))).alias("_u"),
+            F.col("url").alias("_page"),
+            url_domain(F.col("url")).alias("_own"),
+            F.explode(extract_links(F.col("text"))).alias("_u"),
         )
         .select(
             "_page", "_own", url_domain(F.col("_u")).alias("_h")
@@ -91,18 +83,10 @@ def host_cocitation(
         .where(F.col("_h") < F.col("_h2"))
         .groupBy(F.col("_h").alias("host_a"), F.col("_h2").alias("host_b"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("weight"))
-        .where(F.col("weight") >= min_weight)
     )
 
 
-def host_pagerank(
-    docs: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    damping: float = 0.85,
-    iterations: int = 20,
-    **pagerank_kwargs,
-) -> DataFrame:
+def host_pagerank(docs: DataFrame) -> DataFrame:
     """Pages → host graph → weighted PageRank, one composition.
     Returns ``(name, rank)`` over every host that appears as a link
     source or target. See :func:`host_graph` and
@@ -110,13 +94,6 @@ def host_pagerank(
     for the plan shapes."""
     from .centrality import pagerank
 
-    edges = host_graph(docs, url_col, text_col)
     return pagerank(
-        edges,
-        src="src_host",
-        dst="dst_host",
-        weight="weight",
-        damping=damping,
-        iterations=iterations,
-        **pagerank_kwargs,
+        host_graph(docs), src="src_host", dst="dst_host", weight="weight"
     )

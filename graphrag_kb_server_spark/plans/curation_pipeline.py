@@ -36,16 +36,17 @@ from ..operators.textstats import add_language_id, quality_features
 
 __all__ = ["curate_corpus"]
 
+#: Gopher's duplicate-line bounds (by line count, by character mass)
+MAX_DUP_LINE_FRAC = 0.30
+MAX_DUP_LINE_CHAR_FRAC = 0.20
+#: the quality_score floor of a kept document
+MIN_QUALITY = 0.30
+
 
 def curate_corpus(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_words: int = 3,
-    min_kept_lines: int = 3,
-    max_dup_line_frac: float = 0.30,
-    max_dup_line_char_frac: float = 0.20,
-    min_quality: float = 0.30,
     langs: tuple[str, ...] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """documents → (kept, stats).
@@ -58,11 +59,12 @@ def curate_corpus(
     count is the survivors after that stage (cumulative) and
     ``n_kept`` is the post-dedup cardinality.
 
-    Thresholds are the published defaults: Gopher drops pages with
-    >30% duplicate lines (>20% by character mass); ``min_quality``
-    and ``langs`` are the caller's policy (``langs=None`` keeps all).
+    Thresholds are the published defaults (C4's line heuristics;
+    Gopher drops pages with >30% duplicate lines, >20% by character
+    mass); ``MIN_QUALITY`` and ``langs`` are the caller's policy
+    (``langs=None`` keeps all).
     """
-    staged = c4_line_filter(docs, text_col, min_words, min_kept_lines)
+    staged = c4_line_filter(docs, text_col)
     # duplicate-line fractions over the C4-kept lines, row-locally —
     # the staged _units column is bound once so the interpreted HOFs
     # evaluate one split per row, not one per consumer
@@ -73,10 +75,10 @@ def curate_corpus(
     staged = quality_features(staged, "c4_text")
     staged = add_language_id(staged, "c4_text", out_col="lang_pred")
 
-    rep_ok = (F.col("dup_line_frac") <= max_dup_line_frac) & (
-        F.col("dup_line_char_frac") <= max_dup_line_char_frac
+    rep_ok = (F.col("dup_line_frac") <= MAX_DUP_LINE_FRAC) & (
+        F.col("dup_line_char_frac") <= MAX_DUP_LINE_CHAR_FRAC
     )
-    quality_ok = F.col("quality_score") >= min_quality
+    quality_ok = F.col("quality_score") >= MIN_QUALITY
     lang_ok = (
         F.col("lang_pred").isin(*langs) if langs is not None else F.lit(True)
     )

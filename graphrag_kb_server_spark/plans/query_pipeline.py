@@ -304,16 +304,15 @@ def _chunk_search(g: GraphTables, qvec, k: int) -> DataFrame:
     return top.join(g.chunks.select("chunk_id", "content", "file_path"), "chunk_id")
 
 
-def gather_chunks_from_members(
-    selected: DataFrame, member_col: str, chunk_ids_col: str = "source_chunk_ids"
-) -> DataFrame:
-    """Q9/Q10 — explode member→chunk provenance; occurrence = how many
-    selected members reference the chunk; first-member-wins dedup; rank
-    chunks per member by occurrence desc (reference :1389-1464)."""
+def gather_chunks_from_members(selected: DataFrame, member_col: str) -> DataFrame:
+    """Q9/Q10 — explode member→chunk provenance (``source_chunk_ids``);
+    occurrence = how many selected members reference the chunk;
+    first-member-wins dedup; rank chunks per member by occurrence desc
+    (reference :1389-1464)."""
     exploded = selected.select(
         F.col(member_col).alias("member"),
         F.col("merge_ix"),
-        F.explode(chunk_ids_col).alias("chunk_id"),
+        F.explode("source_chunk_ids").alias("chunk_id"),
     )
     occ = Window.partitionBy("chunk_id")
     first_w = Window.partitionBy("chunk_id").orderBy("merge_ix")

@@ -100,9 +100,7 @@ _EDGE_SCHEMA = T.StructType(
 )
 
 
-def read_graphml(
-    spark: SparkSession, path: str, num_partitions: int | None = None
-) -> tuple[DataFrame, DataFrame]:
+def read_graphml(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """GraphML file → (nodes, edges) DataFrames with the reference's
     attribute columns (fixed schema; absent attributes → null)."""
     raw_nodes, raw_edges = parse_graphml(path)
@@ -128,11 +126,10 @@ def read_graphml(
         )
         for r in raw_edges
     ]
-    ndf = spark.createDataFrame(nodes, schema=_NODE_SCHEMA)
-    edf = spark.createDataFrame(edges, schema=_EDGE_SCHEMA)
-    if num_partitions:
-        ndf, edf = ndf.repartition(num_partitions), edf.repartition(num_partitions)
-    return ndf, edf
+    return (
+        spark.createDataFrame(nodes, schema=_NODE_SCHEMA),
+        spark.createDataFrame(edges, schema=_EDGE_SCHEMA),
+    )
 
 
 def parse_nano_vectordb(path: str) -> tuple[list[dict], np.ndarray]:
@@ -167,9 +164,7 @@ _VDB_SCHEMA = T.StructType(
 )
 
 
-def read_nano_vectordb(
-    spark: SparkSession, path: str, num_partitions: int | None = None
-) -> DataFrame:
+def read_nano_vectordb(spark: SparkSession, path: str) -> DataFrame:
     """nano-vectordb JSON → DataFrame(vid, name, content, embedding).
 
     ``name`` is ``entity_name`` for entity stores, ``src_id + "|" +
@@ -189,8 +184,7 @@ def read_nano_vectordb(
         (r["__id__"], name_of(r), r.get("content"), mat[i].tolist())
         for i, r in enumerate(rows)
     ]
-    df = spark.createDataFrame(data, schema=_VDB_SCHEMA)
-    return df.repartition(num_partitions) if num_partitions else df
+    return spark.createDataFrame(data, schema=_VDB_SCHEMA)
 
 
 def read_kv_store(path: str) -> dict[str, dict]:

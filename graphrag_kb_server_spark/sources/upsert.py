@@ -15,7 +15,7 @@ ON ... WHEN MATCHED THEN UPDATE ... WHEN NOT MATCHED THEN INSERT *")``.
 Scale notes:
 - the anti-join shuffles on the key — at 100 TB partition/bucket the
   table by the merge key so the join co-locates and only affected
-  partitions rewrite (partition pruning via the `partition_by` arg).
+  partitions rewrite (the Iceberg/Delta MERGE above does that).
 - last-write-wins inside one batch of updates is made explicit with
   ``order_col`` (max wins) — never implicit row order.
 """
@@ -56,7 +56,6 @@ def upsert(
     table_dir: str,
     keys: list[str],
     order_col: str | None = None,
-    partition_by: list[str] | None = None,
 ) -> DataFrame:
     """MERGE ``updates`` into the table at ``table_dir`` by ``keys``:
     matched rows are replaced, unmatched inserted. Returns the new
@@ -95,10 +94,7 @@ def upsert(
         f"v{int(time.time() * 1000):x}-{os.getpid():x}-{_VERSION_COUNTER:x}"
     )
     os.makedirs(table_dir, exist_ok=True)
-    writer = merged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(f"{table_dir}/{version}")
+    merged.write.mode("overwrite").parquet(f"{table_dir}/{version}")
     tmp = f"{table_dir}/{_POINTER}.tmp"
     with open(tmp, "w") as f:
         json.dump({"version": version}, f)

@@ -23,6 +23,14 @@ from pyspark.sql import functions as F
 from ..corpus import WEB_PAGES_SCHEMA
 from ..functions import text as TXT
 
+#: event-count windows and their watermark
+WINDOW = "5 minutes"
+WATERMARK = "10 minutes"
+#: trending-terms windows, their watermark, and the least count kept
+TRENDING_WINDOW = "10 minutes"
+TRENDING_WATERMARK = "20 minutes"
+TRENDING_MIN_COUNT = 5
+
 
 def run_incremental(
     spark: SparkSession,
@@ -129,8 +137,6 @@ def _run_available_now(
 def windowed_events_stream(
     spark: SparkSession,
     events_dir: str,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
     query_name: str = "windowed_events_stream",
 ) -> DataFrame:
     """The REAL Structured-Streaming form of
@@ -145,20 +151,17 @@ def windowed_events_stream(
     # watermarks require TIMESTAMP (ltz); parquet event times load as
     # NTZ — the cast is identity under the engine's UTC session tz
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = windowed_event_counts(stream, window=window, watermark=watermark)
+    agg = windowed_event_counts(stream)
     return _run_available_now(spark, agg, query_name)
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def windowed_event_counts(events: DataFrame, window: str = WINDOW) -> DataFrame:
     """Streaming-shaped windowed aggregation (works on batch DFs too):
-    per (window, event_type) counts + value sums."""
+    per (window, event_type) counts + value sums; a stream is
+    watermarked at ``WATERMARK``."""
     src = events
     if events.isStreaming:
-        src = events.withWatermark("ts", watermark)
+        src = events.withWatermark("ts", WATERMARK)
     return src.groupBy(F.window("ts", window).alias("win"), "event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("value").alias("v")
     )
@@ -167,9 +170,6 @@ def windowed_event_counts(
 def trending_terms_stream(
     spark: SparkSession,
     docs_path: str,
-    window: str = "10 minutes",
-    watermark: str = "20 minutes",
-    min_count: int = 5,
     query_name: str = "trending_terms_stream",
 ) -> DataFrame:
     """Streaming trending terms: readStream over the document feed →
@@ -181,8 +181,8 @@ def trending_terms_stream(
     family uses (one explode — the only per-token cost); the windowed
     count is the standard watermarked streaming aggregation, state
     bounded by (windows in flight × distinct tokens per window).
-    ``min_count`` prunes the Zipf tail at the sink. Event time derives
-    deterministically from doc_id (the synthetic feed has no
+    ``TRENDING_MIN_COUNT`` prunes the Zipf tail at the sink. Event time
+    derives deterministically from doc_id (the synthetic feed has no
     timestamp column) — a row-local cast both the stream and the
     batch/DuckDB twin compute identically.
     """
@@ -193,15 +193,15 @@ def trending_terms_stream(
         "ts",
         F.to_timestamp(F.lit("2026-01-01 00:00:00"))
         + F.make_interval(mins=F.col("doc_id").cast("int")),
-    ).withWatermark("ts", watermark)
+    ).withWatermark("ts", TRENDING_WATERMARK)
     from ..operators.tokenize import words_of
 
     toks = stream.select(
         "ts", F.explode(words_of(F.col("text"))).alias("token")
     )
     agg = (
-        toks.groupBy(F.window("ts", window).alias("win"), "token")
+        toks.groupBy(F.window("ts", TRENDING_WINDOW).alias("win"), "token")
         .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") >= min_count)
+        .where(F.col("n") >= TRENDING_MIN_COUNT)
     )
     return _run_available_now(spark, agg, query_name)

@@ -30,13 +30,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 OUTPUT_SCHEMA = "user_id bigint, n_sessions bigint, n_events bigint"
 STATE_SCHEMA = "last_ts bigint, n_sessions bigint, n_events bigint"
+#: a gap longer than this many seconds starts a new session
+GAP_SECONDS = 1800
 
 
 def _session_fold(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: Any,
-    gap_seconds: int,
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
 ) -> Iterator[pd.DataFrame]:
     if state.exists:
         last_ts, n_sessions, n_events = state.get
@@ -48,7 +47,7 @@ def _session_fold(
     for t in batch["ts"]:
         # mirror F.unix_timestamp: whole epoch seconds (UTC session tz)
         epoch = int(t.timestamp())
-        if last_ts is None or (epoch - last_ts) > gap_seconds:
+        if last_ts is None or (epoch - last_ts) > GAP_SECONDS:
             n_sessions += 1
         last_ts = epoch
     n_events += len(batch)
@@ -67,7 +66,6 @@ def _session_fold(
 def sessionize_stateful(
     spark: SparkSession,
     events_dir: str,
-    gap_seconds: int = 1800,
     query_name: str = "sessionize_stateful",
 ) -> DataFrame:
     """availableNow stateful sessionization over an events parquet dir.
@@ -87,11 +85,8 @@ def sessionize_stateful(
         .select("user_id", "ts", "event_id")
     )
 
-    def fn(key, pdfs, state):
-        return _session_fold(key, pdfs, state, gap_seconds)
-
     out = stream.groupBy("user_id").applyInPandasWithState(
-        fn,
+        _session_fold,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",

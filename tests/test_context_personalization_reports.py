@@ -259,6 +259,19 @@ def test_p9_p10(spark):
     assert len(qs["questions"]) == 3 and "Berlin" in qs["questions"][0]
 
 
+def test_generate_questions_llm_slot(spark):
+    """A caller-supplied ``question_fn`` runs in the Arrow UDF branch,
+    once per topic."""
+    t = spark.createDataFrame([("Berlin",), ("Lagos",)], "name string")
+    out = generate_questions(
+        t, question_fn=lambda name: [f"Who runs {name}?", f"Why {name}?"]
+    ).collect()
+    assert {r["name"]: list(r["questions"]) for r in out} == {
+        "Berlin": ["Who runs Berlin?", "Why Berlin?"],
+        "Lagos": ["Who runs Lagos?", "Why Lagos?"],
+    }
+
+
 def test_p7_summarize_documents(spark):
     """P7 contract (search_documents.py:94-135): per-doc summary = first
     2 sentences + question digest (pure Catalyst); a custom fn runs
@@ -330,3 +343,26 @@ def test_g8_reports(spark):
     assert reports["c0"]["size"] == 2
     assert reports["c0"]["title"].startswith("Community of")
     assert reports["c1"]["summary"].startswith("dc"[:2])
+
+
+def test_generate_reports_llm_slot(spark):
+    """A caller-supplied ``report_fn`` writes one report row per
+    community from that community's prompt payload."""
+    asg = spark.createDataFrame(
+        [("a", 0, "c0"), ("b", 0, "c0"), ("c", 0, "c1")],
+        "node string, level int, cluster string",
+    )
+    nodes = spark.createDataFrame(
+        [("a", "da", 3), ("b", "db", 1), ("c", "dc", 2)],
+        "name string, description string, degree int",
+    )
+
+    def fake(cluster, member_names, member_descs, size):
+        return (f"T-{cluster}", ",".join(member_names + member_descs), size / 2)
+
+    rows = generate_reports(community_inputs(asg, nodes), report_fn=fake).collect()
+    assert sorted((r["cluster"], r["level"], r["size"], r["title"],
+                   r["summary"], r["rank"]) for r in rows) == [
+        ("c0", 0, 2, "T-c0", "a,b,da,db", 1.0),
+        ("c1", 0, 1, "T-c1", "c,dc", 0.5),
+    ]

@@ -1,14 +1,19 @@
 """Every module-level function and class in ``graphrag_kb_server_spark/``
-is reached from a real caller, or is on ``KEEP`` with its reason.
+is reached from a real caller, and every defaulted parameter of a
+package def is set by one, or the def or parameter is on a keep list
+with its reason.
 
 The real callers are the driver contract (``__spark_entry__.py``), the
 bench CLI (``bench.py``), the benchmark (``perfbench/*.py``), the scripts
 in ``tools/`` and the package's own module-level code. The walk is by
 name over the AST: a def is reached when a reached body names it (as a
-``Name`` or an ``Attribute``), and its own body is then walked. A
-multi-line string literal that parses as Python (``tools/scaling_run.py``
-embeds the script it runs) is walked as code. Tests are not roots, so a
-def that only a test calls fails here.
+``Name`` or an ``Attribute``), and its own body is then walked. An
+``x.attr`` counts only when ``x`` is not bound to an import from outside
+the package (``pq.read_table`` does not reach a package ``read_table``).
+The bodies of ``KEEP`` defs are walked too. A multi-line string literal
+that parses as Python (``tools/scaling_run.py`` embeds the script it
+runs) is walked as code. Tests are not roots, so a def or an option that
+only a test uses fails here.
 """
 
 from __future__ import annotations
@@ -17,7 +22,7 @@ import ast
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-PACKAGE = ROOT / "graphrag_kb_server_spark"
+PACKAGE_NAME = "graphrag_kb_server_spark"
 
 KEEP = {
     "hierarchical_communities": "G2: the leveled community hierarchy of the paper's graph operator",
@@ -28,51 +33,138 @@ KEEP = {
     "truncate_by_token_budget": "Spark twin the driver token_budget_prefix is pinned to",
     "token_count_udf": "Spark tokenizer of truncate_by_token_budget",
     "vector_similarity_chunk_pick": "Spark twin the driver vector_pick_ids is pinned to",
-    "golden_chunks": "the golden chunking fixture of FIXTURES.md (twin of chunk_documents)",
     "golden_triples": "plain-Python reference twin of extract_mentions",
     "precision_recall": "scores the golden_* twins against the Spark operators",
 }
 
+#: ``module.def.param`` of the defaulted parameters no real caller sets.
+#: The first four are the slots where a real model or user input plugs
+#: in; the rest are set only by tests and wait for a later change.
+KEEP_OPTIONS = {
+    "plans.query_pipeline.answer_query.llm_fn": "LLM slot: a real model answers here (PAPER §0, SURVEY §7)",
+    "operators.reports.generate_reports.report_fn": "LLM slot: a real model writes community reports here",
+    "operators.personalization.generate_questions.question_fn": "LLM slot: a real model writes topic questions here",
+    "plans.query_pipeline.kg_query.user_keywords": "the reference's union of user-supplied keywords (SURVEY Q1)",
+    "operators.asof.asof_join.right_time": "test-set: test_asof joins on a right time column of another name",
+    "operators.asof.asof_join.tolerance": "test-set: test_asof bounds the as-of lag",
+    "operators.centrality.approx_betweenness.driver_cap": "test-set: driver_cap=0 forces the distributed path in the parity tests",
+    "operators.clustering.semantic_dedup_pairs.seed": "test-set: test_clustering seeds the k-means start",
+    "operators.communities.hierarchical_communities.max_cluster_size": "test-set: test_analytics and test_ref_communities force splits",
+    "operators.communities.hierarchical_communities.max_levels": "test-set: test_ref_communities bounds the levels",
+    "operators.communities.hierarchical_communities.use_lcc": "test-set: test_analytics clusters the whole graph",
+    "operators.communities.hierarchical_communities.refine": "test-set: test_ref_communities measures the refinement gain",
+    "operators.communities.community_hierarchy.period": "test-set: test_communities_schema pins the period column",
+    "operators.components.connected_components_star.max_iterations": "test-set: test_analytics bounds the alternations",
+    "operators.context_ops.vector_similarity_chunk_pick.related_chunk_number": "test-set: the parity tests pick fewer chunks",
+    "operators.curation.gopher_repetition.sep": "test-set: test_curation splits paragraphs",
+    "operators.curation.gopher_repetition.unit": "test-set: test_curation names the paragraph unit",
+    "operators.curation.url_keep.blocked_domains": "test-set: test_curation blocks a domain",
+    "operators.curation.paragraph_dedup.sep": "test-set: test_curation splits on another separator",
+    "operators.dedup.minhash_lsh_pairs.num_hashes": "test-set: the dedup tests pin the LSH shape",
+    "operators.dedup.minhash_lsh_pairs.bands": "test-set: the dedup tests pin the LSH shape",
+    "operators.dedup.minhash_lsh_pairs.max_bucket": "test-set: the skew-guard test forces a bucket split",
+    "operators.dedup.simhash_dedup_pairs.rotations": "test-set: the rotation test compares 1 and 4 rotations",
+    "operators.dedup.embedding_near_dup_pairs.content_col": "test-set: a test embeds raw text instead of vectors",
+    "operators.dedup.embedding_near_dup_pairs.probe_hamming": "test-set: the multi-probe test",
+    "operators.graph_build.build_nodes.salt_buckets": "test-set: the salting test compares 1 and 32 buckets",
+    "operators.graph_support.topics.entity_types": "test-set: test_context_personalization_reports filters types",
+    "operators.graph_support.topics.limit": "test-set: test_context_personalization_reports caps the topics",
+    "operators.hits.hits.iterations": "test-set: test_analytics and the parity tests run 5 rounds",
+    "operators.linking.abbreviation_pairs.name_col": "test-set: test_context_personalization_reports links entity_id",
+    "operators.linking.canonical_map.threshold": "test-set: the linking test pins the threshold",
+    "operators.linking.canonical_map.driver_cap": "test-set: driver_cap=0 forces the distributed path in the parity tests",
+    "operators.merge.rrf_fuse.rrf_k": "test-set: test_query_ops pins the RRF constant",
+    "operators.personalization.match_and_score.threshold": "test-set: test_context_personalization_reports",
+    "operators.personalization.match_and_score.score_fn": "test-set: a fake scoring slot in test_context_personalization_reports",
+    "operators.personalization.summarize_documents.summarize_fn": "test-set: a fake summary slot in test_context_personalization_reports",
+    "operators.similarity.ivf_topk_batch.target_cell_rows": "test-set: the auto-plane test sizes cells",
+    "operators.tokenize.bpe_train_from_freqs.min_pair_freq": "test-set: test_tokenize stops training early",
+    "operators.tokenize.bpe_merges.max_words": "test-set: test_tokenize trips the distinct-word guard",
+    "operators.truncation.truncate_by_token_budget.keep_at_least_one": "test-set: test_query_ops keeps one row",
+    "plans.curation_pipeline.curate_corpus.langs": "test-set: test_curation keeps one language",
+    "sources.exports.centrality_to_xlsx.limit": "test-set: test_exports caps the sheet",
+    "sources.upsert.upsert.order_col": "test-set: test_streaming orders updates by version",
+}
 
-def _names(tree: ast.AST, aliases: dict[str, str]) -> set[str]:
-    """Identifiers a piece of code refers to, with those of any
-    multi-line string literal in it that parses as Python. Each
-    ``import x as y`` found is recorded in ``aliases`` as ``y -> x``."""
-    out: set[str] = set()
+
+def _roots(root: Path) -> list[Path]:
+    return [root / "__spark_entry__.py", root / "bench.py",
+            *sorted((root / "perfbench").glob("*.py")),
+            *sorted((root / "tools").glob("*.py"))]
+
+
+def _code(path: Path) -> list[ast.AST]:
+    """The file's AST and those of its multi-line string literals that
+    parse as Python."""
+    tree = ast.parse(path.read_text())
+    out = [tree]
     for node in ast.walk(tree):
-        if isinstance(node, ast.Name):
-            out.add(node.id)
-        elif isinstance(node, ast.Attribute):
-            out.add(node.attr)
-        elif isinstance(node, ast.alias) and node.asname:
-            aliases[node.asname] = node.name.rsplit(".", 1)[-1]
-        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
-              and "\n" in node.value):
+        if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                and "\n" in node.value):
             try:
-                out |= _names(ast.parse(node.value), aliases)
+                out.append(ast.parse(node.value))
             except SyntaxError:
                 pass
     return out
 
 
-def reached() -> tuple[dict[str, list[str]], set[str]]:
+def _foreign(tree: ast.AST) -> set[str]:
+    """Names a piece of code binds to imports from outside the package."""
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            if node.level or (node.module or "").startswith(PACKAGE_NAME):
+                continue
+            out |= {a.asname or a.name for a in node.names}
+        elif isinstance(node, ast.Import):
+            out |= {a.asname or a.name.split(".")[0] for a in node.names
+                    if not a.name.startswith(PACKAGE_NAME)}
+    return out
+
+
+def _names(tree: ast.AST, aliases: dict[str, str], foreign: set[str]) -> set[str]:
+    """Identifiers a piece of code refers to, with those of any
+    multi-line string literal in it that parses as Python. An ``x.attr``
+    whose ``x`` is in ``foreign`` does not count. Each ``import x as y``
+    found is recorded in ``aliases`` as ``y -> x``."""
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            if not (isinstance(node.value, ast.Name) and node.value.id in foreign):
+                out.add(node.attr)
+        elif isinstance(node, ast.alias) and node.asname:
+            aliases[node.asname] = node.name.rsplit(".", 1)[-1]
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and "\n" in node.value):
+            try:
+                code = ast.parse(node.value)
+            except SyntaxError:
+                continue
+            out |= _names(code, aliases, foreign | _foreign(code))
+    return out
+
+
+def reached(root: Path = ROOT, keep=KEEP) -> tuple[dict[str, list[str]], set[str]]:
     """``name -> [module]`` of every package def, and the names reached."""
-    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    defs: dict[str, list[tuple[str, ast.AST, set[str]]]] = {}
     aliases: dict[str, str] = {}
-    todo: set[str] = set()
-    for path in sorted(PACKAGE.rglob("*.py")):
-        mod = str(path.relative_to(ROOT))
-        for node in ast.parse(path.read_text()).body:
+    todo: set[str] = set(keep)
+    for path in sorted((root / PACKAGE_NAME).rglob("*.py")):
+        mod = str(path.relative_to(root))
+        tree = ast.parse(path.read_text())
+        foreign = _foreign(tree)
+        for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                defs.setdefault(node.name, []).append((mod, node))
+                defs.setdefault(node.name, []).append((mod, node, foreign))
                 for dec in node.decorator_list:
-                    todo |= _names(dec, aliases)
+                    todo |= _names(dec, aliases, foreign)
             else:
-                todo |= _names(node, aliases)
-    for path in [ROOT / "__spark_entry__.py", ROOT / "bench.py",
-                 *sorted((ROOT / "perfbench").glob("*.py")),
-                 *sorted((ROOT / "tools").glob("*.py"))]:
-        todo |= _names(ast.parse(path.read_text()), aliases)
+                todo |= _names(node, aliases, foreign)
+    for path in _roots(root):
+        tree = ast.parse(path.read_text())
+        todo |= _names(tree, aliases, _foreign(tree))
     seen: set[str] = set()
     while todo:
         name = todo.pop()
@@ -81,9 +173,9 @@ def reached() -> tuple[dict[str, list[str]], set[str]]:
         seen.add(name)
         if name in aliases:
             todo.add(aliases[name])
-        for _, node in defs.get(name, ()):
-            todo |= _names(node, aliases) - seen
-    return {n: [m for m, _ in w] for n, w in defs.items()}, seen
+        for _, node, foreign in defs.get(name, ()):
+            todo |= _names(node, aliases, foreign) - seen
+    return {n: [m for m, _, _ in w] for n, w in defs.items()}, seen
 
 
 def test_every_package_def_has_a_real_caller():
@@ -96,6 +188,136 @@ def test_every_package_def_has_a_real_caller():
 
 
 def test_keep_list_is_exact():
-    """Each kept name is a package def that no real caller reaches."""
-    defs, seen = reached()
+    """Each kept name is a package def that the real callers alone do
+    not reach."""
+    defs, _ = reached()
+    _, seen = reached(keep=())
     assert not [n for n in KEEP if n not in defs or n in seen]
+
+
+def test_attribute_of_a_foreign_import_reaches_nothing(tmp_path):
+    """A package def named like a pyarrow function, used only by a test,
+    is not reached through ``pq.write_table`` in a real caller."""
+    pkg = tmp_path / PACKAGE_NAME
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "store.py").write_text(
+        "import pyarrow.parquet as pq\n\n\n"
+        "def save(table, path):\n    pq.write_table(table, path)\n\n\n"
+        "def write_table(table, path):\n    return None\n")
+    (tmp_path / "__spark_entry__.py").write_text(
+        f"from {PACKAGE_NAME}.store import save\n\nsave(None, 'x')\n")
+    (tmp_path / "bench.py").write_text("")
+    _, seen = reached(tmp_path, keep=())
+    assert "save" in seen
+    assert "write_table" not in seen
+
+
+# ── defaulted parameters ─────────────────────────────────────────────
+
+def _defaulted(fn: ast.AST) -> list[tuple[str, int | None]]:
+    """(name, position) of a def's defaulted parameters; None for
+    keyword-only ones."""
+    pos = fn.args.posonlyargs + fn.args.args
+    first = len(pos) - len(fn.args.defaults)
+    out = [(a.arg, i) for i, a in enumerate(pos) if i >= first]
+    return out + [(a.arg, None) for a, d in
+                  zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None]
+
+
+def _option_defs(root: Path):
+    """(key, callee name, def node, is method) of every package def
+    outside golden.py; a class's ``__init__`` is called by the class
+    name. The key is ``module.qualname``."""
+    out = []
+
+    def walk(tree, mod, cls):
+        for node in ast.iter_child_nodes(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
+                             for d in node.decorator_list)
+                qual = f"{cls}.{node.name}" if cls else node.name
+                callee = cls if cls and node.name == "__init__" else node.name
+                out.append((f"{mod}.{qual}", callee, node, bool(cls) and not static))
+                walk(node, mod, None)
+            elif isinstance(node, ast.ClassDef):
+                walk(node, mod, node.name)
+            else:
+                walk(node, mod, cls)
+
+    for path in sorted((root / PACKAGE_NAME).rglob("*.py")):
+        if path.name == "golden.py":
+            continue
+        rel = path.relative_to(root / PACKAGE_NAME).with_suffix("")
+        walk(ast.parse(path.read_text()), ".".join(rel.parts), None)
+    return out
+
+
+def _calls(paths: list[Path]) -> dict[str, list[tuple[int, bool, set[str], bool]]]:
+    """callee name -> [(positional count, has ``*args``, keyword names,
+    has an unresolved ``**``)] over every call in ``paths``.
+    ``functools.partial(f, ...)`` counts as a call of ``f``; the keys of
+    a ``**{...}`` or ``**dict(...)`` literal count as keywords."""
+    out: dict[str, list] = {}
+
+    def name_of(f):
+        return f.id if isinstance(f, ast.Name) else (
+            f.attr if isinstance(f, ast.Attribute) else None)
+
+    for path in paths:
+        for tree in _code(path):
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                callee, args = name_of(node.func), list(node.args)
+                if callee == "partial" and args:
+                    callee, args = name_of(args[0]), args[1:]
+                if callee is None:
+                    continue
+                kw, star_kw = set(), False
+                for k in node.keywords:
+                    if k.arg is not None:
+                        kw.add(k.arg)
+                    elif isinstance(k.value, ast.Dict):
+                        kw |= {e.value for e in k.value.keys
+                               if isinstance(e, ast.Constant)}
+                    elif (isinstance(k.value, ast.Call)
+                          and name_of(k.value.func) == "dict"):
+                        kw |= {kk.arg for kk in k.value.keywords if kk.arg}
+                    else:
+                        star_kw = True
+                n_pos = sum(not isinstance(a, ast.Starred) for a in args)
+                starred = any(isinstance(a, ast.Starred) for a in args)
+                out.setdefault(callee, []).append((n_pos, starred, kw, star_kw))
+    return out
+
+
+def unset_options(root: Path = ROOT) -> list[str]:
+    """``module.def.param`` of every defaulted parameter of a package def
+    (golden twins exempt) that no call in a real caller sets, by keyword,
+    by position or through ``*``/``**``."""
+    calls = _calls([*_roots(root), *sorted((root / PACKAGE_NAME).rglob("*.py"))])
+    out = []
+    for key, callee, fn, is_method in _option_defs(root):
+        for param, pos in _defaulted(fn):
+            ix = None if pos is None else pos - is_method
+            if not any(param in kw or star_kw or starred and ix is not None
+                       or ix is not None and n_pos > ix
+                       for n_pos, starred, kw, star_kw in calls.get(callee, ())):
+                out.append(f"{key}.{param}")
+    return out
+
+
+def test_every_option_is_set_by_a_real_caller():
+    """A default that no real caller overrides is a constant: inline it
+    or name it at module level instead of taking it as a parameter."""
+    missing = [o for o in unset_options() if o not in KEEP_OPTIONS]
+    assert not missing, (
+        "no real caller sets these parameters; make each a constant or "
+        "give it a real caller: " + ", ".join(missing))
+
+
+def test_keep_options_is_exact():
+    """Each kept option is a defaulted parameter no real caller sets."""
+    unset = set(unset_options())
+    assert not [o for o in KEEP_OPTIONS if o not in unset]

@@ -115,6 +115,41 @@ def _mini_graph(spark):
     return g
 
 
+def test_answer_query_llm_slot(spark, tmp_path):
+    """A caller-supplied ``llm_fn`` gets the rag_response prompt and its
+    answer comes back, post-cleaned, from answer_query."""
+    from graphrag_kb_server_spark.plans.query_pipeline import (
+        QueryParams, answer_query,
+    )
+
+    prompts = []
+
+    def fake(prompt):
+        prompts.append(prompt)
+        return " fake answer <|im_end|>"
+
+    out = answer_query(spark, _mini_graph(spark), "Alpha",
+                       QueryParams(mode="local"),
+                       cache_path=str(tmp_path / "cache"), llm_fn=fake)
+    assert out["answer"] == "fake answer"
+    (prompt,) = prompts
+    assert "---Role---" in prompt and prompt.endswith("---Question---\nAlpha\n")
+
+
+def test_kg_query_user_keywords(spark):
+    """User-supplied keywords join the query's own: high-level, next to
+    the tf-ranked terms; the capitalized spans stay low-level."""
+    from graphrag_kb_server_spark.plans.query_pipeline import (
+        QueryParams, kg_query,
+    )
+
+    ctx = kg_query(spark, _mini_graph(spark), "Alpha", QueryParams(mode="hybrid"),
+                   user_keywords=["partnership"])
+    assert ctx.keywords == ["Alpha", "alpha", "partnership"]
+    assert ctx.keywords_hl == ["alpha", "partnership"]
+    assert ctx.keywords_ll == ["Alpha"]
+
+
 def test_sep_joined_chunk_gets_real_reference_id(spark):
     """Regression (ADVICE r2): a chunk whose file_path is a <SEP>-joined
     multi-file string must cite the min expanded ref_ix, not dangle at

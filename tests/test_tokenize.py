@@ -76,7 +76,7 @@ def test_bpe_encode_distributed_matches_sequential(spark):
 
 
 def test_max_words_guard_errors_not_truncates(spark):
-    with pytest.raises(ValueError, match="min_freq"):
+    with pytest.raises(ValueError, match="exceed max_words=2"):
         bpe_merges(_corpus(spark), "text", 5, max_words=2)
 
 
