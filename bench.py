@@ -6,14 +6,17 @@ CPU count) and prints ONE JSON line:
 {"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
 
 Headline #1 is the north-rule metric: end-to-end KG indexing throughput
-(docs/sec) over the deterministic synthetic web_pages corpus
-(chunk → extract → merge → degree, all stages evaluated). The corpus
-size scales with the sf dir (sf0.1 → 5000 docs, BENCH_DOCS env
-overrides). Remaining queries are the oracle-checked operator suite
-over the driver tables, each forced through a full evaluation with the
-noop sink (no driver collect), plus the ONLINE query path (kg_query
-hybrid/mix + answer_query — the reference's primary serving surface,
-lightrag_search.py:330-597) over a persisted index of the same corpus.
+(docs/sec) of ``run_index`` over the deterministic synthetic web_pages
+corpus, each pass from an empty directory (extract text → chunk →
+extract triples → merge → link/canonicalize → degrees → embeddings →
+doc_status, every stage table written). The corpus size scales with the
+sf dir (sf0.1 → 5000 docs, BENCH_DOCS env overrides). Remaining queries
+are the oracle-checked operator suite over the driver tables, each
+forced through a full evaluation with the noop sink (no driver
+collect), plus the ONLINE query path (kg_query hybrid/mix +
+answer_query — the reference's primary serving surface,
+lightrag_search.py:330-597) over the KB the last timed ``run_index``
+pass wrote.
 
 Variance control (VERDICT r2): every timing is the MIN of
 $BENCH_REPEATS runs (default 2) — the hypervisor on this box shows
@@ -29,13 +32,14 @@ loadavg drops below $BENCH_IDLE_LOAD (default 1.5, ~5-min timeout,
 then proceeds with a recorded violation), and (c) records the loadavg
 observed at the start of every repeat next to the timing, so a noisy
 repeat is attributable from the artifact alone. Volatile entries
-(kg_index_e2e, t4_entity_merge) always run max(repeats, 3) times.
+(kg_run_index, t4_entity_merge) always run max(repeats, 3) times.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
 import time
@@ -49,12 +53,13 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entrymod
 from graphrag_kb_server_spark import corpus as corpus_mod
 from graphrag_kb_server_spark.functions import text as TXT
-from graphrag_kb_server_spark.operators.chunking import chunk_documents
-from graphrag_kb_server_spark.operators.extraction import extract_mentions
-from graphrag_kb_server_spark.operators.graph_build import (
-    build_edges,
-    build_nodes,
-    finalize_graph,
+from graphrag_kb_server_spark.operators.graph_build import build_edges
+from graphrag_kb_server_spark.plans.index_pipeline import run_index
+from graphrag_kb_server_spark.plans.query_pipeline import (
+    GraphTables,
+    QueryParams,
+    answer_query,
+    kg_query,
 )
 from graphrag_kb_server_spark.session import get_spark
 
@@ -170,7 +175,7 @@ def idle_gate(max_load: float, timeout_s: float = 300.0) -> dict:
 
 def _cpu_jiffies() -> dict[str, int]:
     """Aggregate /proc/stat counters — steal% tells hypervisor noise
-    apart from real regressions (same methodology as BENCH_SCALING)."""
+    apart from real regressions."""
     with open("/proc/stat") as f:
         parts = f.readline().split()
     vals = list(map(int, parts[1:]))
@@ -179,8 +184,8 @@ def _cpu_jiffies() -> dict[str, int]:
 
 def _ensure_corpus(spark, n_docs: int, sent_lo: int = 24, sent_hi: int = 72) -> str:
     """Bench corpus: Common-Crawl-realistic page sizes (~4 KB of text),
-    same deterministic generator as the fixtures. Written once, reused
-    across runs/parallelism levels (identical input for scaling)."""
+    same deterministic generator as the fixtures. Written once and
+    reused across runs, so every run indexes identical input."""
     path = (
         f"{Path(__file__).resolve().parent}/.data/"
         f"bench_corpus_{n_docs}_{sent_lo}_{sent_hi}"
@@ -192,88 +197,28 @@ def _ensure_corpus(spark, n_docs: int, sent_lo: int = 24, sent_hi: int = 72) -> 
     return path
 
 
-def _ensure_index(spark, n_docs: int) -> str:
-    """Persisted full index of the bench corpus (cached across runs) —
-    the graph the online-query-path benchmarks serve from. Build time
-    is NOT part of any query timing (kg_index_e2e measures indexing)."""
-    from graphrag_kb_server_spark.plans.index_pipeline import run_index
-
-    out = f"{Path(__file__).resolve().parent}/.data/bench_index_{n_docs}"
-    if not os.path.exists(f"{out}/doc_status/_SUCCESS"):
-        pages = spark.read.parquet(_ensure_corpus(spark, n_docs))
-        run_index(spark, pages, out)
-    return out
-
-
-def bench_kg_index(spark, n_docs: int) -> float:
-    """End-to-end KG construction (the north-rule chain: extract text →
-    chunk → triple-extract → merge → link → canonicalize → degrees),
-    evaluated via the noop sink. mentions is checkpointed ONCE — the
-    same staged materialization run_index does with its parquet stage
-    boundaries — so the nodes and edges branches don't recompute the
-    Python extraction chain. Returns seconds."""
-    from graphrag_kb_server_spark.operators.linking import (
-        canonical_map,
-        canonicalize_graph,
-    )
-    from graphrag_kb_server_spark.plans.index_pipeline import ensure_parallelism
-
-    corpus_path = _ensure_corpus(spark, n_docs)
-    pages = ensure_parallelism(spark.read.parquet(corpus_path))
+def bench_run_index(spark, pages, out: str) -> float:
+    """Seconds of one ``run_index`` pass over ``pages`` into ``out``,
+    which is emptied first, outside the timed region, so every stage
+    is built and written."""
+    shutil.rmtree(out, ignore_errors=True)
     t0 = time.time()
-    docs = pages.select(
-        "url", TXT.extract_text(F.col("text"), F.col("url")).alias("content")
-    ).withColumn("doc_id", TXT.doc_id(F.col("content"))).withColumn(
-        "file_path", F.col("url")
-    )
-    chunks = chunk_documents(docs).localCheckpoint(eager=True)
-    mentions = extract_mentions(chunks).localCheckpoint(eager=True)
-    nodes_raw = build_nodes(mentions).localCheckpoint(eager=True)
-    edges_raw = build_edges(mentions).localCheckpoint(eager=True)
-    mapping = canonical_map(nodes_raw).localCheckpoint(eager=True)
-    nodes_c, edges_c = canonicalize_graph(nodes_raw, edges_raw, mapping)
-    nodes, edges = finalize_graph(nodes_c, edges_c.localCheckpoint(eager=True))
-    _noop_write(nodes)
-    _noop_write(edges)
+    run_index(spark, pages, out)
     return time.time() - t0
 
 
-def _graph_tables(spark, out: str):
-    from graphrag_kb_server_spark.plans.query_pipeline import GraphTables
-
-    rd = lambda n: spark.read.parquet(f"{out}/{n}")
-    docs = rd("documents")
-    return GraphTables(
-        nodes=rd("nodes"),
-        edges=rd("edges"),
-        chunks=rd("chunks"),
-        entity_embeddings=rd("entity_embeddings"),
-        relation_embeddings=rd("relation_embeddings"),
-        chunk_embeddings=rd("chunk_embeddings"),
-        path_properties=docs.select(
-            F.col("url").alias("file_path"),
-            F.col("warc_ts").alias("last_modified"),
-        ).dropDuplicates(["file_path"]),
-    )
-
-
 def bench_query_path(
-    spark, n_docs: int, repeats: int
+    spark, kb_dir: str, repeats: int
 ) -> tuple[dict[str, list[float]], dict[str, dict[str, float]], float | None]:
     """Online-surface latency: kg_query (hybrid + mix) and answer_query
-    end-to-end — stage 1-4 including the driver-side context collects,
-    exactly what a serving request pays. A fresh query string per repeat
-    defeats the LLM cache so every repeat is a cold answer. Also returns
-    the median ``QueryContext.stage_s`` per kg_query mode and stage, and
-    the wall seconds of the KB's driver snapshot build, which the first
-    request pays (None when the KB is over the snapshot cap)."""
-    from graphrag_kb_server_spark.plans.query_pipeline import (
-        QueryParams,
-        answer_query,
-        kg_query,
-    )
-
-    g = _graph_tables(spark, _ensure_index(spark, n_docs))
+    end-to-end over the KB in ``kb_dir`` — stage 1-4 including the
+    driver-side context collects, exactly what a serving request pays.
+    A fresh query string per repeat defeats the LLM cache so every
+    repeat is a cold answer. Also returns the median
+    ``QueryContext.stage_s`` per kg_query mode and stage, and the wall
+    seconds of the KB's driver snapshot build, which the first request
+    pays (None when the KB is over the snapshot cap)."""
+    g = GraphTables.from_index(spark, kb_dir)
     hub = g.nodes.orderBy(F.desc("mention_count"), "name").first()["name"]
     out: dict[str, list[float]] = {
         "kg_query_hybrid": [], "kg_query_mix": [], "kg_answer_hybrid": [],
@@ -348,8 +293,10 @@ def main() -> None:
         _noop_write(build())
         return time.time() - t1
 
-    idx_runs = timed("kg_index_e2e", volatile_repeats,
-                     partial(bench_kg_index, spark, n_docs))
+    index_out = f"{Path(__file__).resolve().parent}/.data/bench_index_{n_docs}"
+    pages = spark.read.parquet(_ensure_corpus(spark, n_docs))
+    idx_runs = timed("kg_run_index", volatile_repeats,
+                     partial(bench_run_index, spark, pages, index_out))
 
     qs = entrymod.queries()
     for name in BENCH_QUERIES:
@@ -397,7 +344,6 @@ def main() -> None:
             curate_corpus,
         )
 
-        pages = spark.read.parquet(_ensure_corpus(spark, n_docs))
         docs = pages.select(
             F.col("url").alias("doc_id"),
             TXT.extract_text(F.col("text"), F.col("url")).alias("content"),
@@ -415,7 +361,7 @@ def main() -> None:
     # 22.5 → 5.8 → 5.4 → 4.4s on an idle box) — with 2 repeats the min
     # still lands mid-warm-up, so these always get ≥4.
     query_times, query_stages, query_snapshot_s = bench_query_path(
-        spark, n_docs, max(repeats, 4)
+        spark, index_out, max(repeats, 4)
     )
     for k, v in query_times.items():
         repeat_times[k] = v
@@ -450,7 +396,7 @@ def main() -> None:
                 "sf": sf,
                 "cpus": cpus,
                 "index_docs": n_docs,
-                "index_docs_per_sec": round(n_docs / min(idx_runs), 2),
+                "run_index_docs_per_sec": round(n_docs / min(idx_runs), 2),
                 "curation_docs_per_sec": round(n_docs / min(curation_runs), 2),
                 "query_stages": query_stages,
                 "query_snapshot_s": query_snapshot_s,

@@ -41,10 +41,6 @@ def bind_once(value: Column, body) -> Column:
     return F.transform(F.array(value), body)[0]
 
 
-# backwards-compatible private alias (pre-r5 call sites)
-_bind_once = bind_once
-
-
 #: length k of the character grams of ``char_shingles``
 CHAR_SHINGLE_K = 3
 

@@ -44,8 +44,6 @@ BANDS = 8
 SHINGLE_WORDS = 3
 #: sub-bucket cap of the simhash and embedding blockings
 MAX_BUCKET = 4096
-#: expected bucket size embedding_near_dup_pairs aims at with n_planes=None
-TARGET_BUCKET_ROWS = 8192
 
 
 def exact_dedup(df: DataFrame, content_col: str, order_col: str) -> DataFrame:
@@ -397,7 +395,7 @@ def embedding_near_dup_pairs(
     content_col: str | None = None,
     vec_col: str | None = None,
     threshold: float = 0.95,
-    n_planes: int | None = 8,
+    n_planes: int = 8,
     seed: int = 42,
     probe_hamming: int = 0,
 ) -> DataFrame:
@@ -405,17 +403,11 @@ def embedding_near_dup_pairs(
     vectors) bucket blocking: sign pattern of ``n_planes`` seeded
     hyperplanes = bucket key; cosine verified within bucket only.
 
-    Scale guards (a fixed plane count is a quadratic bomb at 10^12
-    rows — each of 2^n_planes buckets then holds ~rows/2^n_planes
-    members and the within-bucket self-join explodes):
-
-    - ``n_planes=None`` sizes the plane count from the corpus:
-      ceil(log2(rows / TARGET_BUCKET_ROWS)), clamped to [4, 28], so the
-      EXPECTED bucket stays ~TARGET_BUCKET_ROWS at any corpus size.
-    - ``MAX_BUCKET`` splits any still-degenerate bucket (near-duplicate
-      pile-ups are exactly where buckets concentrate) into bounded
-      sub-buckets instead of silently dropping it
-      (``split_oversized_buckets``).
+    Scale guard: each of the 2^n_planes buckets holds ~rows/2^n_planes
+    members, and the within-bucket self-join is quadratic in that, so
+    ``MAX_BUCKET`` splits any oversized bucket (near-duplicate pile-ups
+    are exactly where buckets concentrate) into bounded sub-buckets
+    instead of silently dropping it (``split_oversized_buckets``).
 
     Recall trade: more planes → smaller buckets but more true pairs
     split across buckets (P[same bucket] = (1 − θ/π)^n_planes).
@@ -431,8 +423,6 @@ def embedding_near_dup_pairs(
     Matches the reference's greedy cosine-dedup semantics
     (matching.py:100-128) with keep-earlier-wins applied by the caller.
     """
-    import math
-
     import numpy as np
 
     if vec_col is None:
@@ -440,9 +430,6 @@ def embedding_near_dup_pairs(
         vec_col = "_vec"
     dim_row = df.select(F.size(vec_col).alias("d")).first()
     dim = dim_row["d"] if dim_row else 0
-    if n_planes is None:
-        n_rows = df.count()
-        n_planes = min(28, max(4, math.ceil(math.log2(max(n_rows, 1) / TARGET_BUCKET_ROWS))))
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_planes, dim))
     # staged select: the double-cast vector is materialized as its own

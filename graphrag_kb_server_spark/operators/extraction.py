@@ -112,14 +112,13 @@ def extract_triples(text: str, is_first_chunk: bool = True) -> list[dict]:
     return out
 
 
-def extract_mentions(chunks: DataFrame, batch_hook=None) -> DataFrame:
+def extract_mentions(chunks: DataFrame) -> DataFrame:
     """chunks(chunk_id, doc_id, chunk_ix, content) → mentions table.
 
     ``mapInPandas`` = Arrow-batched, one-to-many, narrow (no shuffle).
-    ``batch_hook(pdf)`` is the model-client boundary: a real deployment
-    calls its batched LLM/NER inference here (the deterministic
-    extractor below stands in for its output); the scaling benchmark
-    injects a calibrated fixed-FLOPs burn to emulate inference cost.
+    Each Arrow batch is where a real deployment would call its batched
+    LLM/NER inference; the deterministic extractor below stands in for
+    its output.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -128,8 +127,6 @@ def extract_mentions(chunks: DataFrame, batch_hook=None) -> DataFrame:
             "obj_type", "description", "weight",
         ]
         for pdf in batches:
-            if batch_hook is not None:
-                batch_hook(pdf)
             # column-wise accumulation: pd.DataFrame from dict-of-lists
             # skips the per-row dict materialization of the previous
             # list-of-dicts form (~2x faster batch construction)

@@ -118,9 +118,6 @@ class IndexResult:
     out_dir: str
     metrics: list[dict] = field(default_factory=list)
 
-    def table(self, spark: SparkSession, name: str) -> DataFrame:
-        return _read_table(spark, f"{self.out_dir}/{name}")
-
 
 def _is_remote(path: str) -> bool:
     # any URI-schemed path (hdfs://, s3a://, gs://, ...) — the local
@@ -193,14 +190,14 @@ def run_index(
     spark: SparkSession,
     web_pages: DataFrame,
     out_dir: str,
-    resume: bool = True,
 ) -> IndexResult:
     """Run (or resume) the full indexing pipeline.
 
-    ``resume=True`` skips any stage whose parquet output already exists
+    A stage whose output already exists under ``out_dir`` is skipped
     (kill-and-rerun produces identical outputs: every stage is a pure
     function of its input tables — content-hash ids, sorted arrays,
-    explicit tie-breaks).
+    explicit tie-breaks). To rebuild from scratch, index into an empty
+    ``out_dir``.
     """
     res = IndexResult(out_dir=out_dir)
 
@@ -263,7 +260,7 @@ def run_index(
         schema-inference job runs between a write and the next build.
         """
         paths = [f"{out_dir}/{n}" for n in names]
-        todo = [n for n, p in zip(names, paths) if not (resume and _exists(p, spark))]
+        todo = [n for n, p in zip(names, paths) if not _exists(p, spark)]
         res.metrics.extend(
             {"stage": n, "skipped": True} for n in names if n not in todo
         )

@@ -72,6 +72,7 @@ from ..operators.vector_topk import (
     cosine_topk_rows,
     tiebreak_col,
 )
+from .index_pipeline import _read_table
 
 _log = logging.getLogger(__name__)
 
@@ -165,6 +166,27 @@ class GraphTables:
     _snapshot_lock: threading.Lock = field(
         default_factory=threading.Lock, init=False, repr=False, compare=False
     )
+
+    @classmethod
+    def from_index(cls, spark: SparkSession, out_dir: str) -> GraphTables:
+        """The KB ``run_index`` wrote to ``out_dir``, read through the
+        table-format seam it writes through. ``path_properties`` is each
+        document's url with its ``warc_ts``."""
+        def read(name: str) -> DataFrame:
+            return _read_table(spark, f"{out_dir}/{name}")
+
+        return cls(
+            nodes=read("nodes"),
+            edges=read("edges"),
+            chunks=read("chunks"),
+            entity_embeddings=read("entity_embeddings"),
+            relation_embeddings=read("relation_embeddings"),
+            chunk_embeddings=read("chunk_embeddings"),
+            path_properties=read("documents").select(
+                F.col("url").alias("file_path"),
+                F.col("warc_ts").alias("last_modified"),
+            ).dropDuplicates(["file_path"]),
+        )
 
     def snapshot(self, spark: SparkSession) -> KBSnapshot | None:
         """The KB's driver snapshot, or None when the KB is over

@@ -27,23 +27,6 @@ def indexed(spark, tmp_out):
     return out, res
 
 
-def _graph_tables(spark, out) -> GraphTables:
-    rd = lambda n: spark.read.parquet(f"{out}/{n}")
-    docs = rd("documents")
-    return GraphTables(
-        nodes=rd("nodes"),
-        edges=rd("edges"),
-        chunks=rd("chunks"),
-        entity_embeddings=rd("entity_embeddings"),
-        relation_embeddings=rd("relation_embeddings"),
-        chunk_embeddings=rd("chunk_embeddings"),
-        path_properties=docs.select(
-            F.col("url").alias("file_path"),
-            F.col("warc_ts").alias("last_modified"),
-        ).dropDuplicates(["file_path"]),
-    )
-
-
 def test_index_outputs(spark, indexed):
     out, res = indexed
     nodes = spark.read.parquet(f"{out}/nodes")
@@ -69,7 +52,7 @@ def test_index_outputs(spark, indexed):
 
 def test_kg_query_modes(spark, indexed):
     out, _ = indexed
-    g = _graph_tables(spark, out)
+    g = GraphTables.from_index(spark, out)
     # pick a hub entity that certainly exists
     hub = (
         spark.read.parquet(f"{out}/nodes")
@@ -125,12 +108,12 @@ def test_resume_skips_and_is_identical(spark, indexed, tmp_out):
     out, _ = indexed
     pages = generate(spark, 80)
     nodes_before = spark.read.parquet(f"{out}/nodes").orderBy("name").toPandas()
-    res2 = run_index(spark, pages, out, resume=True)
+    res2 = run_index(spark, pages, out)
     assert all(m.get("skipped") for m in res2.metrics)
     # kill-and-resume: delete downstream stages, rerun → identical output
     for stg in ["nodes", "edges", "doc_status"]:
         shutil.rmtree(f"{out}/{stg}")
-    res3 = run_index(spark, pages, out, resume=True)
+    res3 = run_index(spark, pages, out)
     redone = {m["stage"] for m in res3.metrics if not m.get("skipped")}
     assert "nodes" in redone and "chunks" not in redone
     nodes_after = spark.read.parquet(f"{out}/nodes").orderBy("name").toPandas()
@@ -156,7 +139,7 @@ def test_resume_redoes_only_missing_stages(spark, indexed):
     def rerun_without(*names):
         for n in names:
             shutil.rmtree(f"{out}/{n}")
-        res = run_index(spark, pages, out, resume=True)
+        res = run_index(spark, pages, out)
         return {m["stage"] for m in res.metrics if not m.get("skipped")}
 
     assert rerun_without("edges_pre") == {"edges_pre"}
@@ -254,7 +237,7 @@ def test_answer_query_modes_and_q12(spark, indexed, tmp_out):
     from graphrag_kb_server_spark.plans.query_pipeline import answer_query
 
     out, _ = indexed
-    g = _graph_tables(spark, out)
+    g = GraphTables.from_index(spark, out)
     hub = (
         spark.read.parquet(f"{out}/nodes")
         .orderBy(F.desc("mention_count"))
@@ -305,7 +288,7 @@ def test_q16_context_template_shape(spark, indexed):
     import re as _re
 
     out, _ = indexed
-    g = _graph_tables(spark, out)
+    g = GraphTables.from_index(spark, out)
     hub = (
         spark.read.parquet(f"{out}/nodes")
         .orderBy(F.desc("mention_count"))
@@ -364,7 +347,7 @@ def test_hybrid_cross_derivation(spark, indexed):
     relation branch; relation list includes edges incident to top local
     entities (lightrag_search.py:984-1066)."""
     out, _ = indexed
-    g = _graph_tables(spark, out)
+    g = GraphTables.from_index(spark, out)
     hub = (
         spark.read.parquet(f"{out}/nodes")
         .orderBy(F.desc("mention_count"))
@@ -414,7 +397,7 @@ def test_run_index_orc_format(spark, tmp_out, monkeypatch):
     out = tmp_out + "/orc_ix"
     pages = generate(spark, 40)
     res = run_index(spark, pages, out)
-    assert res.table(spark, "nodes").count() > 0
+    assert GraphTables.from_index(spark, out).nodes.count() > 0
     assert glob.glob(out + "/nodes/part-*.orc"), "stage files must be ORC"
-    res2 = run_index(spark, pages, out, resume=True)
+    res2 = run_index(spark, pages, out)
     assert all(m.get("skipped") for m in res2.metrics)

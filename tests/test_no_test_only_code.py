@@ -10,10 +10,11 @@ name over the AST: a def is reached when a reached body names it (as a
 ``Name`` or an ``Attribute``), and its own body is then walked. An
 ``x.attr`` counts only when ``x`` is not bound to an import from outside
 the package (``pq.read_table`` does not reach a package ``read_table``).
-The bodies of ``KEEP`` defs are walked too. A multi-line string literal
-that parses as Python (``tools/scaling_run.py`` embeds the script it
-runs) is walked as code. Tests are not roots, so a def or an option that
-only a test uses fails here.
+The bodies of ``KEEP`` defs are walked too. A module-level alias of a
+package def (``name = some_def``) is a def of its own: it must be
+reached, and only then does it reach the def it names. Tests are not
+roots, so a def, an alias or an option that only a test uses fails
+here.
 """
 
 from __future__ import annotations
@@ -93,21 +94,6 @@ def _roots(root: Path) -> list[Path]:
             *sorted((root / "tools").glob("*.py"))]
 
 
-def _code(path: Path) -> list[ast.AST]:
-    """The file's AST and those of its multi-line string literals that
-    parse as Python."""
-    tree = ast.parse(path.read_text())
-    out = [tree]
-    for node in ast.walk(tree):
-        if (isinstance(node, ast.Constant) and isinstance(node.value, str)
-                and "\n" in node.value):
-            try:
-                out.append(ast.parse(node.value))
-            except SyntaxError:
-                pass
-    return out
-
-
 def _foreign(tree: ast.AST) -> set[str]:
     """Names a piece of code binds to imports from outside the package."""
     out: set[str] = set()
@@ -123,10 +109,9 @@ def _foreign(tree: ast.AST) -> set[str]:
 
 
 def _names(tree: ast.AST, aliases: dict[str, str], foreign: set[str]) -> set[str]:
-    """Identifiers a piece of code refers to, with those of any
-    multi-line string literal in it that parses as Python. An ``x.attr``
-    whose ``x`` is in ``foreign`` does not count. Each ``import x as y``
-    found is recorded in ``aliases`` as ``y -> x``."""
+    """Identifiers a piece of code refers to. An ``x.attr`` whose ``x``
+    is in ``foreign`` does not count. Each ``import x as y`` found is
+    recorded in ``aliases`` as ``y -> x``."""
     out: set[str] = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
@@ -136,14 +121,17 @@ def _names(tree: ast.AST, aliases: dict[str, str], foreign: set[str]) -> set[str
                 out.add(node.attr)
         elif isinstance(node, ast.alias) and node.asname:
             aliases[node.asname] = node.name.rsplit(".", 1)[-1]
-        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
-              and "\n" in node.value):
-            try:
-                code = ast.parse(node.value)
-            except SyntaxError:
-                continue
-            out |= _names(code, aliases, foreign | _foreign(code))
     return out
+
+
+def _def_alias(node: ast.AST, defs) -> list[str]:
+    """The names a module-level ``name = some_def`` binds to a package
+    def; empty for any other statement."""
+    if (isinstance(node, ast.Assign) and isinstance(node.value, ast.Name)
+            and node.value.id in defs
+            and all(isinstance(t, ast.Name) for t in node.targets)):
+        return [t.id for t in node.targets]
+    return []
 
 
 def reached(root: Path = ROOT, keep=KEEP) -> tuple[dict[str, list[str]], set[str]]:
@@ -151,15 +139,23 @@ def reached(root: Path = ROOT, keep=KEEP) -> tuple[dict[str, list[str]], set[str
     defs: dict[str, list[tuple[str, ast.AST, set[str]]]] = {}
     aliases: dict[str, str] = {}
     todo: set[str] = set(keep)
+    modules = []
     for path in sorted((root / PACKAGE_NAME).rglob("*.py")):
         mod = str(path.relative_to(root))
         tree = ast.parse(path.read_text())
         foreign = _foreign(tree)
+        modules.append((mod, tree, foreign))
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs.setdefault(node.name, []).append((mod, node, foreign))
+    for mod, tree, foreign in modules:
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 for dec in node.decorator_list:
                     todo |= _names(dec, aliases, foreign)
+            elif names := _def_alias(node, defs):
+                for name in names:
+                    defs.setdefault(name, []).append((mod, node, foreign))
             else:
                 todo |= _names(node, aliases, foreign)
     for path in _roots(root):
@@ -211,6 +207,26 @@ def test_attribute_of_a_foreign_import_reaches_nothing(tmp_path):
     _, seen = reached(tmp_path, keep=())
     assert "save" in seen
     assert "write_table" not in seen
+
+
+def test_alias_of_a_package_def_must_be_reached(tmp_path):
+    """A module-level alias of a package def that only a test reads is
+    not reached, and does not reach the def it names; one a real caller
+    reads reaches it."""
+    pkg = tmp_path / PACKAGE_NAME
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "ops.py").write_text(
+        "def run():\n    return 1\n\n\n"
+        "def helper():\n    return 2\n\n\n"
+        "old_helper = helper\nold_run = run\n")
+    (tmp_path / "__spark_entry__.py").write_text(
+        f"from {PACKAGE_NAME}.ops import old_run\n\nold_run()\n")
+    (tmp_path / "bench.py").write_text("")
+    defs, seen = reached(tmp_path, keep=())
+    assert {"old_helper", "old_run"} <= set(defs)
+    assert {"old_run", "run"} <= seen
+    assert not {"old_helper", "helper"} & seen
 
 
 # ── defaulted parameters ─────────────────────────────────────────────
@@ -265,30 +281,29 @@ def _calls(paths: list[Path]) -> dict[str, list[tuple[int, bool, set[str], bool]
             f.attr if isinstance(f, ast.Attribute) else None)
 
     for path in paths:
-        for tree in _code(path):
-            for node in ast.walk(tree):
-                if not isinstance(node, ast.Call):
-                    continue
-                callee, args = name_of(node.func), list(node.args)
-                if callee == "partial" and args:
-                    callee, args = name_of(args[0]), args[1:]
-                if callee is None:
-                    continue
-                kw, star_kw = set(), False
-                for k in node.keywords:
-                    if k.arg is not None:
-                        kw.add(k.arg)
-                    elif isinstance(k.value, ast.Dict):
-                        kw |= {e.value for e in k.value.keys
-                               if isinstance(e, ast.Constant)}
-                    elif (isinstance(k.value, ast.Call)
-                          and name_of(k.value.func) == "dict"):
-                        kw |= {kk.arg for kk in k.value.keywords if kk.arg}
-                    else:
-                        star_kw = True
-                n_pos = sum(not isinstance(a, ast.Starred) for a in args)
-                starred = any(isinstance(a, ast.Starred) for a in args)
-                out.setdefault(callee, []).append((n_pos, starred, kw, star_kw))
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            callee, args = name_of(node.func), list(node.args)
+            if callee == "partial" and args:
+                callee, args = name_of(args[0]), args[1:]
+            if callee is None:
+                continue
+            kw, star_kw = set(), False
+            for k in node.keywords:
+                if k.arg is not None:
+                    kw.add(k.arg)
+                elif isinstance(k.value, ast.Dict):
+                    kw |= {e.value for e in k.value.keys
+                           if isinstance(e, ast.Constant)}
+                elif (isinstance(k.value, ast.Call)
+                      and name_of(k.value.func) == "dict"):
+                    kw |= {kk.arg for kk in k.value.keywords if kk.arg}
+                else:
+                    star_kw = True
+            n_pos = sum(not isinstance(a, ast.Starred) for a in args)
+            starred = any(isinstance(a, ast.Starred) for a in args)
+            out.setdefault(callee, []).append((n_pos, starred, kw, star_kw))
     return out
 
 

@@ -484,18 +484,25 @@ def test_unusable_embeddings_answer_alike(spark, monkeypatch, caplog, bad):
     alike: such a row is not a candidate on either path."""
     from test_query_ops import _mini_graph
 
-    clean = _mini_graph(spark)
+    # checkpointed once, as in test_snapshot_matches_distributed_stage1:
+    # the forced-distributed requests then scan the block manager
+    # instead of re-running Python workers over the local rows
+    mini = _mini_graph(spark)
+    frames = {f: None if getattr(mini, f) is None
+              else getattr(mini, f).localCheckpoint(eager=True) for f in _FIELDS}
+    clean = GraphTables(**frames)
     emb = _unusable(bad, _vec("Beta"))
     extra = {"entity_embeddings": [("Beta", emb)],
              "relation_embeddings": [("Alpha", "Beta", emb)],
              "chunk_embeddings": [("c1", emb)]}
+    bad_frames = dict(frames)
+    for f, rows in extra.items():
+        bad_frames[f] = frames[f].union(
+            spark.createDataFrame(rows, frames[f].schema)
+        ).localCheckpoint(eager=True)
 
     def with_bad_rows() -> GraphTables:
-        frames = {f: getattr(clean, f) for f in _FIELDS}
-        for f, rows in extra.items():
-            frames[f] = frames[f].union(
-                spark.createDataFrame(rows, frames[f].schema))
-        return GraphTables(**frames)
+        return GraphTables(**bad_frames)
 
     # top_k=1: a bad row ranked first would displace the real one
     combos = [QueryParams(mode=m, top_k=1)

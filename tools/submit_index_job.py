@@ -36,7 +36,7 @@ def main() -> None:
         pages = corpus_mod.generate(spark, 1000)
 
     t0 = time.time()
-    res = run_index(spark, pages, out, resume=True)
+    res = run_index(spark, pages, out)
     n = spark.read.parquet(f"{out}/doc_status").count()
     print(json.dumps({
         "out": out, "docs": n, "seconds": round(time.time() - t0, 2),
