@@ -37,6 +37,7 @@ repeat is attributable from the artifact alone. Volatile entries
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -94,6 +95,11 @@ BENCH_QUERIES = [
 # box; they always get >=3 repeats so min-of-N converges on warm cost
 VOLATILE_QUERIES = {"t4_entity_merge", "g2_lpa_communities"}
 
+#: seconds idle_gate waits for a quiet box before it gives up
+IDLE_TIMEOUT_S = 300.0
+#: sentences per page of the bench corpus (~4 KB of text per page)
+CORPUS_SENT_RANGE = (24, 72)
+
 
 def _noop_write(df) -> None:
     df.write.format("noop").mode("overwrite").save()
@@ -137,7 +143,7 @@ def _foreign_spark_jvms() -> list[int]:
     return pids
 
 
-def idle_gate(max_load: float, timeout_s: float = 300.0) -> dict:
+def idle_gate(max_load: float) -> dict:
     """Block until the box is quiet; returns evidence for the artifact.
 
     Hard-fails only on foreign Spark JVMs that persist the whole
@@ -156,11 +162,11 @@ def idle_gate(max_load: float, timeout_s: float = 300.0) -> dict:
                 "start_loadavg1": load,
                 "violated": False,
             }
-        if time.time() - t0 > timeout_s:
+        if time.time() - t0 > IDLE_TIMEOUT_S:
             if jvms:
                 print(
                     f"bench: FATAL — foreign Spark JVMs alive after "
-                    f"{timeout_s:.0f}s idle wait: {jvms}. Kill them and "
+                    f"{IDLE_TIMEOUT_S:.0f}s idle wait: {jvms}. Kill them and "
                     f"re-run; refusing to pin numbers against them.",
                     file=sys.stderr,
                 )
@@ -182,17 +188,20 @@ def _cpu_jiffies() -> dict[str, int]:
     return {"steal": vals[7], "total": sum(vals)}
 
 
-def _ensure_corpus(spark, n_docs: int, sent_lo: int = 24, sent_hi: int = 72) -> str:
+def _ensure_corpus(spark, n_docs: int) -> str:
     """Bench corpus: Common-Crawl-realistic page sizes (~4 KB of text),
     same deterministic generator as the fixtures. Written once and
-    reused across runs, so every run indexes identical input."""
+    reused across runs, so every run indexes identical input. The
+    directory is named after ``n_docs`` and a digest of the generator's
+    source, so a change to ``corpus.py`` writes a fresh corpus."""
+    digest = hashlib.sha256(Path(corpus_mod.__file__).read_bytes()).hexdigest()
     path = (
         f"{Path(__file__).resolve().parent}/.data/"
-        f"bench_corpus_{n_docs}_{sent_lo}_{sent_hi}"
+        f"bench_corpus_{n_docs}_{digest[:12]}"
     )
     if not os.path.exists(f"{path}/_SUCCESS"):
         corpus_mod.generate(
-            spark, n_docs, n_partitions=64, sent_range=(sent_lo, sent_hi)
+            spark, n_docs, n_partitions=64, sent_range=CORPUS_SENT_RANGE
         ).write.mode("overwrite").parquet(path)
     return path
 

@@ -23,7 +23,7 @@ LSH replaces its O(n^2) similarity matrix at scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -146,6 +146,26 @@ def lsh_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
             )
             for b in range(bands)
         ]
+    )
+
+
+def minhash_bands(
+    df: DataFrame, key: str, shingles: Column, num_hashes: int, bands: int
+) -> DataFrame:
+    """(key, band): one row per LSH band key of each row's shingle set —
+    shingles → hex digests → minhash signature → band keys → explode,
+    the blocking pipeline of entity linking and minhash dedup.
+    ``shingles`` is an ARRAY<STRING> expression over ``df``'s columns.
+
+    Staged projections: the hex stage pays ONE md5 per shingle, and
+    CollapseProject keeps it as its own project because the signature
+    references it ``num_hashes`` times."""
+    return (
+        df.select(key, shingles.alias("_sh"))
+        .select(key, shingle_hexes(F.col("_sh"), num_hashes).alias("_hx"))
+        .select(key, minhash_from_hexes(F.col("_hx"), num_hashes).alias("_sig"))
+        .select(key, lsh_bands(F.col("_sig"), bands, num_hashes // bands).alias("bands"))
+        .select(key, F.explode("bands").alias("band"))
     )
 
 

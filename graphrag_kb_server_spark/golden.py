@@ -416,9 +416,9 @@ def _round_robin(branches: list[list[dict]], key_fn) -> list[dict]:
 
 
 def _truncate(rows: list[dict], text_fn, budget: int) -> list[dict]:
-    """Twin of truncate_by_token_budget (faithful default: an
-    over-budget FIRST row yields an empty list, as the reference's
-    truncate_list_by_token_size does)."""
+    """Twin of truncate_by_token_budget (an over-budget FIRST row
+    yields an empty list, as the reference's truncate_list_by_token_size
+    does)."""
     from .tokenizer import count_tokens
 
     out, cum = [], 0

@@ -10,8 +10,7 @@ union + running-last window:
    most recent right payload forward — tag 0 sorts before tag 1 at
    equal times, so a right row AT the probe time matches (inclusive,
    pandas ``merge_asof(allow_exact_matches=True)`` semantics);
-3. keep the left rows, expand the carried struct, null out matches
-   older than ``tolerance`` (when given).
+3. keep the left rows and expand the carried struct.
 
 Why this shape at 100 TB: ONE shuffle of left ∪ right on the key (the
 same exchange a sort-merge join would pay), no join explosion, no
@@ -33,7 +32,7 @@ implementation of the same semantics (asof_events entry).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -42,19 +41,14 @@ def asof_join(
     right: DataFrame,
     key: str,
     left_time: str,
-    right_time: str | None = None,
-    tolerance: Column | None = None,
 ) -> DataFrame:
     """LEFT as-of join: every ``left`` row, plus the payload of the most
     recent ``right`` row with the same ``key`` and time ≤ the left time
-    (inclusive). Right payload columns (everything but key+time) come
-    back nullable, with the matched time as ``asof_time``.
-
-    ``tolerance``: optional max-age interval column (e.g.
-    ``F.expr("INTERVAL 1 HOUR")``); older matches are nulled out.
+    (inclusive). Both sides name their time column ``left_time``.
+    Right payload columns (everything but key+time) come back nullable,
+    with the matched time as ``asof_time``.
     """
-    rt = right_time or left_time
-    payload = [c for c in right.columns if c not in (key, rt)]
+    payload = [c for c in right.columns if c not in (key, left_time)]
     clash = [c for c in payload if c in left.columns] + (
         ["asof_time"] if "asof_time" in left.columns else []
     )
@@ -67,11 +61,11 @@ def asof_join(
             "left columns — rename one side before joining"
         )
     rv = F.struct(
-        F.col(rt).alias("asof_time"), *[F.col(c) for c in payload]
+        F.col(left_time).alias("asof_time"), *[F.col(c) for c in payload]
     )
     r2 = right.select(
         F.col(key).alias("_k"),
-        F.col(rt).alias("_t"),
+        F.col(left_time).alias("_t"),
         F.lit(0).alias("_tag"),
         rv.alias("_rv"),
         F.lit(None).cast(
@@ -95,13 +89,6 @@ def asof_join(
         .withColumn("_m", F.last("_rv", ignorenulls=True).over(w))
         .where(F.col("_tag") == 1)
     )
-    if tolerance is not None:
-        matched = matched.withColumn(
-            "_m",
-            F.when(
-                F.col("_m.asof_time") >= F.col("_t") - tolerance, F.col("_m")
-            ),
-        )
     return matched.select(
         *[F.col(f"_lv.{c}").alias(c) for c in left.columns],
         F.col("_m.asof_time").alias("asof_time"),

@@ -39,6 +39,10 @@ from graphrag_kb_server_spark.functions.vectors import to_double
 from graphrag_kb_server_spark.operators.sampling import _int_hash, _op_seed
 
 
+#: seed of the hash draw that picks the initial centroids
+SEED = "42"
+
+
 def _sq_dist(vec, cent) -> F.Column:
     """Sequential-fold squared euclidean distance (zip then one
     in-order aggregate — the same evaluation order every mirror
@@ -56,7 +60,6 @@ def kmeans(
     vec_col: str,
     k: int = 10,
     iters: int = 4,
-    seed: str = "42",
     keep_vec: bool = False,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Fixed-iteration Lloyd's k-means; returns (assignments, centroids).
@@ -72,7 +75,7 @@ def kmeans(
     ).localCheckpoint(eager=False)
 
     init = (
-        src.orderBy(_int_hash(F.col("_pid"), _op_seed("kmeans", seed)), "_pid")
+        src.orderBy(_int_hash(F.col("_pid"), _op_seed("kmeans", SEED)), "_pid")
         .limit(k)
         .collect()
     )
@@ -150,7 +153,6 @@ def semantic_dedup_pairs(
     k: int = 10,
     iters: int = 4,
     threshold: float = 0.95,
-    seed: str = "42",
 ) -> DataFrame:
     """SemDeDup: near-duplicate pairs = cosine ≥ threshold WITHIN a
     k-means cluster. The cluster equi-join bounds candidate pairs to
@@ -164,7 +166,7 @@ def semantic_dedup_pairs(
     )
 
     assigned, _ = kmeans(
-        points, id_col, vec_col, k=k, iters=iters, seed=seed, keep_vec=True
+        points, id_col, vec_col, k=k, iters=iters, keep_vec=True
     )
     # the assignment frame already carries the widened vector — no
     # second pass over the corpus, no re-join

@@ -324,7 +324,6 @@ def hierarchical_communities(
     edges: DataFrame,
     max_cluster_size: int = 10,
     max_levels: int = 4,
-    use_lcc: bool = True,
     refine: bool = False,
 ) -> DataFrame:
     """→ (node, level INT, cluster STRING, parent_cluster STRING|NULL).
@@ -335,11 +334,10 @@ def hierarchical_communities(
     shipped onepoint graph) at the cost of the refinement rounds;
     defaults off to keep the shipped level-0 oracles byte-stable.
 
-    ``use_lcc=True`` (the reference's behavior): clustering runs over
-    the LARGEST CONNECTED COMPONENT only — the reference extracts the
-    LCC with stabilized ordering before hierarchical_leiden
-    (lightrag_clustering.py:236-247); nodes outside the LCC get no
-    community assignment.
+    Clustering runs over the LARGEST CONNECTED COMPONENT only, as the
+    reference does: it extracts the LCC with stabilized ordering before
+    hierarchical_leiden (lightrag_clustering.py:236-247); nodes outside
+    the LCC get no community assignment.
 
     Level 0 = LPA over the (LCC-gated) graph; oversize clusters are
     split recursively (subgraph LPA with min-label components as
@@ -347,12 +345,11 @@ def hierarchical_communities(
     hash-partition guarantees progress, mirroring graspologic's forced
     splitting of indivisible oversize clusters).
     """
-    if use_lcc:
-        lcc = largest_connected_component(edges).localCheckpoint(eager=True)
-        edges = (
-            edges.join(lcc.withColumnRenamed("node", "src"), "src")
-            .join(lcc.withColumnRenamed("node", "tgt"), "tgt")
-        )
+    lcc = largest_connected_component(edges).localCheckpoint(eager=True)
+    edges = (
+        edges.join(lcc.withColumnRenamed("node", "src"), "src")
+        .join(lcc.withColumnRenamed("node", "tgt"), "tgt")
+    )
     assignments: list[DataFrame] = []
     lvl0_lab = label_propagation(edges, max_iterations=LPA_ITERATIONS)
     if refine:

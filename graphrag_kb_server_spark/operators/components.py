@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 
 from .graph_support import collect_if_small
 
-#: round budget of connected_components (and the default of
-#: connected_components_star's alternations)
+#: round budget of connected_components, and the alternation budget of
+#: connected_components_star
 MAX_ITERATIONS = 50
 #: k_core peel rounds per convergence check, and its round budget
 K_CORE_STRIDE = 3
@@ -186,9 +186,7 @@ def connected_components(
     return labels.select("node", F.col("label").alias("component"))
 
 
-def connected_components_star(
-    edges: DataFrame, max_iterations: int = MAX_ITERATIONS
-) -> DataFrame:
+def connected_components_star(edges: DataFrame) -> DataFrame:
     """edges(src, tgt) → (node STRING, component STRING) via alternating
     large-star / small-star (Kiveris et al., SoCC'14). Same contract as
     ``connected_components`` (component = min member, string order).
@@ -244,7 +242,7 @@ def connected_components_star(
 
     prev_fp = None
     converged = False
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         # lazy checkpoint: the fingerprint aggregate's job materializes
         # it — one action per round, and lineage still resets
         e = small_star(large_star(e)).localCheckpoint(eager=False)
@@ -263,8 +261,8 @@ def connected_components_star(
     if not converged:
         raise RuntimeError(
             f"connected_components_star did not reach an edge-set "
-            f"fixpoint in {max_iterations} alternations — the partial "
-            "contraction is not a valid labeling; raise max_iterations"
+            f"fixpoint in {MAX_ITERATIONS} alternations — the partial "
+            "contraction is not a valid labeling; raise MAX_ITERATIONS"
         )
 
     # stars: every edge is (child, component-min); minima label themselves

@@ -48,6 +48,10 @@ def query_scores(chunk_embeddings: DataFrame, query_text: str) -> DataFrame:
     ).where(F.col("vscore").isNotNull())
 
 
+#: chunks per entity of the Spark twin's pick (QueryParams' default)
+RELATED_CHUNK_NUMBER = 5
+
+
 def _pick_size(n_entities: int, related_chunk_number: int) -> int:
     return max(int(related_chunk_number * n_entities / 2), 1)
 
@@ -57,21 +61,20 @@ def vector_similarity_chunk_pick(
     chunk_embeddings: DataFrame,
     query_text: str,
     n_entities: int,
-    related_chunk_number: int = 5,
 ) -> DataFrame:
-    """Q12 — candidates(chunk_id) → top ``related_chunk_number *
+    """Q12 — candidates(chunk_id) → top ``RELATED_CHUNK_NUMBER *
     n_entities / 2`` by cosine to the query embedding (ties by
     chunk_id)."""
     return cosine_topk(
         candidate_chunk_ids.join(chunk_embeddings, "chunk_id"),
         embed_text(query_text),
-        _pick_size(n_entities, related_chunk_number),
+        _pick_size(n_entities, RELATED_CHUNK_NUMBER),
         score_alias="vscore",
     ).select("chunk_id", "vscore")
 
 
 def vector_pick_ids(
-    scores: dict, n_entities: int, related_chunk_number: int = 5
+    scores: dict, n_entities: int, related_chunk_number: int
 ) -> set:
     """Driver twin of :func:`vector_similarity_chunk_pick` over the
     candidates' {chunk_id: vscore}."""

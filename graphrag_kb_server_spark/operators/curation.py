@@ -40,15 +40,6 @@ from pyspark.sql import functions as F
 _TERMINAL_RE = r'[.!?"]\s*$'
 
 
-def _regex_literal(sep: str) -> str:
-    """Quote a caller-supplied separator for ``F.split`` (which takes a
-    Java REGEX): \\Q...\\E literal quoting, with any embedded \\E
-    re-opened — java.util.regex.Pattern.quote semantics. Without this a
-    sep like ``"|"`` is an empty-alternation regex that splits between
-    every character while ``array_join`` re-inserts it literally."""
-    return "\\Q" + sep.replace("\\E", "\\E\\\\E\\Q") + "\\E"
-
-
 #: C4's line floor (whitespace words) and document floor (kept lines)
 MIN_WORDS = 3
 MIN_KEPT_LINES = 3
@@ -114,41 +105,39 @@ def gopher_repetition(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    sep: str = "\n",
-    unit: str = "line",
 ) -> DataFrame:
-    """Per-document duplicate-``unit`` fractions (lines or paragraphs).
+    """Per-document duplicate-line fractions.
 
-    For each document: fraction of units that are repeats of an
-    earlier identical unit, and the character-weighted version —
+    For each document: fraction of lines that are repeats of an
+    earlier identical line, and the character-weighted version —
     the two repetition signals Gopher filters on (``dup_line_frac``
     > 0.30 / ``dup_line_char_frac`` > 0.20 drop the page; thresholds
     are the caller's policy, this computes the signals).
 
     Returns one row per document:
-    ``(id, n_<unit>s, dup_<unit>_frac, dup_<unit>_char_frac)``,
+    ``(id, n_lines, dup_line_frac, dup_line_char_frac)``,
     fractions rounded to 6.
 
-    Shape: explode → groupBy(doc, unit) → groupBy(doc). Both
+    Shape: explode → groupBy(doc, line) → groupBy(doc). Both
     aggregations partial-combine map-side; the first key contains the
     doc id, so a globally common line ("Subscribe now.") never
     concentrates on one reducer.
     """
     ex = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), _regex_literal(sep))).alias("u"),
+        F.explode(F.split(F.col(text_col), "\n")).alias("u"),
     )
     per_unit = ex.groupBy("id", "u").agg(F.count(F.lit(1)).alias("cnt"))
     extra = F.col("cnt") - 1
     chars = F.length("u")
     out = per_unit.groupBy("id").agg(
-        F.sum("cnt").cast("bigint").alias(f"n_{unit}s"),
+        F.sum("cnt").cast("bigint").alias("n_lines"),
         F.round(
             F.sum(extra) / F.sum("cnt"), 6
-        ).alias(f"dup_{unit}_frac"),
+        ).alias("dup_line_frac"),
         F.round(
             F.sum(extra * chars) / F.sum(F.col("cnt") * chars), 6
-        ).alias(f"dup_{unit}_char_frac"),
+        ).alias("dup_line_char_frac"),
     )
     return out.withColumnRenamed("id", id_col)
 
@@ -283,11 +272,10 @@ def normalize_url(url_col: Column) -> Column:
     )
 
 
-def url_keep(url_col: Column, blocked_domains: frozenset[str] | None = None) -> Column:
+def url_keep(url_col: Column) -> Column:
     """True iff the (normalized) URL is worth fetching as text:
-    http(s) scheme, host not in ``blocked_domains``, and the path
-    extension is not a known binary/media type. Row-local predicate —
-    pushes down to the scan."""
+    http(s) scheme, and the path extension is not a known binary/media
+    type. Row-local predicate — pushes down to the scan."""
     scheme_ok = url_col.rlike(r"^https?://")
     # extension taken from the PATH component only: anchored past the
     # host (so a path-less "https://update.zip" is not dropped for its
@@ -300,27 +288,27 @@ def url_keep(url_col: Column, blocked_domains: frozenset[str] | None = None) -> 
             1,
         )
     )
-    ext_ok = ~ext.isin(*_NON_TEXT_EXT)
-    host = F.regexp_extract(url_col, r"^https?://([^/:?#]+)", 1)
-    dom_ok = (
-        ~host.isin(*sorted(blocked_domains)) if blocked_domains else F.lit(True)
-    )
-    return scheme_ok & ext_ok & dom_ok
+    return scheme_ok & ~ext.isin(*_NON_TEXT_EXT)
 
 
 # ---------------------------------------------------------------------------
 # Corpus-wide paragraph-level exact dedup (CCNet / RefinedWeb style)
 # ---------------------------------------------------------------------------
 
+#: the paragraph separator of paragraph_dedup (a regex without
+#: metacharacters, so F.split and array_join agree on it)
+PARAGRAPH_SEP = "\n\n"
+
+
 def paragraph_dedup(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    sep: str = "\n\n",
 ) -> DataFrame:
-    """Remove every paragraph that appeared earlier in the corpus
-    (first occurrence wins; order = ``(id, position)``), then
-    reassemble each document from its surviving paragraphs.
+    """Remove every paragraph (blank-line separated) that appeared
+    earlier in the corpus (first occurrence wins; order = ``(id,
+    position)``), then reassemble each document from its surviving
+    paragraphs.
 
     This is the cross-document boilerplate killer (cookie banners,
     footers) that document-level dedup cannot express.
@@ -342,9 +330,7 @@ def paragraph_dedup(
     """
     paras = df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(
-            F.split(F.col(text_col), _regex_literal(sep))
-        ).alias("pos", "para"),
+        F.posexplode(F.split(F.col(text_col), PARAGRAPH_SEP)).alias("pos", "para"),
     ).withColumn("h", F.md5("para"))
     winners = paras.groupBy("h").agg(
         F.min(F.struct("id", "pos")).alias("w")
@@ -360,7 +346,7 @@ def paragraph_dedup(
                 F.array_sort(F.collect_list(F.struct("pos", "para"))),
                 lambda s: s["para"],
             ),
-            sep,
+            PARAGRAPH_SEP,
         ).alias(text_col),
     )
     # left join from totals: a document whose every paragraph was a

@@ -2,7 +2,7 @@
 
 Five dedup strategies over a documents table, each returning either a
 keep/drop assignment or duplicate-pair candidates. All are DataFrame
-programs (the only Python is the optional embedding UDF); the pair
+programs with no Python per row; the pair
 builders persist their blocking index via LAZY local checkpoints —
 constructing the frame runs no job, the first action materializes the
 index once for all of its consumers. At cluster scale the same role is
@@ -15,7 +15,7 @@ durability for zero extra IO in a single-job run.
 - simhash_dedup          — 64-bit simhash, multi-permutation rotated
                            prefix blocks + hamming check
 - ngram_jaccard_pairs    — token-shingle Jaccard via explode + join
-- embedding_near_dup     — cosine over hash-embeddings with LSH-style
+- embedding_near_dup     — cosine over embedding vectors with LSH-style
                            bucket blocking (the scale path for
                            matching.py:100-128's dense similarity matrix)
 
@@ -36,14 +36,17 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..functions import vectors as V
-from ..functions.embedding import embed_udf
 
 #: MinHash LSH shape: hash functions, bands, and words per shingle
 NUM_HASHES = 16
 BANDS = 8
 SHINGLE_WORDS = 3
+#: sub-bucket cap of the minhash blocking
+LSH_MAX_BUCKET = 256
 #: sub-bucket cap of the simhash and embedding blockings
 MAX_BUCKET = 4096
+#: simhash prefix rotations (multi-permutation index)
+SIMHASH_ROTATIONS = 4
 
 
 def exact_dedup(df: DataFrame, content_col: str, order_col: str) -> DataFrame:
@@ -60,30 +63,14 @@ def exact_dedup(df: DataFrame, content_col: str, order_col: str) -> DataFrame:
     )
 
 
-def _band_table(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-) -> DataFrame:
+def _band_table(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """(id, band) — one row per LSH band key over SHINGLE_WORDS-word
-    shingles. Staged projections: the hex stage pays ONE md5 per
-    shingle; the signature references it num_hashes times, so
-    CollapseProject keeps it in its own project (evaluated once per
-    row) instead of inlining the md5 into every slice."""
-    rows_per_band = num_hashes // bands
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        H.word_shingles(F.lower(F.col(content_col)), SHINGLE_WORDS).alias("_sh"),
+    shingles of the lowercased content."""
+    return H.minhash_bands(
+        df.select(F.col(id_col).alias("id"), F.col(content_col).alias("_c")),
+        "id", H.word_shingles(F.lower(F.col("_c")), SHINGLE_WORDS),
+        NUM_HASHES, BANDS,
     )
-    hx = sh.select("id", H.shingle_hexes(F.col("_sh"), num_hashes).alias("_hx"))
-    sig = hx.select(
-        "id", H.minhash_from_hexes(F.col("_hx"), num_hashes).alias("_sig")
-    ).select(
-        "id", H.lsh_bands(F.col("_sig"), bands, rows_per_band).alias("bands")
-    )
-    return sig.select("id", F.explode("bands").alias("band"))
 
 
 def minhash_lsh_dedup_incremental(
@@ -105,8 +92,8 @@ def minhash_lsh_dedup_incremental(
     ``minhash_lsh_dedup``'s job — compose the two. Returns the
     surviving new rows.
     """
-    nb = _band_table(new_df, content_col, id_col, NUM_HASHES, BANDS)
-    sb = _band_table(seen_df, content_col, id_col, NUM_HASHES, BANDS)
+    nb = _band_table(new_df, content_col, id_col)
+    sb = _band_table(seen_df, content_col, id_col)
     hit = (
         nb.join(sb.select("band"), "band", "left_semi")
         .select(F.col("id").alias(id_col))
@@ -115,19 +102,13 @@ def minhash_lsh_dedup_incremental(
     return new_df.join(hit, id_col, "left_anti")
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    num_hashes: int = NUM_HASHES,
-    bands: int = BANDS,
-    max_bucket: int = 256,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """Near-duplicate candidate pairs (id_a < id_b) via word-shingle
     MinHash LSH. Pair formation is band-bucket-local (equi-join on the
-    band key), never all-pairs."""
-    b = _band_table(df, content_col, id_col, num_hashes, bands)
-    b = split_oversized_buckets(b, "band", "id", max_bucket)
+    band key), never all-pairs; a band bucket over ``LSH_MAX_BUCKET``
+    is split."""
+    b = _band_table(df, content_col, id_col)
+    b = split_oversized_buckets(b, "band", "id", LSH_MAX_BUCKET)
     return (
         b.alias("x")
         .join(b.alias("y"), "band")
@@ -270,21 +251,20 @@ def simhash_dedup_pairs(
     id_col: str,
     prefix_nibbles: int = 4,
     max_hamming_nibbles: int = 2,
-    rotations: int = 4,
 ) -> DataFrame:
     """SimHash near-dup pairs: 64-bit simhash over word tokens; block on
-    the hash prefix under ``rotations`` nibble-rotations of the hash
+    the hash prefix under ``SIMHASH_ROTATIONS`` nibble-rotations of the hash
     (the standard multi-permutation simhash index: a near-dup pair that
     differs inside one rotation's prefix agrees on another rotation's
     prefix whenever its differing nibbles don't span every rotation
     window); verify by nibble-level hamming distance ≤ k; union + dedup
-    pairs across rotations. With rotations=1 this degrades to the
-    single-prefix block that misses near-dups differing in the leading
-    nibbles. Each rotation's block key is tagged with the rotation index
+    pairs across rotations. A single-prefix block would miss near-dups
+    differing in the leading nibbles. Each rotation's block key is
+    tagged with the rotation index
     so buckets never mix across rotations; oversized blocks are split,
     not dropped (split_oversized_buckets)."""
     tokens = F.split(F.lower(F.trim(F.col(content_col))), r"\s+")
-    step = max(16 // max(rotations, 1), 1)
+    step = 16 // SIMHASH_ROTATIONS
     # computed ONCE per row, shared by every consumer: the simhash
     # frame feeds the oversize-split stats, its join-back, and both
     # self-join sides. The checkpoint is LAZY — building this frame
@@ -326,7 +306,7 @@ def simhash_dedup_pairs(
                             prefix_nibbles,
                         ),
                     )
-                    for r in range(max(rotations, 1))
+                    for r in range(SIMHASH_ROTATIONS)
                 ]
             )
         ).alias("block"),
@@ -392,12 +372,10 @@ def ngram_jaccard_pairs(
 def embedding_near_dup_pairs(
     df: DataFrame,
     id_col: str,
-    content_col: str | None = None,
-    vec_col: str | None = None,
+    vec_col: str,
     threshold: float = 0.95,
     n_planes: int = 8,
     seed: int = 42,
-    probe_hamming: int = 0,
 ) -> DataFrame:
     """Embedding-cosine near-dup with random-hyperplane (SimHash-for-
     vectors) bucket blocking: sign pattern of ``n_planes`` seeded
@@ -410,24 +388,15 @@ def embedding_near_dup_pairs(
     instead of silently dropping it (``split_oversized_buckets``).
 
     Recall trade: more planes → smaller buckets but more true pairs
-    split across buckets (P[same bucket] = (1 − θ/π)^n_planes).
-    ``probe_hamming=1`` is the multi-probe mitigation: each row emits
-    its exact sign key PLUS ``n_planes`` one-deletion keys (sign bit i
-    masked to '*'); two rows whose patterns differ in at most one plane
-    share a key, so a true pair straddling ONE hyperplane is still
-    blocked together. Symmetric (one explode on the single table),
-    composes with the oversize split, costs (n_planes+1)× blocking
-    rows. For wider tolerance, repeat the blocking with independent
-    seeds and union the outputs.
+    split across buckets (P[same bucket] = (1 − θ/π)^n_planes). For
+    wider tolerance, repeat the blocking with independent seeds and
+    union the outputs.
 
     Matches the reference's greedy cosine-dedup semantics
     (matching.py:100-128) with keep-earlier-wins applied by the caller.
     """
     import numpy as np
 
-    if vec_col is None:
-        df = df.withColumn("_vec", embed_udf(F.col(content_col)))
-        vec_col = "_vec"
     dim_row = df.select(F.size(vec_col).alias("d")).first()
     dim = dim_row["d"] if dim_row else 0
     rng = np.random.default_rng(seed)
@@ -467,23 +436,6 @@ def embedding_near_dup_pairs(
     keyed = base.select(
         "id", "v", bucket.alias("bucket"), V.norm(F.col("v")).alias("nrm")
     ).localCheckpoint(eager=False)  # signs/norm computed once, not per consumer (lazy: no job until first action)
-    if probe_hamming > 0:
-        # one-deletion keys: exact pattern + each position masked; rows
-        # at sign-hamming ≤ 1 share at least one key
-        keys = F.array(
-            F.col("bucket"),
-            *[
-                F.concat(
-                    F.substring("bucket", 1, i),
-                    F.lit("*"),
-                    F.substring("bucket", i + 2, n_planes - i - 1),
-                )
-                for i in range(n_planes)
-            ],
-        )
-        keyed = keyed.select(
-            "id", "v", "nrm", F.explode(keys).alias("bucket")
-        )
     keyed = split_oversized_buckets(keyed, "bucket", "id", MAX_BUCKET)
     x, y = keyed.alias("x"), keyed.alias("y")
     cos = V.cosine_with_norms(

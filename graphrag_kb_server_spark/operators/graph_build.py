@@ -48,7 +48,8 @@ from pyspark.sql import functions as F
 
 from .. import GRAPH_FIELD_SEP
 
-DEFAULT_SALT_BUCKETS = 16
+#: salt buckets S of the two-phase merges
+SALT_BUCKETS = 16
 MAX_SOURCE_CHUNKS = 64
 MAX_DESCRIPTIONS = 16
 
@@ -63,10 +64,7 @@ def _merge_capped(col: str, k: int):
     )
 
 
-def build_nodes(
-    mentions: DataFrame,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-) -> DataFrame:
+def build_nodes(mentions: DataFrame) -> DataFrame:
     """mentions → nodes(name, type, description, source_chunk_ids,
     mention_count, chunk_count). T4 entity merge."""
     sides = mentions.select(
@@ -79,13 +77,13 @@ def build_nodes(
         )
     )
     salted = sides.withColumn(
-        "_salt", F.pmod(F.xxhash64("chunk_id"), F.lit(salt_buckets))
+        "_salt", F.pmod(F.xxhash64("chunk_id"), F.lit(SALT_BUCKETS))
     )
     # one collect_set per key; count + capped sample derived from it in
     # a projection. (A countDistinct here would trigger Catalyst's
     # Expand-based distinct rewrite — 6x slower measured. Per-salt set
-    # size is bounded by |distinct chunks of the key| / salt_buckets;
-    # scale salt_buckets with corpus size.)
+    # size is bounded by |distinct chunks of the key| / SALT_BUCKETS;
+    # scale SALT_BUCKETS with corpus size.)
     partial = salted.groupBy("name", "_salt").agg(
         F.collect_set("type").alias("p_types"),
         _capped_sorted_set("description", MAX_DESCRIPTIONS).alias("p_descs"),
@@ -119,7 +117,7 @@ def build_edges(mentions: DataFrame) -> DataFrame:
         "pred", "description", "chunk_id", "weight",
     )
     salted = undirected.withColumn(
-        "_salt", F.pmod(F.xxhash64("chunk_id"), F.lit(DEFAULT_SALT_BUCKETS))
+        "_salt", F.pmod(F.xxhash64("chunk_id"), F.lit(SALT_BUCKETS))
     )
     partial = salted.groupBy("src", "tgt", "_salt").agg(
         F.sum("weight").alias("p_weight"),

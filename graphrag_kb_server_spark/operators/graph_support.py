@@ -72,17 +72,13 @@ def entity_type_histogram(nodes: DataFrame) -> DataFrame:
     )
 
 
-def topics(
-    centrality_table: DataFrame,
-    entity_types: list[str] | None = None,
-    limit: int = 100,
-) -> DataFrame:
+def topics(centrality_table: DataFrame) -> DataFrame:
     """P1/P8 — centrality-ranked topic candidates: the SAME selection
-    as personalization.candidate_entities (one implementation — the two
-    surfaces must not drift on tie-breaks), re-projected to the topics
-    shape."""
+    as personalization.candidate_entities with its defaults (all types,
+    the top 100; one implementation — the two surfaces must not drift
+    on tie-breaks), re-projected to the topics shape."""
     from .personalization import candidate_entities
 
-    return candidate_entities(centrality_table, entity_types, limit).select(
+    return candidate_entities(centrality_table).select(
         F.col("entity_id").alias("name"), "description", F.col("entity_type").alias("type")
     )

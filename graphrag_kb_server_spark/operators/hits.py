@@ -31,18 +31,20 @@ from pyspark.sql import functions as F
 
 from .graph_support import collect_if_small
 
+#: power-iteration rounds (fixed, for determinism)
+ITERATIONS = 20
+
 
 def hits(
     edges: DataFrame,
     src: str = "src",
     dst: str = "tgt",
     weight: str | None = None,
-    iterations: int = 20,
     driver_cap: int = 200_000,
 ) -> DataFrame:
     """Returns ``(name, hub, authority)`` for every edge endpoint,
     L2-normalized per vector and rounded to 6 dp, sorted by authority
-    desc. Fixed iteration count for determinism."""
+    desc, after ``ITERATIONS`` rounds."""
     w = (
         F.col(weight).cast("double") if weight is not None else F.lit(1.0)
     )
@@ -57,7 +59,7 @@ def hits(
 
     epd = collect_if_small(e, driver_cap, "hits")
     if epd is not None:
-        return _hits_driver(edges.sparkSession, all_nodes.schema, epd, iterations)
+        return _hits_driver(edges.sparkSession, all_nodes.schema, epd)
     all_nodes = all_nodes.localCheckpoint(eager=True)
 
     scores = all_nodes.select(
@@ -65,7 +67,7 @@ def hits(
     ).localCheckpoint(eager=False)
 
     _STRIDE = 5
-    for it in range(iterations):
+    for it in range(ITERATIONS):
         a_raw = (
             scores.select(F.col("name").alias("_s"), "hub")
             .join(e, "_s")
@@ -103,7 +105,7 @@ def hits(
             .alias("hub"),
         )
         scores = hub.join(auth, "name").localCheckpoint(eager=False)
-        if (it + 1) % _STRIDE == 0 and it + 1 < iterations:
+        if (it + 1) % _STRIDE == 0 and it + 1 < ITERATIONS:
             scores.count()  # materialize the lazy-checkpoint group
 
     return scores.select(
@@ -112,7 +114,7 @@ def hits(
     ).orderBy(F.desc("authority"), "name")
 
 
-def _hits_driver(spark, nodes_schema, epd, iterations: int) -> DataFrame:
+def _hits_driver(spark, nodes_schema, epd) -> DataFrame:
     """Same update rule over the collected edges (_s, _t, _w); the node
     set is their endpoints. Preserves the caller's name dtype via the
     nodes frame's schema."""
@@ -131,7 +133,7 @@ def _hits_driver(spark, nodes_schema, epd, iterations: int) -> DataFrame:
     n = len(nodes_pd)
     hub = np.ones(n)
     auth = np.ones(n)
-    for _ in range(iterations):
+    for _ in range(ITERATIONS):
         a_raw = np.zeros(n)
         np.add.at(a_raw, t, hub[s] * w)
         na = np.sqrt((a_raw * a_raw).sum())

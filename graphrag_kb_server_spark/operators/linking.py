@@ -51,29 +51,21 @@ from .graph_support import collect_if_small
 
 log = logging.getLogger(__name__)
 
-DEFAULT_THRESHOLD = 0.80
-DEFAULT_NUM_HASHES = 8
-DEFAULT_BANDS = 4  # 4 bands × 2 rows
+#: cosine floor of a linked name pair
+THRESHOLD = 0.80
+NUM_HASHES = 8
+BANDS = 4  # 4 bands × 2 rows
 #: members of a band bucket above which it is split
 MAX_BUCKET = 64
 
 
 def _banded_names(names: DataFrame) -> DataFrame:
-    """(name, band) — the staged LSH blocking pipeline (shingles → hex
-    digests → signature → band keys → explode), shared by
-    candidate_pairs and candidate_bucket_stats so the md5/minhash work
-    (the dominant linking cost) has exactly one implementation. Staged
-    projections: the hex stage pays ONE md5 per shingle and
-    CollapseProject keeps it as its own project because the signature
-    references it DEFAULT_NUM_HASHES times."""
-    num_hashes, bands = DEFAULT_NUM_HASHES, DEFAULT_BANDS
-    sig = (
-        names.select("name", H.char_shingles(F.lower(F.col("name"))).alias("_sh"))
-        .select("name", H.shingle_hexes(F.col("_sh"), num_hashes).alias("_hx"))
-        .select("name", H.minhash_from_hexes(F.col("_hx"), num_hashes).alias("_sig"))
-        .select("name", H.lsh_bands(F.col("_sig"), bands, num_hashes // bands).alias("bands"))
+    """(name, band) over character-3-gram shingles of the lowercased
+    name, shared by candidate_pairs and candidate_bucket_stats."""
+    return H.minhash_bands(
+        names, "name", H.char_shingles(F.lower(F.col("name"))),
+        NUM_HASHES, BANDS,
     )
-    return sig.select("name", F.explode("bands").alias("band"))
 
 
 def candidate_pairs(names: DataFrame) -> DataFrame:
@@ -106,12 +98,8 @@ def candidate_bucket_stats(names: DataFrame) -> DataFrame:
     return oversized_bucket_stats(_banded_names(names), "band", MAX_BUCKET)
 
 
-def score_pairs(
-    pairs: DataFrame,
-    names: DataFrame,
-    threshold: float = DEFAULT_THRESHOLD,
-) -> DataFrame:
-    """Attach embedding-cosine scores; keep pairs ≥ threshold."""
+def score_pairs(pairs: DataFrame, names: DataFrame) -> DataFrame:
+    """Attach embedding-cosine scores; keep pairs ≥ ``THRESHOLD``."""
     # per-name norm computed once on the (vocabulary-sized) embedding
     # frame; the pair scorer then pays one dot per pair (cosine would
     # re-aggregate both norms per pair under interpreted HOFs)
@@ -139,13 +127,13 @@ def score_pairs(
             ).alias("score"),
         )
     )
-    return scored.where(F.col("score") >= threshold)
+    return scored.where(F.col("score") >= THRESHOLD)
 
 
-def abbreviation_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
+def abbreviation_pairs(names: DataFrame) -> DataFrame:
     """Link an entity to another whose uppercased form equals its word
     initials (matching.py:38-59): ("AI", "Artificial Intelligence")."""
-    base = names.select(F.col(name_col).alias("name"))
+    base = names.select("name")
     abbrevs = base.select(F.col("name").alias("name_a"), F.upper("name").alias("_k")).where(
         ~F.col("name").contains(" ")
     )
@@ -162,7 +150,7 @@ def abbreviation_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
     )
 
 
-def _canonical_map_driver(names_list: list, threshold: float):
+def _canonical_map_driver(names_list: list):
     """Driver-side twin of the LSH → cosine → components pipeline for
     small vocabularies — BIT-IDENTICAL to the distributed operators it
     mirrors (gated to printable-ASCII names so lower()/\\s+ semantics
@@ -175,7 +163,7 @@ def _canonical_map_driver(names_list: list, threshold: float):
     - scoring: the SAME ``embed_text`` the embed_udf slot calls, with
       the dot/norm folds accumulated left-to-right in float64 exactly
       like the Catalyst ``aggregate`` expressions
-      (functions/vectors.py), so the >= threshold comparison sees the
+      (functions/vectors.py), so the >= THRESHOLD comparison sees the
       identical float;
     - abbreviation channel: upper()/initials() mirrored;
     - components: min-label union-find (components.py driver
@@ -191,7 +179,7 @@ def _canonical_map_driver(names_list: list, threshold: float):
 
     from ..functions.embedding import embed_text
 
-    rows_per_band = DEFAULT_NUM_HASHES // DEFAULT_BANDS
+    rows_per_band = NUM_HASHES // BANDS
 
     def shingles(nm: str) -> list[str]:
         s = nm.lower()
@@ -203,9 +191,9 @@ def _canonical_map_driver(names_list: list, threshold: float):
         hx = [hashlib.md5(g.encode("utf-8")).hexdigest() for g in shingles(nm)]
         sig = [
             min(h[j * 4:(j + 1) * 4] for h in hx)
-            for j in range(DEFAULT_NUM_HASHES)
+            for j in range(NUM_HASHES)
         ]
-        for bnd in range(DEFAULT_BANDS):
+        for bnd in range(BANDS):
             key = (bnd, tuple(sig[bnd * rows_per_band:(bnd + 1) * rows_per_band]))
             buckets[key].append(nm)
     sizes = [len(members) for members in buckets.values()]
@@ -250,7 +238,7 @@ def _canonical_map_driver(names_list: list, threshold: float):
         dot = 0.0
         for x, y in zip(vecs[a], vecs[b]):
             dot = dot + x * y
-        if dot / denom >= threshold:
+        if dot / denom >= THRESHOLD:
             linked.append((a, b))
 
     import re
@@ -294,7 +282,6 @@ def _canonical_map_driver(names_list: list, threshold: float):
 
 def canonical_map(
     nodes: DataFrame,
-    threshold: float = DEFAULT_THRESHOLD,
     driver_cap: int = 100_000,
     bucket_stats: dict | None = None,
 ) -> DataFrame:
@@ -323,7 +310,7 @@ def canonical_map(
             import pandas as pd
             from pyspark.sql import types as T
 
-            out, stats = _canonical_map_driver(names_list, threshold)
+            out, stats = _canonical_map_driver(names_list)
             if bucket_stats is not None:
                 bucket_stats.update(stats)
             dt = names.schema["name"].dataType
@@ -337,7 +324,7 @@ def canonical_map(
                 ),
             )
         log.info("canonical_map: non-ASCII names -> distributed path")
-    pairs = score_pairs(candidate_pairs(names), names, threshold=threshold).select(
+    pairs = score_pairs(candidate_pairs(names), names).select(
         "name_a", "name_b"
     ).unionByName(abbreviation_pairs(names)).distinct()
     comp = connected_components(pairs, src="name_a", dst="name_b")

@@ -76,14 +76,17 @@ def round_robin_rows(branches: list[list[dict]], key_cols: list[str]) -> list[di
     return out
 
 
+#: the rank offset k of reciprocal-rank fusion (Cormack et al.'s 60)
+RRF_K = 60
+
+
 def rrf_fuse(
     lists: list[tuple[DataFrame, str]],
     id_col: str,
-    rrf_k: int = 60,
     top_k: int = 10,
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of pre-top-k'd
-    ranked lists: ``rrf(d) = Σ_lists 1/(rrf_k + rank_d)`` — the
+    ranked lists: ``rrf(d) = Σ_lists 1/(RRF_K + rank_d)`` — the
     standard hybrid-retrieval combiner (BM25 ⊕ dense cosine), robust
     to incomparable score scales because only RANKS survive.
 
@@ -107,7 +110,7 @@ def rrf_fuse(
         allp.groupBy(id_col)
         .agg(
             F.round(
-                F.sum(F.lit(1.0) / (F.lit(float(rrf_k)) + F.col("_r"))), 6
+                F.sum(F.lit(1.0) / (F.lit(float(RRF_K)) + F.col("_r"))), 6
             ).alias("rrf"),
             F.count(F.lit(1)).alias("n_lists"),
         )

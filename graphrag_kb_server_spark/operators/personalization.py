@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+#: P2 score floor of a kept candidate (matching.py default at :35)
+MATCH_THRESHOLD = 0.5
 RELEVANCE_POINTS = {  # model/search/search.py:19-25
     "very_high": 100, "high": 75, "medium": 50, "low": 25, "very_low": 0,
 }
@@ -68,13 +70,12 @@ def _score_columns(name: Column, profile: str) -> tuple[Column, Column]:
 def match_and_score(
     candidates: DataFrame,
     profile: str,
-    threshold: float = 0.5,
     score_fn=None,
 ) -> DataFrame:
     """P2 — score candidates against the user profile; keep score >
-    threshold (matching.py:137-179, default threshold 0.5 at :35);
-    dedup by entity name. Default scoring is a pure Catalyst expression;
-    a caller-supplied ``score_fn`` (the LLM slot) runs Arrow-batched."""
+    ``MATCH_THRESHOLD`` (matching.py:137-179); dedup by entity name.
+    Default scoring is a pure Catalyst expression; a caller-supplied
+    ``score_fn`` (the LLM slot) runs Arrow-batched."""
     if score_fn is None:
         score, abstraction = _score_columns(F.col("entity_id"), profile)
         scored = candidates.withColumn("score", score).withColumn(
@@ -92,7 +93,7 @@ def match_and_score(
                     F.col("_m.abstraction").alias("abstraction"))
             .drop("_m")
         )
-    return scored.where(F.col("score") > threshold).dropDuplicates(["entity_id"])
+    return scored.where(F.col("score") > MATCH_THRESHOLD).dropDuplicates(["entity_id"])
 
 
 def sort_by_relevance(docs: DataFrame) -> DataFrame:

@@ -58,17 +58,6 @@ def brute_force_topk_batch(
     )
 
 
-def auto_n_planes(n_rows: int, target_cell_rows: int) -> int:
-    """Plane count keeping the EXPECTED hyperplane cell at
-    ~``target_cell_rows`` members: ceil(log2(rows/target)), clamped to
-    [1, 28]. Mirrors embedding_near_dup_pairs' auto-sizing."""
-    import math
-
-    return min(
-        28, max(1, math.ceil(math.log2(max(n_rows, 1) / target_cell_rows)))
-    )
-
-
 def _cell_expr(vec_col_d, planes: np.ndarray) -> F.Column:
     return F.concat_ws(
         "",
@@ -97,21 +86,13 @@ def ivf_topk_batch(
     k: int,
     id_col: str,
     query_id_col: str,
-    n_planes: int | None = 4,
+    n_planes: int = 4,
     seed: int = 42,
-    target_cell_rows: int = 4096,
     probe_bits: int = 0,
 ) -> DataFrame:
     """Approximate batched top-k over the ``embedding`` columns: both
     sides keyed by hyperplane-sign cell; candidates = same-cell rows only (2^n_planes cells). Recall
     rises as n_planes falls; n_planes=0 degenerates to exact.
-
-    ``n_planes=None`` auto-sizes the plane count from the corpus the
-    same way ``embedding_near_dup_pairs`` does —
-    ceil(log2(rows / target_cell_rows)), clamped to [1, 28] — so the
-    EXPECTED cell holds ~target_cell_rows candidates at any corpus
-    size instead of rows/16 with the fixed default (a per-query scan
-    bomb at web scale).
 
     ``probe_bits=1`` is textbook query-side multi-probe: each query
     also probes the ``n_planes`` cells at sign-hamming 1 (one plane
@@ -122,8 +103,6 @@ def ivf_topk_batch(
     each probe cell is distinct so no candidate dedup is needed."""
     dim_row = table.select(F.size("embedding").alias("d")).first()
     dim = dim_row["d"] if dim_row else 0
-    if n_planes is None:
-        n_planes = auto_n_planes(table.count(), target_cell_rows)
     planes = np.random.default_rng(seed).standard_normal((n_planes, dim))
     t = (
         table.select(

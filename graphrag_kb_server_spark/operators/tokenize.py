@@ -27,7 +27,7 @@ Determinism contract (what the golden twin + oracle pin): pair counts
 weight every adjacent occurrence by word frequency; the best pair is
 (max count, then lexicographically smallest (left, right)); a merge
 replaces non-overlapping occurrences left-to-right; training stops at
-``num_merges`` or when the best count < ``min_pair_freq``. Encoding
+``num_merges`` or when the best count < ``MIN_PAIR_FREQ``. Encoding
 repeatedly applies the present pair with the lowest merge rank. Same
 inputs → same vocabulary, on any partitioning and any engine.
 
@@ -46,6 +46,8 @@ from pyspark.sql import functions as F
 EOW = "</w>"
 #: bound on the collected distinct-word table (errors, never truncates)
 MAX_WORDS = 5_000_000
+#: a merge needs its pair to occur at least this often (frequency-weighted)
+MIN_PAIR_FREQ = 2
 #: unigram seed vocabulary: longest piece, min piece count, multi-char
 #: pieces kept
 MAX_PIECE_LEN = 6
@@ -99,7 +101,6 @@ def _merge_seq(syms: list[str], a: str, b: str) -> list[str]:
 def bpe_train_from_freqs(
     freq_rows: list[tuple[str, int]],
     num_merges: int,
-    min_pair_freq: int = 2,
 ) -> list[tuple[int, str, str, str, int]]:
     """Deterministic BPE merge sequence from a (word, freq) table.
 
@@ -115,7 +116,7 @@ def bpe_train_from_freqs(
             break
         best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
         (a, b), c = best
-        if c < min_pair_freq:
+        if c < MIN_PAIR_FREQ:
             break
         merges.append((rank, a, b, a + b, int(c)))
         seqs = {

@@ -43,30 +43,23 @@ def truncate_by_token_budget(
     text_col: str,
     order_col: str,
     budget: int,
-    keep_at_least_one: bool = False,
 ) -> DataFrame:
     """Keep the maximal prefix (by ``order_col``) whose cumulative token
-    count ≤ budget. The reference's truncate_list_by_token_size returns
-    an EMPTY list when the first row alone overflows the budget
-    (``return list_data[:i]`` with i=0), so the faithful default is
-    False; pass ``keep_at_least_one=True`` to guarantee a non-empty
-    context instead."""
+    count ≤ budget. Like the reference's truncate_list_by_token_size,
+    this is EMPTY when the first row alone overflows the budget
+    (``return list_data[:i]`` with i=0)."""
     w = bounded_global(order_col).rowsBetween(Window.unboundedPreceding, 0)
-    pos_w = bounded_global(order_col)
-    out = (
+    return (
         df.withColumn("_tok", token_count_udf(F.col(text_col)))
         .withColumn("_cum", F.sum("_tok").over(w))
-        .withColumn("_rn", F.row_number().over(pos_w))
+        .where(F.col("_cum") <= budget)
+        .drop("_tok", "_cum")
     )
-    cond = F.col("_cum") <= budget
-    if keep_at_least_one:
-        cond = cond | (F.col("_rn") == 1)
-    return out.where(cond).drop("_tok", "_cum", "_rn")
 
 
 def token_budget_prefix(rows: list[dict], text_key: str, budget: int) -> list[dict]:
-    """Driver twin of :func:`truncate_by_token_budget` (faithful default)
-    for rows already in ``order_col`` order."""
+    """Driver twin of :func:`truncate_by_token_budget` for rows already
+    in ``order_col`` order."""
     cum = 0
     for i, r in enumerate(rows):
         cum += count_tokens(r[text_key] or "")

@@ -47,7 +47,6 @@ def curate_corpus(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    langs: tuple[str, ...] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """documents → (kept, stats).
 
@@ -57,12 +56,13 @@ def curate_corpus(
     collapsed). ``stats``: a single-row funnel frame
     ``(n_docs, n_c4, n_rep, n_quality, n_lang, n_kept)`` where each
     count is the survivors after that stage (cumulative) and
-    ``n_kept`` is the post-dedup cardinality.
+    ``n_kept`` is the post-dedup cardinality. Every language is kept,
+    so ``n_lang`` equals ``n_quality``; the language column rides along
+    as ``lang_pred``.
 
     Thresholds are the published defaults (C4's line heuristics;
     Gopher drops pages with >30% duplicate lines, >20% by character
-    mass); ``MIN_QUALITY`` and ``langs`` are the caller's policy
-    (``langs=None`` keeps all).
+    mass); ``MIN_QUALITY`` is the caller's policy.
     """
     staged = c4_line_filter(docs, text_col)
     # duplicate-line fractions over the C4-kept lines, row-locally —
@@ -79,46 +79,31 @@ def curate_corpus(
         F.col("dup_line_char_frac") <= MAX_DUP_LINE_CHAR_FRAC
     )
     quality_ok = F.col("quality_score") >= MIN_QUALITY
-    lang_ok = (
-        F.col("lang_pred").isin(*langs) if langs is not None else F.lit(True)
-    )
     staged = (
         staged.withColumn("rep_ok", rep_ok)
         .withColumn("quality_ok", quality_ok)
-        .withColumn("lang_ok", lang_ok)
-        .withColumn(
-            "keep",
-            F.col("c4_keep") & rep_ok & quality_ok & lang_ok,
-        )
+        .withColumn("keep", F.col("c4_keep") & rep_ok & quality_ok)
     )
 
     # funnel stats in ONE aggregate over slim columns only: the
     # countDistinct (exact post-dedup count, null-skipping) forces an
-    # Expand, so the input is projected down to five booleans + one
+    # Expand, so the input is projected down to three booleans + one
     # 32-char hash before the aggregate — document text never rides it
     slim = staged.select(
         "c4_keep",
         "rep_ok",
-        "quality_ok",
-        "lang_ok",
+        "keep",
         F.when(F.col("keep"), F.md5(F.col("c4_text"))).alias("_kh"),
     )
     stats = slim.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("c4_keep").cast("long")).alias("n_c4"),
         F.sum((F.col("c4_keep") & F.col("rep_ok")).cast("long")).alias("n_rep"),
-        F.sum(
-            (F.col("c4_keep") & F.col("rep_ok") & F.col("quality_ok")).cast("long")
-        ).alias("n_quality"),
-        F.sum(
-            (
-                F.col("c4_keep")
-                & F.col("rep_ok")
-                & F.col("quality_ok")
-                & F.col("lang_ok")
-            ).cast("long")
-        ).alias("n_lang"),
+        F.sum(F.col("keep").cast("long")).alias("n_quality"),
         F.count_distinct(F.col("_kh")).alias("n_kept"),
+    ).select(
+        "n_docs", "n_c4", "n_rep", "n_quality",
+        F.col("n_quality").alias("n_lang"), "n_kept",
     )
 
     survivors = staged.where(F.col("keep"))

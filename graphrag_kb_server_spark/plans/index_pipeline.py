@@ -388,8 +388,7 @@ def run_index(
             )
         )
 
-    (chunk_embeddings, entity_embeddings, relation_embeddings,
-     doc_status) = stages(
+    stages(
         ["chunk_embeddings", "entity_embeddings", "relation_embeddings",
          "doc_status"],
         lambda: [build_chunk_embeddings(), build_entity_embeddings(),
@@ -403,7 +402,6 @@ def run_index(
         _write_text(
             spark, f"{out_dir}/metrics.json", json.dumps(res.metrics, indent=1)
         )
-    _ = (nodes, edges, chunk_embeddings, entity_embeddings, relation_embeddings, doc_status)
     return res
 
 

@@ -75,12 +75,11 @@ def to_graphml(nodes: DataFrame, edges: DataFrame, path: str) -> None:
         f.write("</graph>\n</graphml>\n")
 
 
-def centrality_to_xlsx(
-    centrality: DataFrame, path: str, limit: int = -1
-) -> None:
+def centrality_to_xlsx(centrality: DataFrame, path: str) -> None:
     """Centrality scores as an Excel workbook — the reference's
     ``data.to_excel(buffer, index=True, header=True)`` surface
-    (lightrag_centrality.py:86-96 with its ``limit > 0 → head(limit)``).
+    (lightrag_centrality.py:86-96); a caller that wants the reference's
+    ``head(limit)`` limits the frame first.
 
     Written as minimal OOXML directly (a .xlsx is a zip of XML parts)
     so the export has no optional-dependency gap in this image; numbers
@@ -88,11 +87,8 @@ def centrality_to_xlsx(
     design — exports are a human/tool compatibility boundary.
     """
     _check_size(centrality, "centrality")
-    df = centrality
-    if limit > 0:
-        df = df.limit(limit)
-    rows = df.collect()
-    cols = df.columns
+    rows = centrality.collect()
+    cols = centrality.columns
 
     def cell(ref: str, v) -> str:
         if v is None or v == "":

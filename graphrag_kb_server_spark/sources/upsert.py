@@ -55,21 +55,19 @@ def upsert(
     updates: DataFrame,
     table_dir: str,
     keys: list[str],
-    order_col: str | None = None,
+    order_col: str,
 ) -> DataFrame:
     """MERGE ``updates`` into the table at ``table_dir`` by ``keys``:
-    matched rows are replaced, unmatched inserted. Returns the new
-    current table. Kill-safe: the new version is fully written before
-    the pointer flips; a crash leaves the previous version current."""
-    if order_col is not None:
-        w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-        updates = (
-            updates.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") == 1)
-            .drop("_rk")
-        )
-    else:
-        updates = updates.dropDuplicates(keys)
+    matched rows are replaced, unmatched inserted; within the batch the
+    max ``order_col`` row per key wins. Returns the new current table.
+    Kill-safe: the new version is fully written before the pointer
+    flips; a crash leaves the previous version current."""
+    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
+    updates = (
+        updates.withColumn("_rk", F.row_number().over(w))
+        .where(F.col("_rk") == 1)
+        .drop("_rk")
+    )
     current = read_table(spark, table_dir)
     merged = (
         updates

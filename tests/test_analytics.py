@@ -82,14 +82,18 @@ def test_connected_components_star_matches_networkx(spark):
         assert cid == min(members)
 
 
-def test_connected_components_star_long_chain(spark):
+def test_connected_components_star_long_chain(spark, monkeypatch):
     """The high-diameter case the star alternation exists for: a
     60-node chain converges to one star labeled by the min node, in
     far fewer than diameter rounds, and agrees with min-label CC."""
+    from graphrag_kb_server_spark.operators import components
+
+    monkeypatch.setattr(components, "MAX_ITERATIONS", 12)
     pairs = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(60)]
     e = _edges(spark, pairs)
     star = {(r["node"], r["component"])
-            for r in connected_components_star(e, max_iterations=12).collect()}
+            for r in connected_components_star(e).collect()}
+    monkeypatch.undo()
     assert star == {(f"n{i:02d}", "n00") for i in range(61)}
     label = {(r["node"], r["component"])
              for r in connected_components(e).collect()}
@@ -156,9 +160,6 @@ def test_hierarchical_communities_lcc_gating(spark):
     assigned = {r["node"] for r in asg.select("node").distinct().collect()}
     lcc = {r["node"] for r in largest_connected_component(edges).collect()}
     assert assigned == lcc == set("abcd")
-    # opt-out covers the whole graph
-    asg_all = hierarchical_communities(edges, max_cluster_size=10, use_lcc=False)
-    assert {r["node"] for r in asg_all.select("node").distinct().collect()} == set("abcdxyz")
 
 
 def test_random_walk_with_restart(spark):
@@ -238,18 +239,20 @@ def test_host_graph_semantics(spark):
     }
 
 
-def test_hits_ranking_and_paths_agree(spark):
+def test_hits_ranking_and_paths_agree(spark, monkeypatch):
     """Kleinberg sanity on a hand graph (h1 links both authorities →
     top hub; a1 has two in-links → top authority) and the forced-
     distributed rounds must equal the driver path exactly at 6 dp."""
+    from graphrag_kb_server_spark.operators import hits as hits_module
     from graphrag_kb_server_spark.operators.hits import hits
 
+    monkeypatch.setattr(hits_module, "ITERATIONS", 5)
     edges = spark.createDataFrame(
         [("h1", "a1", 1.0), ("h1", "a2", 1.0), ("h2", "a1", 1.0)],
         "src string, tgt string, w double",
     )
-    drv = hits(edges, weight="w", iterations=5)
-    dist = hits(edges, weight="w", iterations=5, driver_cap=0)
+    drv = hits(edges, weight="w")
+    dist = hits(edges, weight="w", driver_cap=0)
     d = {r.name: (r.hub, r.authority) for r in drv.collect()}
     x = {r.name: (r.hub, r.authority) for r in dist.collect()}
     assert d == x

@@ -1,8 +1,6 @@
-"""As-of join (operators/asof.py): semantics, tolerance, plan shape."""
+"""As-of join (operators/asof.py): semantics, plan shape."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from graphrag_kb_server_spark.operators.asof import asof_join
 
@@ -43,18 +41,6 @@ def test_asof_backward_inclusive(spark):
     assert {r["lv"] for r in rows} == {"l10", "l20", "l5", "l15"}
 
 
-def test_asof_tolerance_nulls_stale_matches(spark):
-    left, right = _frames(spark)
-    out = {
-        (r["k"], r["t"]): r["rv"]
-        for r in asof_join(
-            left, right, "k", "t", tolerance=F.lit(1)
-        ).collect()
-    }
-    assert out[(1, 10)] == "r10"  # age 0 <= 1
-    assert out[(1, 20)] is None  # age 2 > 1 — nulled, row kept
-
-
 def test_asof_single_exchange_no_join(spark):
     left, right = _frames(spark)
     plan = asof_join(left, right, "k", "t")._jdf.queryExecution().executedPlan().toString()
@@ -65,10 +51,12 @@ def test_asof_single_exchange_no_join(spark):
 
 
 def test_asof_distinct_time_columns(spark):
+    """A right side whose time column has another name is renamed to
+    the left one; the matched time comes back as ``asof_time``."""
     left = spark.createDataFrame([(1, 7, "x")], "k int, lt int, lv string")
     right = spark.createDataFrame([(1, 6, "y")], "k int, rt int, rv string")
     rows = asof_join(
-        left, right, "k", left_time="lt", right_time="rt"
+        left, right.withColumnRenamed("rt", "lt"), "k", left_time="lt"
     ).collect()
     assert rows[0]["rv"] == "y" and rows[0]["asof_time"] == 6
 

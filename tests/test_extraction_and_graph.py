@@ -92,11 +92,15 @@ def test_graph_build_merge_semantics(spark):
     assert cd[("A", "B")] == 3
 
 
-def test_graph_build_salting_invariance(spark):
+def test_graph_build_salting_invariance(spark, monkeypatch):
     """Result must not depend on salt bucket count (exactness of the
     two-phase aggregation)."""
+    from graphrag_kb_server_spark.operators import graph_build
+
     docs = _docs(spark, 40)
     mentions = extract_mentions(chunk_documents(docs))
-    a = build_nodes(mentions, salt_buckets=1).orderBy("name").toPandas()
-    b = build_nodes(mentions, salt_buckets=32).orderBy("name").toPandas()
+    monkeypatch.setattr(graph_build, "SALT_BUCKETS", 1)
+    a = build_nodes(mentions).orderBy("name").toPandas()
+    monkeypatch.setattr(graph_build, "SALT_BUCKETS", 32)
+    b = build_nodes(mentions).orderBy("name").toPandas()
     pd.testing.assert_frame_equal(a, b)

@@ -1,7 +1,7 @@
 """Every module-level function and class in ``graphrag_kb_server_spark/``
 is reached from a real caller, and every defaulted parameter of a
-package def is set by one, or the def or parameter is on a keep list
-with its reason.
+package def or of a ``bench.py`` def is set by one, or the def or
+parameter is on a keep list with its reason.
 
 The real callers are the driver contract (``__spark_entry__.py``), the
 bench CLI (``bench.py``), the benchmark (``perfbench/*.py``), the scripts
@@ -39,52 +39,28 @@ KEEP = {
 }
 
 #: ``module.def.param`` of the defaulted parameters no real caller sets.
-#: The first four are the slots where a real model or user input plugs
-#: in; the rest are set only by tests and wait for a later change.
+#: Only four kinds stay, and each reason names its kind:
+#: - model slot: where a real model or user input plugs in; a test
+#:   drives each with a fake;
+#: - parity selector: picks the distributed path that a parity test
+#:   compares with its driver twin;
+#: - fixture-gated test: set only by a test that skips where its fixtures
+#:   are absent, so it cannot be checked on every host;
+#: - guard bound: the bound of a safety guard that a test trips.
 KEEP_OPTIONS = {
-    "plans.query_pipeline.answer_query.llm_fn": "LLM slot: a real model answers here (PAPER §0, SURVEY §7)",
-    "operators.reports.generate_reports.report_fn": "LLM slot: a real model writes community reports here",
-    "operators.personalization.generate_questions.question_fn": "LLM slot: a real model writes topic questions here",
-    "plans.query_pipeline.kg_query.user_keywords": "the reference's union of user-supplied keywords (SURVEY Q1)",
-    "operators.asof.asof_join.right_time": "test-set: test_asof joins on a right time column of another name",
-    "operators.asof.asof_join.tolerance": "test-set: test_asof bounds the as-of lag",
-    "operators.centrality.approx_betweenness.driver_cap": "test-set: driver_cap=0 forces the distributed path in the parity tests",
-    "operators.clustering.semantic_dedup_pairs.seed": "test-set: test_clustering seeds the k-means start",
-    "operators.communities.hierarchical_communities.max_cluster_size": "test-set: test_analytics and test_ref_communities force splits",
-    "operators.communities.hierarchical_communities.max_levels": "test-set: test_ref_communities bounds the levels",
-    "operators.communities.hierarchical_communities.use_lcc": "test-set: test_analytics clusters the whole graph",
-    "operators.communities.hierarchical_communities.refine": "test-set: test_ref_communities measures the refinement gain",
-    "operators.communities.community_hierarchy.period": "test-set: test_communities_schema pins the period column",
-    "operators.components.connected_components_star.max_iterations": "test-set: test_analytics bounds the alternations",
-    "operators.context_ops.vector_similarity_chunk_pick.related_chunk_number": "test-set: the parity tests pick fewer chunks",
-    "operators.curation.gopher_repetition.sep": "test-set: test_curation splits paragraphs",
-    "operators.curation.gopher_repetition.unit": "test-set: test_curation names the paragraph unit",
-    "operators.curation.url_keep.blocked_domains": "test-set: test_curation blocks a domain",
-    "operators.curation.paragraph_dedup.sep": "test-set: test_curation splits on another separator",
-    "operators.dedup.minhash_lsh_pairs.num_hashes": "test-set: the dedup tests pin the LSH shape",
-    "operators.dedup.minhash_lsh_pairs.bands": "test-set: the dedup tests pin the LSH shape",
-    "operators.dedup.minhash_lsh_pairs.max_bucket": "test-set: the skew-guard test forces a bucket split",
-    "operators.dedup.simhash_dedup_pairs.rotations": "test-set: the rotation test compares 1 and 4 rotations",
-    "operators.dedup.embedding_near_dup_pairs.content_col": "test-set: a test embeds raw text instead of vectors",
-    "operators.dedup.embedding_near_dup_pairs.probe_hamming": "test-set: the multi-probe test",
-    "operators.graph_build.build_nodes.salt_buckets": "test-set: the salting test compares 1 and 32 buckets",
-    "operators.graph_support.topics.entity_types": "test-set: test_context_personalization_reports filters types",
-    "operators.graph_support.topics.limit": "test-set: test_context_personalization_reports caps the topics",
-    "operators.hits.hits.iterations": "test-set: test_analytics and the parity tests run 5 rounds",
-    "operators.linking.abbreviation_pairs.name_col": "test-set: test_context_personalization_reports links entity_id",
-    "operators.linking.canonical_map.threshold": "test-set: the linking test pins the threshold",
-    "operators.linking.canonical_map.driver_cap": "test-set: driver_cap=0 forces the distributed path in the parity tests",
-    "operators.merge.rrf_fuse.rrf_k": "test-set: test_query_ops pins the RRF constant",
-    "operators.personalization.match_and_score.threshold": "test-set: test_context_personalization_reports",
-    "operators.personalization.match_and_score.score_fn": "test-set: a fake scoring slot in test_context_personalization_reports",
-    "operators.personalization.summarize_documents.summarize_fn": "test-set: a fake summary slot in test_context_personalization_reports",
-    "operators.similarity.ivf_topk_batch.target_cell_rows": "test-set: the auto-plane test sizes cells",
-    "operators.tokenize.bpe_train_from_freqs.min_pair_freq": "test-set: test_tokenize stops training early",
-    "operators.tokenize.bpe_merges.max_words": "test-set: test_tokenize trips the distinct-word guard",
-    "operators.truncation.truncate_by_token_budget.keep_at_least_one": "test-set: test_query_ops keeps one row",
-    "plans.curation_pipeline.curate_corpus.langs": "test-set: test_curation keeps one language",
-    "sources.exports.centrality_to_xlsx.limit": "test-set: test_exports caps the sheet",
-    "sources.upsert.upsert.order_col": "test-set: test_streaming orders updates by version",
+    "plans.query_pipeline.answer_query.llm_fn": "model slot: a real model answers here (PAPER §0, SURVEY §7)",
+    "operators.reports.generate_reports.report_fn": "model slot: a real model writes community reports here",
+    "operators.personalization.generate_questions.question_fn": "model slot: a real model writes topic questions here",
+    "plans.query_pipeline.kg_query.user_keywords": "model slot: the reference's union of user-supplied keywords (SURVEY Q1)",
+    "operators.personalization.match_and_score.score_fn": "model slot: a real model scores candidates here; test_p2_custom_fn_arrow_batched drives a fake",
+    "operators.personalization.summarize_documents.summarize_fn": "model slot: a real model summarizes documents here; test_p7_summarize_documents drives a fake",
+    "operators.centrality.approx_betweenness.driver_cap": "parity selector: 0 forces the distributed path test_r06_driver_parity compares with the driver twin",
+    "operators.linking.canonical_map.driver_cap": "parity selector: 0 forces the distributed path test_r06_driver_parity compares with the driver twin",
+    "operators.communities.hierarchical_communities.max_cluster_size": "fixture-gated test: test_ref_communities forces splits on the reference graph",
+    "operators.communities.hierarchical_communities.max_levels": "fixture-gated test: test_ref_communities bounds the levels",
+    "operators.communities.hierarchical_communities.refine": "fixture-gated test: test_ref_communities measures the refinement gain",
+    "operators.communities.community_hierarchy.period": "fixture-gated test: test_communities_schema pins the period column",
+    "operators.tokenize.bpe_merges.max_words": "guard bound: test_tokenize trips the distinct-word guard",
 }
 
 
@@ -243,8 +219,9 @@ def _defaulted(fn: ast.AST) -> list[tuple[str, int | None]]:
 
 def _option_defs(root: Path):
     """(key, callee name, def node, is method) of every package def
-    outside golden.py; a class's ``__init__`` is called by the class
-    name. The key is ``module.qualname``."""
+    outside golden.py and of every def in ``bench.py``; a class's
+    ``__init__`` is called by the class name. The key is
+    ``module.qualname``, with ``bench`` as bench.py's module."""
     out = []
 
     def walk(tree, mod, cls):
@@ -266,6 +243,7 @@ def _option_defs(root: Path):
             continue
         rel = path.relative_to(root / PACKAGE_NAME).with_suffix("")
         walk(ast.parse(path.read_text()), ".".join(rel.parts), None)
+    walk(ast.parse((root / "bench.py").read_text()), "bench", None)
     return out
 
 
@@ -309,8 +287,8 @@ def _calls(paths: list[Path]) -> dict[str, list[tuple[int, bool, set[str], bool]
 
 def unset_options(root: Path = ROOT) -> list[str]:
     """``module.def.param`` of every defaulted parameter of a package def
-    (golden twins exempt) that no call in a real caller sets, by keyword,
-    by position or through ``*``/``**``."""
+    (golden twins exempt) or a bench.py def that no call in a real
+    caller sets, by keyword, by position or through ``*``/``**``."""
     calls = _calls([*_roots(root), *sorted((root / PACKAGE_NAME).rglob("*.py"))])
     out = []
     for key, callee, fn, is_method in _option_defs(root):
@@ -325,7 +303,9 @@ def unset_options(root: Path = ROOT) -> list[str]:
 
 def test_every_option_is_set_by_a_real_caller():
     """A default that no real caller overrides is a constant: inline it
-    or name it at module level instead of taking it as a parameter."""
+    or name it at module level instead of taking it as a parameter.
+    bench.py's own defs count too, and a call inside bench.py sets
+    them."""
     missing = [o for o in unset_options() if o not in KEEP_OPTIONS]
     assert not missing, (
         "no real caller sets these parameters; make each a constant or "

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from graphrag_kb_server_spark import GRAPH_FIELD_SEP
 from graphrag_kb_server_spark.functions.embedding import EMBEDDING_DIM, embed_text
 from graphrag_kb_server_spark.operators.context_ops import (
+    RELATED_CHUNK_NUMBER,
     expand_file_references,
     expand_reference_rows,
     query_scores,
@@ -239,17 +240,20 @@ def test_vector_pick_parity(spark, seed):
     vecs = [[float(x) for x in embed_text(t)]
             for t in ("alpha", "alpha beta gamma", "delta", "beta")]
     vecs.append([0.0] * len(vecs[0]))
-    # repeated vectors give equal scores: ties broken by chunk_id
-    emb = [(f"k{i:02d}", rng.choice(vecs)) for i in range(12)]
+    # repeated vectors give equal scores: ties broken by chunk_id; 20
+    # candidates stay above the largest pick (5 * 4 / 2 = 10)
+    emb = [(f"k{i:02d}", rng.choice(vecs)) for i in range(30)]
     emb_df = spark.createDataFrame(emb, "chunk_id string, embedding array<float>")
-    cands = rng.sample([cid for cid, _ in emb] + ["no-embedding"], 8)
+    cands = rng.sample([cid for cid, _ in emb] + ["no-embedding"], 20)
     cand_df = spark.createDataFrame([(c,) for c in cands], "chunk_id string")
     n_entities = rng.randint(1, 4)
     got = {r["chunk_id"] for r in vector_similarity_chunk_pick(
-        cand_df, emb_df, "alpha beta", n_entities, related_chunk_number=1).collect()}
+        cand_df, emb_df, "alpha beta", n_entities).collect()}
     scores = {r["chunk_id"]: r["vscore"] for r in query_scores(
         emb_df.where(F.col("chunk_id").isin(cands)), "alpha beta").collect()}
-    assert got == vector_pick_ids(scores, n_entities, related_chunk_number=1)
+    want = vector_pick_ids(scores, n_entities, RELATED_CHUNK_NUMBER)
+    assert len(want) < len(scores)
+    assert got == want
 
 
 @pytest.mark.parametrize("seed", SEEDS)

@@ -31,15 +31,10 @@ def test_token_truncation_prefix(spark):
     df = spark.createDataFrame(rows, "pos int, txt string")
     out = truncate_by_token_budget(df, "txt", "pos", budget=35).collect()
     assert [r["pos"] for r in out] == [0, 1, 2]
-    # faithful default: an over-budget FIRST row yields an EMPTY result
-    # (the reference's truncate_list_by_token_size returns list[:0]);
-    # keep_at_least_one=True opts back into a guaranteed row
+    # faithful to the reference: an over-budget FIRST row yields an
+    # EMPTY result (truncate_list_by_token_size returns list[:0])
     out1 = truncate_by_token_budget(df, "txt", "pos", budget=3).collect()
     assert out1 == []
-    out2 = truncate_by_token_budget(
-        df, "txt", "pos", budget=3, keep_at_least_one=True
-    ).collect()
-    assert [r["pos"] for r in out2] == [0]
 
 
 def test_cumulative_prefix_by_budget(spark):
@@ -225,7 +220,7 @@ def test_rrf_fuse(spark):
     l2 = spark.createDataFrame(
         [(2, 5.0), (4, 4.0), (1, 3.0)], "id long, s double")
     out = [(r.id, r.rrf, r.n_lists) for r in
-           rrf_fuse([(l1, "s"), (l2, "s")], "id", rrf_k=60, top_k=4)
+           rrf_fuse([(l1, "s"), (l2, "s")], "id", top_k=4)
            .collect()]
     def rr(*ranks):
         return round(sum(1.0 / (60 + r) for r in ranks), 6)

@@ -320,7 +320,7 @@ def gate_cases(spark):
         "hits": (
             len(rows),
             lambda cap: _sorted_rows(
-                hits(edf, weight="weight", iterations=5, driver_cap=cap),
+                hits(edf, weight="weight", driver_cap=cap),
                 "name", "hub", "authority",
             ),
         ),
@@ -349,7 +349,12 @@ def gate_cases(spark):
         "pagerank", "hits", "label_propagation", "modularity_refine",
     ],
 )
-def test_gate_boundary_per_operator(gate_cases, caplog, op):
+def test_gate_boundary_per_operator(gate_cases, caplog, monkeypatch, op):
+    from graphrag_kb_server_spark.operators import hits as hits_module
+
+    # five HITS rounds, not its 20: both paths run the same update rule,
+    # and the distributed one pays a job group per round
+    monkeypatch.setattr(hits_module, "ITERATIONS", 5)
     n, run = gate_cases[op]
     caplog.set_level(logging.INFO, logger=GATE_LOG)
 

@@ -46,7 +46,7 @@ def test_s8_upsert_merge(spark, tmp_out):
     base = spark.createDataFrame(
         [("k1", "a", 1), ("k2", "b", 1)], "key string, val string, ver int"
     )
-    upsert(spark, base, tdir, keys=["key"])
+    upsert(spark, base, tdir, keys=["key"], order_col="ver")
     # matched update + insert + in-batch duplicate (max order_col wins)
     updates = spark.createDataFrame(
         [("k2", "b2", 2), ("k3", "c", 2), ("k3", "c-late", 3)],

@@ -81,7 +81,7 @@ def test_max_words_guard_errors_not_truncates(spark):
 
 
 def test_min_pair_freq_stops_training():
-    merges = bpe_train_from_freqs([("ab", 1)], 10, min_pair_freq=2)
+    merges = bpe_train_from_freqs([("ab", 1)], 10)
     assert merges == []  # best pair count 1 < 2 — nothing merged
 
 
